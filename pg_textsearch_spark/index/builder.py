@@ -1564,6 +1564,23 @@ class IndexWriter:
         if val_f is not None:
             val_f.result()  # raises (collision) before the commit
 
+        return self.commit_segment(
+            seg_id, config, n_buckets, k1, b,
+            num_docs=int(stats["num_docs"]),
+            total_tokens=int(stats["total_tokens"]),
+            max_doc_id=int(stats["max_doc_id"]),
+            has_keymap=keymap is not None,
+            lineage=lineage,
+        )
+
+    def commit_segment(
+        self, seg_id: int, config: str, n_buckets: int, k1: float,
+        b: float, num_docs: int, total_tokens: int, max_doc_id: int,
+        has_keymap: bool, lineage: dict | None = None,
+    ) -> dict:
+        """Add one freshly written L0 segment to the manifest (atomic
+        rename) — the last step of both the distributed and the
+        driver-local commit paths, after every segment file exists."""
         manifest = self.read_manifest()
         if not manifest:
             manifest = {
@@ -1582,11 +1599,11 @@ class IndexWriter:
             {
                 "seg_id": seg_id,
                 "level": 0,
-                "num_docs": int(stats["num_docs"]),
-                "total_tokens": int(stats["total_tokens"]),
-                "max_doc_id": int(stats["max_doc_id"]),
+                "num_docs": num_docs,
+                "total_tokens": total_tokens,
+                "max_doc_id": max_doc_id,
                 "created_at_unix": int(time.time()),
-                "has_keymap": keymap is not None,
+                "has_keymap": has_keymap,
                 "lineage": lineage or {},
             }
         )

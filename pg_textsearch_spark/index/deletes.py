@@ -11,10 +11,15 @@ Spark model: an append-only ``deletes`` table of doc_ids next to the
 manifest (the bitset), consulted by both scoring paths as an anti-join
 / broadcast filter; ``vacuum`` rewrites segments without dead docs and
 clears the table — the reference's bulkdelete+compaction collapsed
-into one job. Corpus stats follow the reference exactly: N excludes
+into one merge. Corpus stats follow the reference exactly: N excludes
 deleted docs, ``total_tokens`` subtracts decode(encode(dl)) per dead
 doc (the quantized correction — raw lengths are no longer known to
 the reference at delete time, and we reproduce that semantic).
+
+Like the reference's single-process bulkdelete, a delete commits in
+the driver (index/local_commit.py) with pyarrow reads and one batch
+block decode — no Spark job for a list of ids; a vacuum is a
+driver-local merge.
 """
 
 from __future__ import annotations
@@ -24,12 +29,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
-from pg_textsearch_spark.index.builder import IndexWriter, RUN_SHIFT
-from pg_textsearch_spark.operators.topk import (
-    BM25Index,
-    decode_postings_flat,
-)
+from pg_textsearch_spark.index import local_commit
+from pg_textsearch_spark.index.builder import IndexWriter
+from pg_textsearch_spark.operators.topk import BM25Index
 
 
 def _deletes_path(index_dir: str) -> str:
@@ -50,48 +52,21 @@ def delete_docs(index: BM25Index, doc_ids: DataFrame | list[int]) -> dict:
     delete BATCH writes (term, dead_df) rows, and every subsequent
     query corrects doc_freq with a tiny dictionary-style lookup instead
     of decoding its terms' full posting lists (head terms made that
-    per-query correction expensive between vacuums). The decode is
-    pruned by ``run IN (dead runs)`` — a dead doc only affects posting
-    rows of its own 2^RUN_SHIFT range, so a small delete batch touches
-    a small fraction of the postings table.
+    per-query correction expensive between vacuums). Only posting rows
+    with ``run IN (dead runs)`` are decoded — a dead doc only affects
+    posting rows of its own 2^RUN_SHIFT range — though the scan still
+    reads every row group of the segments holding a dead doc (postings
+    are term-clustered, so ``run`` statistics prune nothing).
     """
-    spark = index.spark
-    if isinstance(doc_ids, list):
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id bigint"
-        )
-    new_del = doc_ids.select(F.col("doc_id").cast("bigint"))
-    # only docs that exist and are not already deleted count
-    existing = index.doclen().select("doc_id", "fieldnorm")
-    already = index.deleted_ids()
-    eff = new_del.join(existing, "doc_id").join(already, "doc_id", "left_anti")
-    # one collect; everything downstream works from this snapshot so a
-    # non-deterministic input can't diverge between the stats pass and
-    # the table write (delete batches are small by policy — vacuum
-    # before they grow)
-    eff_rows = eff.select("doc_id", "fieldnorm").collect()
-    n_dead = len(eff_rows)
-    # quantized-length correction for the dead docs (merge.c:842-866)
-    dead_tokens = int(
-        sum(int(FIELDNORM_DECODE_TABLE[int(r["fieldnorm"])]) for r in eff_rows)
+    if isinstance(doc_ids, DataFrame):
+        # one snapshot of a (possibly non-deterministic) input
+        doc_ids = [
+            r[0] for r in doc_ids.select(F.col("doc_id")).collect()
+            if r[0] is not None
+        ]
+    n_dead, dead_tokens = local_commit.delete_local(
+        index.index_dir, index.manifest, doc_ids
     )
-    dead_ids = [int(r["doc_id"]) for r in eff_rows]
-    if dead_ids:
-        eff_df = spark.createDataFrame([(i,) for i in dead_ids], "doc_id bigint")
-        eff_df.write.mode("append").parquet(_deletes_path(index.index_dir))
-        # per-term dead counts: decode only posting rows in the dead
-        # docs' runs, count hits per term
-        runs = sorted({i >> RUN_SHIFT for i in dead_ids})
-        hit = index.postings().filter(F.col("run").isin(runs))
-        per_term = (
-            decode_postings_flat(hit)
-            .select("term", "doc_id")
-            .join(F.broadcast(eff_df), "doc_id")
-            .groupBy("term")
-            .agg(F.count("*").alias("dead_df"))
-        )
-        per_term.write.mode("append").parquet(_dead_dfs_path(index.index_dir))
-
     writer = IndexWriter(index.index_dir)
     manifest = writer.read_manifest()
     manifest["deleted_docs"] = manifest.get("deleted_docs", 0) + n_dead
@@ -107,16 +82,14 @@ def vacuum(index: BM25Index) -> dict:
     """Physically drop dead docs: rewrite every segment's postings and
     doclen without them, reset delete stats (bulkdelete + compaction
     collapsed; reference: vacuum.c:832-1290)."""
-    spark = index.spark
-    dead = index.deleted_ids()
-    if dead.isEmpty():
+    seg_ids = [s["seg_id"] for s in index.manifest["segments"]]
+    dead = local_commit.read_deleted_ids(index.index_dir)
+    if not len(dead):
         return index.manifest
     from pg_textsearch_spark.index.merge import merge_segments
 
-    seg_ids = [s["seg_id"] for s in index.manifest["segments"]]
     new_id = max(seg_ids) + 1
-    # merge_segments decodes + regroups; the dead filter rides the
-    # decoded stream via a pre-registered anti-join hook
+    # merge_segments decodes + regroups, dropping the dead docs
     manifest = merge_segments(index, seg_ids, new_id, drop_doc_ids=dead)
     # clear the deletes table, per-term dead counts, and counters
     import shutil

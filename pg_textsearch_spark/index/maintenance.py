@@ -7,7 +7,9 @@ Analogs of the reference's SQL utility functions
 - bm25_dump_index      -> ``dump_index`` (per-term postings detail)
 - bm25_force_merge     -> index.merge.force_merge
 - bm25_spill_index     -> streaming.incremental.insert_batch (the
-                          spill IS the batch commit in our model)
+                          spill IS the batch commit in our model; it
+                          runs in the driver like tp_do_spill,
+                          build.c:135-295 — see index/local_commit.py)
 """
 
 from __future__ import annotations

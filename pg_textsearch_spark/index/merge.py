@@ -7,13 +7,16 @@ segment at the next level (tp_maybe_compact_level, merge.c:1893-1944);
 (merge.c:1947-1973). The merge streams sorted dictionaries, remaps
 doc_ids, re-blocks postings, and recomputes stats.
 
-Spark-first translation: the reference's hand-written N-way sorted
-term merge (merge.c:1409-1891) *is* a shuffle — we union the source
-segments' posting tables, decode, regroup by (term, run), and re-block.
-Doc_ids are global and never remapped here (no deletes yet), which is
-exactly the reference's disjoint-source fast path (merge.c:748-769:
-non-overlapping doc ranges concatenate without comparisons) — by
-construction incremental segments own disjoint doc_id ranges.
+A merge runs in the driver, as the reference's single-process merge
+does (index/local_commit.py): term bucket by term bucket, one batch
+decode of the sources' posting blocks, then the build's own posting
+kernel regroups them by (term, run) and re-blocks — no Spark job. The
+reference's hand-written N-way sorted term merge (merge.c:1409-1891)
+becomes a sort of the decoded postings. Doc_ids are global and never
+remapped here, which is exactly the reference's disjoint-source fast
+path (merge.c:748-769: non-overlapping doc ranges concatenate without
+comparisons) — by construction incremental segments own disjoint
+doc_id ranges.
 
 The LSM policy (8 levels, fan-in 8; reference: src/constants.h:74-76)
 is a driver-side loop over the manifest.
@@ -21,21 +24,12 @@ is a driver-side loop over the manifest.
 
 from __future__ import annotations
 
-import os
+import numpy as np
+from pyspark.sql import DataFrame
 
-from pyspark.sql import functions as F
-
-from pg_textsearch_spark.index.builder import (
-    IndexWriter,
-    _postings_write_opts,
-    postings_from_flat,
-)
-from pg_textsearch_spark.operators.topk import (
-    BM25Index,
-    DOCLEN_READ_SCHEMA,
-    POSTINGS_READ_SCHEMA,
-    decode_postings_flat,
-)
+from pg_textsearch_spark.index import local_commit
+from pg_textsearch_spark.index.builder import IndexWriter
+from pg_textsearch_spark.operators.topk import BM25Index
 
 MAX_LEVELS = 8  # TP_MAX_LEVELS (reference: constants.h:74)
 SEGMENTS_PER_LEVEL = 8  # default compaction fan-in (reference: mod.c:256-269)
@@ -49,109 +43,43 @@ def merge_segments(
 ) -> dict:
     """N-way merge of segments into one (reference: merge.c:1409-1891).
 
-    Decode -> union -> regroup (term, run) -> re-block. The shuffle
-    performs the reference's sorted-dictionary merge; re-blocking
+    Decode -> union -> regroup (term, run) -> re-block; re-blocking
     restores the 128-doc block invariant across former segment
-    boundaries within a run.
+    boundaries within a run. ``drop_doc_ids`` (a DataFrame with a
+    ``doc_id`` column, or a sequence of ids) are physically dropped.
     """
-    spark = index.spark
-    base = index.index_dir
     seg_set = set(seg_ids)
     segs = [s for s in index.manifest["segments"] if s["seg_id"] in seg_set]
     assert len(segs) == len(seg_set), (seg_ids, index.manifest["segments"])
-    n_buckets = index.n_buckets
-
-    postings_root = os.path.join(base, "postings")
-    src_postings = spark.read.schema(POSTINGS_READ_SCHEMA).option(
-        "basePath", postings_root
-    ).parquet(
-        *[os.path.join(postings_root, f"seg={sid}") for sid in sorted(seg_set)]
+    drop = None
+    if isinstance(drop_doc_ids, DataFrame):
+        drop = np.asarray(
+            [r[0] for r in drop_doc_ids.select("doc_id").collect()],
+            dtype=np.int64,
+        )
+    elif drop_doc_ids is not None:
+        drop = np.asarray(drop_doc_ids, dtype=np.int64)
+    stats, dead_tokens_quantized, has_keymap = local_commit.merge_local(
+        index.index_dir, segs, new_seg_id, index.n_buckets, drop
     )
-    flat = decode_postings_flat(src_postings)
-    if drop_doc_ids is not None:
-        drop_doc_ids = drop_doc_ids.select("doc_id").distinct()
-        # dead docs physically dropped during merge (reference:
-        # merge.c old_to_new = UINT32_MAX path, merge.c:658-882)
-        flat = flat.join(F.broadcast(drop_doc_ids), "doc_id", "left_anti")
+    num_docs = stats["num_docs"]
 
-    merged = postings_from_flat(flat, n_buckets)
-
-    doclen_root = os.path.join(base, "doclen")
-    src_doclen = spark.read.schema(DOCLEN_READ_SCHEMA).option(
-        "basePath", doclen_root
-    ).parquet(
-        *[os.path.join(doclen_root, f"seg={sid}") for sid in sorted(seg_set)]
-    ).drop("seg")
-    merged_doclen = src_doclen
-    dead_tokens_quantized = 0
-    if drop_doc_ids is not None:
-        # the merged segment's total_tokens follows the reference's
-        # stats rule (merge.c:842-866): sum of source totals minus the
-        # QUANTIZED (decode(encode(dl))) lengths of the dropped docs —
-        # raw dead lengths are unknown to the reference at merge time,
-        # and pending-delete accounting already subtracts quantized
-        # lengths, so recomputing from surviving raw lengths would
-        # shift avgdl across vacuum
-        from pg_textsearch_spark.operators.topk import _fieldnorm_decode_expr
-
-        dead_tokens_quantized = int(
-            src_doclen.join(F.broadcast(drop_doc_ids), "doc_id")
-            .agg(
-                F.coalesce(
-                    F.sum(_fieldnorm_decode_expr(F.col("fieldnorm"))),
-                    F.lit(0.0),
-                )
-            )
-            .collect()[0][0]
-        )
-        merged_doclen = src_doclen.join(
-            F.broadcast(drop_doc_ids), "doc_id", "left_anti"
-        )
-
-    # write new segment, then drop sources from the manifest atomically
-    writer = IndexWriter(base)
-    writer.store.write(merged, "postings", new_seg_id, **_postings_write_opts())
-    writer.store.write(merged_doclen, "doclen", new_seg_id)
-    # carry the doc_id -> key map through the merge (ids never change;
-    # dropped docs leave the map)
-    # a PARTIAL keymap survives a mixed merge (some sources built with
-    # key_col, some inserted with pre-assigned ids): read keymaps only
-    # from the sources that have one and carry them forward — docs
-    # without a key resolve to NULL via resolve_keys' left join. Using
-    # all() here would skip the write and then reclaim (delete) the
-    # source keymap files below, silently destroying the mapping.
-    km_src = sorted(s["seg_id"] for s in segs if s.get("has_keymap"))
-    has_keymap = bool(km_src)
-    if has_keymap:
-        km = writer.store.read(
-            spark, "keymap", km_src, "doc_id bigint, doc_key string"
-        )
-        if drop_doc_ids is not None:
-            km = km.join(F.broadcast(drop_doc_ids), "doc_id", "left_anti")
-        writer.store.write(km, "keymap", new_seg_id)
-    stats = spark.read.schema(
-        "doc_id bigint, doc_len bigint, fieldnorm int"
-    ).parquet(os.path.join(doclen_root, f"seg={new_seg_id}")).agg(
-        F.count("*").alias("num_docs"),
-        F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens"),
-    ).collect()[0]
-
-    writer.write_dictionary(spark, new_seg_id)
+    # new segment written; drop sources from the manifest atomically
+    writer = IndexWriter(index.index_dir)
     manifest = writer.read_manifest()
     src_docs = sum(s["num_docs"] for s in segs)
     src_tokens = sum(s["total_tokens"] for s in segs)
-    if drop_doc_ids is None:
+    if drop is None:
         # invariant: merged doc count == sum of source counts; the
         # token total is carried forward as the sum of source totals
         # (reference merges sum segment headers, merge.c:842-866 —
         # they can lag the raw doclen sum by quantization error once a
         # vacuum has happened upstream, so no raw-sum equality here)
-        assert int(stats["num_docs"]) == src_docs, (stats, src_docs)
+        assert num_docs == src_docs, (num_docs, src_docs)
     else:
-        assert int(stats["num_docs"]) <= src_docs
+        assert num_docs <= src_docs
         # quantized correction, NOT the surviving raw sum (see above)
         src_tokens = src_tokens - dead_tokens_quantized
-    src_docs = int(stats["num_docs"])
 
     level = max((s.get("level", 0) for s in segs), default=0) + 1
     manifest["segments"] = [
@@ -161,7 +89,7 @@ def merge_segments(
         {
             "seg_id": new_seg_id,
             "level": min(level, MAX_LEVELS - 1),
-            "num_docs": src_docs,
+            "num_docs": num_docs,
             "total_tokens": src_tokens,
             "max_doc_id": max(s.get("max_doc_id", -1) for s in segs),
             "created_at_unix": 0,

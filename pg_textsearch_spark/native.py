@@ -174,6 +174,57 @@ void pgts_radix_sort(int64_t *tids, int64_t *dfns, int64_t *tfs,
     }
 }
 
+/* Unpack m values of w bits (1 <= w <= 57, little-endian bit order)
+   from src — the inverse of one pgts_pack_groups group. The
+   accumulator holds < w carry bits before each byte load, so it never
+   exceeds 64 bits. */
+static void unpack_stream(const uint8_t *src, int64_t m, int w,
+                          uint64_t *out) {
+    const uint64_t mask = (1ULL << w) - 1;
+    uint64_t acc = 0;
+    int nbits = 0;
+    for (int64_t i = 0; i < m; i++) {
+        while (nbits < w) {
+            acc |= (uint64_t)(*src++) << nbits;
+            nbits += 8;
+        }
+        out[i] = acc & mask;
+        acc >>= w;
+        nbits -= w;
+    }
+}
+
+/* Batch-decode bitpack posting payloads — the inverse of
+   pgts_pack_groups + pgts_assemble_payloads. hdr[b] is the offset of
+   block b's 3-byte header (id_bits, tf_bits, doc_count-1) in data;
+   its postings land at out_pos[b] in ids/tfs/fns, doc ids restored
+   from the delta stream (first delta absolute). The caller routes
+   varint, unknown-flag and >57-bit payloads elsewhere. */
+void pgts_decode_blocks(const uint8_t *data, const int64_t *hdr,
+                        const int64_t *out_pos, int64_t n_blocks,
+                        int64_t *ids, uint32_t *tfs, uint8_t *fns) {
+    uint64_t tmp[256];
+    for (int64_t b = 0; b < n_blocks; b++) {
+        const uint8_t *p = data + hdr[b];
+        const int idb = p[0], tfb = p[1];
+        const int64_t m = (int64_t)p[2] + 1;
+        const int64_t o = out_pos[b];
+        p += 3;
+        unpack_stream(p, m, idb, tmp);
+        uint64_t doc = 0;
+        for (int64_t i = 0; i < m; i++) {
+            doc += tmp[i];
+            ids[o + i] = (int64_t)doc;
+        }
+        p += (m * idb + 7) / 8;
+        unpack_stream(p, m, tfb, tmp);
+        for (int64_t i = 0; i < m; i++)
+            tfs[o + i] = (uint32_t)tmp[i];
+        p += (m * tfb + 7) / 8;
+        memcpy(fns + o, p, (size_t)m);
+    }
+}
+
 """
 
 _LIB = None
@@ -238,6 +289,13 @@ def _build_lib():
     lib.pgts_pack_groups.restype = None
     lib.pgts_assemble_payloads.restype = None
     lib.pgts_radix_sort.restype = None
+    lib.pgts_decode_blocks.restype = None
+    i64p = ctypes.POINTER(ctypes.c_int64)
+    u8p = ctypes.POINTER(ctypes.c_uint8)
+    lib.pgts_decode_blocks.argtypes = [
+        u8p, i64p, i64p, ctypes.c_int64, i64p,
+        ctypes.POINTER(ctypes.c_uint32), u8p,
+    ]
     return lib
 
 
@@ -348,3 +406,31 @@ def assemble_payloads_native(
         _u8p(buf),
     )
     return buf
+
+
+def decode_blocks_native(
+    data: np.ndarray, hdr: np.ndarray, out_pos: np.ndarray,
+    ids: np.ndarray, tfs: np.ndarray, fns: np.ndarray,
+) -> bool:
+    """Native batch decode of bitpack payloads into the caller's
+    (ids int64, tfs uint32, fns uint8) arrays at ``out_pos`` (see
+    ``codec.decompress_blocks``). Returns False when the native path is
+    off."""
+    lib = get_lib()
+    if lib is None:
+        return False
+    if not (
+        tfs.dtype == np.uint32 and tfs.flags.c_contiguous
+        and len(ids) == len(tfs) == len(fns) and len(hdr) == len(out_pos)
+    ):
+        raise ValueError("decode_blocks_native: mismatched output arrays")
+    lib.pgts_decode_blocks(
+        _u8p(np.ascontiguousarray(data, dtype=np.uint8)),
+        _i64p(np.ascontiguousarray(hdr, dtype=np.int64)),
+        _i64p(np.ascontiguousarray(out_pos, dtype=np.int64)),
+        ctypes.c_int64(len(hdr)),
+        _i64p(ids),
+        tfs.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
+        _u8p(fns),
+    )
+    return True

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import math
 import os
+import queue
 import threading
 import time
 
@@ -40,8 +41,7 @@ import numpy as np
 
 from pg_textsearch_spark.functions.bm25 import bm25_term_score32
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
-from pg_textsearch_spark.index.codec import term_bucket
-from pg_textsearch_spark.index.codec import decompress_block
+from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
 
 
@@ -323,10 +323,9 @@ class ServingIndex:
             flat = self.posting_blocks_flat(missing)
             fresh: dict[str, dict | None] = {}
             for t, d in flat.items():
-                parts = [decompress_block(bytes(p)) for p in d["pay"]]
-                ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
-                tfs = np.concatenate([p[1] for p in parts]).astype(np.int64)
-                fns = np.concatenate([p[2] for p in parts]).astype(np.int64)
+                ids, tfs, fns, _cnt = decompress_blocks(d["pay"])
+                tfs = tfs.astype(np.int64)
+                fns = fns.astype(np.int64)
                 fresh[t] = {
                     "bmt": d["bmt"], "bmn": d["bmn"], "dc": d["dc"],
                     "ids": ids, "tfs": tfs, "fns": fns,
@@ -571,6 +570,10 @@ class ServePool:
             results = pool.search_many(["q1 text", "q2 text"])
     """
 
+    #: result-queue poll interval: how often a waiting dispatcher checks
+    #: that the workers owning its pending queries are still alive
+    POLL_S = 0.5
+
     def __init__(self, index_dir: str, n_workers: int = 8):
         import multiprocessing as mp
 
@@ -664,7 +667,17 @@ class ServePool:
         # mid-drain, e.g. on KeyboardInterrupt) are discarded.
         first_err = None
         while pending:
-            qid, rows, err, lat = self._res_q.get()
+            try:
+                qid, rows, err, lat = self._res_q.get(
+                    timeout=self.POLL_S
+                )
+            except queue.Empty:
+                # a worker that died (OOM kill, segfault) never answers
+                # its qids: fail loudly instead of blocking forever
+                self._raise_if_dead(
+                    {self._qid_worker.get(q) for q in pending}
+                )
+                continue
             w = self._qid_worker.pop(qid, None)
             if w is not None:
                 self._outstanding[w] -= 1
@@ -683,6 +696,15 @@ class ServePool:
         if first_err is not None:
             raise RuntimeError(f"ServePool worker failed: {first_err}")
         return out
+
+    def _raise_if_dead(self, workers) -> None:
+        for w in sorted(x for x in workers if x is not None):
+            p = self._procs[w]
+            if not p.is_alive():
+                raise RuntimeError(
+                    f"ServePool worker {w} (pid {p.pid}) died with exit "
+                    f"code {p.exitcode}; its queries will never answer"
+                )
 
     def close(self) -> None:
         for q in self._req_qs:

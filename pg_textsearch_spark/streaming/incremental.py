@@ -7,10 +7,17 @@ compaction merges upward (reference: src/access/build.c:135-295,
 not event-time streaming — no watermarks exist (SURVEY.md §2.9).
 
 Spark translation: each ``insert_batch`` is a micro-batch that builds
-one delta segment via the ordinary distributed build pipeline and
-commits it to the manifest (the spill), then optionally runs the
-leveled compaction policy. New docs receive doc_ids strictly above
-every existing segment's max, so segments own disjoint doc_id ranges —
+one delta segment and commits it to the manifest (the spill), then
+optionally runs the leveled compaction policy. Like the reference,
+which writes a spill in one process (tp_do_spill, build.c:135-295) and
+runs the parallel build (build_parallel.c) only for CREATE INDEX, a
+batch is collected once and tokenized, encoded and written in the
+driver (index/local_commit.py) into the same tables ``build_index``
+writes; bulk loads belong in ``build_index``. On 4 vCPUs with Spark
+local[2], 1k / 10k / 100k-doc inserts took 0.35 / 0.87 / 6.3 s this
+way vs 6.4 / 6.7 / 13.6 s through the distributed build pipeline it
+replaced. New docs receive doc_ids strictly above every
+existing segment's max, so segments own disjoint doc_id ranges —
 queries treat segments uniformly and merges use disjoint-range
 concatenation (reference: merge.c:748-769). This plugs directly into
 Structured Streaming ``foreachBatch`` for a live pipeline.
@@ -21,11 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pg_textsearch_spark.index.builder import (
-    IndexWriter,
-    assign_doc_ids,
-    build_segment_dataframes,
-)
+from pg_textsearch_spark.index import local_commit
+from pg_textsearch_spark.index.builder import IndexWriter
 from pg_textsearch_spark.index.merge import SEGMENTS_PER_LEVEL, maybe_compact
 from pg_textsearch_spark.operators.topk import BM25Index
 
@@ -48,8 +52,11 @@ def insert_batch(
     Either ``doc_id_col`` holds globally-unique ids already above the
     index's current max (caller-managed), or ``key_col`` is given and
     batch-local dense ids are assigned in key order and offset past
-    the current max (the common path).
+    the current max (the common path). The batch commits driver-local
+    after one collect.
     """
+    if doc_id_col is None and key_col is None:
+        raise ValueError("insert_batch needs doc_id_col or key_col")
     writer = IndexWriter(index_dir)
     manifest = writer.read_manifest()
     segments = manifest.get("segments", [])
@@ -57,43 +64,18 @@ def insert_batch(
     next_doc = (
         max(s.get("max_doc_id", -1) for s in segments) + 1 if segments else 0
     )
+    # existing manifest wins; args only bootstrap a brand-new index
+    config = manifest.get("config", config)
+    n_buckets = manifest.get("n_buckets", n_buckets)
+    lineage = lineage or {"batch": next_seg}
 
-    persisted: list = []
-    try:
-        keymap = None
-        if doc_id_col is None:
-            assert key_col is not None, "need doc_id_col or key_col"
-            # slim projection before the id shuffle (see build_index)
-            docs = assign_doc_ids(
-                docs.select(key_col, text_col), key_col, persisted=persisted
-            ).withColumn("doc_id", F.col("doc_id") + F.lit(next_doc))
-            doc_id_col = "doc_id"
-            keymap = docs.select(
-                F.col(doc_id_col).cast("long").alias("doc_id"),
-                F.col(key_col).cast("string").alias("doc_key"),
-            )
-
-        # existing manifest wins; args only bootstrap a brand-new index
-        config = manifest.get("config", config)
-        n_buckets = manifest.get("n_buckets", n_buckets)
-        postings, doclen = build_segment_dataframes(
-            docs, doc_id_col, text_col, config, n_buckets,
-            persisted=persisted,
-        )
-        out = writer.write_segment(
-            postings,
-            doclen,
-            seg_id=next_seg,
-            config=config,
-            n_buckets=n_buckets,
-            k1=manifest.get("k1", 1.2),
-            b=manifest.get("b", 0.75),
-            lineage=lineage or {"batch": next_seg},
-            keymap=keymap,
-        )
-    finally:
-        for h in persisted:
-            h.unpersist()
+    rows = local_commit.collect_batch(
+        docs, text_col, doc_id_col, key_col if doc_id_col is None else None
+    )
+    out = local_commit.insert_local(
+        writer, rows, next_seg, next_doc, config, n_buckets,
+        manifest.get("k1", 1.2), manifest.get("b", 0.75), lineage,
+    )
     if compact:
         out = maybe_compact(BM25Index(spark, index_dir), fan_in=fan_in)
     return out

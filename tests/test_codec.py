@@ -331,3 +331,67 @@ def test_native_vs_numpy_kernel_byte_identical(monkeypatch):
 
     assert got_native == got_numpy
     assert len(got_native) >= 40  # every group survived
+
+
+def _decoder_corpus():
+    """Payloads over every id width 1-57 and block sizes 1-128, in
+    legacy and 0x80-flagged bitpack form, plus varint payloads (routed
+    to the per-block decoder)."""
+    from pg_textsearch_spark.index.codec import FLAG_BITPACK
+
+    rng = np.random.default_rng(5)
+    sizes = [1, 2, 3, 31, 32, 33, 64, 127, 128]
+    pays = []
+    for w in range(1, 58):
+        for n in sizes:
+            # first delta (absolute id) sets the width; the rest stay
+            # well below it so cumulative ids keep to < 2^63
+            hi = 1 << (w - 1)
+            rest = rng.integers(1, max(2, hi >> 7), n - 1)
+            deltas = [hi] + [int(x) for x in rest]
+            ids = np.cumsum(np.array(deltas, dtype=object)).astype(np.uint64)
+            tfs = rng.integers(1, 1 << int(rng.integers(1, 17)), n).astype(
+                np.uint32
+            )
+            fns = rng.integers(0, 256, n).astype(np.uint8)
+            legacy = compress_block(ids, tfs, fns)
+            assert legacy[0] == w  # the id stream really is w bits wide
+            pays.append(legacy)
+            pays.append(bytes([FLAG_BITPACK]) + legacy)
+            if n in (1, 33):
+                pays.append(compress_block(ids, tfs, fns, codec="varint"))
+    return pays
+
+
+def test_batch_decoder_matches_per_block():
+    """decompress_blocks == concatenated decompress_block over id
+    widths 1-57, block sizes 1-128, legacy + flagged bitpack and
+    varint."""
+    import pyarrow as pa
+
+    from pg_textsearch_spark.index.codec import decompress_blocks
+
+    pays = _decoder_corpus()
+    ref = [decompress_block(p) for p in pays]
+    for form in (pays, pa.array(pays, pa.binary()),
+                 pa.array([b"x"] + pays, pa.large_binary()).slice(1)):
+        ids, tfs, fns, counts = decompress_blocks(form)
+        assert counts.tolist() == [len(r[0]) for r in ref]
+        assert ids.dtype == np.int64 and tfs.dtype == np.uint32
+        assert np.array_equal(
+            ids, np.concatenate([r[0] for r in ref]).astype(np.int64)
+        )
+        assert np.array_equal(tfs, np.concatenate([r[1] for r in ref]))
+        assert np.array_equal(fns, np.concatenate([r[2] for r in ref]))
+    empty = decompress_blocks([])
+    assert all(len(a) == 0 for a in empty)
+
+
+def test_batch_decoder_rejects_unknown_flags():
+    from pg_textsearch_spark.index.codec import decompress_blocks
+
+    good = compress_block(np.array([3, 9], np.uint64),
+                          np.array([1, 2], np.uint32),
+                          np.array([4, 5], np.uint8))
+    with pytest.raises(ValueError, match="unknown posting codec"):
+        decompress_blocks([good, bytes([0xFF, 1, 2, 3])])

@@ -326,3 +326,36 @@ def test_serve_pool_concurrent_dispatchers(idx):
     for i, mix in enumerate(mixes):
         for q, rows in zip(mix, results[i]):
             assert rows == topk_serve(li, q, 5, _serving=sv), (i, q)
+
+
+def test_serve_pool_dead_worker_raises(idx):
+    """A worker that dies never answers its queries: search_many must
+    raise a RuntimeError naming it within seconds, not block forever
+    on the shared result queue."""
+    import threading
+
+    from pg_textsearch_spark.operators.serve import ServePool
+
+    queries = ["alpha beta", "beta", "alpha", "gamma", "beta gamma"] * 4
+    with ServePool(idx.index_dir, n_workers=2) as pool:
+        pool.search_many(queries, k=5)
+        victim = pool._procs[pool.route(queries[0])]
+        victim.kill()
+        victim.join(timeout=10)
+        outcome: list = []
+
+        def run():
+            try:
+                pool.search_many(queries, k=5)
+                outcome.append(None)
+            except RuntimeError as exc:
+                outcome.append(exc)
+
+        t0 = time.perf_counter()
+        th = threading.Thread(target=run, daemon=True)
+        th.start()
+        th.join(timeout=20)
+        assert not th.is_alive(), "search_many wedged on a dead worker"
+        assert time.perf_counter() - t0 < 10
+    assert outcome and isinstance(outcome[0], RuntimeError)
+    assert f"pid {victim.pid}" in str(outcome[0])
