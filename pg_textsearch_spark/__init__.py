@@ -5,7 +5,7 @@ timescale/pg_textsearch (a Postgres BM25 index access method) as an
 idiomatic Spark engine: vectorized pandas/Arrow UDF tokenization, a
 term-partitioned distributed inverted-index build with delta-gap
 bit-packed posting blocks (128 docs/block with block-max metadata),
-LSM-style segment merge, and Block-Max-WAND top-k BM25 retrieval.
+LSM-style segment merge, and block-max top-k BM25 retrieval.
 
 Reference semantics are cited per module as ``reference: file:line``
 into /root/reference (pg_textsearch v1.4.0-dev). This is NOT a port:

@@ -389,16 +389,10 @@ def _stem_udf(cfg: TokenizerConfig):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    # pandas_udf resolves the stringified 'pd.Series' type hints (PEP
-    # 563) via THIS module's globals — pd must be visible there even
-    # though the module no longer imports it at top level
-    globals().setdefault("pd", pd)
-    
     # deferred: pandas_udf needs an active SparkSession to parse DDL types
     stem_lang = cfg.stem_lang
 
-    @pandas_udf("string")
-    def _stem(terms: pd.Series) -> pd.Series:
+    def _stem(terms):
         # resolve the stemmer on the executor (closure carries only the
         # name); stem each unique term once, then a C-loop dict map —
         # the hot build path pushes tens of millions of tokens through
@@ -413,7 +407,10 @@ def _stem_udf(cfg: TokenizerConfig):
         table = {t: fn(t) for t in uniq if t is not None}
         return terms.map(table)
 
-    return _stem
+    # real (not PEP 563 string) hints: pandas_udf infers the Series ->
+    # Series UDF kind from them without resolving names in this module
+    _stem.__annotations__ = {"terms": pd.Series, "return": pd.Series}
+    return pandas_udf(_stem, "string")
 
 
 def flatten_text_array(col: Column | str) -> Column:
@@ -600,15 +597,9 @@ def tokenize_vector_udf(config_name: str = "english"):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    # pandas_udf resolves the stringified 'pd.Series' type hints (PEP
-    # 563) via THIS module's globals — pd must be visible there even
-    # though the module no longer imports it at top level
-    globals().setdefault("pd", pd)
-    
     cfg = get_config(config_name)
 
-    @pandas_udf(_VECTOR_SCHEMA)
-    def _tok(texts: pd.Series) -> pd.Series:
+    def _tok(texts):
         memo: dict = {}  # shared field->lexeme cache across the batch
 
         def one(t):
@@ -619,4 +610,5 @@ def tokenize_vector_udf(config_name: str = "english"):
 
         return texts.map(one)
 
-    return _tok
+    _tok.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    return pandas_udf(_tok, _VECTOR_SCHEMA)

@@ -82,11 +82,16 @@ def ensure_index(spark: SparkSession, sf_dir: str) -> BM25Index:
 # Oracle SQL generation
 # ---------------------------------------------------------------------------
 
+# the unnest sits in a select list, not a lateral join: DuckDB plans a
+# lateral unnest as a delim join that materializes the whole documents
+# table, which at 1M docs spilled tens of GB per oracle query
 _TOK_CTE = """
 tok AS (
-  SELECT doc_id, t.tok AS term
-  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(tok)
-  WHERE t.tok <> '' AND length(t.tok) <= 2047
+  SELECT doc_id, term FROM (
+    SELECT doc_id,
+           unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS term
+    FROM documents
+  ) WHERE term <> '' AND length(term) <= 2047
 ),
 tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM tok GROUP BY 1, 2),
 dl AS (

@@ -1,14 +1,14 @@
-"""Block-Max WAND top-k scoring — the performance path.
+"""Block-max top-k over Spark: ``topk_bmw`` and the batch kernel.
 
-Reference semantics (src/scoring/../bmw.c, ~1700 LoC C): maintain a
-top-k min-heap whose root is the score threshold; skip any posting
-block whose upper bound (BM25 of block_max_tf with the block's
-*minimum* fieldnorm) cannot beat the threshold; for multi-term
-queries run WAND pivoting — terms ordered by current doc_id, pivot =
-first prefix whose summed max-scores exceed the threshold, seek
-pre-pivot terms forward via the skip index, with a block-max
-refinement check and a forward-progress skip-advance
-(reference: bmw.c:365-396, 573-642, 1164-1344, 1476-1716).
+Reference semantics (src/scoring/bmw.c): skip any posting block whose
+upper bound (BM25 of block_max_tf with the block's *minimum*
+fieldnorm) cannot beat the k-th best score, and emit exactly the
+exhaustive top-k. Here every plan scores through the one kernel,
+``kernel.score_topk``: f32 block bounds against a bootstrapped floor
+skip blocks before they decode (the safe-skip algebra of
+bmw.c:1526-1571, ``kernel.decode_rows``), exact f64 totals are
+accumulated per doc without a sort, tie-break (score DESC, doc_id
+ASC).
 
 BMW is a pure optimization: results must equal exhaustive scoring
 (reference: test/sql/validation.sql:186-205) — pinned by
@@ -17,17 +17,16 @@ fixtures (FIXTURES.md F4).
 
 Distribution model: the reference walks every segment under one heap
 on one node. Here each ``run`` (a disjoint 2^RUN_SHIFT = 8192-doc
-range, all query terms co-located by the shuffle) runs an independent
-WAND with a
-local heap inside one Arrow batch; the global ORDER BY score DESC,
+range, all query terms co-located by the shuffle) is scored
+independently inside one Arrow batch; the global ORDER BY score DESC,
 doc_id ASC LIMIT k merges run-local top-ks (TakeOrderedAndProject).
-Scoring arithmetic is float32 like the reference's index scan
-(reference: bmw.c:382-396).
+The reference's single shared heap threshold becomes the two-phase
+bootstrap floor (``_bootstrap_floor``, ``_batch_floors``), taken only
+when the query's posting volume passes ``kernel.wants_floor``.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 import os
 import threading
@@ -40,378 +39,13 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.functions.bm25 import bm25_term_score32
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
-from pg_textsearch_spark.index.codec import decompress_block
-
-
-def _term_score64(tf, dl, idf: float, qf: float, avgdl: float, k1, b):
-    """Exact float64 per-posting score, operation-ordered identically
-    to the exhaustive path's Column expression (functions/bm25.py
-    bm25_score_expr) so the emitted BMW scores hash-match the oracle:
-    idf * tf * (k1+1) / (tf + k1*((1-b) + b*dl/avgdl)) * query_freq."""
-    tfv = np.asarray(tf, dtype=np.float64)
-    dlv = np.asarray(dl, dtype=np.float64)
-    norm = k1 * ((1.0 - b) + b * dlv / avgdl)
-    return idf * tfv * (k1 + 1.0) / (tfv + norm) * qf
-
-
-class _Cursor:
-    """Posting iterator over one (term, run, seg) row's blocks.
-
-    Lazy block decode (reference: segment/scan.c:59-574): a block's
-    payload is only decompressed when the cursor actually lands in it;
-    skipped blocks cost one comparison.
-
-    Two score arrays per loaded block: float32 (the reference's
-    index-scan arithmetic — drives every threshold/skip decision) and
-    float64 (the emitted score, exact per-term match with the
-    exhaustive path so the driver oracle can hash-compare BMW output).
-    """
-
-    __slots__ = (
-        "weight", "idf", "qf", "k1", "b", "avgdl", "block_last",
-        "block_upper", "payloads", "bi", "ids", "scores", "scores64",
-        "pos", "max_score", "alive",
-    )
-
-    def __init__(self, blocks, weight, k1, b, avgdl, idf=None, qf=1):
-        self.weight = np.float32(weight)  # idf * query_freq, f32
-        self.idf = float(idf) if idf is not None else float(weight)
-        self.qf = float(qf)
-        self.k1, self.b, self.avgdl = k1, b, avgdl
-        if blocks is None or len(blocks) == 0:
-            self.alive = False
-            self.max_score = 0.0
-            self.payloads = []
-            return
-        self.block_last = np.asarray(
-            [blk["last_doc_id"] for blk in blocks], dtype=np.int64
-        )
-        # block upper bound: max tf + shortest doc in block
-        bmt = np.asarray([blk["block_max_tf"] for blk in blocks], dtype=np.int64)
-        bmn = np.asarray([blk["block_max_norm"] for blk in blocks], dtype=np.int64)
-        dl = FIELDNORM_DECODE_TABLE[bmn]
-        self.block_upper = (
-            bm25_term_score32(bmt, dl, np.float32(1.0), avgdl, k1, b) * self.weight
-        )
-        self.payloads = [blk["payload"] for blk in blocks]
-        self.bi = -1
-        self.ids = None
-        self.scores = None
-        self.pos = 0
-        self.max_score = float(self.block_upper.max())
-        self.alive = True
-        self._load_block(0)
-
-    def _load_block(self, bi: int) -> None:
-        if bi >= len(self.payloads):
-            self.alive = False
-            return
-        self.bi = bi
-        ids, tfs, fns = decompress_block(bytes(self.payloads[bi]))
-        self.ids = ids.astype(np.int64)
-        dl = FIELDNORM_DECODE_TABLE[fns.astype(np.int64)]
-        self.scores = (
-            bm25_term_score32(tfs, dl, np.float32(1.0), self.avgdl, self.k1, self.b)
-            * self.weight
-        )
-        self.scores64 = _term_score64(
-            tfs, dl, self.idf, self.qf, self.avgdl, self.k1, self.b
-        )
-        self.pos = 0
-
-    @property
-    def cur_doc(self) -> int:
-        return int(self.ids[self.pos]) if self.alive else 1 << 62
-
-    def cur_score(self) -> float:
-        return float(self.scores[self.pos])
-
-    def cur_score64(self) -> float:
-        return float(self.scores64[self.pos])
-
-    def cur_block_upper(self) -> float:
-        return float(self.block_upper[self.bi])
-
-    def cur_block_last(self) -> int:
-        return int(self.block_last[self.bi])
-
-    def advance(self) -> None:
-        self.pos += 1
-        if self.pos >= len(self.ids):
-            self._load_block(self.bi + 1)
-
-    def seek(self, target: int) -> None:
-        """Advance to the first doc_id >= target (skip-index assisted,
-        reference: bmw.c:853-983)."""
-        if not self.alive or self.cur_doc >= target:
-            return
-        if target > int(self.block_last[self.bi]):
-            nbi = int(np.searchsorted(self.block_last, target, side="left"))
-            if nbi >= len(self.payloads):
-                self.alive = False
-                return
-            self._load_block(nbi)
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):  # can't happen if block_last correct
-            self._load_block(self.bi + 1)
-
-
-#: extra heap slots per run beyond k. Eviction ranks by the exact
-#: float64 score (same order as the global merge), so the pad is no
-#: longer load-bearing for correctness — it only adds margin to the
-#: pruning threshold (the threshold is taken from the heap ROOT, i.e.
-#: the (k+PAD)-th best, which is <= the k-th best: strictly more
-#: conservative skipping at negligible memory cost).
-HEAP_PAD = 8
-
-#: relative shave applied when a float64 heap score becomes a float32
-#: pruning threshold: block upper bounds are computed in f32 while heap
-#: scores are exact f64, and per-term f32 rounding is ~6e-8 relative
-#: per operation — 4e-6 covers any realistic term count with two
-#: orders of magnitude to spare. Same guard as the bootstrap floor.
-_THRESH_GUARD = 4e-6
-
-
-class _TopK:
-    """min-heap of (score64, -doc_id, score32) — eviction and the
-    emitted rows rank by the exact float64 score, the SAME order the
-    global merge uses, so a run-local heap can never drop a doc the
-    global top-k needs (round-2 HEAP_PAD only bounded that
-    heuristically; many docs tied within an f32 ulp could overflow it).
-
-    Float32 stays exactly where the reference uses it: in the block-
-    max/threshold PRUNING decisions, which remain conservative — the
-    threshold exposed to the skip logic is the root's f64 score shaved
-    by ``_THRESH_GUARD`` so f32 upper bounds can never round a true
-    top-k doc below it.
-
-    Tie-break: equal scores -> lower doc_id wins (reference:
-    bmw.c:105-122,301-319) — hence -doc_id in the heap key so the
-    *higher* doc_id is evicted first.
-
-    ``floor`` is an externally-proven lower bound on the global k-th
-    best score (the two-phase bootstrap): runs skip blocks below it
-    from the first posting instead of warming up a local threshold.
-    """
-
-    def __init__(self, k: int, floor: float = -1.0):
-        self.k = k + HEAP_PAD
-        self.floor = floor
-        self.heap: list[tuple[float, int, float]] = []
-        self._thr = -1.0
-
-    def push(self, score: float, doc_id: int, score64: float) -> None:
-        item = (score64, -doc_id, score)
-        if len(self.heap) < self.k:
-            heapq.heappush(self.heap, item)
-            if len(self.heap) == self.k:
-                self._update_thr()
-        elif item[:2] > self.heap[0][:2]:
-            heapq.heapreplace(self.heap, item)
-            self._update_thr()
-
-    def _update_thr(self) -> None:
-        root = self.heap[0][0]
-        self._thr = (
-            float(np.float32(root) * (1.0 - _THRESH_GUARD))
-            if root > 0
-            else float(np.float32(root))
-        )
-
-    @property
-    def threshold(self) -> float:
-        return max(self._thr, self.floor)
-
-    def rows(self):
-        return [(-nd, s, s64) for s64, nd, s in self.heap]
-
-
-def _score_single_term(
-    cursors: list[_Cursor],
-    k: int,
-    dead: set[int] | None = None,
-    floor: float = -1.0,
-) -> list[tuple[int, float]]:
-    """Single-term BMW: visit blocks in descending upper-bound order,
-    stop when the best remaining block can't beat the threshold
-    (reference: tp_score_single_term_bmw, bmw.c:469-642)."""
-    topk = _TopK(k, floor)
-    blocks = []
-    for c in cursors:
-        for bi in range(len(c.payloads)):
-            blocks.append((float(c.block_upper[bi]), c, bi))
-    blocks.sort(key=lambda t: -t[0])
-    for upper, c, bi in blocks:
-        if upper < topk.threshold:
-            break  # all remaining blocks are below the threshold
-        ids, tfs, fns = decompress_block(bytes(c.payloads[bi]))
-        dl = FIELDNORM_DECODE_TABLE[fns.astype(np.int64)]
-        scores = (
-            bm25_term_score32(tfs, dl, np.float32(1.0), c.avgdl, c.k1, c.b)
-            * c.weight
-        )
-        scores64 = _term_score64(tfs, dl, c.idf, c.qf, c.avgdl, c.k1, c.b)
-        # push all (<=128) postings: the heap's (score, -doc_id) order
-        # handles both threshold and the doc_id tie-break
-        for i in range(len(scores)):
-            d = int(ids[i])
-            if dead is not None and d in dead:
-                continue  # alive filtering (reference: bmw.c:542-548)
-            topk.push(float(scores[i]), d, float(scores64[i]))
-    return topk.rows()
-
-
-def _score_wand(
-    cursors: list[_Cursor],
-    k: int,
-    dead: set[int] | None = None,
-    floor: float = -1.0,
-) -> list[tuple[int, float]]:
-    """Multi-term Block-Max WAND (reference: bmw.c:1476-1716)."""
-    topk = _TopK(k, floor)
-    cursors = [c for c in cursors if c.alive]
-    while True:
-        cursors = [c for c in cursors if c.alive]
-        if not cursors:
-            break
-        cursors.sort(key=lambda c: c.cur_doc)
-        # pivot: first prefix whose summed max-scores can beat threshold
-        acc = 0.0
-        pivot_idx = -1
-        threshold = topk.threshold
-        for i, c in enumerate(cursors):
-            acc += c.max_score
-            if acc > threshold:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # no remaining doc can enter the top-k
-        pivot_doc = cursors[pivot_idx].cur_doc
-        # extend pivot prefix over cursors already positioned at pivot_doc
-        while (
-            pivot_idx + 1 < len(cursors)
-            and cursors[pivot_idx + 1].cur_doc == pivot_doc
-        ):
-            pivot_idx += 1
-        prefix = cursors[: pivot_idx + 1]
-        if prefix[0].cur_doc == pivot_doc:
-            # all prefix cursors sit exactly at pivot_doc here.
-            # Block-max refinement (reference: bmw.c:1526-1571, incl.
-            # the #365 fix): the safe-skip bound must cover the whole
-            # skipped range, so non-prefix cursors contribute their
-            # full max_score (they may contain docs inside the range).
-            block_bound = sum(c.cur_block_upper() for c in prefix) + sum(
-                c.max_score for c in cursors[pivot_idx + 1:]
-            )
-            if block_bound <= threshold:
-                # safe skip past the soonest block end among the prefix
-                # (forward progress; reference: bmw.c:1251-1344)
-                next_doc = min(c.cur_block_last() for c in prefix) + 1
-                for c in prefix:
-                    c.seek(next_doc)
-                continue
-            if dead is None or pivot_doc not in dead:
-                score = 0.0
-                score64 = 0.0
-                for c in prefix:
-                    score += c.cur_score()
-                    score64 += c.cur_score64()
-                score = float(np.float32(score))
-                topk.push(score, pivot_doc, score64)
-            for c in prefix:
-                c.advance()
-        else:
-            # seek pre-pivot cursors up to the pivot document
-            for c in prefix:
-                if c.cur_doc < pivot_doc:
-                    c.seek(pivot_doc)
-    return topk.rows()
-
-
-def _score_accumulate(
-    items,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    dead=None,
-    floor: float = -1.0,
-) -> list[tuple[int, float, float]]:
-    """Vectorized block-max scoring — the engine's default multi-term
-    kernel.
-
-    ``items``: iterable of (term, idf, qf, blocks) — one entry per
-    (term, run[, seg]) posting row. The per-doc Python WAND loop
-    (``_score_wand``) costs ~50 us/posting; this kernel applies the
-    same SAFE block skip as WAND's refinement bound — skip block i of
-    term t when ``upper_i + sum(other terms' max_score) < floor``
-    (any doc in the block then has true total < floor <= k-th best,
-    reference bmw.c:1526-1571 algebra) — then decodes the survivors
-    and group-sums the exact float64 per-posting scores with numpy
-    (~30 ns/posting). Results are identical to WAND and to exhaustive
-    scoring: pruning uses float32 metadata bounds only, emitted scores
-    are full-precision f64 totals, tie-break (score DESC, doc ASC).
-
-    Without a floor (single runs warming up, no bootstrap) nothing is
-    skipped and the kernel is simply a vectorized exhaustive
-    accumulate — which at run granularity (<= 8192 docs x terms) is
-    faster than any skip logic.
-    """
-    metas = []
-    term_max: dict = {}
-    for term, idf, qf, blocks in items:
-        if blocks is None or len(blocks) == 0:
-            continue
-        bmt = np.asarray(
-            [blk["block_max_tf"] for blk in blocks], dtype=np.int64
-        )
-        bmn = np.asarray(
-            [blk["block_max_norm"] for blk in blocks], dtype=np.int64
-        )
-        dl = FIELDNORM_DECODE_TABLE[bmn]
-        uppers = (
-            bm25_term_score32(bmt, dl, np.float32(1.0), avgdl, k1, b)
-            * np.float32(idf * qf)
-        )
-        metas.append((term, idf, qf, blocks, uppers))
-        m = float(uppers.max())
-        if m > term_max.get(term, float("-inf")):
-            term_max[term] = m
-    if not metas:
-        return []
-    sum_max = sum(term_max.values())
-
-    ids_parts, s64_parts = [], []
-    for term, idf, qf, blocks, uppers in metas:
-        others = np.float32(sum_max - term_max[term])
-        if floor > 0:
-            keep = np.flatnonzero(uppers + others >= np.float32(floor))
-        else:
-            keep = np.arange(len(blocks))
-        for bi in keep:
-            bids, btfs, bfns = decompress_block(bytes(blocks[bi]["payload"]))
-            dl = FIELDNORM_DECODE_TABLE[bfns.astype(np.int64)]
-            ids_parts.append(bids.astype(np.int64))
-            s64_parts.append(_term_score64(btfs, dl, idf, qf, avgdl, k1, b))
-    if not ids_parts:
-        return []
-    ids = np.concatenate(ids_parts)
-    s64 = np.concatenate(s64_parts)
-    if dead:
-        alive = ~np.isin(ids, np.fromiter(dead, dtype=np.int64))
-        ids, s64 = ids[alive], s64[alive]
-        if not len(ids):
-            return []
-    uids, inv = np.unique(ids, return_inverse=True)
-    totals = np.bincount(inv, weights=s64)
-    kk = min(int(k), len(uids))
-    # exact top-k by (total DESC, doc_id ASC): uids ascending makes the
-    # stable lexsort tie-break automatic
-    order = np.lexsort((uids, -totals))[:kk]
-    return [
-        (int(uids[i]), float(np.float32(totals[i])), float(totals[i]))
-        for i in order
-    ]
+from pg_textsearch_spark.index.codec import decompress_blocks
+from pg_textsearch_spark.operators.kernel import (
+    decode_rows,
+    kth_partial_floor,
+    score_topk,
+    wants_floor,
+)
 
 
 #: separator for the phase-2 (term, run) fetch key — never appears in
@@ -428,137 +62,31 @@ def _score_batch_run(
     avgdl: float,
     dead=None,
 ) -> pd.DataFrame:
-    """Multi-QUERY block-max accumulate over one run's posting rows —
-    the batch twin of ``_score_accumulate``.
+    """Multi-QUERY top-k over one run's posting rows: decode the run's
+    blocks once (``kernel.decode_rows``), then call the scoring kernel
+    (``kernel.score_topk``) once per query over those shared arrays.
 
     ``qw_items``: [(query_id, [(term, idf, qf), ...], floor), ...].
-    Queries share terms (the whole point of batching), so each block
-    is decoded AT MOST ONCE per run regardless of how many queries
-    reference its term — the union of the per-query keep masks drives
-    decode. Per query the same SAFE skip applies as in
-    ``_score_accumulate`` (block i of term t is skippable for query q
-    when ``upper_i * w_qt + sum of q's other terms' max scores <
-    floor_q``; reference bmw.c:1526-1571 algebra), per-posting scores
-    are the exact float64 ``_term_score64`` (identical op order to the
-    exhaustive path), and ties break (score DESC, doc_id ASC).
+    Queries share terms (the point of batching), so each block decodes
+    once per run however many queries reference its term; with floors,
+    only the union of the blocks the queries keep decodes. A run spans
+    at most 8192 doc ids, so the kernel's accumulator is at most
+    64 KB per call.
     """
-    # 1) per-term flat block metadata across this run's rows (one row
-    #    per segment at most; concatenate)
-    terms: dict = {}
-    for row in pdf.itertuples():
-        if row.blocks is None or len(row.blocks) == 0:
-            continue
-        d = terms.setdefault(
-            row.term, {"bmt": [], "bmn": [], "dc": [], "pay": []}
-        )
-        for blk in row.blocks:
-            d["bmt"].append(blk["block_max_tf"])
-            d["bmn"].append(blk["block_max_norm"])
-            d["dc"].append(blk["doc_count"])
-            d["pay"].append(blk["payload"])
-    if not terms:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-    base_upper: dict = {}
-    for t, d in terms.items():
-        bmn = np.asarray(d["bmn"], dtype=np.int64)
-        dl = FIELDNORM_DECODE_TABLE[bmn]
-        base_upper[t] = bm25_term_score32(
-            np.asarray(d["bmt"], dtype=np.int64), dl, np.float32(1.0),
-            avgdl, k1, b,
-        )
-        d["dc"] = np.asarray(d["dc"], dtype=np.int64)
-
-    # 2) per-query keep masks (f32, weight-scaled) and their union
-    keep_union = {t: np.zeros(len(u), dtype=bool) for t, u in base_upper.items()}
-    q_plans = []
-    for qid, wlist, floor in qw_items:
-        present = [(t, idf, qf) for (t, idf, qf) in wlist if t in terms]
+    entries = decode_rows(
+        zip(pdf["term"], pdf["blocks"]),
+        [(fl, {t: (idf, qf) for t, idf, qf in wl}) for _, wl, fl in qw_items],
+        k1, b, avgdl,
+    )
+    out_q, out_d, out_s = [], [], []
+    for qid, wlist, _floor in qw_items:
+        present = [(idf, qf, entries[t]) for t, idf, qf in wlist if t in entries]
         if not present:
             continue
-        masks: dict = {}
-        if floor > 0:
-            uppers_q = {
-                t: base_upper[t] * np.float32(idf * qf)
-                for t, idf, qf in present
-            }
-            tmax = {t: float(u.max()) for t, u in uppers_q.items()}
-            smax = sum(tmax.values())
-            for t, idf, qf in present:
-                others = np.float32(smax - tmax[t])
-                m = uppers_q[t] + others >= np.float32(floor)
-                masks[t] = m
-                keep_union[t] |= m
-        else:
-            for t, _idf, _qf in present:
-                masks[t] = None
-                keep_union[t][:] = True
-        q_plans.append((qid, present, masks))
-    if not q_plans:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-
-    # 3) decode the union of kept blocks, once per term
-    dead_arr = (
-        np.fromiter(dead, dtype=np.int64) if dead else None
-    )
-    dec: dict = {}
-    for t, d in terms.items():
-        ku = keep_union[t]
-        if not ku.any():
-            continue
-        idxs = np.flatnonzero(ku)
-        parts = [decompress_block(bytes(d["pay"][i])) for i in idxs]
-        ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
-        tfs = np.concatenate([p[1] for p in parts])
-        fns = np.concatenate([p[2] for p in parts]).astype(np.int64)
-        dec[t] = {
-            "ids": ids,
-            "tfs": tfs,
-            "dl": FIELDNORM_DECODE_TABLE[fns],
-            "dc": d["dc"][idxs],
-            "kept_idx": idxs,
-        }
-
-    # 4) per-query accumulate over the shared decoded arrays
-    out_q: list = []
-    out_d: list = []
-    out_s: list = []
-    for qid, present, masks in q_plans:
-        ids_parts, s_parts = [], []
-        for t, idf, qf in present:
-            e = dec.get(t)
-            if e is None:
-                continue
-            m = masks[t]
-            if m is None:
-                sel = slice(None)
-            else:
-                mk = m[e["kept_idx"]]
-                if not mk.any():
-                    continue
-                sel = slice(None) if mk.all() else np.repeat(mk, e["dc"])
-            sel_ids = e["ids"][sel]
-            sel_tfs = e["tfs"][sel]
-            sel_dl = e["dl"][sel]
-            ids_parts.append(sel_ids)
-            s_parts.append(
-                _term_score64(sel_tfs, sel_dl, idf, qf, avgdl, k1, b)
-            )
-        if not ids_parts:
-            continue
-        ids = np.concatenate(ids_parts)
-        s64 = np.concatenate(s_parts)
-        if dead_arr is not None and len(dead_arr):
-            alive = ~np.isin(ids, dead_arr)
-            ids, s64 = ids[alive], s64[alive]
-            if not len(ids):
-                continue
-        uids, inv = np.unique(ids, return_inverse=True)
-        totals = np.bincount(inv, weights=s64)
-        kk = min(int(k), len(uids))
-        order = np.lexsort((uids, -totals))[:kk]
-        out_q.append(np.repeat(qid, kk))
-        out_d.append(uids[order])
-        out_s.append(totals[order])
+        ids, scores = score_topk(present, k, k1, b, avgdl, dead=dead)
+        out_q.append(np.repeat(qid, len(ids)))
+        out_d.append(ids)
+        out_s.append(scores)
     if not out_q:
         return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
     return pd.DataFrame(
@@ -574,7 +102,7 @@ def _batch_floors(
     pruned, qweights: dict, k: int, k1, b, avgdl, stats: dict | None = None
 ) -> dict:
     """Per-query bootstrap floors for a batch, in TWO jobs total (the
-    batched analog of ``_bootstrap_floor``, whose two driver
+    batched form of ``_bootstrap_floor``, whose two driver
     round-trips amortize over every query in the batch).
 
     Phase 1 collects, per term, only the top posting rows by the
@@ -663,12 +191,13 @@ def _batch_floors(
     rows = pruned.filter(key.isin(fetch)).select("term", "run", "blocks").collect()
     decoded: dict = {}
     for row in rows:
-        ids, tfs, fns = decode_blocks_list(row["blocks"])
-        s32 = bm25_term_score32(
-            tfs, FIELDNORM_DECODE_TABLE[fns.astype(np.int64)],
-            np.float32(1.0), avgdl, k1, b,
+        ids, tfs, fns, _cnt = decompress_blocks(
+            [blk["payload"] for blk in row["blocks"]]
         )
-        decoded[(row["term"], int(row["run"]))] = (ids.astype(np.int64), s32)
+        s32 = bm25_term_score32(
+            tfs, FIELDNORM_DECODE_TABLE[fns], np.float32(1.0), avgdl, k1, b,
+        )
+        decoded[(row["term"], int(row["run"]))] = (ids, s32)
     for qid, w in qweights.items():
         ids_parts, s_parts = [], []
         for t, run in chosen_per_q[qid]:
@@ -680,19 +209,10 @@ def _batch_floors(
             s_parts.append(
                 (got[1] * np.float32(float(idf) * int(qf))).astype(np.float64)
             )
-        if not ids_parts:
-            continue
-        ids = np.concatenate(ids_parts)
-        s = np.concatenate(s_parts)
-        uids, inv = np.unique(ids, return_inverse=True)
-        if len(uids) < k:
-            continue  # fewer than k distinct docs proven — no safe floor
-        partials = np.bincount(inv, weights=s)
-        kth = float(
-            np.partition(partials, len(partials) - k)[len(partials) - k]
-        )
-        if kth > 0:
-            floors[qid] = float(np.float32(kth) * (1.0 - 4e-6))
+        if ids_parts:
+            floors[qid] = kth_partial_floor(
+                np.concatenate(ids_parts), np.concatenate(s_parts), k
+            )
     return floors
 
 
@@ -723,8 +243,8 @@ def _bootstrap_floor(pruned, wmap, k, k1, b, avgdl, stats=None) -> float:
     that guarantees >= k distinct docs whenever the index has them.
 
     The floor is returned shaved by a small relative guard (a few
-    dozen f32 ulps) so float32 summation-order differences in the WAND
-    kernel can never round a true top-k doc below it.
+    dozen f32 ulps, ``kernel.FLOOR_GUARD``) so the kernel's float32
+    block bounds can never round a true top-k doc below it.
     """
     from pyspark.sql import functions as F2
 
@@ -774,51 +294,31 @@ def _bootstrap_floor(pruned, wmap, k, k1, b, avgdl, stats=None) -> float:
     # phase 2: fetch + decode only the chosen rows (single IN predicate)
     key = F2.concat_ws(_KEY_SEP, F2.col("term"), F2.col("run").cast("string"))
     rows = pruned.filter(key.isin(chosen)).select("term", "blocks").collect()
-    by_doc: dict[int, float] = {}
+    ids_parts, s_parts = [], []
     for row in rows:
-        w = np.float32(wmap[row["term"]])
-        ids, tfs, fns = decode_blocks_list(row["blocks"])
-        s = bm25_term_score32(
-            tfs, FIELDNORM_DECODE_TABLE[fns.astype(np.int64)],
-            np.float32(1.0), avgdl, k1, b,
-        ) * w
-        for d, sc in zip(ids.tolist(), s.astype(np.float64).tolist()):
-            by_doc[d] = by_doc.get(d, 0.0) + sc
-    if len(by_doc) < k:
-        return -1.0  # fewer than k distinct docs proven — no safe floor
-    partials = np.asarray(list(by_doc.values()), dtype=np.float64)
-    kth = float(np.partition(partials, len(partials) - k)[len(partials) - k])
-    # relative guard: > 32 f32 ulps, covers f32 summation-order drift
-    return float(np.float32(kth) * (1.0 - 4e-6)) if kth > 0 else -1.0
-
-
-def decode_blocks_list(blocks):
-    """Decode a collected row's blocks (list of Rows) -> numpy arrays."""
-    parts = [decompress_block(bytes(b["payload"])) for b in blocks]
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[1] for p in parts]),
-        np.concatenate([p[2] for p in parts]),
+        ids, tfs, fns, _cnt = decompress_blocks(
+            [blk["payload"] for blk in row["blocks"]]
+        )
+        ids_parts.append(ids)
+        s_parts.append((
+            bm25_term_score32(
+                tfs, FIELDNORM_DECODE_TABLE[fns], np.float32(1.0), avgdl, k1, b,
+            ) * np.float32(wmap[row["term"]])
+        ).astype(np.float64))
+    if not ids_parts:
+        return -1.0
+    return kth_partial_floor(
+        np.concatenate(ids_parts), np.concatenate(s_parts), k
     )
 
 
-#: bootstrap only pays when decode work dominates the two extra driver
-#: round-trips it costs. Measured on a 1M-doc local index the
-#: round-trips (~0.35s) exceed the decode savings, so the auto rule
-#: only enables it for posting volumes where block decode is the
-#: bottleneck (cluster-scale head terms); pass bootstrap=True to force.
-BOOTSTRAP_MIN_POSTINGS = 10_000_000
-
 #: below this many total postings (sum of the query terms' dfs, known
-#: driver-side before planning) a multi-term query runs as ONE task
-#: with a single shared heap: ``coalesce(1)`` is a narrow operation —
-#: no exchange — and WAND is correct over the full cursor set because
-#: runs hold disjoint doc ranges (a doc appears in at most one cursor
-#: per term). This is literally the reference's single-node algorithm,
-#: and it beats the groupBy(run) shuffle whenever total decode work is
-#: smaller than a shuffle round-trip (~0.15 s locally). Above the
-#: threshold the run-sharded plan takes over (cluster-scale head
-#: terms). Override per call with ``small_query_postings``.
+#: driver-side before planning) a query is scored ONCE, driver-side,
+#: over all its collected posting rows — the reference's single-node
+#: algorithm, and faster than the groupBy(run) shuffle whenever total
+#: decode work is smaller than a shuffle round-trip (~0.15 s locally).
+#: Above the threshold the run-sharded plan takes over (cluster-scale
+#: head terms). Override per call with ``small_query_postings``.
 SMALL_QUERY_POSTINGS = 500_000
 
 #: concurrent driver-side small-query scorings admitted before the
@@ -855,7 +355,7 @@ def _serve_overflow(index, query: str, k: int):
     (operators/serve.py). Returns (rank, doc_id, score) rows, or None
     when the serving path is unavailable — caller falls back to the
     distributed plan. Results are contract-identical to topk_bmw
-    (same kernels, same tie-break; oracle gate bm25_topk_serve)."""
+    (same kernel, same tie-break; oracle gate bm25_topk_serve)."""
     if os.environ.get("PGTS_BMW_SERVE_OVERFLOW", "1") == "0":
         return None
     from pg_textsearch_spark.operators.serve import ServingIndex, topk_serve
@@ -882,16 +382,19 @@ def topk_bmw(
     k: int = 10,
     bootstrap: bool | None = None,
     small_query_postings: int | None = None,
-    kernel: str = "accumulate",
     _bootstrap_stats: dict | None = None,
 ) -> DataFrame:
-    """Distributed BMW top-k. Same result contract as topk_exhaustive
-    (rank, doc_id, score). All skip/threshold decisions run in float32
-    like the reference's index scan (bmw.c:382-396); the *emitted*
-    score is the exact float64 value (same per-term operation order as
-    the exhaustive path), and the global merge ranks on it — so the
-    result hash-matches the exhaustive path and the DuckDB oracle at
-    4 decimals, not just within 1e-3."""
+    """Distributed block-max top-k. Same result contract as
+    topk_exhaustive (rank, doc_id, score): every plan below scores
+    through ``kernel.score_topk`` — f32 block bounds prune, the emitted
+    score is the exact float64 total (same per-term operation order as
+    the exhaustive path), and the global merge ranks on it, so the
+    result hash-matches the exhaustive path and the DuckDB oracle at 4
+    decimals, not just within 1e-3.
+
+    ``bootstrap``: None applies the one floor rule
+    (``kernel.wants_floor``); True forces the two-phase floor, False
+    skips it."""
     from pyspark.sql import Window
 
     spark = index.spark
@@ -907,111 +410,63 @@ def topk_bmw(
         from pg_textsearch_spark.operators.serve import local_topk_df
 
         return local_topk_df(spark, [])
+    total_postings = sum(dfs[t] for t in weights)
     if bootstrap is None:
-        bootstrap = sum(dfs.values()) >= BOOTSTRAP_MIN_POSTINGS
+        bootstrap = wants_floor(total_postings)
     k1, b, avgdl = index.k1, index.b, index.avgdl
     wmap = {t: float(idf) * int(qf) for t, (idf, qf) in weights.items()}
     iqmap = {t: (float(idf), int(qf)) for t, (idf, qf) in weights.items()}
     single = len(wmap) == 1
     kk = int(k)
-    # alive filtering: ship the dead-id set to the scoring kernels as a
+    # alive filtering: ship the sorted dead ids to the kernel as a
     # TorrentBroadcast (the per-segment bitset analog) — one copy per
     # executor, fetched lazily, instead of a closure literal serialized
     # into every task. Deletes are a small fraction of the corpus
     # between vacuums; at larger volumes vacuum first.
     dead_bc = None
     if index.has_deletes():
-        dead_bc = spark.sparkContext.broadcast(
-            frozenset(r["doc_id"] for r in index.deleted_ids().collect())
-        )
+        dead_bc = spark.sparkContext.broadcast(index.deleted_id_array())
 
     pruned = index.pruned_postings(list(wmap)).select("term", "run", "blocks")
 
     floor = -1.0
     if bootstrap and dead_bc is None:
         # deletes would make bootstrap scores unsafe bounds (a dead doc
-        # could hold the k-th slot) — skip bootstrap under deletes.
-        # Per-handle floor memo (BM25Index._floor_cache, stamp-
-        # invalidated like _df_cache): the floor is a pure function of
-        # (segment set, term weights, k), so a repeated warm query
-        # skips the two bootstrap jobs (round 8: q_4tok warm shed one
-        # of its three Spark jobs' latency)
-        fkey = (tuple(sorted(wmap.items())), kk)
-        fcache = getattr(index, "_floor_cache", None)
-        if fcache is not None and fkey in fcache:
-            floor = fcache[fkey]
-        else:
-            floor = _bootstrap_floor(
+        # could hold the k-th slot) — skip bootstrap under deletes. The
+        # floor is a pure function of (segment set, term weights, k), so
+        # a repeated warm query reads it from the handle's floor memo
+        # and skips the two bootstrap jobs
+        floor = index.floor_memo(
+            (tuple(sorted(wmap.items())), kk),
+            lambda: _bootstrap_floor(
                 pruned, wmap, kk, k1, b, avgdl, stats=_bootstrap_stats
-            )
-            if fcache is not None:
-                fcache[fkey] = floor
+            ),
+            _bootstrap_stats,
+        )
+
+    def score_rows(rows):
+        dead = dead_bc.value if dead_bc is not None else None
+        entries = decode_rows(rows, [(floor, iqmap)], k1, b, avgdl)
+        return score_topk(
+            [(*iqmap[t], e) for t, e in entries.items()],
+            kk, k1, b, avgdl, dead=dead,
+        )
 
     def score_run(pdf: pd.DataFrame) -> pd.DataFrame:
-        dead = dead_bc.value if dead_bc is not None else None
-        if not single and kernel == "accumulate":
-            # vectorized block-max kernel (see _score_accumulate):
-            # identical results, ~1000x less per-posting Python
-            items = [
-                (
-                    row.term,
-                    iqmap[row.term][0],
-                    iqmap[row.term][1],
-                    row.blocks,
-                )
-                for row in pdf.itertuples()
-            ]
-            rows = _score_accumulate(
-                items, kk, k1, b, avgdl, dead=dead, floor=floor
-            )
-            if not rows:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            return pd.DataFrame(
-                {
-                    "doc_id": np.asarray([r[0] for r in rows], dtype=np.int64),
-                    "score": np.asarray([r[2] for r in rows], dtype=np.float64),
-                }
-            )
-        cursors = [
-            _Cursor(
-                row.blocks, wmap[row.term], k1, b, avgdl,
-                idf=iqmap[row.term][0], qf=iqmap[row.term][1],
-            )
-            for row in pdf.itertuples()
-        ]
-        cursors = [c for c in cursors if c.alive]
-        if not cursors:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        rows = (
-            _score_single_term(cursors, kk, dead, floor)
-            if single
-            else _score_wand(cursors, kk, dead, floor)
-        )
-        # emit the exact f64 score; f32 was only the pruning arithmetic
-        return pd.DataFrame(
-            {
-                "doc_id": np.asarray([r[0] for r in rows], dtype=np.int64),
-                "score": np.asarray([r[2] for r in rows], dtype=np.float64),
-            }
-        )
+        ids, scores = score_rows(zip(pdf["term"], pdf["blocks"]))
+        return pd.DataFrame({"doc_id": ids, "score": scores})
 
     small_cut = (
         SMALL_QUERY_POSTINGS
         if small_query_postings is None
         else small_query_postings
     )
-    total_postings = sum(dfs.get(t, 0) for t in wmap)
     if single and total_postings > small_cut:
         # large single-term queries need no cross-term alignment: every
         # (term, run) row is an independent posting list, so score each
         # scan partition in place (mapInPandas, ZERO shuffles — one
         # stage from parquet to TakeOrdered) with a partition-local
-        # heap; the global limit merges partition top-ks. Small
-        # single-term queries fall through to the one-task plan below —
-        # a single _score_single_term call over ALL rows shares one
-        # heap and one block-sorted early-stop across segments/runs
-        # (the per-partition plan re-warms a threshold per task and
-        # measured slower at bench head-term dfs; BENCH_r03 q_1tok).
+        # top-k; the global limit merges partition top-ks
         def score_partition(batches):
             for pdf in batches:
                 out = score_run(pdf)
@@ -1025,46 +480,33 @@ def topk_bmw(
         # small query (single- or multi-term): the pruned scan is the
         # only data-touching work (row-group-pruned parquet read, its
         # volume bounded by small_cut postings — ~1 MB of encoded
-        # blocks), so collect those rows and run the SAME kernel with
-        # one shared heap DRIVER-side. The coalesce(1) one-task
-        # mapInPandas this replaces paid ~0.17 s/query of Python-stage
-        # setup (function pickling, worker handshake, Arrow stream)
-        # for a kernel that costs <1 ms on a few thousand postings —
-        # measured 0.28 s for a trivial one-task mapInPandas vs 0.11 s
-        # for the bare JVM scan+collect (1M-page index, warm). Scores,
-        # tie-break, and the (rank, doc_id, score) contract are
-        # identical; past small_cut the distributed plans take over,
-        # so driver memory stays bounded.
+        # blocks), so collect those rows and run the SAME kernel once
+        # DRIVER-side. The coalesce(1) one-task mapInPandas this
+        # replaces paid ~0.17 s/query of Python-stage setup (function
+        # pickling, worker handshake, Arrow stream) for a kernel that
+        # costs <1 ms on a few thousand postings — measured 0.28 s for
+        # a trivial one-task mapInPandas vs 0.11 s for the bare JVM
+        # scan+collect (1M-page index, warm). Past small_cut the
+        # distributed plans take over, so driver memory stays bounded.
         if _DRIVER_SCORE_SLOTS.acquire(blocking=False):
             try:
                 # collected block structs are Rows — field-indexable
-                # exactly like the dicts the Arrow path hands the
-                # kernel
-                rows_pd = pd.DataFrame(
-                    [(r["term"], r["run"], r["blocks"])
-                     for r in pruned.collect()],
-                    columns=["term", "run", "blocks"],
-                )
-                out = (
-                    score_run(rows_pd)
-                    if len(rows_pd)
-                    else pd.DataFrame({"doc_id": [], "score": []})
+                # exactly like the dicts the Arrow path hands the kernel
+                ids, scores = score_rows(
+                    (r["term"], r["blocks"]) for r in pruned.collect()
                 )
             finally:
                 _DRIVER_SCORE_SLOTS.release()
-            order = sorted(
-                zip(out["doc_id"].tolist(), out["score"].tolist()),
-                key=lambda t: (-t[1], t[0]),
-            )[:kk]
             from pg_textsearch_spark.operators.serve import local_topk_df
 
-            return local_topk_df(
-                spark, [(i + 1, d, s) for i, (d, s) in enumerate(order)]
-            )
+            return local_topk_df(spark, [
+                (i + 1, d, s) for i, (d, s) in
+                enumerate(zip(ids.tolist(), scores.tolist()))
+            ])
         # driver slot contended (the default is ONE slot, so overflow
         # begins at the 2nd concurrent small query): route
         # the overflow through the in-process SERVING kernel — same
-        # index files, same scoring kernels, results oracle-gated
+        # index files, same scoring kernel, results oracle-gated
         # identical (gate bm25_topk_serve) — instead of the
         # distributed plan. The driver path's per-query work (plan
         # build + row pickling) holds the GIL ~0.13 s, so 16 threads

@@ -5,13 +5,13 @@ Spark's per-job floor (~0.25 s in local mode: scheduling + pruned
 parquet scan stages) on EVERY interactive query — fine for batch and
 concurrent serving, ~50x the reference's warm 5 ms single-query p50.
 This module is the interactive answer: the SAME on-disk index and the
-same float32-pruned / exact-float64-emitted scoring contract, executed
-in the serving process — pyarrow bucket-dir + row-group pruned reads,
-block metadata flattened to numpy (no per-(term,run)-row Python), a
-block-max safe-skip floor, and a stamp-invalidated decoded-postings
-LRU (the shared_buffers-resident-segment analog) that serves repeated
-query terms in ~1 ms without touching parquet. Results are identical
-to ``topk_bmw`` (same pruning algebra, same tie-break; oracle-gated).
+same scoring kernel (``kernel.score_topk``), executed in the serving
+process — pyarrow bucket-dir + row-group pruned reads, block metadata
+flattened to numpy (no per-(term,run)-row Python), and a
+stamp-invalidated decoded-postings LRU (the
+shared_buffers-resident-segment analog) that serves repeated query
+terms without touching parquet. Results are identical to ``topk_bmw``
+(same kernel, same tie-break; oracle-gated).
 
 Scale boundary (stated honestly, like SMALL_QUERY_POSTINGS): the
 serving process reads the QUERY TERMS' posting rows only — work is
@@ -39,10 +39,9 @@ import time
 
 import numpy as np
 
-from pg_textsearch_spark.functions.bm25 import bm25_term_score32
-from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
-from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
+from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
+from pg_textsearch_spark.operators.kernel import score_topk
 
 
 class LocalIndex:
@@ -123,6 +122,7 @@ class ServingIndex:
         self.index = index
         self._files: dict[tuple, list[str]] | None = None
         self._df_cache: dict[str, int] = {}
+        self._dead: np.ndarray | None = None
         self._stamp = None
         #: decoded-postings LRU: term -> flat decoded arrays. The
         #: serving analog of the reference's shared_buffers-resident
@@ -216,13 +216,10 @@ class ServingIndex:
                     # occurrences — same rule BM25Index._term_dfs_uncached
                     # applies, so serve/bmw ranking parity holds on old
                     # indexes too
-                    dead = self.dead_ids() or frozenset()
-                    dead_arr = np.fromiter(dead, dtype=np.int64)
+                    dead = self.dead_ids()
                     flat = self.posting_flat_decoded(live)
                     for term, d in flat.items():
-                        got[term] -= int(
-                            np.isin(d["ids"], dead_arr).sum()
-                        )
+                        got[term] -= int(np.isin(d["ids"], dead).sum())
             with self._lock:
                 self._df_cache.update(got)
         got_all = {}
@@ -355,31 +352,35 @@ class ServingIndex:
             if v is not None and v is not _MISS
         }
 
-    def dead_ids(self) -> frozenset | None:
+    def dead_ids(self) -> np.ndarray | None:
+        """Sorted int64 array of the pending-delete doc ids, read once
+        per stamp; None when the index has no pending deletes."""
         self._check_stamp()
-        dead = getattr(self, "_dead", None)
+        dead = self._dead
         if dead is None:
             if not self.index.has_deletes():
-                dead = frozenset()
+                dead = np.zeros(0, dtype=np.int64)
             else:
                 import pyarrow.parquet as pq
 
                 path = os.path.join(self.index.index_dir, "deletes")
-                dead = frozenset(
-                    pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist()
+                dead = np.unique(
+                    pq.read_table(path, columns=["doc_id"])["doc_id"]
+                    .to_numpy().astype(np.int64)
                 )
             self._dead = dead
-        return dead or None
+        return dead if len(dead) else None
 
 
 def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = None):
     """Interactive top-k: list[(rank, doc_id, score)] in milliseconds.
 
     Identical results to ``topk_bmw`` — same query tokenization, same
-    IDF arithmetic, same f32-pruning/f64-emitting kernels, same
-    (score DESC, doc_id ASC) tie-break. Returns plain rows (the
-    serving shape); wrap with ``spark.createDataFrame(rows, "rank int,
-    doc_id bigint, score double")`` when a DataFrame is needed.
+    IDF arithmetic, the same scoring kernel (``kernel.score_topk``)
+    over the serving cache's flat arrays, same (score DESC, doc_id ASC)
+    tie-break. Returns plain rows (the serving shape); wrap with
+    ``spark.createDataFrame(rows, "rank int, doc_id bigint, score
+    double")`` when a DataFrame is needed.
     """
     sv = _serving or ServingIndex(index)
     qtf = tokenize_query(query, index.config)
@@ -399,136 +400,25 @@ def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = N
     flat = sv.posting_flat_decoded(list(weights))
     if not flat:
         return []
-    # local two-phase floor (skipped under pending deletes: the dead
-    # set makes the partial-sum bound unsafe, exactly like the
-    # distributed path's bootstrap)
-    floor = -1.0 if dead else _flat_floor(flat, weights, int(k), k1, b, avgdl)
-    rows = _score_flat(
-        flat, weights, int(k), k1, b, avgdl, dead=dead, floor=floor
+    ids, scores = score_topk(
+        [(*weights[t], d) for t, d in flat.items()],
+        int(k), k1, b, avgdl, dead=dead,
     )
-    rows.sort(key=lambda r: (-r[2], r[0]))
     return [
-        (rank, doc_id, s64)
-        for rank, (doc_id, _s32, s64) in enumerate(rows[: int(k)], start=1)
+        (rank, doc_id, s)
+        for rank, (doc_id, s) in enumerate(
+            zip(ids.tolist(), scores.tolist()), start=1
+        )
     ]
 
 
-def _term_uppers(flat: dict, weights: dict, k1, b, avgdl) -> dict:
-    """Per-term float32 block upper bounds from the flat metadata."""
-    uppers = {}
-    for t, d in flat.items():
-        idf, qf = weights[t]
-        dl = FIELDNORM_DECODE_TABLE[d["bmn"]]
-        uppers[t] = (
-            bm25_term_score32(d["bmt"], dl, np.float32(1.0), avgdl, k1, b)
-            * np.float32(idf * qf)
-        )
-    return uppers
-
-
-def _score_flat(
-    flat: dict, weights: dict, k: int, k1, b, avgdl,
-    dead=None, floor: float = -1.0,
-) -> list[tuple[int, float, float]]:
-    """Block-max accumulate over flattened block arrays — the serving
-    twin of bmw._score_accumulate (same SAFE skip: drop block i of
-    term t when upper_i + sum of other terms' max scores < floor;
-    reference bmw.c:1526-1571 algebra), with all block metadata
-    handled in single numpy passes instead of per-(term,run)-row
-    Python. Emitted scores are exact f64 totals; tie-break
-    (score DESC, doc_id ASC)."""
-    from pg_textsearch_spark.operators.bmw import _term_score64
-
-    uppers = _term_uppers(flat, weights, k1, b, avgdl)
-    term_max = {t: float(u.max()) for t, u in uppers.items()}
-    sum_max = sum(term_max.values())
-    ids_parts, s64_parts = [], []
-    for t, d in flat.items():
-        idf, qf = weights[t]
-        u = uppers[t]
-        ids_t, tfs_t, fns_t = d["ids"], d["tfs"], d["fns"]
-        if floor > 0:
-            others = np.float32(sum_max - term_max[t])
-            keep = u + others >= np.float32(floor)
-            if not keep.all():
-                # element mask from the per-block keep mask
-                emask = np.repeat(keep, d["dc"])
-                ids_t, tfs_t, fns_t = (
-                    ids_t[emask], tfs_t[emask], fns_t[emask]
-                )
-        if not len(ids_t):
-            continue
-        dl = FIELDNORM_DECODE_TABLE[fns_t]
-        ids_parts.append(ids_t)
-        s64_parts.append(_term_score64(tfs_t, dl, idf, qf, avgdl, k1, b))
-    if not ids_parts:
-        return []
-    ids = np.concatenate(ids_parts)
-    s64 = np.concatenate(s64_parts)
-    if dead:
-        alive = ~np.isin(ids, np.fromiter(dead, dtype=np.int64))
-        ids, s64 = ids[alive], s64[alive]
-        if not len(ids):
-            return []
-    uids, inv = np.unique(ids, return_inverse=True)
-    totals = np.bincount(inv, weights=s64)
-    kk = min(int(k), len(uids))
-    order = np.lexsort((uids, -totals))[:kk]
-    return [
-        (int(uids[i]), float(np.float32(totals[i])), float(totals[i]))
-        for i in order
-    ]
-
-
-def _flat_floor(flat: dict, weights: dict, k: int, k1, b, avgdl) -> float:
-    """Bootstrap floor from the flat block arrays: decode the highest-
-    upper blocks until they cover ``k * n_terms`` postings, take the
-    k-th best per-doc f32 partial sum, shave by the f32 guard. Partial
-    sums over any block subset are lower bounds on true totals (scores
-    are non-negative), so the floor is always safe."""
-    uppers = _term_uppers(flat, weights, k1, b, avgdl)
-    terms = list(flat)
-    all_u = np.concatenate([uppers[t] for t in terms])
-    if not len(all_u):
-        return -1.0
-    all_dc = np.concatenate([flat[t]["dc"] for t in terms])
-    tcode = np.concatenate(
-        [np.full(len(uppers[t]), i) for i, t in enumerate(terms)]
-    )
-    starts = np.concatenate(([0], np.cumsum([len(uppers[t]) for t in terms])))
-    order = np.argsort(-all_u)
-    covered = np.cumsum(all_dc[order])
-    needed = k * len(terms)
-    cut = int(np.searchsorted(covered, needed)) + 1
-    pick = order[:cut]
-    ids_parts, s_parts = [], []
-    for gi in pick:
-        ti = int(tcode[gi])
-        t = terms[ti]
-        idf, qf = weights[t]
-        d = flat[t]
-        bi = int(gi - starts[ti])
-        s_, e_ = int(d["off"][bi]), int(d["off"][bi + 1])
-        dl = FIELDNORM_DECODE_TABLE[d["fns"][s_:e_]]
-        ids_parts.append(d["ids"][s_:e_])
-        s_parts.append(
-            (
-                bm25_term_score32(
-                    d["tfs"][s_:e_], dl, np.float32(1.0), avgdl, k1, b
-                )
-                * np.float32(idf * qf)
-            ).astype(np.float64)
-        )
-    ids = np.concatenate(ids_parts)
-    s = np.concatenate(s_parts)
-    uids, inv = np.unique(ids, return_inverse=True)
-    if len(uids) < k:
-        return -1.0
-    partials = np.bincount(inv, weights=s)
-    kth = float(np.partition(partials, len(partials) - k)[len(partials) - k])
-    return float(np.float32(kth) * (1.0 - 4e-6)) if kth > 0 else -1.0
 #: above this many total postings (sum of query-term dfs) the pruned
-#: volume no longer belongs in one process — dispatch to the cluster
+#: volume no longer belongs in one process — dispatch to the cluster.
+#: Scale note: a serving query's memory is its decoded postings plus
+#: the kernel's accumulator, at most 64 B per posting (about 8 MB on a
+#: 1M-doc index; see kernel.score_topk). The bootstrap floor gate
+#: (kernel.BOOTSTRAP_MIN_POSTINGS) sits far above this cap, so serving
+#: never takes a floor
 SERVE_MAX_POSTINGS = 2_000_000
 
 
@@ -563,7 +453,7 @@ class ServePool:
     (ServingIndex term_dfs) — routing never touches postings.
 
     Results are identical to ``topk_serve`` (same handle type, same
-    kernels). Use as a context manager::
+    kernel). Use as a context manager::
 
         with ServePool(index_dir, n_workers=8) as pool:
             rows = pool.search("hello world", k=10)

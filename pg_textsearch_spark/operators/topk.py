@@ -8,9 +8,10 @@ reference: test/sql/validation.sql:186-205):
   with float64 JVM column expressions, groupBy(doc_id).sum, global
   top-k. This is operator Q10 — the semantic ground truth, and the
   path the DuckDB oracle gate runs against.
-- ``topk_bmw`` (operators/bmw.py): float32 Block-Max-WAND inside an
-  Arrow UDF per (bucket, run) — skips posting blocks whose upper
-  bound cannot beat the running threshold (reference: bmw.c).
+- ``topk_bmw`` (operators/bmw.py) and ``topk_batch``: the block-max
+  scoring kernel (operators/kernel.py) per run inside an Arrow UDF —
+  skips posting blocks whose f32 upper bound cannot reach a
+  bootstrapped floor, emits exact f64 totals (reference: bmw.c).
 
 Query lifecycle (SURVEY.md §3.1 Spark equivalent): tokenize the query
 driver-side -> look up df per term over pruned postings (one tiny
@@ -38,6 +39,7 @@ from pg_textsearch_spark.functions.tokenizer import tokenize_query
 from pg_textsearch_spark.index.builder import term_bucket
 from pg_textsearch_spark.index.codec import decompress_blocks
 from pg_textsearch_spark.index.storage import ParquetDirStore
+from pg_textsearch_spark.operators.kernel import wants_floor
 
 
 #: explicit read schemas (incl. partition columns): parquet dirs from
@@ -76,12 +78,11 @@ class BM25Index:
         # and the dictionary scan plan. Invalidated whenever the
         # segment set or delete stats change.
         self._df_cache: dict[str, int] = {}
-        # (sorted term-weight tuple, k) -> bootstrap floor (operators/
-        # bmw.py): the floor is a pure function of the segment set and
-        # the query weights, so a repeated warm query skips the two
-        # bootstrap jobs exactly like a repeated term skips the
-        # dictionary job above (round 8; same fn_extra-cache analogy,
-        # same stamp invalidation)
+        # bootstrap floors (floor_memo): a floor is a pure function of
+        # the segment set, the query weights and k, so a repeated warm
+        # query skips the two bootstrap jobs exactly like a repeated
+        # term skips the dictionary job above (same fn_extra-cache
+        # analogy, same stamp invalidation)
         self._floor_cache: dict = {}
         self._pruned_cache: dict = {}
         self._cache_stamp = None
@@ -149,6 +150,14 @@ class BM25Index:
         path = os.path.join(self.index_dir, "deletes")
         return self.spark.read.parquet(path).select("doc_id").distinct()
 
+    def deleted_id_array(self) -> np.ndarray:
+        """``deleted_ids`` collected as a sorted int64 array: the dead
+        set the scoring kernel zeroes."""
+        return np.unique(np.asarray(
+            [r["doc_id"] for r in self.deleted_ids().collect()],
+            dtype=np.int64,
+        ))
+
     def has_deletes(self) -> bool:
         return int(self.manifest.get("deleted_docs", 0)) > 0
 
@@ -207,6 +216,22 @@ class BM25Index:
             self._pruned_cache.clear()
         self._pruned_cache[key] = df
         return df
+
+    def floor_memo(self, key, compute, stats: dict | None = None):
+        """Bootstrap floor(s) for ``key`` from the per-handle memo, or
+        ``compute()`` them and remember. Bounded like the plan memo. On
+        a hit ``stats["floor_cache_hit"]`` is set, so a stats dict is
+        never left silently empty by a skipped bootstrap."""
+        self._check_stamp()
+        if key in self._floor_cache:
+            if stats is not None:
+                stats["floor_cache_hit"] = True
+            return self._floor_cache[key]
+        value = compute()
+        if len(self._floor_cache) >= 4096:
+            self._floor_cache.clear()
+        self._floor_cache[key] = value
+        return value
 
     def keymap(self) -> DataFrame | None:
         """(doc_id, doc_key) for key_col-built indexes (the ctid-map
@@ -579,22 +604,18 @@ def topk_batch(
 
     This is where Spark beats a single-node server on throughput: one
     postings scan over the union of all query terms, sharded by run
-    (disjoint 8192-doc ranges, every query term co-located), with a
-    multi-query block-max kernel (bmw._score_batch_run) that decodes
-    each posting block AT MOST ONCE per run no matter how many queries
-    share its term, prunes per query against a bootstrapped per-query
-    floor (bmw._batch_floors — two driver round-trips for the WHOLE
-    batch), and emits <= k rows per (query, run). The final merge is
-    one windowed top-k per query over those k*runs candidates. Batch
-    691 MS-MARCO-style queries into three jobs instead of 691.
+    (disjoint 8192-doc ranges, every query term co-located). Per run
+    (``bmw._score_batch_run``) each posting block decodes AT MOST ONCE
+    no matter how many queries share its term, then the one scoring
+    kernel (``kernel.score_topk``) runs once per query over those
+    shared arrays and emits <= k rows per (query, run). The final merge
+    is one windowed top-k per query over those k*runs candidates.
 
-    The round-3 implementation decoded the full posting lists and
-    joined them against the weights table — each posting was
-    replicated once per query sharing its term, and the scored rows
-    (|postings| x sharing-factor) all crossed a shuffle; on a 1M-doc
-    index with head terms that measured 6.9 q/s. Here the shuffle
-    carries compressed block rows once and per-query work happens on
-    shared decoded arrays.
+    ``prune`` applies the one floor rule (``kernel.wants_floor``) per
+    query: a query bootstraps a pruning floor only when its terms' dfs
+    sum to ``BOOTSTRAP_MIN_POSTINGS`` or more; ``prune=False`` skips
+    floors. The floors of a batch cost two driver round-trips in total
+    (``bmw._batch_floors``).
 
     Semantics per query are identical to ``topk_exhaustive`` (same
     float64 per-posting math and op order, same (score DESC, doc_id
@@ -639,36 +660,33 @@ def topk_batch(
 
     dead_bc = None
     if index.has_deletes():
-        dead_bc = spark.sparkContext.broadcast(
-            frozenset(r["doc_id"] for r in index.deleted_ids().collect())
-        )
+        dead_bc = spark.sparkContext.broadcast(index.deleted_id_array())
 
     floors = {qid: -1.0 for qid in qweights}
-    if prune and dead_bc is None:
+    floored = {
+        qid: w for qid, w in qweights.items()
+        if prune and wants_floor(sum(dfs[t] for t in w))
+    }
+    if floored and dead_bc is None:
         # deletes make partial-sum bounds unsafe (a dead doc could hold
-        # the k-th slot) — skip floors under deletes, like topk_bmw.
-        # Per-handle memo (stamp-invalidated, same pattern as the
-        # single-query floor): a repeated batch — warm + median-of-N
-        # timing passes, or a resubmitted query mix — skips the two
-        # bootstrap driver round-trips and goes straight to the one
-        # scan+score job (round 8)
+        # the k-th slot) — skip floors under deletes, like topk_bmw. A
+        # resubmitted query mix reads its floors from the handle's memo
+        # and goes straight to the one scan+score job
         fkey = (
             tuple(
                 (qid, tuple(sorted(w.items())))
-                for qid, w in sorted(qweights.items())
+                for qid, w in sorted(floored.items())
             ),
             int(k),
         )
-        fcache = getattr(index, "_floor_cache", None)
-        if fcache is not None and fkey in fcache:
-            floors = fcache[fkey]
-        else:
-            floors = _batch_floors(
-                pruned, qweights, int(k), index.k1, index.b, index.avgdl,
+        floors.update(index.floor_memo(
+            fkey,
+            lambda: _batch_floors(
+                pruned, floored, int(k), index.k1, index.b, index.avgdl,
                 stats=_floor_stats,
-            )
-            if fcache is not None:
-                fcache[fkey] = floors
+            ),
+            _floor_stats,
+        ))
 
     kk = int(k)
     k1, b, avgdl = index.k1, index.b, index.avgdl

@@ -13,6 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap for local mode: 3/8 of host RAM, 1g to 16g.
+
+    16g cleared an 8M-doc build on a 128 GiB host (8g OOMed the cached
+    tokenized base past ~6M docs: ColumnBuilder burst allocations
+    across 32 tasks). A fixed 16g on a 16 GB host lets the JVM grow
+    into memory the Python side needs: the driver process, its Python
+    workers and in-process oracles such as DuckDB. 3/8 leaves the
+    other 5/8 to them (6g on a 16 GB host)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{min(16, max(1, int(ram * 3 / 8) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "spark-textsearch",
     master: str | None = None,
@@ -51,12 +67,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode: driver heap IS the executor heap. 8g OOMs the
-        # cached tokenized base past ~6M docs (ColumnBuilder burst
-        # allocations across 32 tasks, measured round 7); 16g clears
-        # 8M on this 128 GiB box. On a real cluster this is
-        # spark.executor.memory sized per node, not a driver concern.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # local mode: driver heap IS the executor heap. SPARK_DRIVER_MEM
+        # overrides; otherwise sized from host RAM (default_driver_memory).
+        # On a real cluster this is spark.executor.memory sized per node,
+        # not a driver concern.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # shuffle/spill/broadcast block codec and parquet codec:

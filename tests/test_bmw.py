@@ -204,18 +204,17 @@ def test_randomized_multisegment_delete_parity(spark, tmp_path_factory, seed):
 
 
 def test_f32_tied_scores_straddling_k_boundary(spark, tmp_path):
-    """Adversarial tie test (round-2 verdict #7 / ADVICE): >HEAP_PAD
-    docs whose float32 scores are IDENTICAL but whose float64 scores
-    differ (tf = 10000+i: the f64 delta is ~1e-10 relative, far below
-    one f32 ulp) straddle the k boundary inside one run. A heap that
-    ranks/evicts by f32 keeps the lowest doc_ids (tie-break) and drops
-    the true f64 top-k — the f64-ranked heap must match exhaustive
-    exactly."""
+    """Adversarial tie test (round-2 verdict #7 / ADVICE): 20 docs
+    whose float32 scores are IDENTICAL but whose float64 scores differ
+    (tf = 10000+i: the f64 delta is ~1e-10 relative, far below one f32
+    ulp) straddle the k boundary inside one run. A top-k that ranks by
+    f32 keeps the lowest doc_ids (tie-break) and drops the true f64
+    top-k — the f64-ranked cut must match exhaustive exactly."""
     from pg_textsearch_spark.index.builder import build_index
-    from pg_textsearch_spark.operators.bmw import HEAP_PAD, topk_bmw
+    from pg_textsearch_spark.operators.bmw import topk_bmw
     from pg_textsearch_spark.operators.topk import BM25Index, topk_exhaustive
 
-    n = HEAP_PAD + 12  # 20 docs, k=5 -> boundary well inside the ties
+    n = 20  # k=5 -> boundary well inside the ties
     rows = [(i, ("tie " * (10000 + i)) + "anchor") for i in range(n)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     d = str(tmp_path / "ties")
@@ -234,13 +233,13 @@ def test_f32_tied_scores_straddling_k_boundary(spark, tmp_path):
 
 
 def test_accumulate_and_wand_kernels_agree(spark, tmp_path):
-    """The vectorized block-max accumulate kernel (default) and the
-    reference-shaped per-doc WAND kernel must produce the same ranking
-    as exhaustive scoring: identical (rank, doc_id) sequences and
-    scores equal to within f64 summation-order noise (the three paths
-    sum identical per-posting f64 term scores, but in different per-doc
-    term orders — f64 addition is not associative, so the last ulp of
-    a multi-term total can differ)."""
+    """The block-max scoring kernel, with and without a bootstrap
+    floor, must produce the same ranking as exhaustive scoring:
+    identical (rank, doc_id) sequences and scores equal to within f64
+    summation-order noise (the paths sum identical per-posting f64
+    term scores, but in different per-doc term orders — f64 addition
+    is not associative, so the last ulp of a multi-term total can
+    differ)."""
     import math
     import random
 
@@ -272,11 +271,8 @@ def test_accumulate_and_wand_kernels_agree(spark, tmp_path):
                for r in topk_exhaustive(idx, q, k=10).collect()]
         acc = [(r["rank"], r["doc_id"], r["score"])
                for r in topk_bmw(idx, q, k=10).collect()]
-        wand = [(r["rank"], r["doc_id"], r["score"])
-                for r in topk_bmw(idx, q, k=10, kernel="wand").collect()]
         same(acc, exh, q)
-        same(wand, exh, q)
-        # bootstrap floor composes with the vectorized kernel too
+        # bootstrap floor composes with the kernel too
         boot = [(r["rank"], r["doc_id"], r["score"])
                 for r in topk_bmw(idx, q, k=10, bootstrap=True).collect()]
         same(boot, exh, q)
@@ -307,22 +303,33 @@ def _assert_batch_parity(idx, queries, k=10, **kw):
             ), (qid, r, e)
 
 
-def test_batch_pruned_parity(zipf_index):
+def test_batch_pruned_parity(zipf_index, monkeypatch):
     # mixed head/tail query set sharing terms across queries — the
     # shared-decode + per-query-floor kernel must reproduce per-query
     # exhaustive results exactly, with and without floors
+    from pg_textsearch_spark.operators import kernel
+
     queries = {
         "q0": "w0", "q1": "w0 w3", "q2": "w1 w7 w20",
         "q3": "w0 w0 w5", "q4": "w2 w40 w79", "q5": "w0 w1 w2 w3",
         "q6": "w3 w7", "q7": "w79", "q8": "w5 w20 w40 w7",
     }
+    # the default floor rule: no query here reaches the volume gate
+    _assert_batch_parity(zipf_index, queries, k=3)
+    # with the gate at 0 every query bootstraps a floor
+    monkeypatch.setattr(kernel, "BOOTSTRAP_MIN_POSTINGS", 0)
     stats: dict = {}
     _assert_batch_parity(zipf_index, queries, k=10, _floor_stats=stats)
     # the bootstrap actually ran and its collects stayed O(k*|terms|)
     assert 0 < stats["phase1_rows"]
     assert 0 < stats["phase2_rows"] <= stats["phase1_rows"]
-    _assert_batch_parity(zipf_index, queries, k=10, prune=False)
+    # a resubmitted batch reads its floors from the memo and says so
+    hit: dict = {}
+    _assert_batch_parity(zipf_index, queries, k=10, _floor_stats=hit)
+    assert hit == {"floor_cache_hit": True}
+    # the tightest floor: k=3 skips the most blocks
     _assert_batch_parity(zipf_index, queries, k=3)
+    _assert_batch_parity(zipf_index, queries, k=10, prune=False)
 
 
 def test_batch_multirun_and_deletes(spark, tmp_path_factory):

@@ -42,6 +42,7 @@ TOL = 1e-3  # the reference's validate_queries.sql acceptance band
 # legal flip leaves the rounded scores equal or one rounding step
 # (1e-4) apart when the tie straddles a rounding boundary
 TIE = 1.01e-4
+ORACLE_SLICE = 50  # queries per DuckDB oracle statement (see the test)
 
 pytestmark = pytest.mark.slow
 
@@ -88,7 +89,7 @@ def sweep_env(spark, tmp_path_factory):
     return parq, BM25Index(spark, idx_dir)
 
 
-def test_msmarco_shaped_sweep_vs_duckdb(sweep_env):
+def test_msmarco_shaped_sweep_vs_duckdb(sweep_env, tmp_path):
     parq, idx = sweep_env
     queries = make_queries()
 
@@ -98,16 +99,28 @@ def test_msmarco_shaped_sweep_vs_duckdb(sweep_env):
     for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
 
-    # oracle: independent DuckDB evaluation of the same batch
-    con = duckdb.connect()
+    # oracle: independent DuckDB evaluation of the same queries, bounded
+    # so it fits beside the Spark JVM on a 16 GB host: a memory cap with
+    # spill to tmp_path and a fixed thread count. The queries go in
+    # slices of ORACLE_SLICE: one batch query aggregates every (query,
+    # matching doc) pair at once (~2e8 at 1M docs, head terms included),
+    # which spills more than the host's free disk. Each query's oracle
+    # answer depends only on the corpus (dfs and corpus stats are
+    # corpus-wide), so slicing changes no answer.
+    con = duckdb.connect(config={
+        "memory_limit": "3GB",
+        "threads": 4,
+        "temp_directory": str(tmp_path / "duckdb_spill"),
+    })
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{parq}/*.parquet')"
     )
     want: dict[str, list[tuple[int, float]]] = {}
-    for qid, _rank, doc, score in con.execute(
-        topk_batch_oracle_sql(queries, k=K)
-    ).fetchall():
-        want.setdefault(qid, []).append((int(doc), float(score)))
+    items = sorted(queries.items())
+    for i in range(0, len(items), ORACLE_SLICE):
+        sql = topk_batch_oracle_sql(dict(items[i:i + ORACLE_SLICE]), k=K)
+        for qid, _rank, doc, score in sorted(con.execute(sql).fetchall()):
+            want.setdefault(qid, []).append((int(doc), float(score)))
 
     assert set(got) == set(want)
     n_rows = 0

@@ -89,6 +89,36 @@ def test_serve_under_deletes(idx, spark, tmp_path):
     _same_ranking(got, want, "deletes")
 
 
+def test_serve_pool_matches_exhaustive_under_deletes(idx, spark, tmp_path):
+    """ServePool workers over an index with pending deletes: every
+    answer equals topk_exhaustive, and no deleted doc is returned —
+    including the docs that ranked first before the delete."""
+    import shutil
+
+    from pg_textsearch_spark.index.deletes import delete_docs
+    from pg_textsearch_spark.operators.serve import ServePool
+
+    d = str(tmp_path / "pooldel")
+    shutil.copytree(idx.index_dir, d)
+    di = BM25Index(spark, d)
+    queries = ["window", "spark query table", "join join merge",
+               "stream batch filter sort", "nosuchterm"]
+    victims = sorted({
+        r[1] for q in queries[:3] for r in topk_serve(di, q, k=2)
+    })
+    delete_docs(di, victims)
+    di = BM25Index(spark, d)
+    with ServePool(d, n_workers=2) as pool:
+        got = pool.search_many(queries, k=10)
+    for q, rows in zip(queries, got):
+        want = [
+            (r["rank"], r["doc_id"], r["score"])
+            for r in topk_exhaustive(di, q, k=10).collect()
+        ]
+        _same_ranking(rows, want, q)
+        assert not ({r[1] for r in rows} & set(victims)), q
+
+
 def test_decoded_cache_invalidates_on_delete(idx, spark, tmp_path):
     """The decoded-postings cache must drop on a stamp change: the
     SAME ServingIndex queried across a delete reflects it."""
