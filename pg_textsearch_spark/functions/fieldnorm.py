@@ -65,58 +65,16 @@ def fieldnorm_encode_col(doc_len_col):
     256-entry decode table (the same element_at-on-literal-table
     pattern as operators/score_expr).
 
-    NOT used in the index build: higher-order array functions are
-    interpreted and disable whole-stage codegen for their stage, which
-    measured +33% on the 2M-page build (the tokenizer projection in
-    the same stage loses codegen). The build uses the Arrow-batched
-    UDF (builder._fieldnorm_udf); this expression exists for pure-SQL
-    pipelines that cannot run Python workers at all."""
+    NOT used in the index build, which encodes with
+    ``encode_fieldnorm`` in its Python writers; this expression exists
+    for pure-SQL pipelines that cannot run Python workers at all.
+    Higher-order array functions are interpreted and disable
+    whole-stage codegen for their stage."""
     from pyspark.sql import functions as F
 
     table = F.array(*[F.lit(int(v)) for v in FIELDNORM_DECODE_TABLE])
     idx = F.size(F.filter(table, lambda v: v <= doc_len_col)) - 1
     return F.greatest(idx, F.lit(0)).cast("int")
-
-
-def fieldnorm_encode_expr(doc_len_col):
-    """Whole-stage-codegen JVM expression for ``encode_fieldnorm``.
-
-    Unlike ``fieldnorm_encode_col`` (a higher-order ``filter`` lambda,
-    interpreted, disables codegen for its stage) this is a plain
-    27-branch CASE over the table's exponent groups plus integer
-    arithmetic, derived FROM the decode table itself: ids 0..39 are
-    exact; past 40 each group of 8 ids advances by a doubling step, so
-    ``id = 40 + 8*g + (len - start_g) / step_g`` within group g.
-    Byte-identical to ``encode_fieldnorm`` for every int64 input
-    (pinned by test_fieldnorm). Replaces the Arrow-batched UDF in the
-    index build — the base-build stage then runs as ONE codegen span
-    with no Python worker round trip (round 8, guide §4.1)."""
-    from pyspark.sql import functions as F
-
-    tbl = FIELDNORM_DECODE_TABLE
-    L = doc_len_col.cast("long")
-    # groups of 8 ids from id 40 on: (first_id, start_value, step)
-    groups = []
-    gid = 40
-    while gid < 256:
-        start = int(tbl[gid])
-        step = int(tbl[gid + 1] - tbl[gid]) if gid + 1 < 256 else 1
-        groups.append((gid, start, step))
-        gid += 8
-    # first-match-wins chain: identity range, then groups top-down.
-    # (L - start) / step stays exact in the double division: doc_len
-    # comes from array size / token counts, far below 2^53.
-    expr = F.when(L < F.lit(40), F.greatest(L, F.lit(0)).cast("int"))
-    for first_id, start, step in reversed(groups):
-        expr = expr.when(
-            L >= F.lit(start),
-            F.least(
-                F.lit(first_id)
-                + F.floor((L - F.lit(start)) / F.lit(step)).cast("int"),
-                F.lit(255),
-            ),
-        )
-    return expr.otherwise(F.lit(0)).cast("int")
 
 
 def fieldnorm_case_sql(col: str = "doc_len") -> str:

@@ -35,12 +35,14 @@ are tokenizer specs pinned by conformance fixtures):
                    shape) — the highest-parity config for web text.
 - language configs (french/german/spanish...) via functions/languages.
 
-Scale design: the hot build path never runs per-row Python — for all
-configs word segmentation is a JVM-side ``split``/``explode`` (whole-
-stage codegen); only the ``english`` config additionally runs an
-Arrow-batched pandas UDF over the *term column* with an lru-cached
-stemmer (unique-term bound per batch). The pure-Python ``tokenize``
-here is the conformance oracle and the driver-side query tokenizer.
+Where each form runs: the index build and every commit tokenize with
+the pure-Python ``tokenize`` in their segment writers (one build writer
+task per core, a field->lexeme memo per task), and queries tokenize
+with it in the driver. ``spark_token_table`` is the Spark-plan form
+(scoring expressions, harness queries): word segmentation is a
+JVM-side ``split``/``explode`` (whole-stage codegen), and only the
+``english`` config additionally runs an Arrow-batched pandas UDF over
+the *term column* with an lru-cached stemmer.
 """
 
 from __future__ import annotations
@@ -519,68 +521,6 @@ def _pg_spark_token_table(
     return df.select(id_col, text_col).mapInPandas(
         run, f"{id_col} {id_type}, term string, tf int"
     )
-
-
-def _pg_spark_tokens_with_len(
-    df: DataFrame, id_col: str, text_col: str, cfg: TokenizerConfig
-) -> DataFrame:
-    """Builder variant of the pg tokenizer kernel: emits
-    (id, term, tf, doc_len, fieldnorm) with the doc stats computed
-    IN-KERNEL (the kernel already holds each whole doc, so doc_len =
-    sum(tf) and its fieldnorm cost one numpy pass) — the round-2 build
-    derived them with a window shuffle over the full token table plus a
-    separate fieldnorm UDF stage. Docs tokenizing to nothing (or with
-    NULL text) emit one term=NULL row so the doclen table can be
-    projected from this output alone: every doc counts in N/avgdl
-    (docmap rule) without re-scanning the input."""
-    import pandas as pd
-    
-    import numpy as np
-
-    from pg_textsearch_spark.functions.fieldnorm import encode_fieldnorm
-
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def run(batches):
-        memo: dict = {}
-        for pdf in batches:
-            ids_out, terms_out, tfs_out, dls_out = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                counts = tokenize(t, cfg, _memo=memo) if t is not None else {}
-                if not counts:
-                    ids_out.append(i)
-                    terms_out.append(None)
-                    tfs_out.append(0)
-                    dls_out.append(0)
-                    continue
-                n = len(counts)
-                ids_out.extend([i] * n)
-                terms_out.extend(counts.keys())
-                tfs_out.extend(counts.values())
-                dls_out.extend([sum(counts.values())] * n)
-            dl = np.asarray(dls_out, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids_out),
-                    "term": pd.Series(terms_out, dtype=object),
-                    "tf": np.asarray(tfs_out, dtype=np.int32),
-                    "doc_len": dl,
-                    "fieldnorm": encode_fieldnorm(dl).astype(np.int32),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run,
-        f"{id_col} {id_type}, term string, tf int, "
-        "doc_len bigint, fieldnorm int",
-    )
-
-
-def spark_doclen(tokens: DataFrame, id_col: str) -> DataFrame:
-    """tokens(id, term, tf) -> (id, doc_len) with doc_len = sum(tf)."""
-    from pyspark.sql import functions as F
-    
-    return tokens.groupBy(id_col).agg(F.sum("tf").cast("long").alias("doc_len"))
 
 
 # bm25vector-shaped output for API parity with the reference's

@@ -17,14 +17,6 @@ import numpy as np
 
 from pg_textsearch_spark.index.codec import BLOCK_SIZE, compress_block, decompress_block
 
-# Arrow/Spark schema of one skip entry + payload
-BLOCK_STRUCT = (
-    "struct<last_doc_id:bigint,doc_count:int,block_max_tf:int,"
-    "block_max_norm:int,payload:binary>"
-)
-BLOCKS_SCHEMA = f"array<{BLOCK_STRUCT}>"
-
-
 def build_blocks(doc_ids, tfs, fieldnorms, codec: str = "bitpack") -> list[dict]:
     """Sorted postings of one term(-run) -> list of block dicts."""
     ids = np.asarray(doc_ids, dtype=np.uint64)

@@ -6,8 +6,8 @@ and its builds are all-or-nothing; at 10^12 docs a build is a long
 campaign and must resume.
 
 Design: the input is split into deterministic doc_id-range batches;
-each batch builds one segment through the ordinary pipeline and is
-committed atomically (segment files written, then the index manifest
+each batch builds one segment through ``build_index``'s per-segment
+function (``builder.build_segment``) and is committed atomically (segment files written, then the index manifest
 updated — the metapage analog). A job-level checkpoint file records
 the planned boundaries and, per completed batch, its lineage (id
 range, row/token/posting counts) and timing. A restarted job replans
@@ -29,10 +29,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pg_textsearch_spark.index.builder import (
-    IndexWriter,
-    build_segment_dataframes,
-)
+from pg_textsearch_spark.index import local_commit
+from pg_textsearch_spark.index.builder import id_rows, build_segment
 
 
 class CheckpointedBuild:
@@ -95,7 +93,6 @@ class CheckpointedBuild:
             assert state["config"] == config, "config changed mid-build"
             boundaries = state["boundaries"]
 
-        writer = IndexWriter(self.index_dir)
         done = 0
         for seg_id, (lo, hi) in enumerate(boundaries):
             if str(seg_id) in state["completed"]:
@@ -106,15 +103,10 @@ class CheckpointedBuild:
             batch = docs.filter(
                 (F.col(doc_id_col) >= lo) & (F.col(doc_id_col) < hi)
             )
-            postings, doclen = build_segment_dataframes(
-                batch, doc_id_col, text_col, config, n_buckets
-            )
-            manifest = writer.write_segment(
-                postings,
-                doclen,
-                seg_id=seg_id,
-                config=config,
-                n_buckets=n_buckets,
+            rows, n_docs = id_rows(batch, doc_id_col, text_col)
+            manifest = build_segment(
+                self.spark, rows, n_docs, self.index_dir, seg_id, config,
+                n_buckets,
                 lineage={
                     "batch": seg_id,
                     "doc_id_range": [lo, hi],
@@ -122,9 +114,9 @@ class CheckpointedBuild:
                 },
             )
             seg = next(s for s in manifest["segments"] if s["seg_id"] == seg_id)
-            n_postings = self.spark.read.parquet(
-                os.path.join(self.index_dir, "postings", f"seg={seg_id}")
-            ).agg(F.coalesce(F.sum("df_run"), F.lit(0))).collect()[0][0]
+            n_postings = local_commit.read_table(
+                self.index_dir, "postings", [seg_id], ["df_run"]
+            ).column("df_run").to_numpy().sum()
             state["completed"][str(seg_id)] = {
                 "doc_id_range": [lo, hi],
                 "num_docs": seg["num_docs"],

@@ -292,6 +292,7 @@ def decompress_blocks(payloads):
 
 def term_bucket(term: str, n_buckets: int) -> int:
     """Bucket of a term (crc32 % n_buckets) — lives here (pyspark-free)
-    so Spark-free serving workers can import it without pyspark; must
-    equal builder.term_bucket_expr's JVM expression."""
+    so Spark-free serving workers can import it without pyspark; it
+    names the ``bucket=`` directory every segment writer writes a
+    term's rows into."""
     return zlib.crc32(term.encode("utf-8")) % n_buckets

@@ -1,26 +1,29 @@
-"""Driver-local commit path: micro-batches without Spark jobs.
+"""The one segment writer: micro-batch commits and every build partition.
 
 Reference mapping: an INSERT appends to the memtable and a spill
 writes the L0 segment in ONE process (tp_do_spill, reference:
-src/access/build.c:135-295); only CREATE INDEX runs the parallel
-build (src/access/build_parallel.c). ``build_index`` (index/builder.py)
-is the build_parallel.c analog; this module is the tp_do_spill analog.
-Every insert, delete and segment merge (so compaction, force_merge and
-vacuum) runs in the driver with pyarrow and the package's own
-numpy/native kernels — the same tokenizer (``tokenize``), fieldnorm
-encoder, posting kernel (``builder._postings_arrow``), bucket hash
-(``term_bucket``) and a batch block decoder
-(``codec.decompress_blocks``) — and writes the same tables, layout and
-manifest entries as the distributed build, so every reader (BM25Index,
-LocalIndex, ServePool) serves its segments unchanged.
+src/access/build.c:135-295); CREATE INDEX runs the parallel build
+(src/access/build_parallel.c), whose workers write L0 segments over
+disjoint doc ranges and whose leader N-way merges them. Both map onto
+this module. ``write_docs`` tokenizes (``tokenize``), encodes (the
+fieldnorm encoder, the posting kernel ``builder._postings_arrow`` and
+the bucket hash ``term_bucket``) and writes (``write_segment_files``)
+one segment with pyarrow and the package's own numpy/native kernels.
+``insert_batch`` runs it once in the driver; ``build_index``
+(index/builder.py) runs it once per Spark partition into a staging
+dir, then runs ``merge_local`` in the driver to merge the staging
+segments into the committed one. Deletes and segment merges (so
+compaction, force_merge and vacuum) run here in the driver too, with
+a batch block decoder (``codec.decompress_blocks``). Every reader
+(BM25Index, LocalIndex, ServePool) serves the segments unchanged.
 
 A commit is dominated by per-job and per-stage fixed cost, not data
 volume: a 400-doc distributed insert ran 25 Spark jobs. Measured
 insert_batch wall time into a 20k-doc index, driver-local vs the
-distributed build pipeline (Spark jobs per commit), english config,
-seeded ~29-token Zipf passages, Spark local[2] with a warm JVM,
-4-vCPU / 15 GB host (1k-100k: median of 3; 300k, 1M: one run, also
-timing a 50-id delete and the force_merge of the result):
+distributed build pipeline it replaced (Spark jobs per commit),
+english config, seeded ~29-token Zipf passages, Spark local[2] with a
+warm JVM, 4-vCPU / 15 GB host (1k-100k: median of 3; 300k, 1M: one
+run, also timing a 50-id delete and the force_merge of the result):
 
     insert     1k 0.35 / 6.41 s   10k 0.87 / 6.71 s   100k 6.32 / 13.62 s
     insert     300k 16.3 / 34.9 s      1M 55.7 / 84.5 s
@@ -28,9 +31,10 @@ timing a 50-id delete and the force_merge of the result):
     merge      300k 2.4 / 54.4 s       1M 8.3 / 147.3 s
 
 No crossover falls inside that range. A merge holds one term bucket's
-decoded postings at a time; an insert holds its whole batch (text and
-postings) in driver memory — +0.4 GB peak RSS at 300k docs, +1.2 GB
-at 1M — so bulk loads belong in ``build_index``.
+decoded postings at a time; ``write_docs`` holds its whole batch (text
+and postings) in memory — +0.4 GB peak RSS at 300k docs, +1.2 GB at
+1M — so bulk loads belong in ``build_index``, which bounds each
+writer task at ``builder.WRITER_DOCS`` docs.
 
 Commit protocol: segment files first, then the atomic manifest
 rename, then (merges) reclaiming the source segments.
@@ -50,19 +54,22 @@ from pg_textsearch_spark.functions.fieldnorm import (
 )
 from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
 
-#: row-group target of the driver-written postings files — the same
-#: ``parquet.block.size`` the distributed writer uses
-#: (builder._postings_write_opts), so row-group term pruning behaves
-#: identically on built and committed segments
+#: row-group target of the postings files: small enough that the
+#: query-time ``term IN (...)`` predicate prunes at row-group
+#: granularity (the role of the reference's dictionary binary search)
 ROW_GROUP_BYTES = 1 << 20
+
+#: doc ids must lie in [0, MAX_DOC_ID]: the posting kernel packs
+#: ``doc_id << 8 | fieldnorm`` into one int64
+MAX_DOC_ID = (1 << 55) - 1
 
 _BLK = "blocks.list.element."
 
 #: dictionary-encoded columns per table: only low-cardinality ones.
-#: pyarrow, unlike the JVM writer, keeps a dictionary that does not pay
-#: (unique ids, urls, terms, payloads), which made these files 10-40%
-#: larger than the distributed writer's; with this list they come out
-#: 1-8% smaller (20k-doc segment: postings 2,461,371 vs 2,540,228 B).
+#: pyarrow by default keeps a dictionary that does not pay (unique ids,
+#: urls, terms, payloads), which made these files 10-40% larger than
+#: Spark's parquet writer's; with this list they come out 1-8% smaller
+#: (20k-doc segment: postings 2,461,371 vs 2,540,228 B).
 _DICT_COLS = {
     "postings": ["run", "df_run", _BLK + "doc_count", _BLK + "block_max_tf",
                  _BLK + "block_max_norm"],
@@ -172,20 +179,28 @@ def _vocab_ids(terms):
 
 def encode_segment(
     tids: np.ndarray, vocab, doc_ids: np.ndarray, tfs: np.ndarray,
-    fns: np.ndarray, n_buckets: int,
+    fns: np.ndarray, n_buckets: int, codec: str = "bitpack",
 ):
     """Flat postings (dense sorted term ids into ``vocab``) -> yields
     (bucket, postings table, dictionary table) per non-empty bucket
-    through the build's own posting kernel — byte-identical rows to the
-    distributed (term, run) shuffle + kernel. The kernel runs once per
-    bucket, as it does per shuffle partition, so its sort buffers stay
-    one bucket large."""
+    through the posting kernel. The kernel runs once per bucket, so its
+    sort buffers stay one bucket large.
+
+    Raises ValueError, before yielding anything, for a doc id outside
+    [0, MAX_DOC_ID]: the kernel's packing would wrap it into another
+    doc's postings."""
     import pyarrow as pa
 
     from pg_textsearch_spark.index.builder import _postings_arrow
 
     if not len(tids):
         return
+    lo, hi = int(doc_ids.min()), int(doc_ids.max())
+    if lo < 0 or hi > MAX_DOC_ID:
+        raise ValueError(
+            "doc_id outside the packable range [0, 2^55): "
+            f"{lo if lo < 0 else hi}"
+        )
     vocab_bucket = np.fromiter(
         (term_bucket(t, n_buckets) for t in vocab.to_pylist()),
         dtype=np.int64, count=len(vocab),
@@ -206,9 +221,7 @@ def encode_segment(
             ],
             names=["term_id", "docfn", "tf"],
         )
-        out = pa.Table.from_batches(
-            list(_postings_arrow(iter([batch]), "bitpack", presort=True))
-        )
+        out = pa.Table.from_batches(list(_postings_arrow([batch], codec)))
         row_tid = out.column("term_id").to_numpy()
         postings = pa.table({
             "term": vocab.take(pa.array(row_tid)),
@@ -235,8 +248,7 @@ def write_segment_files(
     ``encode_segment`` tuples, consumed one at a time),
     doclen and optional keymap; returns its stats (num_docs,
     total_tokens, max_doc_id). Leftovers of a crashed earlier attempt
-    at ``seg_id`` are replaced, like the distributed writer's
-    overwrite mode."""
+    at ``seg_id`` are replaced."""
     def seg_dir(table, *sub):
         return os.path.join(index_dir, table, f"seg={seg_id}", *sub)
 
@@ -282,8 +294,7 @@ def collect_batch(docs, text_col: str, doc_id_col, key_col):
 
 def tokenize_batch(texts: list, config):
     """texts (None allowed) -> (doc index, term, tf) postings + doc_len
-    per doc, with the same tokenizer the distributed build's
-    conformance tests pin against its JVM/kernel tokenizers."""
+    per doc, with the query path's own ``tokenize``."""
     import pyarrow as pa
 
     from pg_textsearch_spark.functions.tokenizer import tokenize
@@ -308,6 +319,39 @@ def tokenize_batch(texts: list, config):
     )
 
 
+def write_docs(
+    out_dir: str, seg_id: int, doc_ids: np.ndarray, texts: list, cfg,
+    n_buckets: int, keys=None, codec: str = "bitpack",
+) -> dict:
+    """Tokenize (``cfg``: a TokenizerConfig), encode and write docs
+    ``doc_ids`` / ``texts`` as segment ``seg_id`` under ``out_dir``,
+    with a keymap when ``keys`` (a pyarrow string array) are given;
+    returns ``write_segment_files``' stats. Docs are written in the
+    given order."""
+    import pyarrow as pa
+
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    doc_idx, terms, tfs, doc_len = tokenize_batch(texts, cfg)
+    fieldnorm = encode_fieldnorm(doc_len).astype(np.int32)
+    tids, vocab = _vocab_ids(terms)
+    buckets = encode_segment(
+        tids, vocab, doc_ids[doc_idx], tfs, fieldnorm[doc_idx], n_buckets,
+        codec,
+    )
+    doclen = pa.table({
+        "doc_id": pa.array(doc_ids, pa.int64()),
+        "doc_len": pa.array(doc_len, pa.int64()),
+        "fieldnorm": pa.array(fieldnorm, pa.int32()),
+    })
+    keymap = None
+    if keys is not None:
+        keymap = pa.table({
+            "doc_id": pa.array(doc_ids, pa.int64()),
+            "doc_key": keys,
+        })
+    return write_segment_files(out_dir, seg_id, buckets, doclen, keymap)
+
+
 def insert_local(
     writer, rows, seg_id: int, next_doc: int, config: str, n_buckets: int,
     k1: float, b: float, lineage: dict,
@@ -318,7 +362,7 @@ def insert_local(
 
     from pg_textsearch_spark.functions.tokenizer import get_config
 
-    keymap = None
+    keys = None
     if "_key" in rows.column_names:
         # dense ids in key order by the key's own type (numeric keys
         # numerically), NULL keys first — Spark's ascending orderBy
@@ -327,32 +371,16 @@ def insert_local(
         )
         rows = rows.take(order)
         doc_ids = next_doc + np.arange(rows.num_rows, dtype=np.int64)
-        keymap = pa.table({
-            "doc_id": pa.array(doc_ids),
-            "doc_key": rows.column("_key_str").cast(pa.string()),
-        })
+        keys = rows.column("_key_str").cast(pa.string())
     else:
         doc_ids = rows.column("_id").to_numpy(zero_copy_only=False)
-        doc_ids = doc_ids.astype(np.int64)
-    doc_idx, terms, tfs, doc_len = tokenize_batch(
-        rows.column("_text").to_pylist(), get_config(config)
-    )
-    fieldnorm = encode_fieldnorm(doc_len).astype(np.int32)
-    tids, vocab = _vocab_ids(terms)
-    buckets = encode_segment(
-        tids, vocab, doc_ids[doc_idx], tfs, fieldnorm[doc_idx], n_buckets
-    )
-    doclen = pa.table({
-        "doc_id": pa.array(doc_ids, pa.int64()),
-        "doc_len": pa.array(doc_len, pa.int64()),
-        "fieldnorm": pa.array(fieldnorm, pa.int32()),
-    })
-    stats = write_segment_files(
-        writer.index_dir, seg_id, buckets, doclen, keymap
+    stats = write_docs(
+        writer.index_dir, seg_id, doc_ids, rows.column("_text").to_pylist(),
+        get_config(config), n_buckets, keys,
     )
     return writer.commit_segment(
         seg_id, config, n_buckets, k1, b,
-        has_keymap=keymap is not None, lineage=lineage, **stats,
+        has_keymap=keys is not None, lineage=lineage, **stats,
     )
 
 
@@ -420,9 +448,11 @@ def decode_rows(postings):
 
 def merge_local(
     index_dir: str, segs: list[dict], new_seg_id: int, n_buckets: int,
-    drop_ids: np.ndarray | None,
+    drop_ids: np.ndarray | None, out_dir: str | None = None,
+    codec: str = "bitpack",
 ) -> tuple[dict, int, bool]:
-    """Write the merge of ``segs`` as segment ``new_seg_id``, dropping
+    """Write the merge of ``segs`` (under ``index_dir``) as segment
+    ``new_seg_id`` under ``out_dir`` (default ``index_dir``), dropping
     ``drop_ids``. Returns (stats, quantized tokens of the dropped
     docs, has_keymap); the caller commits the manifest and reclaims
     the sources. Postings merge one term bucket at a time (a term's
@@ -462,10 +492,12 @@ def merge_local(
                 tids, ids, tfs, fns = (
                     tids[keep], ids[keep], tfs[keep], fns[keep]
                 )
-            yield from encode_segment(tids, vocab, ids, tfs, fns, n_buckets)
+            yield from encode_segment(
+                tids, vocab, ids, tfs, fns, n_buckets, codec
+            )
 
     stats = write_segment_files(
-        index_dir, new_seg_id, buckets(), doclen, keymap
+        out_dir or index_dir, new_seg_id, buckets(), doclen, keymap
     )
     return stats, dead_tokens, keymap is not None
 

@@ -52,18 +52,13 @@ class SegmentStore:
         sort_within: list[str] | None = None,
         parquet_block_size: int | None = None,
         shuffle_by: list[str] | None = None,
-        no_exchange: bool = False,
     ) -> None:
         """``shuffle_by`` decouples shuffle parallelism from the dir
         layout: rows are hash-distributed on these columns (default:
         ``partition_by``) while ``partitionBy`` still writes one dir
         per ``partition_by`` value — needed when the partition column
         has few distinct values (e.g. 4 LSH bands) but the table is
-        corpus-sized. ``no_exchange`` skips the pre-write shuffle
-        entirely: the caller's partitioning is kept and the dynamic-
-        partition writer fans each task into its ``partition_by`` dirs
-        (``sort_within`` should then lead with the partition column so
-        the writer streams one file at a time)."""
+        corpus-sized."""
         raise NotImplementedError
 
     def read(
@@ -108,11 +103,8 @@ class ParquetDirStore(SegmentStore):
         sort_within: list[str] | None = None,
         parquet_block_size: int | None = None,
         shuffle_by: list[str] | None = None,
-        no_exchange: bool = False,
     ) -> None:
-        if no_exchange:
-            pass
-        elif shuffle_by:
+        if shuffle_by:
             df = df.repartition(*shuffle_by)
         elif partition_by:
             df = df.repartition(partition_by)
@@ -195,7 +187,6 @@ class IcebergSegmentStore(SegmentStore):
         sort_within: list[str] | None = None,
         parquet_block_size: int | None = None,
         shuffle_by: list[str] | None = None,
-        no_exchange: bool = False,
     ) -> None:
         from pyspark.sql import functions as F  # pragma: no cover
 

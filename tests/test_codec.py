@@ -169,73 +169,78 @@ def test_varint_index_end_to_end(spark, tmp_path):
         assert w == [(x[0], x[1]) for x in a]
 
 
+def _kernel_batch(rows):
+    """(term_id, doc_id, tf, fieldnorm) tuples -> the posting kernel's
+    input batch."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r[0] for r in rows], pa.int64()),
+            pa.array([(r[1] << 8) | r[3] for r in rows], pa.int64()),
+            pa.array([r[2] for r in rows], pa.int32()),
+        ],
+        names=["term_id", "docfn", "tf"],
+    )
+
+
 def test_postings_rows_vectorized_byte_identical():
     """The cross-group vectorized encoder must produce byte-identical
     rows to the per-group build_blocks path on every group shape:
     tiny tail groups, exact block-boundary sizes, multi-block head
-    groups, duplicate doc_ids (single-shuffle tf collapse), and both
-    codecs."""
+    groups, duplicate doc_ids (tf collapse), and both codecs — from
+    unsorted input split over several batches."""
     import random
 
-    import pandas as pd
+    import numpy as np
 
     from pg_textsearch_spark.index.blocks import build_blocks
-    from pg_textsearch_spark.index.builder import _postings_rows
+    from pg_textsearch_spark.index.builder import _postings_arrow
 
     rng = random.Random(1234)
     rows = []
-    gid = 0
+    tid = 0
     for size in [1, 1, 2, 3, 5, 7, 127, 128, 129, 200, 300, 1000]:
-        term = f"term{gid:04d}"
-        gid += 1
         # ids within one 8192-doc run -> sizes > 128 exercise
         # multi-block groups (run is derived as doc_id >> 13)
         ids = sorted(rng.sample(range(0, 8192), size))
         for d in ids:
-            rows.append((term, 0, d, rng.randrange(1, 300), rng.randrange(0, 256)))
+            rows.append((tid, d, rng.randrange(1, 300), rng.randrange(0, 256)))
+        tid += 1
     # duplicate doc_ids within a group (tf must collapse by sum)
-    rows += [("zdup", 0, 5, 2, 9), ("zdup", 0, 5, 3, 9), ("zdup", 0, 8, 1, 4)]
-    # a group with a large absolute first id (wide first delta); run
-    # is DERIVED from doc_id (id >> 13) since round 4, so the column
-    # must carry the consistent value
-    wrun = ((1 << 40) + 7) >> 13
-    rows += [
-        ("zwide", wrun, (1 << 40) + 7, 1, 0),
-        ("zwide", wrun, (1 << 40) + 9, 2, 1),
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["term", "run", "doc_id", "tf", "fieldnorm"]
-    )
+    rows += [(tid, 5, 2, 9), (tid, 5, 3, 9), (tid, 8, 1, 4)]
+    # a group with a large absolute first id (wide first delta)
+    rows += [(tid + 1, (1 << 40) + 7, 1, 0), (tid + 1, (1 << 40) + 9, 2, 1)]
 
-    def reference_rows(pdf, codec):
+    def reference_rows(codec):
+        groups: dict = {}
+        for t, d, tf, fn in rows:
+            groups.setdefault((t, d >> 13), []).append((d, tf, fn))
         out = []
-        pdf = pdf.assign(run=pdf["doc_id"] // 8192)
-        for (term, run), g in pdf.groupby(["term", "run"], sort=False):
-            gi = g["doc_id"].to_numpy()
-            gt = g["tf"].to_numpy()
-            gf = g["fieldnorm"].to_numpy()
-            if len(gi) > 1 and not (gi[1:] > gi[:-1]).all():
-                import numpy as np
-
-                uids, first_idx, inv = np.unique(
-                    gi, return_index=True, return_inverse=True
-                )
-                gt = np.bincount(inv, weights=gt).astype("int64")
-                gf = gf[first_idx]
-                gi = uids
-            out.append(
-                (term, run, len(gi), build_blocks(gi, gt, gf, codec))
+        for (t, run), g in sorted(groups.items()):
+            gi = np.array([x[0] for x in g])
+            gt = np.array([x[1] for x in g])
+            gf = np.array([x[2] for x in g])
+            uids, first_idx, inv = np.unique(
+                gi, return_index=True, return_inverse=True
             )
+            gt = np.bincount(inv, weights=gt).astype("int64")
+            out.append((t, run, len(uids),
+                        build_blocks(uids, gt, gf[first_idx], codec)))
         return out
 
+    shuffled = rows[:]
+    rng.shuffle(shuffled)
+    batches = [_kernel_batch(shuffled[i:i + 700])
+               for i in range(0, len(shuffled), 700)]
     for codec in ("bitpack", "varint"):
-        got = list(_postings_rows(iter([pdf]), codec))
+        got = list(_postings_arrow(batches, codec))
+        assert len(got) == 1
         got_rows = [
-            (r.term, r.run, r.df_run, r.blocks)
-            for chunk in got
-            for r in chunk.itertuples()
+            (r["term_id"], r["run"], r["df_run"], r["blocks"])
+            for r in got[0].to_pylist()
         ]
-        want = reference_rows(pdf, codec)
+        want = reference_rows(codec)
         assert len(got_rows) == len(want)
         for (gt_, gr, gdf, gb), (wt, wr, wdf, wb) in zip(got_rows, want):
             assert (gt_, gr, gdf) == (wt, wr, wdf)
@@ -249,25 +254,19 @@ def test_postings_rows_vectorized_byte_identical():
 
 
 def test_postings_rows_vectorized_batch_carry():
-    """Groups spanning Arrow batch boundaries still come out whole."""
-    import pandas as pd
+    """Groups spanning input batch boundaries still come out whole."""
+    from pg_textsearch_spark.index.builder import _postings_arrow
 
-    from pg_textsearch_spark.index.builder import _postings_rows
-
-    p1 = pd.DataFrame(
-        [("a", 0, 1, 1, 3), ("a", 0, 2, 1, 3), ("b", 0, 7, 2, 5)],
-        columns=["term", "run", "doc_id", "tf", "fieldnorm"],
-    )
-    p2 = pd.DataFrame(
-        [("b", 0, 9, 1, 5), ("c", 1, 8192 + 4, 1, 1)],
-        columns=["term", "run", "doc_id", "tf", "fieldnorm"],
-    )
-    rows = [
-        (r.term, r.run, r.df_run)
-        for chunk in _postings_rows(iter([p1, p2]))
-        for r in chunk.itertuples()
+    b1 = _kernel_batch([(0, 1, 1, 3), (0, 2, 1, 3), (1, 7, 2, 5)])
+    b2 = _kernel_batch([(1, 9, 1, 5), (2, 8192 + 4, 1, 1)])
+    [out] = _postings_arrow([b1, b2])
+    rows = out.to_pylist()
+    assert [(r["term_id"], r["run"], r["df_run"]) for r in rows] == [
+        (0, 0, 2), (1, 0, 2), (2, 1, 1)
     ]
-    assert rows == [("a", 0, 2), ("b", 0, 2), ("c", 1, 1)]
+    [blk] = rows[1]["blocks"]
+    ids, tfs, _fns = decompress_block(blk["payload"])
+    assert list(ids) == [7, 9] and list(tfs) == [2, 1]
 
 
 def test_native_vs_numpy_kernel_byte_identical(monkeypatch):
@@ -308,7 +307,7 @@ def test_native_vs_numpy_kernel_byte_identical(monkeypatch):
             [pa.array(tids.copy()), pa.array(dfns.copy())],
             names=["term_id", "docfn"],
         )
-        out = list(_postings_arrow(iter([batch]), "bitpack", presort=True))
+        out = list(_postings_arrow([batch]))
         assert len(out) == 1
         return [
             (r["term_id"], r["run"], r["df_run"],

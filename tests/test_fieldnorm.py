@@ -89,8 +89,8 @@ def test_sql_case_matches_numpy():
 
 
 def test_encode_col_matches_numpy(spark):
-    """The JVM encode expression (builder's hot path) must agree with
-    the numpy encoder on every boundary and a wide length sweep."""
+    """The JVM encode expression (for pure-SQL pipelines) must agree
+    with the numpy encoder on every boundary and a wide length sweep."""
     from pyspark.sql import functions as F
 
     from pg_textsearch_spark.functions.fieldnorm import (
@@ -110,36 +110,6 @@ def test_encode_col_matches_numpy(spark):
         r["fn"]
         for r in df.select(
             fieldnorm_encode_col(F.col("doc_len")).alias("fn")
-        ).collect()
-    ]
-    want = encode_fieldnorm(np.asarray(lengths, dtype=np.int64)).tolist()
-    assert got == want
-
-
-def test_encode_expr_matches_numpy(spark):
-    """The codegen CASE-chain encode (round 8, replaces the build's
-    Arrow UDF) is byte-identical to encode_fieldnorm on every boundary
-    of the decode table plus negatives and huge lengths."""
-    from pyspark.sql import functions as F
-
-    from pg_textsearch_spark.functions.fieldnorm import (
-        FIELDNORM_DECODE_TABLE,
-        encode_fieldnorm,
-        fieldnorm_encode_expr,
-    )
-
-    lengths = sorted(
-        set(range(-5, 300))
-        | {int(v) for v in FIELDNORM_DECODE_TABLE}
-        | {int(v) + 1 for v in FIELDNORM_DECODE_TABLE}
-        | {int(v) - 1 for v in FIELDNORM_DECODE_TABLE if v > 0}
-        | {10**6, 10**9, 2**40}
-    )
-    df = spark.createDataFrame([(x,) for x in lengths], "doc_len long")
-    got = [
-        r["fn"]
-        for r in df.select(
-            fieldnorm_encode_expr(F.col("doc_len")).alias("fn")
         ).collect()
     ]
     want = encode_fieldnorm(np.asarray(lengths, dtype=np.int64)).tolist()

@@ -2,9 +2,10 @@
 
 ``insert_batch`` into an empty index and a ``force_merge`` of a built
 base plus an inserted batch must write exactly the tables
-``build_index`` writes for the same docs — posting payload bytes
-included. Deletes and vacuum are checked against Spark-side oracles
-over the distributed decode of the same postings.
+``build_index`` (per-partition writers plus a leader merge) writes for
+the same docs — posting payload bytes included. Deletes and vacuum are
+checked against Spark-side oracles over the distributed decode of the
+same postings.
 """
 
 import glob
@@ -17,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
+from pg_textsearch_spark.index import builder
 from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.index.deletes import delete_docs, vacuum
 from pg_textsearch_spark.index.merge import force_merge, maybe_compact
@@ -191,6 +193,70 @@ def test_local_commit_matches_build(spark, tmp_path, config, key):
     assert _flat(spark, d) == [r for r in pre if r[1] not in dead]
     km = _dump(d, ("keymap",))["keymap"]
     assert len(km) == len(doclen) - len(dead)
+
+
+def _same_index(a: str, b: str) -> None:
+    """Equal tables row for row and equal manifests (creation times and
+    lineage aside)."""
+    assert _dump(a) == _dump(b)
+    ma, mb = _manifest(a), _manifest(b)
+    for m in (ma, mb):
+        for seg in m["segments"]:
+            seg.pop("created_at_unix")
+            seg.pop("lineage")
+    assert ma == mb
+
+
+@pytest.mark.parametrize("config", ["english", "pg_english"])
+@pytest.mark.parametrize("ids", ["key_col", "doc_id_col"])
+def test_partitioned_build_matches_insert(
+    spark, tmp_path, monkeypatch, config, ids
+):
+    """A build split over several writer tasks == one insert of the same
+    docs into an empty index: every 8192-doc run straddles writers, a
+    build with more writers than docs leaves a writer empty, and a
+    build of no docs still writes a segment (and a keymap when keyed)."""
+    monkeypatch.setattr(builder, "WRITER_DOCS", 128)
+    texts = _texts(spark)
+    if ids == "key_col":
+        rows = [(f"https://ex.org/{i % 13}/{i}", t) for i, t in enumerate(texts)]
+        docs = spark.createDataFrame(rows, "k string, text string")
+        kw = dict(key_col="k")
+    else:
+        # ids across three runs: each writer spans ~4.7k ids
+        rows = [(i * 37, t) for i, t in enumerate(texts)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        kw = dict(doc_id_col="doc_id")
+    kw.update(config=config, n_buckets=8)
+    assert len(texts) > 4 * builder.WRITER_DOCS  # 5 writers
+    few, none = docs.limit(3), docs.limit(0)
+    assert spark.sparkContext.defaultParallelism > 3  # an empty writer
+    for name, df in (("all", docs), ("few", few), ("none", none)):
+        built, inserted = str(tmp_path / f"b{name}"), str(tmp_path / name)
+        build_index(spark, df, built, **kw)
+        insert_batch(spark, inserted, df, compact=False, **kw)
+        _same_index(built, inserted)
+        assert not os.path.exists(os.path.join(built, builder.STAGING_DIR))
+
+
+@pytest.mark.parametrize("bad_id", [1 << 60, -1])
+def test_insert_out_of_range_doc_id_fails_loudly(spark, tmp_path, bad_id):
+    """The posting kernel packs doc_id << 8 into an int64: an insert of
+    an id outside [0, 2^55) must raise, not write another doc's
+    postings, and must leave the manifest as it was."""
+    d = str(tmp_path / "idx")
+    base = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    insert_batch(spark, d, base, doc_id_col="doc_id", compact=False)
+    before = _manifest(d)
+    bad = spark.createDataFrame(
+        [(bad_id, "alpha beta"), (5, "beta gamma")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="packable range"):
+        insert_batch(spark, d, bad, doc_id_col="doc_id", compact=False)
+    assert _manifest(d) == before
+    assert _flat(spark, d) == sorted(
+        [("alpha", 1, 1, 2), ("beta", 1, 1, 2)]
+    )
 
 
 def test_local_commit_runs_no_spark_jobs(spark, tmp_path):

@@ -173,154 +173,6 @@ def test_tokenize_vector_udf_matches_tokenize(spark):
     assert [e["term"] for e in out[1]] == sorted(e["term"] for e in out[1])
 
 
-def test_string_keyed_build_fallback_matches(spark, tmp_path, monkeypatch):
-    """PGTS_DICT_ENCODE=0 (the collision-error remedy) must produce an
-    equivalent index via the string-keyed postings path."""
-    rows = [(i, f"alpha beta t{i % 7} gamma t{i % 3}") for i in range(60)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d_a = str(tmp_path / "dict")
-    d_b = str(tmp_path / "str")
-    build_index(spark, docs, d_a, config="ascii", n_buckets=4)
-    monkeypatch.setenv("PGTS_DICT_ENCODE", "0")
-    build_index(spark, docs, d_b, config="ascii", n_buckets=4)
-    monkeypatch.delenv("PGTS_DICT_ENCODE")
-    a, b = BM25Index(spark, d_a), BM25Index(spark, d_b)
-    ra = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(a, "alpha t2", 10).collect()]
-    rb = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(b, "alpha t2", 10).collect()]
-    assert ra == rb and len(ra) == 10
-    # same dictionary contents (term, df) either way
-    da = sorted(map(tuple, spark.read.parquet(d_a + "/dictionary")
-                .select("term", "df").collect()))
-    db = sorted(map(tuple, spark.read.parquet(d_b + "/dictionary")
-                .select("term", "df").collect()))
-    assert da == db
-
-
-def test_string_keyed_build_fallback_matches_pg_config(
-    spark, tmp_path, monkeypatch
-):
-    """PGTS_DICT_ENCODE=0 must be honored on the PG-parser branch too
-    (advisor round 6: the collision error's advertised remedy was
-    unreachable for pg configs — a colliding pg corpus could not be
-    built at all)."""
-    rows = [
-        (i, f"alpha beta t{i % 7} <b>gamma</b> see x.org/p{i % 3}")
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d_a = str(tmp_path / "pgdict")
-    d_b = str(tmp_path / "pgstr")
-    build_index(spark, docs, d_a, config="pg_english", n_buckets=4)
-    monkeypatch.setenv("PGTS_DICT_ENCODE", "0")
-    build_index(spark, docs, d_b, config="pg_english", n_buckets=4)
-    monkeypatch.delenv("PGTS_DICT_ENCODE")
-    a, b = BM25Index(spark, d_a), BM25Index(spark, d_b)
-    ra = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(a, "alpha t2", 10).collect()]
-    rb = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(b, "alpha t2", 10).collect()]
-    assert ra == rb and len(ra) == 10
-    da = sorted(map(tuple, spark.read.parquet(d_a + "/dictionary")
-                .select("term", "df").collect()))
-    db = sorted(map(tuple, spark.read.parquet(d_b + "/dictionary")
-                .select("term", "df").collect()))
-    assert da == db
-
-
-def test_single_cell_pack_build_matches_unpacked(
-    spark, tmp_path, monkeypatch
-):
-    """The single-int64 packed posting stream (dense term ids x dense
-    doc ids x fieldnorm in one cell — the round-6 bridge/shuffle
-    halving) must write a BYTE-IDENTICAL segment to the two-column
-    xxhash64 path it replaces inside the bit-budget gate."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    rows = [
-        (f"u{i:04d}", f"alpha running t{i % 19} beta t{i % 5} gamma")
-        for i in range(500)
-    ]
-    docs = spark.createDataFrame(rows, "url string, text string")
-    d_a = str(tmp_path / "pk")
-    d_b = str(tmp_path / "un")
-    build_index(spark, docs, d_a, key_col="url", text_col="text",
-                config="english", n_buckets=4)  # packed (default)
-    monkeypatch.setenv("PGTS_PACK_SINGLE", "0")
-    build_index(spark, docs, d_b, key_col="url", text_col="text",
-                config="english", n_buckets=4)
-    monkeypatch.delenv("PGTS_PACK_SINGLE")
-
-    def posting_rows(d):
-        out = []
-        pat = d + "/postings/seg=0/**/*.parquet"
-        for f in sorted(glob.glob(pat, recursive=True)):
-            for r in pq.read_table(f).to_pylist():
-                out.append((
-                    r["term"], r["run"], r["df_run"],
-                    tuple(
-                        (b["last_doc_id"], b["doc_count"],
-                         b["block_max_tf"], b["block_max_norm"],
-                         bytes(b["payload"]))
-                        for b in r["blocks"]
-                    ),
-                ))
-        return sorted(out)
-
-    assert posting_rows(d_a) == posting_rows(d_b)
-    a, b = BM25Index(spark, d_a), BM25Index(spark, d_b)
-    ra = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(a, "alpha t3", 10).collect()]
-    rb = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(b, "alpha t3", 10).collect()]
-    assert ra == rb and len(ra) == 10
-
-
-def test_hash_overlap_head_matches_serial(spark, tmp_path, monkeypatch):
-    """PGTS_HASH_OVERLAP=1 (the hash-keyed overlapped head phase —
-    documented wash at bench scale, kept opt-in) must produce an
-    identical index to the serial default."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    rows = [(f"u{i:04d}", f"alpha t{i % 13} beta t{i % 4}")
-            for i in range(400)]
-    docs = spark.createDataFrame(rows, "url string, text string")
-    d_a = str(tmp_path / "ser")
-    d_b = str(tmp_path / "ho")
-    build_index(spark, docs, d_a, key_col="url", text_col="text",
-                config="english", n_buckets=4)
-    monkeypatch.setenv("PGTS_HASH_OVERLAP", "1")
-    build_index(spark, docs, d_b, key_col="url", text_col="text",
-                config="english", n_buckets=4)
-    monkeypatch.delenv("PGTS_HASH_OVERLAP")
-
-    def rows_of(d, table):
-        out = []
-        for f in sorted(glob.glob(f"{d}/{table}/seg=0/**/*.parquet",
-                                  recursive=True)):
-            out += [tuple(
-                bytes(v) if isinstance(v, (bytes, bytearray)) else (
-                    tuple(tuple(sorted(b.items(), key=lambda kv: kv[0]))
-                          if isinstance(b, dict) else b for b in v)
-                    if isinstance(v, list) else v)
-                for v in r.values()
-            ) for r in pq.read_table(f).to_pylist()]
-        return sorted(map(str, out))
-
-    assert rows_of(d_a, "keymap") == rows_of(d_b, "keymap")
-    a, b = BM25Index(spark, d_a), BM25Index(spark, d_b)
-    ra = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(a, "alpha t2", 10).collect()]
-    rb = [(r["doc_id"], round(r["score"], 9))
-          for r in topk_exhaustive(b, "alpha t2", 10).collect()]
-    assert ra == rb and len(ra) == 10
-
-
 def test_local_topk_df_rejects_non_finite(spark):
     """A non-finite score would render as a bare inf/nan token and
     fail SQL analysis as an unresolved identifier; the helper must
