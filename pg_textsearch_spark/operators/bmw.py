@@ -28,43 +28,53 @@ when the query's posting volume passes ``kernel.wants_floor``.
 from __future__ import annotations
 
 import math
-import os
 import threading
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.functions.bm25 import bm25_term_score32
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
-from pg_textsearch_spark.index.codec import decompress_blocks
 from pg_textsearch_spark.operators.kernel import (
     decode_rows,
     kth_partial_floor,
     score_topk,
     wants_floor,
 )
+from pg_textsearch_spark.operators.topk import in_list
 
 
 #: separator for the phase-2 (term, run) fetch key — never appears in
-#: tokens (the tokenizer strips control characters)
+#: tokens (the tokenizer strips control characters) — and the key as
+#: SQL text for ``in_list``
 _KEY_SEP = "\x1f"
+_KEY_SQL = "concat_ws(CAST(X'1f' AS STRING), term, CAST(run AS STRING))"
+
+
+def _base32(e: dict, k1, b, avgdl) -> np.ndarray:
+    """f32 BM25 of each decoded posting of ``e`` at unit weight: the
+    bootstrap's partial score before the term weight."""
+    return bm25_term_score32(
+        e["tfs"], FIELDNORM_DECODE_TABLE[e["fns"]], np.float32(1.0), avgdl, k1, b,
+    )
 
 
 def _score_batch_run(
-    pdf: pd.DataFrame,
+    table: pa.Table,
     qw_items: list,
     k: int,
     k1: float,
     b: float,
     avgdl: float,
     dead=None,
-) -> pd.DataFrame:
-    """Multi-QUERY top-k over one run's posting rows: decode the run's
-    blocks once (``kernel.decode_rows``), then call the scoring kernel
-    (``kernel.score_topk``) once per query over those shared arrays.
+) -> pa.Table:
+    """Multi-QUERY top-k over one run's posting rows (Arrow ``term``,
+    ``blocks``): decode the run's blocks once (``kernel.decode_rows``),
+    then call the scoring kernel (``kernel.score_topk``) once per query
+    over those shared arrays -> Arrow (query_id, doc_id, score).
 
     ``qw_items``: [(query_id, [(term, idf, qf), ...], floor), ...].
     Queries share terms (the point of batching), so each block decodes
@@ -74,7 +84,7 @@ def _score_batch_run(
     64 KB per call.
     """
     entries = decode_rows(
-        zip(pdf["term"], pdf["blocks"]),
+        table,
         [(fl, {t: (idf, qf) for t, idf, qf in wl}) for _, wl, fl in qw_items],
         k1, b, avgdl,
     )
@@ -84,18 +94,14 @@ def _score_batch_run(
         if not present:
             continue
         ids, scores = score_topk(present, k, k1, b, avgdl, dead=dead)
-        out_q.append(np.repeat(qid, len(ids)))
+        out_q.extend([qid] * len(ids))
         out_d.append(ids)
         out_s.append(scores)
-    if not out_q:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s).astype(np.float64),
-        }
-    )
+    return pa.table({
+        "query_id": pa.array(out_q, pa.string()),
+        "doc_id": pa.array(np.concatenate(out_d) if out_d else [], pa.int64()),
+        "score": pa.array(np.concatenate(out_s) if out_s else [], pa.float64()),
+    })
 
 
 def _batch_floors(
@@ -186,29 +192,24 @@ def _batch_floors(
     if stats is not None:
         stats["phase2_rows"] = len(all_keys)
 
-    key = F.concat_ws(_KEY_SEP, F.col("term"), F.col("run").cast("string"))
-    fetch = [f"{t}{_KEY_SEP}{run}" for t, run in all_keys]
-    rows = pruned.filter(key.isin(fetch)).select("term", "run", "blocks").collect()
-    decoded: dict = {}
-    for row in rows:
-        ids, tfs, fns, _cnt = decompress_blocks(
-            [blk["payload"] for blk in row["blocks"]]
-        )
-        s32 = bm25_term_score32(
-            tfs, FIELDNORM_DECODE_TABLE[fns], np.float32(1.0), avgdl, k1, b,
-        )
-        decoded[(row["term"], int(row["run"]))] = (ids, s32)
+    # the fetched rows decode keyed by their (term, run) fetch key
+    fetch = sorted(f"{t}{_KEY_SEP}{run}" for t, run in all_keys)
+    decoded = decode_rows(
+        pruned.filter(in_list(_KEY_SQL, fetch))
+        .select(F.expr(_KEY_SQL).alias("term"), "blocks")
+        .toArrow()
+    )
     for qid, w in qweights.items():
         ids_parts, s_parts = [], []
         for t, run in chosen_per_q[qid]:
-            got = decoded.get((t, run))
-            if got is None:
+            e = decoded.get(f"{t}{_KEY_SEP}{run}")
+            if e is None:
                 continue
             idf, qf = w[t]
-            ids_parts.append(got[0])
-            s_parts.append(
-                (got[1] * np.float32(float(idf) * int(qf))).astype(np.float64)
-            )
+            ids_parts.append(e["ids"])
+            s_parts.append((
+                _base32(e, k1, b, avgdl) * np.float32(float(idf) * int(qf))
+            ).astype(np.float64))
         if ids_parts:
             floors[qid] = kth_partial_floor(
                 np.concatenate(ids_parts), np.concatenate(s_parts), k
@@ -292,21 +293,17 @@ def _bootstrap_floor(pruned, wmap, k, k1, b, avgdl, stats=None) -> float:
         stats["phase2_rows"] = len(chosen)
 
     # phase 2: fetch + decode only the chosen rows (single IN predicate)
-    key = F2.concat_ws(_KEY_SEP, F2.col("term"), F2.col("run").cast("string"))
-    rows = pruned.filter(key.isin(chosen)).select("term", "blocks").collect()
-    ids_parts, s_parts = [], []
-    for row in rows:
-        ids, tfs, fns, _cnt = decompress_blocks(
-            [blk["payload"] for blk in row["blocks"]]
-        )
-        ids_parts.append(ids)
-        s_parts.append((
-            bm25_term_score32(
-                tfs, FIELDNORM_DECODE_TABLE[fns], np.float32(1.0), avgdl, k1, b,
-            ) * np.float32(wmap[row["term"]])
-        ).astype(np.float64))
-    if not ids_parts:
+    entries = decode_rows(
+        pruned.filter(in_list(_KEY_SQL, chosen)).select("term", "blocks").toArrow()
+    )
+    if not entries:
         return -1.0
+    ids_parts, s_parts = [], []
+    for t, e in entries.items():
+        ids_parts.append(e["ids"])
+        s_parts.append(
+            (_base32(e, k1, b, avgdl) * np.float32(wmap[t])).astype(np.float64)
+        )
     return kth_partial_floor(
         np.concatenate(ids_parts), np.concatenate(s_parts), k
     )
@@ -323,7 +320,7 @@ SMALL_QUERY_POSTINGS = 500_000
 
 #: concurrent driver-side small-query scorings admitted before the
 #: dispatcher overflows. The driver path is low-latency for one
-#: caller, but its per-query work (plan build, row pickling, kernel)
+#: caller, but its per-query work (plan build, row transfer, kernel)
 #: holds the GIL ~0.13 s — 16 threads all taking it measured LOWER
 #: aggregate throughput (7.5 q/s) than 16 on the distributed plan
 #: (13-14 q/s). ONE slot (round 6): the solo caller keeps the fast
@@ -333,9 +330,7 @@ SMALL_QUERY_POSTINGS = 500_000
 #: parallelize; 4 slots measured 14.8 q/s at 16 clients because every
 #: freed slot re-admitted a 0.13 s GIL-holder). Distributed plan
 #: remains the overflow where serving is unavailable.
-_DRIVER_SCORE_SLOTS = threading.BoundedSemaphore(
-    int(os.environ.get("PGTS_DRIVER_SCORE_SLOTS", "1"))
-)
+_DRIVER_SCORE_SLOTS = threading.BoundedSemaphore(1)
 
 #: lock guarding construction of the per-index serving handle for the
 #: contended-small-query overflow (see topk_bmw). The handle itself is
@@ -356,8 +351,6 @@ def _serve_overflow(index, query: str, k: int):
     when the serving path is unavailable — caller falls back to the
     distributed plan. Results are contract-identical to topk_bmw
     (same kernel, same tie-break; oracle gate bm25_topk_serve)."""
-    if os.environ.get("PGTS_BMW_SERVE_OVERFLOW", "1") == "0":
-        return None
     from pg_textsearch_spark.operators.serve import ServingIndex, topk_serve
 
     try:
@@ -447,15 +440,16 @@ def topk_bmw(
     def score_rows(rows):
         dead = dead_bc.value if dead_bc is not None else None
         entries = decode_rows(rows, [(floor, iqmap)], k1, b, avgdl)
-        return score_topk(
+        ids, scores = score_topk(
             [(*iqmap[t], e) for t, e in entries.items()],
             kk, k1, b, avgdl, dead=dead,
         )
+        return pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "score": pa.array(scores, pa.float64()),
+        })
 
-    def score_run(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, scores = score_rows(zip(pdf["term"], pdf["blocks"]))
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-
+    out_schema = "doc_id bigint, score double"
     small_cut = (
         SMALL_QUERY_POSTINGS
         if small_query_postings is None
@@ -464,73 +458,64 @@ def topk_bmw(
     if single and total_postings > small_cut:
         # large single-term queries need no cross-term alignment: every
         # (term, run) row is an independent posting list, so score each
-        # scan partition in place (mapInPandas, ZERO shuffles — one
-        # stage from parquet to TakeOrdered) with a partition-local
-        # top-k; the global limit merges partition top-ks
-        def score_partition(batches):
-            for pdf in batches:
-                out = score_run(pdf)
-                if len(out):
-                    yield out
+        # scan batch in place (mapInArrow, ZERO shuffles — one stage
+        # from parquet to TakeOrdered) with a batch-local top-k; the
+        # global limit merges the batch top-ks
+        def score_batches(batches):
+            for batch in batches:
+                out = score_rows(batch)
+                if out.num_rows:
+                    yield from out.to_batches()
 
-        per_run = pruned.mapInPandas(
-            score_partition, "doc_id bigint, score double"
-        )
+        per_run = pruned.mapInArrow(score_batches, out_schema)
     elif total_postings <= small_cut:
         # small query (single- or multi-term): the pruned scan is the
         # only data-touching work (row-group-pruned parquet read, its
         # volume bounded by small_cut postings — ~1 MB of encoded
-        # blocks), so collect those rows and run the SAME kernel once
-        # DRIVER-side. The coalesce(1) one-task mapInPandas this
-        # replaces paid ~0.17 s/query of Python-stage setup (function
-        # pickling, worker handshake, Arrow stream) for a kernel that
-        # costs <1 ms on a few thousand postings — measured 0.28 s for
-        # a trivial one-task mapInPandas vs 0.11 s for the bare JVM
-        # scan+collect (1M-page index, warm). Past small_cut the
-        # distributed plans take over, so driver memory stays bounded.
+        # blocks), so collect those rows as Arrow and run the SAME
+        # kernel once DRIVER-side. The coalesce(1) one-task
+        # mapInPandas this replaces paid ~0.17 s/query of Python-stage
+        # setup (function pickling, worker handshake, Arrow stream) for
+        # a kernel that costs <1 ms on a few thousand postings —
+        # measured 0.28 s for a trivial one-task mapInPandas vs 0.11 s
+        # for the bare JVM scan+collect (1M-page index, warm). Past
+        # small_cut the distributed plans take over, so driver memory
+        # stays bounded.
         if _DRIVER_SCORE_SLOTS.acquire(blocking=False):
             try:
-                # collected block structs are Rows — field-indexable
-                # exactly like the dicts the Arrow path hands the kernel
-                ids, scores = score_rows(
-                    (r["term"], r["blocks"]) for r in pruned.collect()
-                )
+                out = score_rows(pruned.toArrow())
             finally:
                 _DRIVER_SCORE_SLOTS.release()
             from pg_textsearch_spark.operators.serve import local_topk_df
 
             return local_topk_df(spark, [
-                (i + 1, d, s) for i, (d, s) in
-                enumerate(zip(ids.tolist(), scores.tolist()))
+                (i + 1, d, s) for i, (d, s) in enumerate(zip(
+                    out.column("doc_id").to_pylist(),
+                    out.column("score").to_pylist(),
+                ))
             ])
-        # driver slot contended (the default is ONE slot, so overflow
-        # begins at the 2nd concurrent small query): route
-        # the overflow through the in-process SERVING kernel — same
-        # index files, same scoring kernel, results oracle-gated
-        # identical (gate bm25_topk_serve) — instead of the
-        # distributed plan. The driver path's per-query work (plan
-        # build + row pickling) holds the GIL ~0.13 s, so 16 threads
-        # taking it measured LOWER aggregate throughput than the
-        # cluster plan (BENCH_r05 "concurrent": 10.7 q/s); the serve
-        # kernel answers warm small queries in ~1-15 ms with
-        # GIL-releasing pyarrow reads, so concurrent callers genuinely
-        # parallelize. This is the cost-based fork a serving planner
-        # takes under load: concurrent small queries belong on the
-        # local kernel, not the cluster scheduler. Falls back to the
-        # distributed plan when the serving read path is unavailable
-        # (non-local store) or disabled (PGTS_BMW_SERVE_OVERFLOW=0).
+        # driver slot contended (ONE slot, so overflow begins at the
+        # 2nd concurrent small query): route the overflow through the
+        # in-process SERVING kernel — same index files, same scoring
+        # kernel, results oracle-gated identical (gate bm25_topk_serve)
+        # — instead of the distributed plan. The driver path's
+        # per-query work holds the GIL ~0.13 s, so 16 threads taking it
+        # measured LOWER aggregate throughput than the cluster plan
+        # (BENCH_r05 "concurrent": 10.7 q/s); the serve kernel answers
+        # warm small queries in ~1-15 ms with GIL-releasing pyarrow
+        # reads, so concurrent callers genuinely parallelize. This is
+        # the cost-based fork a serving planner takes under load:
+        # concurrent small queries belong on the local kernel, not the
+        # cluster scheduler. Falls back to the distributed plan when
+        # the serving read path is unavailable (non-local store).
         rows = _serve_overflow(index, query, kk)
         if rows is not None:
             from pg_textsearch_spark.operators.serve import local_topk_df
 
             return local_topk_df(spark, rows)
-        per_run = pruned.groupBy("run").applyInPandas(
-            score_run, "doc_id bigint, score double"
-        )
+        per_run = pruned.groupBy("run").applyInArrow(score_rows, out_schema)
     else:
-        per_run = pruned.groupBy("run").applyInPandas(
-            score_run, "doc_id bigint, score double"
-        )
+        per_run = pruned.groupBy("run").applyInArrow(score_rows, out_schema)
     topk = per_run.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
     return topk.select(
         F.row_number()

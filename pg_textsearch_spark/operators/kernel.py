@@ -1,13 +1,16 @@
 """The one block-max scoring kernel behind every top-k read path.
 
-``topk_bmw`` (per doc-range run, or once over a driver-collected row
-set), ``topk_batch`` (once per query over a run's shared decoded
-postings) and ``topk_serve`` / ``ServePool`` (over the serving cache's
-flat arrays) all score through ``score_topk``. Each hands it, per query
-term, the term's decoded postings (``ids``, ``tfs``, ``fns``); the
-Spark paths decode them with ``decode_rows``, which reads each block's
-metadata (``bmt`` block_max_tf, ``bmn`` block_max_norm) first and
-skips the blocks a pruning floor rules out (``keep_blocks``).
+``topk_bmw`` (per doc-range run, per scan batch, or once over a
+driver-collected Arrow table), ``topk_batch`` (once per query over a
+run's shared decoded postings) and ``topk_serve`` / ``ServePool`` (over
+the serving cache's flat arrays) all score through ``score_topk``. Each
+hands it, per query term, the term's decoded postings (``ids``,
+``tfs``, ``fns``); the Spark paths decode them with ``decode_rows``,
+which takes the posting rows as Arrow (``term``, ``blocks``), reads
+each block's metadata (``bmt`` block_max_tf, ``bmn`` block_max_norm)
+as whole columns, skips the blocks a pruning floor rules out
+(``keep_blocks``) and hands the kept payloads to one native decode
+call. No block or posting becomes a Python object.
 
 Contract (reference: bmw.c; results equal exhaustive scoring,
 test/sql/validation.sql:186-205): pruning decisions use float32 block
@@ -26,6 +29,8 @@ gate (``serve.SERVE_MAX_POSTINGS``).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pg_textsearch_spark.functions.bm25 import bm25_term_score32
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
@@ -99,11 +104,25 @@ def keep_blocks(meta: dict, weights: dict, floor: float, k1, b, avgdl) -> dict:
     }
 
 
+def _one_array(col):
+    """A table or batch column as one Arrow array: zero-copy unless
+    the column spans several chunks."""
+    if isinstance(col, pa.ChunkedArray):
+        return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    return col
+
+
 def decode_rows(rows, queries=(), k1=0.0, b=0.0, avgdl=1.0) -> dict:
-    """(term, blocks) posting rows -> term -> flat entry
-    ``{"ids", "tfs", "fns", "bmt", "bmn", "dc"}``. A term's rows (one
-    per segment and run) concatenate; every decoded payload goes
-    through ONE ``decompress_blocks`` call.
+    """Posting rows -> term -> flat entry ``{"ids", "tfs", "fns",
+    "bmt", "bmn", "dc"}``.
+
+    ``rows``: an Arrow table or record batch with a ``term`` column and
+    the postings ``blocks`` column (list of block structs). Block
+    metadata is read column-wise with ``pc.struct_field``; no block is
+    ever a Python object. A term's rows (one per segment and run)
+    concatenate in row order, and every kept payload goes to ONE
+    ``decompress_blocks`` call, zero-copy when each term's rows are
+    already contiguous.
 
     ``queries``: [(floor, {term: (idf, qf)}), ...], every query that
     will score these entries. When any has a floor (> 0), the block
@@ -111,19 +130,32 @@ def decode_rows(rows, queries=(), k1=0.0, b=0.0, avgdl=1.0) -> dict:
     some query keeps it (``keep_blocks``; a query without a floor keeps
     every block of its terms). Scoring a block another query kept is
     harmless — its postings are exact contributions."""
-    by_term: dict = {}
-    for term, blocks in rows:
-        if blocks is not None and len(blocks):
-            by_term.setdefault(term, []).extend(blocks)
+    if rows.num_rows == 0:
+        return {}
+    blocks = _one_array(rows.column("blocks"))
+    terms = pc.dictionary_encode(_one_array(rows.column("term")))
+    nblk = pc.list_value_length(blocks).fill_null(0).to_numpy()
+    flat = pc.list_flatten(blocks)
+    # term code per block; codes number terms in first-appearance order
+    code = np.repeat(terms.indices.to_numpy(), nblk)
+    payload = pc.struct_field(flat, "payload")
+    bmt = pc.struct_field(flat, "block_max_tf").to_numpy()
+    bmn = pc.struct_field(flat, "block_max_norm").to_numpy()
+    if len(code) > 1 and (np.diff(code) < 0).any():
+        order = np.argsort(code, kind="stable")
+        code, bmt, bmn = code[order], bmt[order], bmn[order]
+        payload = payload.take(pa.array(order))
+    names = terms.dictionary.to_pylist()
+    bounds = np.searchsorted(code, np.arange(len(names) + 1))
     meta = {
-        t: {
-            "bmt": np.fromiter((x["block_max_tf"] for x in bl), np.int64, len(bl)),
-            "bmn": np.fromiter((x["block_max_norm"] for x in bl), np.int64, len(bl)),
-        }
-        for t, bl in by_term.items()
+        names[c]: {"bmt": bmt[lo:hi], "bmn": bmn[lo:hi]}
+        for c, (lo, hi) in enumerate(zip(bounds[:-1], bounds[1:]))
+        if hi > lo
     }
+    if not meta:
+        return {}
     if any(floor > 0 for floor, _ in queries):
-        keep = {t: np.zeros(len(bl), dtype=bool) for t, bl in by_term.items()}
+        keep = {t: np.zeros(len(m["bmt"]), dtype=bool) for t, m in meta.items()}
         for floor, w in queries:
             if floor > 0:
                 for t, m in keep_blocks(meta, w, floor, k1, b, avgdl).items():
@@ -132,25 +164,23 @@ def decode_rows(rows, queries=(), k1=0.0, b=0.0, avgdl=1.0) -> dict:
                 for t in w:
                     if t in keep:
                         keep[t][:] = True
-        for t, m in keep.items():
-            if not m.all():
-                by_term[t] = [x for x, kept in zip(by_term[t], m) if kept]
-                meta[t] = {c: v[m] for c, v in meta[t].items()}
-    by_term = {t: bl for t, bl in by_term.items() if bl}
-    if not by_term:
-        return {}
-    ids, tfs, fns, counts = decompress_blocks(
-        [x["payload"] for bl in by_term.values() for x in bl]
-    )
+        mask = np.concatenate(list(keep.values()))
+        if not mask.all():
+            payload = payload.filter(pa.array(mask))
+            meta = {
+                t: {c: v[keep[t]] for c, v in m.items()}
+                for t, m in meta.items() if keep[t].any()
+            }
+    ids, tfs, fns, counts = decompress_blocks(payload)
     out: dict = {}
     bi = pi = 0
-    for term, bl in by_term.items():
-        bj = bi + len(bl)
+    for term, m in meta.items():
+        bj = bi + len(m["bmt"])
         dc = counts[bi:bj]
         pj = pi + int(dc.sum())
         out[term] = {
             "ids": ids[pi:pj], "tfs": tfs[pi:pj], "fns": fns[pi:pj],
-            "dc": dc, **meta[term],
+            "dc": dc, **m,
         }
         bi, pi = bj, pj
     return out

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.functions.tokenizer import spark_token_table, tokenize_query
+from pg_textsearch_spark.operators.topk import in_list
 
 
 def _quantize_expr(dl_col):
@@ -72,7 +73,7 @@ def score_texts(
         avgdl = (int(tt) / n_docs) if n_docs else 0.0
         dfs = {
             r["term"]: int(r["df"])
-            for r in tokens.filter(F.col("term").isin(list(qtf)))
+            for r in tokens.filter(in_list("term", list(qtf)))
             .groupBy("term")
             .agg(F.count("*").alias("df"))
             .collect()

@@ -28,10 +28,10 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
@@ -52,6 +52,28 @@ POSTINGS_READ_SCHEMA = (
 )
 DOCLEN_READ_SCHEMA = "doc_id bigint, doc_len bigint, fieldnorm int, seg int"
 DICT_READ_SCHEMA = "term string, df bigint, bucket int, seg int"
+
+
+def in_list(expr: str, values) -> Column:
+    """``expr IN (values)`` for a list of strings or ints, built with a
+    constant number of JVM calls however long the list is.
+    ``Column.isin`` makes one py4j round trip per literal (0.5-2 s for
+    800 query terms on a 4-vCPU host). Here the whole predicate is one
+    SQL expression.
+    Strings are written as ``CAST(X'<utf-8 hex>' AS STRING)``, so no
+    quote, backslash or ``${...}`` in a term reaches the SQL parser or
+    its variable substitution. Spark folds the casts to literals, so a
+    column ``expr`` still pushes the same parquet ``In`` filter (and
+    partition filter) as ``isin``. ``expr`` is SQL text: a column name
+    or an expression over columns."""
+    lits = [
+        f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)" if isinstance(v, str)
+        else str(int(v))
+        for v in values
+    ]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(lits)})")
 
 
 class BM25Index:
@@ -85,6 +107,8 @@ class BM25Index:
         # analogy, same stamp invalidation)
         self._floor_cache: dict = {}
         self._pruned_cache: dict = {}
+        # the sorted dead ids the kernel zeroes (deleted_id_array)
+        self._dead_ids: np.ndarray | None = None
         self._cache_stamp = None
         self._dictionary_df: DataFrame | None = None
         self._postings_df: DataFrame | None = None
@@ -101,6 +125,7 @@ class BM25Index:
             self._df_cache = {}
             self._floor_cache = {}
             self._pruned_cache = {}
+            self._dead_ids = None
             if self._dictionary_df is not None:
                 # release the pinned cache before dropping the handle —
                 # otherwise repeated invalidations (delete/merge cycles
@@ -152,11 +177,14 @@ class BM25Index:
 
     def deleted_id_array(self) -> np.ndarray:
         """``deleted_ids`` collected as a sorted int64 array: the dead
-        set the scoring kernel zeroes."""
-        return np.unique(np.asarray(
-            [r["doc_id"] for r in self.deleted_ids().collect()],
-            dtype=np.int64,
-        ))
+        set the scoring kernel zeroes. Memoized per handle like the df
+        cache (the stamp counts deleted docs), so repeated queries under
+        pending deletes read the deletes table once."""
+        self._check_stamp()
+        if self._dead_ids is None:
+            ids = self.deleted_ids().toArrow().column("doc_id")
+            self._dead_ids = np.unique(ids.to_numpy().astype(np.int64))
+        return self._dead_ids
 
     def has_deletes(self) -> bool:
         return int(self.manifest.get("deleted_docs", 0)) > 0
@@ -195,11 +223,11 @@ class BM25Index:
 
         The bucket IN (...) predicate prunes partition directories
         (file-level skip, the dictionary-lookup analog); term IN (...)
-        is pushed to the Parquet row-group scan. The built plan is
-        memoized per term set (stamp-invalidated like the df cache):
-        re-building + re-analyzing the same filter chain cost ~60 ms
-        of every warm repeated query (round 8 decomposition: 0.144 s
-        plan-build+collect vs 0.081 s collect on the reused plan).
+        is pushed to the Parquet row-group scan. Both are ``in_list``
+        predicates, so building the plan costs a constant few JVM calls
+        however many terms a batch has. The plan is memoized per term
+        set (stamp-invalidated like the df cache), so a repeated query
+        also skips re-analysis.
         """
         self._check_stamp()
         key = tuple(sorted(set(terms)))
@@ -209,8 +237,8 @@ class BM25Index:
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         df = (
             self.postings()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(list(terms)))
+            .filter(in_list("bucket", buckets))
+            .filter(in_list("term", key))
         )
         if len(self._pruned_cache) >= 4096:  # plans are small; bound anyway
             self._pruned_cache.clear()
@@ -308,11 +336,15 @@ class BM25Index:
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
 
     def _term_dfs_uncached(self, terms: list[str]) -> dict[str, int]:
-        """Pending deletes are corrected from the ``dead_dfs`` table
-        that ``delete_docs`` materializes (one (term, dead_df) row per
-        term per delete batch) — a dictionary-sized lookup, no posting
-        decode at query time. Legacy indexes whose deletes predate the
-        table fall back to decoding the query terms' postings."""
+        """One collect per table and no shuffle: the dictionary holds
+        one (term, df) row per term per segment, so the matching rows
+        come back as Arrow and sum in the driver. Pending deletes are
+        corrected from the ``dead_dfs`` table that ``delete_docs``
+        materializes (one (term, dead_df) row per term per delete
+        batch), summed the same way — a dictionary-sized lookup, no
+        posting decode at query time. Legacy indexes whose deletes
+        predate the table fall back to decoding the query terms'
+        postings."""
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         # explicit existence probe, not a bare except: only a segment
         # genuinely missing its dictionary table may fall back to the
@@ -323,49 +355,42 @@ class BM25Index:
             for s in self.manifest["segments"]
         )
         if has_dict:
-            d = self.dictionary()
-            rows = (
-                d.filter(F.col("bucket").isin(buckets))
-                .filter(F.col("term").isin(list(terms)))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
+            dfs = _sum_by_term(
+                self.dictionary()
+                .filter(in_list("bucket", buckets))
+                .filter(in_list("term", sorted(set(terms)))),
+                "df",
             )
-            dfs = {r["term"]: int(r["df"]) for r in rows}
         else:
             # legacy segments without a dictionary: derive from postings
-            rows = (
+            dfs = _sum_by_term(
                 self.pruned_postings(terms)
                 .groupBy("term")
-                .agg(F.sum("df_run").alias("df"))
-                .collect()
+                .agg(F.sum("df_run").alias("df")),
+                "df",
             )
-            dfs = {r["term"]: int(r["df"]) for r in rows}
         if self.has_deletes() and dfs:
             dead_path = os.path.join(self.index_dir, "dead_dfs")
             if self.store.exists("dead_dfs"):
-                dead_rows = (
+                dead = _sum_by_term(
                     self.spark.read.schema("term string, dead_df bigint")
                     .parquet(dead_path)
-                    .filter(F.col("term").isin(list(dfs)))
-                    .groupBy("term")
-                    .agg(F.sum("dead_df").alias("dead_df"))
-                    .collect()
+                    .filter(in_list("term", sorted(dfs))),
+                    "dead_df",
                 )
             else:
                 # legacy fallback: decode the query terms' postings
-                dead = self.deleted_ids()
                 flat = decode_postings_flat(
                     self.pruned_postings(list(dfs))
                 ).select("term", "doc_id")
-                dead_rows = (
-                    flat.join(F.broadcast(dead), "doc_id")
+                dead = _sum_by_term(
+                    flat.join(F.broadcast(self.deleted_ids()), "doc_id")
                     .groupBy("term")
-                    .agg(F.count("*").alias("dead_df"))
-                    .collect()
+                    .agg(F.count("*").alias("dead_df")),
+                    "dead_df",
                 )
-            for r in dead_rows:
-                dfs[r["term"]] = dfs.get(r["term"], 0) - int(r["dead_df"])
+            for t, v in dead.items():
+                dfs[t] = dfs.get(t, 0) - v
             dfs = {t: v for t, v in dfs.items() if v > 0}
         return dfs
 
@@ -384,6 +409,16 @@ class BM25Index:
             idf = math.log1p((n - df + 0.5) / (df + 0.5))
             out[term] = (idf, qf)
         return out
+
+
+def _sum_by_term(df: DataFrame, col: str) -> dict[str, int]:
+    """term -> sum of ``col`` over ``df``'s rows, collected as Arrow
+    and summed in the driver."""
+    t = df.select("term", col).toArrow()
+    out: dict[str, int] = {}
+    for term, v in zip(t.column("term").to_pylist(), t.column(col).to_pylist()):
+        out[term] = out.get(term, 0) + int(v)
+    return out
 
 
 _FLAT_SCHEMA = (
@@ -605,11 +640,19 @@ def topk_batch(
     This is where Spark beats a single-node server on throughput: one
     postings scan over the union of all query terms, sharded by run
     (disjoint 8192-doc ranges, every query term co-located). Per run
-    (``bmw._score_batch_run``) each posting block decodes AT MOST ONCE
-    no matter how many queries share its term, then the one scoring
-    kernel (``kernel.score_topk``) runs once per query over those
-    shared arrays and emits <= k rows per (query, run). The final merge
-    is one windowed top-k per query over those k*runs candidates.
+    (``bmw._score_batch_run``, an ``applyInArrow`` over the run's Arrow
+    rows) each posting block decodes AT MOST ONCE no matter how many
+    queries share its term, then the one scoring kernel
+    (``kernel.score_topk``) runs once per query over those shared
+    arrays and emits <= k rows per (query, run). Those k*runs
+    candidates per query come back as Arrow and the driver merges them
+    into each query's top k (``_merge_runs``).
+
+    A sweep of uncached terms runs three Spark jobs: the df lookup (one
+    collect of the dictionary rows, summed in the driver) and the
+    scan-and-score job (its shuffle stage and its result stage). Every
+    term-list predicate is an ``in_list``, so plan building costs the
+    same for 10 terms or 1,000.
 
     ``prune`` applies the one floor rule (``kernel.wants_floor``) per
     query: a query bootstraps a pruning floor only when its terms' dfs
@@ -619,7 +662,9 @@ def topk_batch(
 
     Semantics per query are identical to ``topk_exhaustive`` (same
     float64 per-posting math and op order, same (score DESC, doc_id
-    ASC) tie-break); pruning uses float32 metadata bounds only.
+    ASC) tie-break); pruning uses float32 metadata bounds only. The
+    result is a driver-local DataFrame: the scoring job has already run
+    when this returns.
     """
     spark = index.spark
     from pg_textsearch_spark.operators.bmw import (
@@ -699,16 +744,30 @@ def topk_batch(
         for qid, w in qweights.items()
     ]
 
-    def score_run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_run(table):
         dead = dead_bc.value if dead_bc is not None else None
-        return _score_batch_run(pdf, qw_items, kk, k1, b, avgdl, dead=dead)
+        return _score_batch_run(table, qw_items, kk, k1, b, avgdl, dead=dead)
 
-    per_run = pruned.groupBy("run").applyInPandas(
+    per_run = pruned.groupBy("run").applyInArrow(
         score_run, "query_id string, doc_id bigint, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return spark.createDataFrame(_merge_runs(per_run.toArrow(), kk))
+
+
+def _merge_runs(per_run: pa.Table, k: int) -> pa.Table:
+    """Per-query top-k over the run-local top-ks, in the driver:
+    (query_id, doc_id, score) -> (query_id, rank, doc_id, score),
+    ordered (query_id, score DESC, doc_id ASC), ``rank`` <= k."""
+    t = per_run.sort_by(
+        [("query_id", "ascending"), ("score", "descending"), ("doc_id", "ascending")]
+    )
+    # sorted by query_id, so the dictionary codes ascend with it and a
+    # row's rank is its distance from the first row of its code
+    codes = pc.dictionary_encode(t.column("query_id").combine_chunks())
+    codes = codes.indices.to_numpy()
+    rank = np.arange(t.num_rows) - np.searchsorted(codes, codes) + 1
     return (
-        per_run.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("query_id", "rank", "doc_id", "score")
+        t.append_column("rank", pa.array(rank, pa.int32()))
+        .filter(pa.array(rank <= k))
+        .select(["query_id", "rank", "doc_id", "score"])
     )

@@ -40,8 +40,8 @@ def get_spark(
     - AQE on: runtime coalescing of the term-partitioned shuffle and
       automatic skew-join splitting (head terms are Zipf-skewed).
     - Arrow on: every custom kernel (tokenizer, codec, BMW scoring) is
-      a pandas UDF; Arrow batch transfer is the difference between
-      usable and 100x-too-slow.
+      a pandas or Arrow UDF; Arrow batch transfer is the difference
+      between usable and 100x-too-slow.
     - Shuffle partition count is sized by the caller per data scale; at
       100 TB this would be O(10k), locally it defaults to 2x cores.
     """

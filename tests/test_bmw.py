@@ -393,9 +393,9 @@ def test_topk_filtered_doc_key_requires_keymap(zipf_index):
 def test_small_query_fallback_when_driver_slots_busy(zipf_index, monkeypatch):
     """With every driver-side scoring slot held, a small query must
     return identical results via BOTH overflow paths: the in-process
-    serving kernel (default) and the distributed plan
-    (PGTS_BMW_SERVE_OVERFLOW=0) — see bmw._DRIVER_SCORE_SLOTS /
-    bmw._serve_overflow."""
+    serving kernel and the distributed plan, which a store the serving
+    path cannot read falls back to (``_serve_overflow`` returns None)
+    — see bmw._DRIVER_SCORE_SLOTS / bmw._serve_overflow."""
     from pg_textsearch_spark.operators import bmw as bmw_mod
 
     query = topk_exhaustive(zipf_index, "t3 t7", 5).collect()
@@ -406,9 +406,9 @@ def test_small_query_fallback_when_driver_slots_busy(zipf_index, monkeypatch):
         held += 1
     try:
         served = topk_bmw(zipf_index, "t3 t7", 5).collect()
-        monkeypatch.setenv("PGTS_BMW_SERVE_OVERFLOW", "0")
+        monkeypatch.setattr(bmw_mod, "_serve_overflow", lambda *a: None)
         spilled = topk_bmw(zipf_index, "t3 t7", 5).collect()
-        monkeypatch.delenv("PGTS_BMW_SERVE_OVERFLOW")
+        monkeypatch.undo()
     finally:
         for _ in range(held):
             bmw_mod._DRIVER_SCORE_SLOTS.release()

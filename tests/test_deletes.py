@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.index.deletes import delete_docs, vacuum
 from pg_textsearch_spark.operators.bmw import topk_bmw
-from pg_textsearch_spark.operators.topk import BM25Index, topk_exhaustive
+from pg_textsearch_spark.operators.topk import (
+    BM25Index,
+    topk_batch,
+    topk_exhaustive,
+)
 
 
 @pytest.fixture()
@@ -33,6 +37,36 @@ def test_delete_hides_docs_both_paths(idx):
     assert not ({r["doc_id"] for r in after_bmw} & set(victims))
     for e, w in zip(after_exh, after_bmw):
         assert abs(e["score"] - w["score"]) <= 1e-3
+
+
+def test_dead_ids_read_once_per_handle(idx, monkeypatch):
+    # the dead-id array is memoized per handle stamp: repeated batch
+    # and bmw queries under pending deletes read the deletes table once
+    queries = {"a": "spark query table", "b": "window"}
+    victims = [r["doc_id"] for r in topk_exhaustive(idx, "window", 3).collect()]
+    delete_docs(idx, victims[:2])
+    idx2 = BM25Index(idx.spark, idx.index_dir)
+    want = {
+        qid: [(r["rank"], r["doc_id"], r["score"])
+              for r in topk_exhaustive(idx2, q, 5).collect()]
+        for qid, q in queries.items()
+    }
+    reads = []
+    real = idx2.deleted_ids
+    monkeypatch.setattr(idx2, "deleted_ids", lambda: reads.append(1) or real())
+    for _ in range(2):
+        rows = topk_batch(idx2, queries, k=5).collect()
+        for qid in queries:
+            got = sorted(
+                (r["rank"], r["doc_id"], r["score"])
+                for r in rows if r["query_id"] == qid
+            )
+            assert [g[:2] for g in got] == [w[:2] for w in want[qid]], qid
+            for g, w in zip(got, want[qid]):
+                assert g[2] == pytest.approx(w[2], rel=1e-12)
+    got = [(r["rank"], r["doc_id"]) for r in topk_bmw(idx2, "window", 5).collect()]
+    assert got == [w[:2] for w in want["b"]]
+    assert len(reads) == 1
 
 
 def test_vacuum_drops_and_matches_filtered_rebuild(spark, idx, tmp_path):

@@ -9,9 +9,10 @@ import math
 import shutil
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from pg_textsearch_spark.index.builder import build_index
+from pg_textsearch_spark.index.builder import _postings_arrow_schema, build_index
 from pg_textsearch_spark.index.codec import compress_block
 from pg_textsearch_spark.index.deletes import delete_docs
 from pg_textsearch_spark.operators import kernel
@@ -63,8 +64,9 @@ def _kernel(idx, query, k):
         pruned = idx.pruned_postings(list(weights)).select("term", "run", "blocks")
         wmap = {t: idf * qf for t, (idf, qf) in weights.items()}
         floor = _bootstrap_floor(pruned, wmap, k, idx.k1, idx.b, idx.avgdl)
-        rows = [(r["term"], r["blocks"]) for r in pruned.collect()]
-        entries = decode_rows(rows, [(floor, weights)], idx.k1, idx.b, idx.avgdl)
+        entries = decode_rows(
+            pruned.toArrow(), [(floor, weights)], idx.k1, idx.b, idx.avgdl
+        )
         runs.append(_rows(*score_topk(
             [(*weights[t], e) for t, e in entries.items()], *args
         )))
@@ -219,19 +221,33 @@ def test_every_path_with_floor_rule_forced(spark, tmp_path, monkeypatch):
 
 
 def _random_blocks(rng, n, span):
-    """One term's posting rows as the index stores them: encoded
-    128-posting blocks with their block_max_tf / block_max_norm."""
+    """One term's posting row as the index stores it: encoded
+    128-posting blocks with their block metadata."""
     ids = np.sort(rng.choice(span, n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 6, n).astype(np.uint32)
     fns = rng.integers(0, 60, n).astype(np.uint8)
     return [
         {
-            "payload": compress_block(ids[i:i + 128], tfs[i:i + 128], fns[i:i + 128]),
+            "last_doc_id": int(ids[i:i + 128][-1]),
+            "doc_count": len(ids[i:i + 128]),
             "block_max_tf": int(tfs[i:i + 128].max()),
             "block_max_norm": int(fns[i:i + 128].min()),
+            "payload": compress_block(ids[i:i + 128], tfs[i:i + 128], fns[i:i + 128]),
         }
         for i in range(0, n, 128)
     ]
+
+
+def _table(rows):
+    """(term, blocks) rows as the Arrow table ``decode_rows`` reads,
+    blocks typed as the postings table stores them."""
+    return pa.table({
+        "term": pa.array([t for t, _ in rows], pa.string()),
+        "blocks": pa.array(
+            [bl for _, bl in rows],
+            _postings_arrow_schema().field("blocks").type,
+        ),
+    })
 
 
 @pytest.mark.parametrize("seed", range(5))
@@ -245,16 +261,17 @@ def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
     k1, b, avgdl = 1.2, 0.75, 17.0
     for _ in range(40):
         span = int(rng.choice([rng.integers(50, 9000), 1 << 40]))
-        rows = [
-            (f"t{i}", _random_blocks(rng, int(rng.integers(1, min(span, 600))), span))
-            for i in range(int(rng.integers(1, 5)))
-        ]
+        terms = [f"t{i}" for i in range(int(rng.integers(1, 5)))]
+        rows = _table([
+            (t, _random_blocks(rng, int(rng.integers(1, min(span, 600))), span))
+            for t in terms
+        ])
         weights = {
             t: (float(rng.uniform(0.1, 4.0)), int(rng.integers(1, 3)))
-            for t, _ in rows
+            for t in terms
         }
         full = decode_rows(rows)
-        ids = np.concatenate([full[t]["ids"] for t, _ in rows])
+        ids = np.concatenate([full[t]["ids"] for t in terms])
         dead = np.unique(rng.choice(ids, int(rng.integers(0, 30))))
         dead = dead.astype(np.int64) if len(dead) else None
         k = int(rng.integers(1, 40))
@@ -290,7 +307,8 @@ def test_floor_skips_blocks_before_decode(monkeypatch):
     # the floor never reaches the decoder; a query without a floor
     # sharing the term keeps it
     rng = np.random.default_rng(3)
-    rows = [("t0", _random_blocks(rng, 1024, 5000))]
+    blocks = _random_blocks(rng, 1024, 5000)
+    rows = _table([("t0", blocks)])
     weights = {"t0": (1.0, 1)}
     uppers = kernel.block_uppers(decode_rows(rows)["t0"], 1.0, 1, 1.2, 0.75, 9.0)
     floor = float(np.sort(uppers)[-2])
@@ -302,9 +320,9 @@ def test_floor_skips_blocks_before_decode(monkeypatch):
     )
     e = decode_rows(rows, [(floor, weights)], 1.2, 0.75, 9.0)["t0"]
     assert decoded[-1] == len(e["dc"]) == int((uppers >= np.float32(floor)).sum())
-    assert decoded[-1] < len(rows[0][1])
+    assert decoded[-1] < len(blocks)
     decode_rows(rows, [(floor, weights), (-1.0, weights)], 1.2, 0.75, 9.0)
-    assert decoded[-1] == len(rows[0][1])
+    assert decoded[-1] == len(blocks)
 
 
 def test_sparse_doc_ids_every_path(spark, tmp_path):

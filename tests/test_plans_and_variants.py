@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.index.builder import build_index, term_bucket
-from pg_textsearch_spark.operators.topk import BM25Index, topk_exhaustive
+from pg_textsearch_spark.operators.topk import BM25Index, in_list, topk_exhaustive
 from pg_textsearch_spark.plans.explain import (
     assert_broadcast_join,
     assert_partition_filter,
@@ -35,6 +35,26 @@ def test_postings_scan_prunes_bucket_partitions(idx):
     # only the single matching bucket directory is read
     plan = formatted_plan(pruned)
     assert f"bucket#" in plan or str(b) in plan
+
+
+def test_in_list_matches_isin_and_pushes_in(spark, tmp_path):
+    # terms that would break or be rewritten in quoted SQL text: quotes,
+    # backslashes, variable substitution, comment markers, non-ASCII,
+    # the empty string
+    hostile = ["a'b", "c\\d", "${x}", "x\\'y", "--x", "é", "日本", ""]
+    rows = [(t, i) for i, t in enumerate(hostile + ["plain", "x", "'"])]
+    path = str(tmp_path / "terms")
+    spark.createDataFrame(rows, "term string, i int").write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def ids(cond):
+        return sorted(r["i"] for r in df.filter(cond).collect())
+
+    for t in hostile:
+        assert ids(in_list("term", [t])) == ids(F.col("term").isin([t])), t
+    assert ids(in_list("term", hostile)) == list(range(len(hostile)))
+    assert ids(in_list("term", [])) == []
+    assert_pushed_filter(df.filter(in_list("term", hostile)), "In(term")
 
 
 def test_topk_broadcasts_query_weights(idx):
