@@ -5,14 +5,17 @@ disjoint heap ranges and the leader N-way merge them into one segment
 (reference: src/access/build_parallel.c:476-914). ``build_index`` does
 the same with the one segment writer in index/local_commit.py:
 
-- dense doc ids in key order (``_ids_map``, broadcast back onto the
-  documents), or the caller's integer ids;
-- one ``mapInArrow`` job over the documents range-partitioned by doc
-  id: each task runs ``local_commit.write_docs`` (tokenize, encode,
-  write) on its partition into a staging dir outside the committed
-  table tree;
-- the leader merge: the driver merges the staging segments with
-  ``local_commit.merge_local`` into the target segment, commits the
+- one count, which sizes the writers (``writer_count``);
+- one ``mapInArrow`` job over the documents range-partitioned by key
+  (or by the caller's integer doc id): each task runs
+  ``local_commit.write_rows`` (tokenize, encode, write) on its
+  partition into a staging dir outside the committed table tree. A
+  keyed writer numbers its docs 0..n_p-1 in key order, as the
+  reference's workers number theirs segment-locally in CTID order;
+- the leader merge: the driver turns the writers' doc counts into id
+  offsets in partition order, merges the staging segments with
+  ``local_commit.merge_local`` (which adds the offsets, so ids are
+  dense 0..n-1 in key order) into the target segment, commits the
   manifest once, then removes the staging dir.
 
 Logical schema (SURVEY.md §1.5):
@@ -46,8 +49,7 @@ import shutil
 import time
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pg_textsearch_spark import native
 from pg_textsearch_spark.functions import bm25
@@ -69,8 +71,7 @@ DEFAULT_N_BUCKETS = 16
 #: its partition's texts, postings and encoded blocks at once. On the
 #: 1M-doc test_msmarco_sweep corpus (8 tasks of ~125k docs, 4 at a
 #: time) the Python workers peaked at 2.3-2.4 GB together, ~600 MB per
-#: task. A build runs max(defaultParallelism, ceil(docs / WRITER_DOCS))
-#: writer tasks.
+#: task. A build runs ``writer_count`` writer tasks.
 WRITER_DOCS = 1 << 17
 
 #: the writers' staging dir under the index dir, outside the committed
@@ -437,49 +438,6 @@ def _postings_arrow(batches, codec: str = "bitpack"):
     yield emit(pa.RecordBatch.from_arrays(arrays, names=names))
 
 
-def _ids_map(
-    df: DataFrame,
-    key_col: str,
-    out_col: str = "doc_id",
-    persisted: list | None = None,
-) -> tuple[DataFrame, int]:
-    """(key -> dense doc_id) map + key count: ids 0..n-1 in ``key_col``
-    order, the reference's docmap rule (CTID order == doc_id order,
-    reference: docmap.c:172-181). Keys must be unique and ``df``
-    deterministic under re-evaluation.
-
-    Only the KEY COLUMN goes through the range shuffle; the sample
-    pass, the exchange and the within-partition sort never touch the
-    document bodies. No single-partition global window: ids come from
-    per-partition row_number plus partition offsets (one tiny
-    collect). The ranged key table is persisted and appended to
-    ``persisted`` for the caller to unpersist.
-    """
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    keys = df.select(key_col)  # column-pruned: the scan reads only keys
-    ranged = keys.repartitionByRange(n_parts, F.col(key_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    ranged = ranged.persist()
-    if persisted is not None:
-        persisted.append(ranged)
-    counts = {r["_pid"]: r["cnt"] for r in
-              ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in range(max(counts) + 1 if counts else 0):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    ids = (
-        ranged.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, F.row_number().over(w) + F.col("_offset") - 1)
-        .drop("_pid", "_offset")
-    )
-    return ids, sum(counts.values())
-
-
 class IndexWriter:
     """Maintains the manifest (the 'metapage'); ``store`` (a
     ``SegmentStore``, index/storage.py) drops segment files."""
@@ -543,13 +501,11 @@ class IndexWriter:
         return manifest
 
 
-def id_rows(docs: DataFrame, doc_id_col: str, text_col: str):
-    """(``_id``, ``_text``) rows of caller-supplied integer ids + count."""
-    rows = docs.select(
-        F.col(doc_id_col).cast("long").alias("_id"),
-        F.col(text_col).cast("string").alias("_text"),
-    )
-    return rows, rows.count()
+def writer_count(n_docs: int, slots: int) -> int:
+    """Writer tasks of an ``n_docs`` build on ``slots`` task slots: the
+    fewest whole waves (multiples of ``slots``) whose tasks hold at most
+    WRITER_DOCS docs each."""
+    return max(-(-n_docs // (WRITER_DOCS * slots)), 1) * slots
 
 
 def build_segment(
@@ -565,27 +521,29 @@ def build_segment(
     lineage: dict | None = None,
     codec: str = "bitpack",
 ) -> dict:
-    """Write ``rows`` (``_id``, ``_text`` and optionally ``_key``, a
-    string) as segment ``seg_id`` of the index and commit it.
+    """Write ``rows`` (``local_commit.batch_rows``: ``_key`` and
+    ``_key_str`` when keyed, else the caller's integer ``_id``; plus
+    ``_text``) as segment ``seg_id`` of the index and commit it.
 
     Workers: one ``mapInArrow`` job over ``rows`` range-partitioned by
-    ``_id`` into max(defaultParallelism, ceil(n_docs / WRITER_DOCS))
-    partitions; each non-empty partition p is written by
-    ``local_commit.write_docs`` as staging segment p. A retried task
-    rewrites only its own segment. Leader: ``local_commit.merge_local``
-    merges the staging segments into ``seg_id`` in the driver, then the
-    manifest is committed once. The staging dir is removed on return
-    or failure. A crash before the commit leaves the manifest as it
-    was; the next build reclaims a staging dir a crash left behind.
-    Returns the new manifest.
+    ``_key`` (keyed) or ``_id`` into ``writer_count`` partitions; each
+    non-empty partition p is written by ``local_commit.write_rows`` as
+    staging segment p. A keyed writer numbers its docs 0..n_p-1 in key
+    order (range partitions hold ascending key ranges, NULLs in the
+    first); the driver turns the writers' doc counts into id offsets in
+    partition order. A retried task rewrites only its own segment.
+    Leader: ``local_commit.merge_local`` merges the staging segments
+    into ``seg_id`` in the driver, adding each one's offset to its doc
+    ids, then the manifest is committed once. The staging dir is
+    removed on return or failure. A crash before the commit leaves the
+    manifest as it was; the next build reclaims a staging dir a crash
+    left behind. Returns the new manifest.
     """
     cfg = get_config(config)
     staging = os.path.join(index_dir, STAGING_DIR)
     shutil.rmtree(staging, ignore_errors=True)
     keyed = "_key" in rows.columns
-    n_parts = max(
-        spark.sparkContext.defaultParallelism, -(-n_docs // WRITER_DOCS), 1
-    )
+    n_parts = writer_count(n_docs, spark.sparkContext.defaultParallelism)
 
     def write_partition(batches):
         import pyarrow as pa
@@ -594,21 +552,20 @@ def build_segment(
         parts = [b for b in batches if b.num_rows]
         if not parts:
             return
-        t = pa.Table.from_batches(parts).sort_by("_id")
+        t = pa.Table.from_batches(parts)
+        if not keyed:
+            t = t.sort_by("_id")
         seg = TaskContext.get().partitionId()
-        local_commit.write_docs(
-            staging, seg, t.column("_id").to_numpy(),
-            t.column("_text").to_pylist(), cfg, n_buckets,
-            t.column("_key") if keyed else None, codec,
-        )
-        yield pa.RecordBatch.from_pydict(
-            {"seg_id": pa.array([seg], pa.int32())}
-        )
+        local_commit.write_rows(staging, seg, t, 0, cfg, n_buckets, codec)
+        yield pa.RecordBatch.from_pydict({
+            "seg_id": pa.array([seg], pa.int32()),
+            "n_docs": pa.array([t.num_rows], pa.int64()),
+        })
 
     try:
-        written = (
-            rows.repartitionByRange(n_parts, "_id")
-            .mapInArrow(write_partition, "seg_id int")
+        written = sorted(
+            rows.repartitionByRange(n_parts, "_key" if keyed else "_id")
+            .mapInArrow(write_partition, "seg_id int, n_docs long")
             .collect()
         )
         if not written:
@@ -620,10 +577,14 @@ def build_segment(
                 staging, 0, [], [], cfg, n_buckets,
                 pa.array([], pa.string()) if keyed else None,
             )
-            written = [{"seg_id": 0}]
-        segs = [
-            {"seg_id": r["seg_id"], "has_keymap": keyed} for r in written
-        ]
+            written = [(0, 0)]
+        segs, offset = [], 0
+        for seg, n in written:
+            segs.append({
+                "seg_id": seg, "has_keymap": keyed,
+                "id_offset": offset if keyed else 0,
+            })
+            offset += n
         stats, _, has_keymap = local_commit.merge_local(
             staging, segs, seg_id, n_buckets, None, out_dir=index_dir,
             codec=codec,
@@ -654,45 +615,28 @@ def build_index(
     """One-shot bulk build (reference: tp_build, build.c:1262-1600) of
     segment 0.
 
-    If ``key_col`` is given (e.g. ``url`` for pages tables), dense
-    doc_ids are assigned in key order first AND the doc_id -> key
-    mapping is persisted as the segment's ``keymap`` table (the ctid
-    map analog, reference: segment.c:1270-1288) so results resolve
-    back to source rows; otherwise ``doc_id_col`` must already hold
-    unique integer ids in [0, 2^55) (their numeric order is the
-    tie-break order).
+    If ``key_col`` is given (e.g. ``url`` for pages tables), the writers
+    assign dense doc_ids in key order (``build_segment``), as an insert
+    does, AND the doc_id -> key mapping is persisted as the segment's
+    ``keymap`` table (the ctid map analog, reference:
+    segment.c:1270-1288) so results resolve back to source rows;
+    otherwise ``doc_id_col`` must already hold unique integer ids in
+    [0, 2^55) (their numeric order is the tie-break order).
 
     ``metrics``, when given, receives wall seconds per phase:
-    ``ids_sec`` (doc ids, or the doc count) and ``postings_sec`` (the
-    writer job plus the leader merge and commit).
+    ``ids_sec`` (the doc count that sizes the writers) and
+    ``postings_sec`` (the writer job plus the leader merge and commit).
     """
-    persisted: list = []
-    try:
-        t0 = time.time()
-        if key_col is not None:
-            ids, n_docs = _ids_map(docs, key_col, "_id", persisted)
-            # the narrow (key, doc_id) map is broadcast: the document
-            # bodies stay where they were scanned until the writers'
-            # range exchange
-            rows = docs.select(key_col, text_col).join(
-                F.broadcast(ids), key_col
-            ).select(
-                "_id",
-                F.col(text_col).cast("string").alias("_text"),
-                F.col(key_col).cast("string").alias("_key"),
-            )
-        else:
-            rows, n_docs = id_rows(docs, doc_id_col, text_col)
-        if metrics is not None:
-            metrics["ids_sec"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        manifest = build_segment(
-            spark, rows, n_docs, index_dir, 0, config, n_buckets, k1, b,
-            lineage, codec,
-        )
-        if metrics is not None:
-            metrics["postings_sec"] = round(time.time() - t0, 3)
-        return manifest
-    finally:
-        for h in persisted:
-            h.unpersist()
+    t0 = time.time()
+    rows = local_commit.batch_rows(docs, text_col, doc_id_col, key_col)
+    n_docs = rows.count()
+    if metrics is not None:
+        metrics["ids_sec"] = round(time.time() - t0, 3)
+    t0 = time.time()
+    manifest = build_segment(
+        spark, rows, n_docs, index_dir, 0, config, n_buckets, k1, b,
+        lineage, codec,
+    )
+    if metrics is not None:
+        metrics["postings_sec"] = round(time.time() - t0, 3)
+    return manifest

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.builder import id_rows, build_segment
+from pg_textsearch_spark.index.builder import build_segment
 
 
 class CheckpointedBuild:
@@ -103,9 +103,9 @@ class CheckpointedBuild:
             batch = docs.filter(
                 (F.col(doc_id_col) >= lo) & (F.col(doc_id_col) < hi)
             )
-            rows, n_docs = id_rows(batch, doc_id_col, text_col)
+            rows = local_commit.batch_rows(batch, text_col, doc_id_col, None)
             manifest = build_segment(
-                self.spark, rows, n_docs, self.index_dir, seg_id, config,
+                self.spark, rows, rows.count(), self.index_dir, seg_id, config,
                 n_buckets,
                 lineage={
                     "batch": seg_id,

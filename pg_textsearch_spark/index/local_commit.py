@@ -8,14 +8,16 @@ disjoint doc ranges and whose leader N-way merges them. Both map onto
 this module. ``write_docs`` tokenizes (``tokenize``), encodes (the
 fieldnorm encoder, the posting kernel ``builder._postings_arrow`` and
 the bucket hash ``term_bucket``) and writes (``write_segment_files``)
-one segment with pyarrow and the package's own numpy/native kernels.
-``insert_batch`` runs it once in the driver; ``build_index``
-(index/builder.py) runs it once per Spark partition into a staging
-dir, then runs ``merge_local`` in the driver to merge the staging
-segments into the committed one. Deletes and segment merges (so
-compaction, force_merge and vacuum) run here in the driver too, with
-a batch block decoder (``codec.decompress_blocks``). Every reader
-(BM25Index, LocalIndex, ServePool) serves the segments unchanged.
+one segment with pyarrow and the package's own numpy/native kernels;
+``write_rows`` numbers keyed docs in key order first. ``insert_batch``
+runs it once in the driver; ``build_index`` (index/builder.py) runs it
+once per Spark partition into a staging dir, then runs ``merge_local``
+in the driver to merge the staging segments, each one's doc ids moved
+up by its writer's offset, into the committed one. Deletes and segment
+merges (so compaction, force_merge and vacuum) run here in the driver
+too, with a batch block decoder (``codec.decompress_blocks``). Every
+reader (BM25Index, LocalIndex, ServePool) serves the segments
+unchanged.
 
 A commit is dominated by per-job and per-stage fixed cost, not data
 volume: a 400-doc distributed insert ran 25 Spark jobs. Measured
@@ -274,22 +276,29 @@ def write_segment_files(
 # -- insert ---------------------------------------------------------------
 
 
-def collect_batch(docs, text_col: str, doc_id_col, key_col):
-    """The batch as an arrow table (``_key``/``_key_str``/``_id`` +
-    ``_text``) — the commit's one Spark job."""
+def batch_rows(docs, text_col: str, doc_id_col, key_col):
+    """The rows a commit writes: ``_key``/``_key_str`` (keyed) or
+    ``_id``, plus ``_text`` — what an insert collects and what each
+    build writer receives."""
     from pyspark.sql import functions as F
 
     if key_col is not None:
         cols = [
             F.col(key_col).alias("_key"),
-            # Spark's own cast, so keymap strings match build_index's
-            # for every key type
+            # Spark's own cast, so keymap strings are the same for every
+            # key type on every path
             F.col(key_col).cast("string").alias("_key_str"),
         ]
     else:
         cols = [F.col(doc_id_col).cast("long").alias("_id")]
     cols.append(F.col(text_col).cast("string").alias("_text"))
-    return docs.select(*cols).toArrow()
+    return docs.select(*cols)
+
+
+def collect_batch(docs, text_col: str, doc_id_col, key_col):
+    """The batch (``batch_rows``) as an arrow table — the commit's one
+    Spark job."""
+    return batch_rows(docs, text_col, doc_id_col, key_col).toArrow()
 
 
 def tokenize_batch(texts: list, config):
@@ -352,35 +361,49 @@ def write_docs(
     return write_segment_files(out_dir, seg_id, buckets, doclen, keymap)
 
 
+def write_rows(
+    out_dir: str, seg_id: int, rows, first_id: int, cfg, n_buckets: int,
+    codec: str = "bitpack",
+) -> dict:
+    """Write arrow ``rows`` (``batch_rows``' columns) as segment
+    ``seg_id`` under ``out_dir``; returns ``write_docs``' stats. Keyed
+    rows take dense ids from ``first_id`` in key order by the key's own
+    type (numeric keys numerically), NULL keys first — Spark's ascending
+    orderBy, the reference's docmap rule (CTID order == doc_id order,
+    reference: docmap.c:172-181); other rows keep their ``_id``s."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = None
+    if "_key" in rows.column_names:
+        order = pc.array_sort_indices(
+            rows.column("_key"), order="ascending", null_placement="at_start"
+        )
+        rows = rows.take(order)
+        doc_ids = first_id + np.arange(rows.num_rows, dtype=np.int64)
+        keys = rows.column("_key_str").cast(pa.string())
+    else:
+        doc_ids = rows.column("_id").to_numpy(zero_copy_only=False)
+    return write_docs(
+        out_dir, seg_id, doc_ids, rows.column("_text").to_pylist(), cfg,
+        n_buckets, keys, codec,
+    )
+
+
 def insert_local(
     writer, rows, seg_id: int, next_doc: int, config: str, n_buckets: int,
     k1: float, b: float, lineage: dict,
 ) -> dict:
     """Commit a collected batch (``collect_batch``) as one L0 segment."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     from pg_textsearch_spark.functions.tokenizer import get_config
 
-    keys = None
-    if "_key" in rows.column_names:
-        # dense ids in key order by the key's own type (numeric keys
-        # numerically), NULL keys first — Spark's ascending orderBy
-        order = pc.array_sort_indices(
-            rows.column("_key"), order="ascending", null_placement="at_start"
-        )
-        rows = rows.take(order)
-        doc_ids = next_doc + np.arange(rows.num_rows, dtype=np.int64)
-        keys = rows.column("_key_str").cast(pa.string())
-    else:
-        doc_ids = rows.column("_id").to_numpy(zero_copy_only=False)
-    stats = write_docs(
-        writer.index_dir, seg_id, doc_ids, rows.column("_text").to_pylist(),
-        get_config(config), n_buckets, keys,
+    stats = write_rows(
+        writer.index_dir, seg_id, rows, next_doc, get_config(config),
+        n_buckets,
     )
     return writer.commit_segment(
         seg_id, config, n_buckets, k1, b,
-        has_keymap=keys is not None, lineage=lineage, **stats,
+        has_keymap="_key" in rows.column_names, lineage=lineage, **stats,
     )
 
 
@@ -453,21 +476,45 @@ def merge_local(
 ) -> tuple[dict, int, bool]:
     """Write the merge of ``segs`` (under ``index_dir``) as segment
     ``new_seg_id`` under ``out_dir`` (default ``index_dir``), dropping
-    ``drop_ids``. Returns (stats, quantized tokens of the dropped
-    docs, has_keymap); the caller commits the manifest and reclaims
-    the sources. Postings merge one term bucket at a time (a term's
-    rows all live in its bucket), so the driver never holds more than
-    one bucket's decoded postings."""
+    ``drop_ids``. A source's optional ``id_offset`` is added to its doc
+    ids (a build's staging segments number their docs from 0). Returns
+    (stats, quantized tokens of the dropped docs, has_keymap); the
+    caller commits the manifest and reclaims the sources. Postings
+    merge one term bucket at a time (a term's rows all live in its
+    bucket), so the driver never holds more than one bucket's decoded
+    postings."""
     import pyarrow as pa
 
-    seg_ids = sorted(s["seg_id"] for s in segs)
-    doclen = read_table(index_dir, "doclen", seg_ids)
+    segs = sorted(segs, key=lambda s: s["seg_id"])
+    shift = any(s.get("id_offset") for s in segs)
+
+    def read(table, srcs, columns=None, bucket=None):
+        """(``table`` rows of ``srcs``, each row's id_offset or None
+        when no source has one)"""
+        if not shift:
+            seg_ids = [s["seg_id"] for s in srcs]
+            return read_table(index_dir, table, seg_ids, columns,
+                              bucket=bucket), None
+        parts = [
+            read_table(index_dir, table, [s["seg_id"]], columns,
+                       bucket=bucket)
+            for s in srcs
+        ]
+        off = np.repeat([s.get("id_offset", 0) for s in srcs],
+                        [len(p) for p in parts])
+        return pa.concat_tables(parts), off
+
+    def shifted(t, off):
+        if off is None:
+            return t
+        ids = t.column("doc_id").to_numpy() + off
+        return t.set_column(0, "doc_id", pa.array(ids, pa.int64()))
+
+    doclen = shifted(*read("doclen", segs))
     # a PARTIAL keymap survives a mixed merge (keyed and pre-assigned-id
     # sources): docs without a key resolve to NULL via resolve_keys
-    km_src = [s["seg_id"] for s in segs if s.get("has_keymap")]
-    keymap = (
-        read_table(index_dir, "keymap", sorted(km_src)) if km_src else None
-    )
+    km_src = [s for s in segs if s.get("has_keymap")]
+    keymap = shifted(*read("keymap", km_src)) if km_src else None
     dropping = drop_ids is not None and len(drop_ids) > 0
     dead_tokens = 0
     if dropping:
@@ -482,11 +529,13 @@ def merge_local(
             ))
 
     def buckets():
+        cols = ["term", "blocks"] + (["df_run"] if shift else [])
         for b in range(n_buckets):
-            tids, vocab, ids, tfs, fns = decode_rows(read_table(
-                index_dir, "postings", seg_ids, ["term", "blocks"],
-                bucket=b,
-            ))
+            rows, off = read("postings", segs, cols, bucket=b)
+            tids, vocab, ids, tfs, fns = decode_rows(rows)
+            if off is not None:
+                # decode_rows keeps row order; a row holds df_run postings
+                ids = ids + np.repeat(off, rows.column("df_run").to_numpy())
             if dropping:
                 keep = ~np.isin(ids, drop_ids)
                 tids, ids, tfs, fns = (

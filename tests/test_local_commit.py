@@ -215,11 +215,13 @@ def test_partitioned_build_matches_insert(
     """A build split over several writer tasks == one insert of the same
     docs into an empty index: every 8192-doc run straddles writers, a
     build with more writers than docs leaves a writer empty, and a
-    build of no docs still writes a segment (and a keymap when keyed)."""
+    build of no docs still writes a segment (and a keymap when keyed).
+    A NULL key is a doc like any other: doc 0, as an insert numbers it."""
     monkeypatch.setattr(builder, "WRITER_DOCS", 128)
     texts = _texts(spark)
     if ids == "key_col":
         rows = [(f"https://ex.org/{i % 13}/{i}", t) for i, t in enumerate(texts)]
+        rows[1] = (None, rows[1][1])
         docs = spark.createDataFrame(rows, "k string, text string")
         kw = dict(key_col="k")
     else:
@@ -237,6 +239,49 @@ def test_partitioned_build_matches_insert(
         insert_batch(spark, inserted, df, compact=False, **kw)
         _same_index(built, inserted)
         assert not os.path.exists(os.path.join(built, builder.STAGING_DIR))
+
+
+@pytest.mark.parametrize(
+    "key_type,keys",
+    [
+        # numeric order != string order
+        ("long", [2, 10, 100, 9] + [1000 + 7 * i for i in range(600)]),
+        # UTF-8 byte order: Z < z < é < 日
+        ("string", ["é", "Z", "z", "日", "éa", "日本"]
+         + [f"{'zZé日'[i % 4]}{i}" for i in range(600)]),
+    ],
+)
+def test_keyed_build_key_order_across_writers(
+    spark, tmp_path, monkeypatch, key_type, keys
+):
+    """Writers number their own docs: ids are dense 0..n-1 in Spark's
+    key order across writer partitions, and the build == an insert."""
+    monkeypatch.setattr(builder, "WRITER_DOCS", 128)
+    rng = random.Random(5)
+    keys = list(keys)
+    rng.shuffle(keys)
+    rows = [(k, f"doc {i} alpha beta" * (i % 3)) for i, k in enumerate(keys)]
+    docs = spark.createDataFrame(rows, f"k {key_type}, text string")
+    kw = dict(key_col="k", config="english", n_buckets=4)
+    built, inserted = str(tmp_path / "built"), str(tmp_path / "ins")
+    build_index(spark, docs, built, **kw)
+    insert_batch(spark, inserted, docs, compact=False, **kw)
+    _same_index(built, inserted)
+    want = [str(r["k"]) for r in docs.orderBy("k").collect()]
+    km = sorted(
+        (r["doc_id"], r["doc_key"])
+        for r in spark.read.parquet(os.path.join(built, "keymap")).collect()
+    )
+    assert km == list(enumerate(want))
+
+
+@pytest.mark.parametrize(
+    "n_docs,slots,want", [(20_000, 2, 2), (300_000, 2, 4), (0, 4, 4)]
+)
+def test_writer_count_is_whole_waves(n_docs, slots, want):
+    """Writers fill whole waves of the task slots, each holding at most
+    WRITER_DOCS docs."""
+    assert builder.writer_count(n_docs, slots) == want
 
 
 @pytest.mark.parametrize("bad_id", [1 << 60, -1])
@@ -283,6 +328,22 @@ def test_local_commit_runs_no_spark_jobs(spark, tmp_path):
     idx = BM25Index(spark, d)
     assert len(idx.manifest["segments"]) == 1
     assert idx.num_docs == docs.count() - 3
+
+
+def test_keyed_build_spark_jobs(spark, tmp_path):
+    """A keyed build of an in-memory DataFrame costs its doc count, the
+    range partitioner's sample and the writer job: at most 5 Spark
+    jobs."""
+    docs, _, _ = _docs(spark, "str")
+    sc = spark.sparkContext
+    group = "keyed-build"
+    sc.setJobGroup(group, group)
+    try:
+        build_index(spark, docs, str(tmp_path / "idx"), key_col="k",
+                    config="english", n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_merge_of_empty_buckets(spark, tmp_path):
