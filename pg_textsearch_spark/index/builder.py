@@ -57,6 +57,7 @@ from pg_textsearch_spark.functions.tokenizer import get_config
 from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.blocks import build_blocks
 from pg_textsearch_spark.index.codec import BLOCK_SIZE
+from pg_textsearch_spark.shipping import ensure_shipped
 
 #: docs per run: 2^13 = 8192. Caps any (term, run) posting group at 8192
 #: entries (64 blocks) regardless of term skew — the salting knob from
@@ -539,6 +540,7 @@ def build_segment(
     manifest as it was; the next build reclaims a staging dir a crash
     left behind. Returns the new manifest.
     """
+    ensure_shipped(spark)  # the writers import the package
     cfg = get_config(config)
     staging = os.path.join(index_dir, STAGING_DIR)
     shutil.rmtree(staging, ignore_errors=True)

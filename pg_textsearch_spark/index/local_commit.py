@@ -44,6 +44,7 @@ rename, then (merges) reclaiming the source segments.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -93,6 +94,7 @@ _POSTINGS_STATS_COLS = [
 _TABLES = ("postings", "doclen", "keymap", "dictionary")
 
 
+@functools.cache
 def _schemas():
     import pyarrow as pa
 
@@ -412,19 +414,19 @@ def insert_local(
 
 def read_table(
     index_dir: str, table: str, seg_ids, columns=None, filter=None,
-    bucket: int | None = None,
+    buckets: list[int] | None = None,
 ):
     """Concatenated ``table`` rows of segments ``seg_ids`` (either
-    writer's files; only term bucket ``bucket`` when given), projected
+    writer's files; only term buckets ``buckets`` when given), projected
     to ``columns`` under the canonical schema."""
     import pyarrow.dataset as ds
 
     from pg_textsearch_spark.operators.serve import _parquet_files
 
     schema = _schemas()[table]
-    sub = () if bucket is None else (f"bucket={bucket}",)
+    subs = [()] if buckets is None else [(f"bucket={b}",) for b in buckets]
     files = [
-        f for s in seg_ids
+        f for s in seg_ids for sub in subs
         for f in _parquet_files(
             os.path.join(index_dir, table, f"seg={s}", *sub)
         )
@@ -447,6 +449,46 @@ def read_deleted_ids(index_dir: str) -> np.ndarray:
         path, schema=_schemas()["deletes"], format="parquet"
     ).to_table(columns=["doc_id"])
     return np.unique(t.column("doc_id").to_numpy().astype(np.int64))
+
+
+def read_term_dfs(index_dir: str, manifest: dict, terms) -> dict[str, int]:
+    """term -> live df of ``terms`` under ``manifest``, only terms with
+    df > 0 (reference: bm25.c:46-111 reads the segment dictionaries in
+    the querying backend). A point read: only the terms' bucket dirs of
+    each segment's ``dictionary``, with ``term IN terms`` pushed to the
+    term-sorted row groups; pending deletes subtract ``dead_dfs``."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    terms = sorted(set(terms))
+    if not terms:
+        return {}
+    in_terms = ds.field("term").isin(pa.array(terms, pa.string()))
+    dfs = _sum_by_term(read_table(
+        index_dir, "dictionary", [s["seg_id"] for s in manifest["segments"]],
+        filter=in_terms,
+        buckets=sorted({term_bucket(t, manifest["n_buckets"]) for t in terms}),
+    ), "df")
+    if int(manifest.get("deleted_docs", 0)) and dfs:
+        # dead_dfs is missing only when no dead doc had postings
+        path = os.path.join(index_dir, "dead_dfs")
+        if os.path.isdir(path):
+            dead = ds.dataset(
+                path, schema=_schemas()["dead_dfs"], format="parquet"
+            ).to_table(filter=in_terms)
+            for t, v in _sum_by_term(dead, "dead_df").items():
+                dfs[t] = dfs.get(t, 0) - v
+    return {t: v for t, v in dfs.items() if v > 0}
+
+
+def _sum_by_term(table, col: str) -> dict[str, int]:
+    """term -> sum of ``col`` over ``table``'s rows (a few rows per
+    term: a plain loop beats an Arrow group-by here)."""
+    out: dict[str, int] = {}
+    for t, v in zip(table.column("term").to_pylist(),
+                    table.column(col).to_pylist()):
+        out[t] = out.get(t, 0) + v
+    return out
 
 
 def decode_rows(postings):
@@ -488,16 +530,16 @@ def merge_local(
     segs = sorted(segs, key=lambda s: s["seg_id"])
     shift = any(s.get("id_offset") for s in segs)
 
-    def read(table, srcs, columns=None, bucket=None):
+    def read(table, srcs, columns=None, buckets=None):
         """(``table`` rows of ``srcs``, each row's id_offset or None
         when no source has one)"""
         if not shift:
             seg_ids = [s["seg_id"] for s in srcs]
             return read_table(index_dir, table, seg_ids, columns,
-                              bucket=bucket), None
+                              buckets=buckets), None
         parts = [
             read_table(index_dir, table, [s["seg_id"]], columns,
-                       bucket=bucket)
+                       buckets=buckets)
             for s in srcs
         ]
         off = np.repeat([s.get("id_offset", 0) for s in srcs],
@@ -531,7 +573,7 @@ def merge_local(
     def buckets():
         cols = ["term", "blocks"] + (["df_run"] if shift else [])
         for b in range(n_buckets):
-            rows, off = read("postings", segs, cols, bucket=b)
+            rows, off = read("postings", segs, cols, buckets=[b])
             tids, vocab, ids, tfs, fns = decode_rows(rows)
             if off is not None:
                 # decode_rows keeps row order; a row holds df_run postings

@@ -40,6 +40,7 @@ import time
 import numpy as np
 
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
+from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
 from pg_textsearch_spark.operators.kernel import score_topk
 
@@ -134,7 +135,7 @@ class ServingIndex:
         self._post_cache: dict[str, dict] = {}
         self._post_cache_size = 0
         #: guards the mutable caches — a ServingIndex is shared across
-        #: serving threads (bench concurrent_serve); cache entries
+        #: serving threads (``bmw._serve_overflow``); cache entries
         #: themselves are immutable once inserted, so readers only
         #: need the lock for the dict lookups, never for array access
         self._lock = threading.Lock()
@@ -174,58 +175,19 @@ class ServingIndex:
         return files
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Unified df per term — dictionary parquet read in-process."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+        """Unified df per term (``local_commit.read_term_dfs``, the
+        lookup ``BM25Index`` makes), memoized per stamp."""
         self._check_stamp()
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            got = {t: 0 for t in missing}
-            by_bucket: dict[int, list[str]] = {}
-            for t in missing:
-                by_bucket.setdefault(
-                    term_bucket(t, self.index.n_buckets), []
-                ).append(t)
-            for b, ts in by_bucket.items():
-                for f in self._bucket_files("dictionary", b):
-                    tab = pq.read_table(
-                        f,
-                        columns=["term", "df"],
-                        filters=[("term", "in", ts)],
-                    )
-                    for term, df in zip(
-                        tab["term"].to_pylist(), tab["df"].to_pylist()
-                    ):
-                        got[term] += int(df)
-            # pending-delete correction from the dead_dfs table
-            dead_path = os.path.join(self.index.index_dir, "dead_dfs")
-            if self.index.has_deletes():
-                live = [t for t, v in got.items() if v > 0]
-                if live and os.path.isdir(dead_path):
-                    tab = pq.read_table(
-                        dead_path, filters=[("term", "in", live)]
-                    )
-                    for term, dd in zip(
-                        tab["term"].to_pylist(), tab["dead_df"].to_pylist()
-                    ):
-                        got[term] -= int(dd)
-                elif live:
-                    # legacy fallback (deletes that predate dead_dfs):
-                    # decode the query terms' postings and count dead
-                    # occurrences — same rule BM25Index._term_dfs_uncached
-                    # applies, so serve/bmw ranking parity holds on old
-                    # indexes too
-                    dead = self.dead_ids()
-                    flat = self.posting_flat_decoded(live)
-                    for term, d in flat.items():
-                        got[term] -= int(np.isin(d["ids"], dead).sum())
-            with self._lock:
-                self._df_cache.update(got)
-        got_all = {}
         with self._lock:
-            for t in terms:
-                got_all[t] = self._df_cache.get(t, 0)
+            missing = [t for t in terms if t not in self._df_cache]
+        if missing:
+            got = local_commit.read_term_dfs(
+                self.index.index_dir, self.index.manifest, missing
+            )
+            with self._lock:
+                self._df_cache.update({t: got.get(t, 0) for t in missing})
+        with self._lock:
+            got_all = {t: self._df_cache.get(t, 0) for t in terms}
         return {t: v for t, v in got_all.items() if v > 0}
 
     def posting_blocks_flat(self, terms: list[str]) -> dict:
@@ -361,13 +323,7 @@ class ServingIndex:
             if not self.index.has_deletes():
                 dead = np.zeros(0, dtype=np.int64)
             else:
-                import pyarrow.parquet as pq
-
-                path = os.path.join(self.index.index_dir, "deletes")
-                dead = np.unique(
-                    pq.read_table(path, columns=["doc_id"])["doc_id"]
-                    .to_numpy().astype(np.int64)
-                )
+                dead = local_commit.read_deleted_ids(self.index.index_dir)
             self._dead = dead
         return dead if len(dead) else None
 

@@ -14,11 +14,13 @@ reference: test/sql/validation.sql:186-205):
   bootstrapped floor, emits exact f64 totals (reference: bmw.c).
 
 Query lifecycle (SURVEY.md §3.1 Spark equivalent): tokenize the query
-driver-side -> look up df per term over pruned postings (one tiny
-aggregate) -> compute IDF driver-side -> broadcast (term, idf,
-query_freq) -> scan postings with bucket+term pushdown (partition
-pruning plays the dictionary binary search's role) -> score -> ORDER
-BY score DESC, doc_id ASC LIMIT k (TakeOrderedAndProject).
+driver-side -> look up df per term in the driver, a pyarrow point read
+of the terms' dictionary buckets with no Spark job
+(``local_commit.read_term_dfs``, memoized per handle) -> compute IDF
+driver-side -> broadcast (term, idf, query_freq) -> scan postings with
+bucket+term pushdown (partition pruning plays the dictionary binary
+search's role) -> score -> ORDER BY score DESC, doc_id ASC LIMIT k
+(TakeOrderedAndProject).
 """
 
 from __future__ import annotations
@@ -36,10 +38,12 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
+from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import term_bucket
 from pg_textsearch_spark.index.codec import decompress_blocks
 from pg_textsearch_spark.index.storage import ParquetDirStore
 from pg_textsearch_spark.operators.kernel import wants_floor
+from pg_textsearch_spark.shipping import ensure_shipped
 
 
 #: explicit read schemas (incl. partition columns): parquet dirs from
@@ -51,7 +55,6 @@ POSTINGS_READ_SCHEMA = (
     "block_max_norm:int,payload:binary>>, bucket int, seg int"
 )
 DOCLEN_READ_SCHEMA = "doc_id bigint, doc_len bigint, fieldnorm int, seg int"
-DICT_READ_SCHEMA = "term string, df bigint, bucket int, seg int"
 
 
 def in_list(expr: str, values) -> Column:
@@ -80,6 +83,8 @@ class BM25Index:
     """Handle over an on-disk index (manifest + postings + doclen)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        # every read path runs Python UDFs on the workers
+        ensure_shipped(spark)
         self.spark = spark
         self.index_dir = index_dir
         # existence probes route through the store abstraction (not
@@ -96,21 +101,19 @@ class BM25Index:
         self.b: float = self.manifest["b"]
         self.n_buckets: int = self.manifest["n_buckets"]
         # per-handle caches (the reference's per-query fn_extra IDF
-        # cache, query.c:52-158, made per-handle): term -> df results
-        # and the dictionary scan plan. Invalidated whenever the
-        # segment set or delete stats change.
+        # cache, query.c:52-158, made per-handle): term -> df results.
+        # Invalidated whenever the segment set or delete stats change.
         self._df_cache: dict[str, int] = {}
         # bootstrap floors (floor_memo): a floor is a pure function of
         # the segment set, the query weights and k, so a repeated warm
         # query skips the two bootstrap jobs exactly like a repeated
-        # term skips the dictionary job above (same fn_extra-cache
+        # term skips the dictionary read above (same fn_extra-cache
         # analogy, same stamp invalidation)
         self._floor_cache: dict = {}
         self._pruned_cache: dict = {}
         # the sorted dead ids the kernel zeroes (deleted_id_array)
         self._dead_ids: np.ndarray | None = None
         self._cache_stamp = None
-        self._dictionary_df: DataFrame | None = None
         self._postings_df: DataFrame | None = None
 
     def _stamp(self):
@@ -126,28 +129,8 @@ class BM25Index:
             self._floor_cache = {}
             self._pruned_cache = {}
             self._dead_ids = None
-            if self._dictionary_df is not None:
-                # release the pinned cache before dropping the handle —
-                # otherwise repeated invalidations (delete/merge cycles
-                # in a long session) stack dead cached copies in
-                # executor memory
-                self._dictionary_df.unpersist()
-            self._dictionary_df = None
             self._postings_df = None
             self._cache_stamp = s
-
-    def prewarm(self) -> None:
-        """Pin the dictionary in cluster memory and materialize it —
-        subsequent df lookups for uncached terms hit memory instead of
-        parquet (the reference's always-resident segment dictionaries).
-        Idempotent: a second call on an unchanged index reuses the
-        already-cached dictionary instead of stacking a new cache()."""
-        self._check_stamp()
-        if self._dictionary_df is not None:
-            return
-        d = self.dictionary().cache()
-        d.count()
-        self._dictionary_df = d
 
     # -- corpus stats (the metapage read; reference: bm25.c:155-191) ----
     # pending deletes reduce N immediately and total_tokens by the
@@ -176,14 +159,14 @@ class BM25Index:
         return self.spark.read.parquet(path).select("doc_id").distinct()
 
     def deleted_id_array(self) -> np.ndarray:
-        """``deleted_ids`` collected as a sorted int64 array: the dead
-        set the scoring kernel zeroes. Memoized per handle like the df
+        """The ``deletes`` table as a sorted unique int64 array, read
+        in-process (``local_commit.read_deleted_ids``): the dead set
+        the scoring kernel zeroes. Memoized per handle like the df
         cache (the stamp counts deleted docs), so repeated queries under
         pending deletes read the deletes table once."""
         self._check_stamp()
         if self._dead_ids is None:
-            ids = self.deleted_ids().toArrow().column("doc_id")
-            self._dead_ids = np.unique(ids.to_numpy().astype(np.int64))
+            self._dead_ids = local_commit.read_deleted_ids(self.index_dir)
         return self._dead_ids
 
     def has_deletes(self) -> bool:
@@ -305,94 +288,24 @@ class BM25Index:
             *out_cols
         )
 
-    def dictionary(self) -> DataFrame:
-        # stamp check BEFORE serving the cache: a merge/vacuum/insert
-        # since prewarm must invalidate (per-handle-cache invariant)
-        self._check_stamp()
-        if self._dictionary_df is not None:
-            return self._dictionary_df
-        root = os.path.join(self.index_dir, "dictionary")
-        return self.spark.read.schema(DICT_READ_SCHEMA).option(
-            "basePath", root
-        ).parquet(
-            *[os.path.join(root, f"seg={s['seg_id']}") for s in self.manifest["segments"]]
-        )
-
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Unified doc_freq per term across segments (reference:
         bm25.c:46-111), memoized per handle — a repeated or overlapping
-        query skips the dictionary job entirely (the reference's
-        fn_extra IDF cache, query.c:52-158). Misses read the
-        materialized dictionary (one row per term per segment,
-        bucket-pruned) — the binary-search-the-dictionary analog."""
+        query skips the dictionary read entirely (the reference's
+        fn_extra IDF cache, query.c:52-158). Misses are one in-process
+        point read of the dictionary files
+        (``local_commit.read_term_dfs``); no Spark job."""
         self._check_stamp()
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            fetched = self._term_dfs_uncached(missing)
+            fetched = local_commit.read_term_dfs(
+                self.index_dir, self.manifest, missing
+            )
             for t in missing:
                 # cache zero-df results too: absent terms are the
                 # common case for web queries and must not refetch
                 self._df_cache[t] = fetched.get(t, 0)
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
-
-    def _term_dfs_uncached(self, terms: list[str]) -> dict[str, int]:
-        """One collect per table and no shuffle: the dictionary holds
-        one (term, df) row per term per segment, so the matching rows
-        come back as Arrow and sum in the driver. Pending deletes are
-        corrected from the ``dead_dfs`` table that ``delete_docs``
-        materializes (one (term, dead_df) row per term per delete
-        batch), summed the same way — a dictionary-sized lookup, no
-        posting decode at query time. Legacy indexes whose deletes
-        predate the table fall back to decoding the query terms'
-        postings."""
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        # explicit existence probe, not a bare except: only a segment
-        # genuinely missing its dictionary table may fall back to the
-        # postings scan — a transient read failure on a dictionary that
-        # exists must raise, not silently degrade every cache miss
-        has_dict = all(
-            self.store.exists("dictionary", s["seg_id"])
-            for s in self.manifest["segments"]
-        )
-        if has_dict:
-            dfs = _sum_by_term(
-                self.dictionary()
-                .filter(in_list("bucket", buckets))
-                .filter(in_list("term", sorted(set(terms)))),
-                "df",
-            )
-        else:
-            # legacy segments without a dictionary: derive from postings
-            dfs = _sum_by_term(
-                self.pruned_postings(terms)
-                .groupBy("term")
-                .agg(F.sum("df_run").alias("df")),
-                "df",
-            )
-        if self.has_deletes() and dfs:
-            dead_path = os.path.join(self.index_dir, "dead_dfs")
-            if self.store.exists("dead_dfs"):
-                dead = _sum_by_term(
-                    self.spark.read.schema("term string, dead_df bigint")
-                    .parquet(dead_path)
-                    .filter(in_list("term", sorted(dfs))),
-                    "dead_df",
-                )
-            else:
-                # legacy fallback: decode the query terms' postings
-                flat = decode_postings_flat(
-                    self.pruned_postings(list(dfs))
-                ).select("term", "doc_id")
-                dead = _sum_by_term(
-                    flat.join(F.broadcast(self.deleted_ids()), "doc_id")
-                    .groupBy("term")
-                    .agg(F.count("*").alias("dead_df")),
-                    "dead_df",
-                )
-            for t, v in dead.items():
-                dfs[t] = dfs.get(t, 0) - v
-            dfs = {t: v for t, v in dfs.items() if v > 0}
-        return dfs
 
     def query_weights(self, query: str) -> dict[str, tuple[float, int]]:
         """query text -> {term: (idf, query_freq)} — float64 IDF."""
@@ -409,16 +322,6 @@ class BM25Index:
             idf = math.log1p((n - df + 0.5) / (df + 0.5))
             out[term] = (idf, qf)
         return out
-
-
-def _sum_by_term(df: DataFrame, col: str) -> dict[str, int]:
-    """term -> sum of ``col`` over ``df``'s rows, collected as Arrow
-    and summed in the driver."""
-    t = df.select("term", col).toArrow()
-    out: dict[str, int] = {}
-    for term, v in zip(t.column("term").to_pylist(), t.column(col).to_pylist()):
-        out[term] = out.get(term, 0) + int(v)
-    return out
 
 
 _FLAT_SCHEMA = (
@@ -648,9 +551,9 @@ def topk_batch(
     candidates per query come back as Arrow and the driver merges them
     into each query's top k (``_merge_runs``).
 
-    A sweep of uncached terms runs three Spark jobs: the df lookup (one
-    collect of the dictionary rows, summed in the driver) and the
-    scan-and-score job (its shuffle stage and its result stage). Every
+    A sweep of uncached terms runs two Spark jobs: the scan-and-score
+    job's shuffle stage and its result stage. The df lookup reads the
+    dictionary files in the driver (``BM25Index.term_dfs``). Every
     term-list predicate is an ``in_list``, so plan building costs the
     same for 10 terms or 1,000.
 

@@ -7,7 +7,9 @@ harness, notebooks), workers would otherwise fail to unpickle our
 pandas UDFs with ModuleNotFoundError. ``ensure_shipped(spark)`` zips
 the package once per process and registers it with
 ``sparkContext.addPyFile`` — the programmatic equivalent of
---py-files, idempotent per SparkContext.
+--py-files, idempotent per SparkContext. The library calls it where
+work enters it (``builder.build_segment``, ``BM25Index``), so callers
+need not.
 """
 
 from __future__ import annotations
@@ -40,10 +42,11 @@ def build_pyfiles_zip(out_path: str | None = None) -> str:
 
 
 def ensure_shipped(spark) -> None:
-    """Idempotently make the package importable on executors."""
+    """Idempotently make the package importable on executors. A
+    package imported from a zip (``--py-files``) is there already."""
     sc = spark.sparkContext
     key = id(sc)
-    if key in _shipped_ctx_ids:
+    if key in _shipped_ctx_ids or not os.path.isdir(_PKG_DIR):
         return
     zip_path = build_pyfiles_zip()
     sc.addPyFile(zip_path)

@@ -5,6 +5,7 @@ them; stats follow the quantized-correction rule."""
 import pytest
 from pyspark.sql import functions as F
 
+from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.index.deletes import delete_docs, vacuum
 from pg_textsearch_spark.operators.bmw import topk_bmw
@@ -52,8 +53,11 @@ def test_dead_ids_read_once_per_handle(idx, monkeypatch):
         for qid, q in queries.items()
     }
     reads = []
-    real = idx2.deleted_ids
-    monkeypatch.setattr(idx2, "deleted_ids", lambda: reads.append(1) or real())
+    real = local_commit.read_deleted_ids
+    monkeypatch.setattr(
+        local_commit, "read_deleted_ids",
+        lambda d: reads.append(1) or real(d),
+    )
     for _ in range(2):
         rows = topk_batch(idx2, queries, k=5).collect()
         for qid in queries:

@@ -14,7 +14,12 @@ from pg_textsearch_spark.operators.serve import (
     topk_auto,
     topk_serve,
 )
-from pg_textsearch_spark.operators.topk import BM25Index, topk_exhaustive
+from pg_textsearch_spark.operators.topk import (
+    BM25Index,
+    decode_postings_flat,
+    topk_batch,
+    topk_exhaustive,
+)
 
 QUERIES = [
     "spark query table",
@@ -62,10 +67,70 @@ def test_serve_matches_distributed_paths(idx):
         _same_ranking(got, bmw, q)
 
 
-def test_serve_term_dfs_matches_index(idx):
-    sv = ServingIndex(idx)
+def _live_dfs(index, terms):
+    """Oracle: distinct live doc ids per term, decoded from the
+    postings themselves (not from the dictionary or dead_dfs)."""
+    flat = decode_postings_flat(index.pruned_postings(terms))
+    if index.has_deletes():
+        flat = flat.join(index.deleted_ids(), "doc_id", "left_anti")
+    rows = flat.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    return {r["term"]: r["df"] for r in rows.collect()}
+
+
+def test_term_dfs_match_live_postings(idx, spark, tmp_path):
+    """Both handles' df lookup equals the live posting count per term:
+    fresh, after a delete that empties one term, and after vacuum."""
+    import shutil
+
+    from pg_textsearch_spark.index.deletes import delete_docs, vacuum
+
+    d = str(tmp_path / "dfidx")
+    shutil.copytree(idx.index_dir, d)
+    all_dfs = _live_dfs(idx, [t for t, in idx.postings()
+                              .select("term").distinct().collect()])
+    rare = min(all_dfs, key=lambda t: (all_dfs[t], t))
+    terms = ["join", "window", "stream", "spark", rare, "nosuchterm"]
+
+    def check(expect_rare):
+        bi = BM25Index(spark, d)
+        want = _live_dfs(bi, terms)
+        assert (rare in want) == expect_rare
+        assert bi.term_dfs(terms) == want
+        assert ServingIndex(bi).term_dfs(terms) == want
+        return bi
+
+    bi = check(True)
+    flat = decode_postings_flat(bi.pruned_postings([rare, "window"]))
+    victims = sorted(
+        {r["doc_id"] for r in flat.filter(F.col("term") == rare).collect()}
+        | {r["doc_id"] for r in flat.filter(F.col("term") == "window")
+           .orderBy("doc_id").limit(3).collect()}
+    )
+    delete_docs(bi, victims)
+    bi = check(False)
+    vacuum(bi)
+    assert not check(False).has_deletes()
+
+
+def test_df_lookup_and_batch_spark_jobs(idx, spark):
+    """An uncached df lookup runs no Spark job; a topk_batch sweep of
+    uncached terms runs 2: the scan-and-score job's two stages."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn, *args, **kwargs):
+        sc.setJobGroup(group, group)
+        try:
+            fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     terms = ["join", "window", "stream", "nosuchterm"]
-    assert sv.term_dfs(terms) == idx.term_dfs(terms)
+    cold = BM25Index(spark, idx.index_dir)
+    assert jobs("df-lookup-jobs", cold.term_dfs, terms) == 0
+    cold = BM25Index(spark, idx.index_dir)
+    sweep = dict(enumerate(QUERIES))
+    assert jobs("batch-sweep-jobs", topk_batch, cold, sweep, k=10) == 2
 
 
 def test_serve_under_deletes(idx, spark, tmp_path):

@@ -94,3 +94,46 @@ def test_spark_submit_pyfiles_deployment(tmp_path, spark):
     ]
     assert got == want
     shutil.rmtree(out_dir, ignore_errors=True)
+
+
+_LIBRARY_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])  # the checkout, on the driver's path only
+from pg_textsearch_spark.index.builder import build_index
+from pg_textsearch_spark.operators.topk import BM25Index, topk_batch
+from pg_textsearch_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+docs = spark.createDataFrame(
+    [(0, "spark query table"), (1, "window join spark")],
+    "doc_id long, text string",
+)
+build_index(spark, docs, sys.argv[2], config="ascii", n_buckets=2)
+rows = topk_batch(BM25Index(spark, sys.argv[2]), {"q": "spark window"}, k=5)
+print("RESULT:" + json.dumps([r["doc_id"] for r in rows.collect()]))
+spark.stop()
+"""
+
+
+def test_library_ships_itself_to_workers(tmp_path):
+    """A script that imports the package from a checkout on its own
+    sys.path, run from another directory, builds and queries without
+    calling ``ensure_shipped``: the library ships itself to Spark's
+    Python workers, which could not import it otherwise."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "script.py"
+    script.write_text(_LIBRARY_SCRIPT)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, str(tmp_path / "idx")],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT:")]
+    assert line, proc.stdout[-2000:]
+    # doc 1 matches both terms, doc 0 only "spark"
+    assert json.loads(line[0][len("RESULT:"):]) == [1, 0]
