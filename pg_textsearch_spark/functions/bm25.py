@@ -10,59 +10,26 @@ Reference semantics:
   avgdl = total_len / N over *raw* lengths (reference:
   bm25.c:155-191, query.c:863-944, segment/scan.c:392).
 - defaults k1=1.2, b=0.75 (reference: src/constants.h:78-80).
-- index-scan arithmetic is float32 (reference: bmw.c:382-396); the
-  reference's own acceptance tolerance is 1e-3 absolute per rank.
+- the reference's index-scan arithmetic is float32 (reference:
+  bmw.c:382-396), with an acceptance tolerance of 1e-3 absolute per
+  rank; every path here computes in float64 and matches the oracle at
+  4 decimals.
 
-Two implementations, same formula:
-- numpy float32 kernels (reference-parity path, used inside scoring
-  UDFs and the pandas oracle);
-- Spark Column expressions in float64 (oracle-gated SQL-parity path —
-  DuckDB computes in float64, so the gated queries do too).
+The same formula in three forms: Spark Column expressions and an SQL
+string (below; the DuckDB oracle computes in float64 too), and the
+scoring kernel's numpy float64 (``operators.kernel._term_score64``),
+operation-ordered like the Column expression.
 """
 
 from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-import numpy as np
-
 if TYPE_CHECKING:  # pragma: no cover — annotations only
     from pyspark.sql import Column
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
-
-
-# ---------------------------------------------------------------------------
-# numpy float32 kernels (reference parity)
-# ---------------------------------------------------------------------------
-
-
-def idf32(n_docs: int, df) -> np.ndarray:
-    """IDF in float32, vectorized over df."""
-    dfv = np.asarray(df, dtype=np.float32)
-    n = np.float32(n_docs)
-    return np.log1p((n - dfv + np.float32(0.5)) / (dfv + np.float32(0.5))).astype(
-        np.float32
-    )
-
-
-def bm25_term_score32(
-    tf,
-    dl,
-    idf,
-    avgdl: float,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-) -> np.ndarray:
-    """Per-posting BM25 contribution in float32 (no query_freq factor)."""
-    tfv = np.asarray(tf, dtype=np.float32)
-    dlv = np.asarray(dl, dtype=np.float32)
-    idfv = np.asarray(idf, dtype=np.float32)
-    k1f = np.float32(k1)
-    bf = np.float32(b)
-    norm = k1f * (np.float32(1.0) - bf + bf * dlv / np.float32(avgdl))
-    return (idfv * tfv * (k1f + np.float32(1.0)) / (tfv + norm)).astype(np.float32)
 
 
 # ---------------------------------------------------------------------------

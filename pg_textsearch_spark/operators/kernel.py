@@ -1,29 +1,20 @@
-"""The one block-max scoring kernel behind every top-k read path.
+"""The one scoring kernel behind every top-k read path.
 
-``topk_bmw`` (per doc-range run, per scan batch, or once over a
-driver-collected Arrow table), ``topk_batch`` (once per query over a
-run's shared decoded postings) and ``topk_serve`` / ``ServePool`` (over
-the serving cache's flat arrays) all score through ``score_topk``. Each
-hands it, per query term, the term's decoded postings (``ids``,
-``tfs``, ``fns``); the Spark paths decode them with ``decode_rows``,
-which takes the posting rows as Arrow (``term``, ``blocks``), reads
-each block's metadata (``bmt`` block_max_tf, ``bmn`` block_max_norm)
-as whole columns, skips the blocks a pruning floor rules out
-(``keep_blocks``) and hands the kept payloads to one native decode
-call. No block or posting becomes a Python object.
+``topk_bmw`` (per doc-range run or per scan batch), ``topk_batch``
+(once per query over a run's shared decoded postings) and
+``topk_serve`` / ``ServePool`` (over the serving cache's flat arrays)
+all score through ``score_topk``. Each hands it, per query term, the
+term's decoded postings (``ids``, ``tfs``, ``fns``); the Spark paths
+decode them with ``decode_rows``, which takes the posting rows as
+Arrow (``term``, ``blocks``) and hands every block payload to one
+native decode call. No block or posting becomes a Python object.
 
 Contract (reference: bmw.c; results equal exhaustive scoring,
-test/sql/validation.sql:186-205): pruning decisions use float32 block
-bounds only, emitted scores are exact float64 totals with the same
-per-posting operation order as ``topk_exhaustive``'s Column expression,
-and ties break (score DESC, doc_id ASC).
-
-Pruning floors come from the Spark paths' two-phase bootstrap
-(``bmw._bootstrap_floor``, ``bmw._batch_floors``), taken only when
-``wants_floor`` says the query's volume pays for it; ``decode_rows``
-then skips the blocks a floor rules out before decoding them. The
-serving path never takes a floor: its volume is capped far below the
-gate (``serve.SERVE_MAX_POSTINGS``).
+test/sql/validation.sql:186-205): emitted scores are exact float64
+totals with the same per-posting operation order as
+``topk_exhaustive``'s Column expression, and ties break (score DESC,
+doc_id ASC). No path skips blocks yet: the reference's block-max skip
+(bmw.c:1526-1571) belongs inside this kernel's one pass.
 """
 
 from __future__ import annotations
@@ -32,24 +23,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pg_textsearch_spark.functions.bm25 import bm25_term_score32
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.index.codec import decompress_blocks
-
-#: bootstrap a pruning floor only when the query's dictionary-known
-#: posting volume (sum of its terms' dfs) reaches this. Below it the two
-#: extra Spark jobs the bootstrap costs exceed the decode and scoring
-#: work the floor saves: on a 1M-doc index (local[4], 4-vCPU x86) a
-#: cold floor cost 0.25-0.65 s more than none at 0.96M-6.2M postings,
-#: while the blocks it skipped saved at most ~20% of the query.
-#: One rule for topk_bmw and topk_batch.
-BOOTSTRAP_MIN_POSTINGS = 10_000_000
-
-#: relative shave applied when an f32 partial-sum k-th best becomes a
-#: floor: block bounds are f32 while totals are exact f64, and per-term
-#: f32 rounding is ~6e-8 relative per operation — 4e-6 (> 32 f32 ulps)
-#: covers any realistic term count with two orders of magnitude to spare
-FLOOR_GUARD = 4e-6
 
 #: the dense accumulator's bound: ``score_topk`` keys docs by
 #: ``id - lo`` only while the id span is below this many slots per
@@ -59,12 +34,6 @@ FLOOR_GUARD = 4e-6
 DENSE_SPAN = 8
 
 _EMPTY = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
-
-
-def wants_floor(postings: int) -> bool:
-    """The one bootstrap gate: does a query touching ``postings``
-    postings (dictionary dfs) pay for a pruning floor?"""
-    return postings >= BOOTSTRAP_MIN_POSTINGS
 
 
 def _term_score64(tf, dl, idf: float, qf: float, avgdl: float, k1, b):
@@ -78,32 +47,6 @@ def _term_score64(tf, dl, idf: float, qf: float, avgdl: float, k1, b):
     return idf * tfv * (k1 + 1.0) / (tfv + norm) * qf
 
 
-def block_uppers(e: dict, idf: float, qf: float, k1, b, avgdl) -> np.ndarray:
-    """float32 upper bound of each block of a term: BM25 of the block's
-    max tf at its shortest doc, times the term weight."""
-    dl = FIELDNORM_DECODE_TABLE[e["bmn"]]
-    return bm25_term_score32(
-        e["bmt"], dl, np.float32(1.0), avgdl, k1, b
-    ) * np.float32(idf * qf)
-
-
-def keep_blocks(meta: dict, weights: dict, floor: float, k1, b, avgdl) -> dict:
-    """The safe block skip (reference bmw.c:1526-1571 algebra) for one
-    query with floor ``floor``: term -> bool mask over its blocks in
-    ``meta`` (term -> {"bmt", "bmn"}). Block i of term t is dropped
-    when ``upper_i + sum of the other terms' max uppers < floor`` — no
-    doc in it can reach the top k. A doc whose true total reaches the
-    floor keeps every one of its blocks, so it is scored in full."""
-    terms = [t for t in weights if t in meta]
-    uppers = {t: block_uppers(meta[t], *weights[t], k1, b, avgdl) for t in terms}
-    tmax = {t: float(u.max()) for t, u in uppers.items()}
-    smax = sum(tmax.values())
-    return {
-        t: uppers[t] + np.float32(smax - tmax[t]) >= np.float32(floor)
-        for t in terms
-    }
-
-
 def _one_array(col):
     """A table or batch column as one Arrow array: zero-copy unless
     the column spans several chunks."""
@@ -112,78 +55,36 @@ def _one_array(col):
     return col
 
 
-def decode_rows(rows, queries=(), k1=0.0, b=0.0, avgdl=1.0) -> dict:
-    """Posting rows -> term -> flat entry ``{"ids", "tfs", "fns",
-    "bmt", "bmn", "dc"}``.
+def decode_rows(rows) -> dict:
+    """Posting rows -> term -> flat entry ``{"ids", "tfs", "fns"}``.
 
     ``rows``: an Arrow table or record batch with a ``term`` column and
-    the postings ``blocks`` column (list of block structs). Block
-    metadata is read column-wise with ``pc.struct_field``; no block is
-    ever a Python object. A term's rows (one per segment and run)
-    concatenate in row order, and every kept payload goes to ONE
-    ``decompress_blocks`` call, zero-copy when each term's rows are
-    already contiguous.
-
-    ``queries``: [(floor, {term: (idf, qf)}), ...], every query that
-    will score these entries. When any has a floor (> 0), the block
-    skip runs on the metadata BEFORE decoding: a block decodes only if
-    some query keeps it (``keep_blocks``; a query without a floor keeps
-    every block of its terms). Scoring a block another query kept is
-    harmless — its postings are exact contributions."""
+    the postings ``blocks`` column (list of block structs). A term's
+    rows (one per segment and run) concatenate in row order, and every
+    block payload goes to ONE ``decompress_blocks`` call, zero-copy
+    when each term's rows are already contiguous."""
     if rows.num_rows == 0:
         return {}
     blocks = _one_array(rows.column("blocks"))
     terms = pc.dictionary_encode(_one_array(rows.column("term")))
     nblk = pc.list_value_length(blocks).fill_null(0).to_numpy()
-    flat = pc.list_flatten(blocks)
     # term code per block; codes number terms in first-appearance order
     code = np.repeat(terms.indices.to_numpy(), nblk)
-    payload = pc.struct_field(flat, "payload")
-    bmt = pc.struct_field(flat, "block_max_tf").to_numpy()
-    bmn = pc.struct_field(flat, "block_max_norm").to_numpy()
+    payload = pc.struct_field(pc.list_flatten(blocks), "payload")
     if len(code) > 1 and (np.diff(code) < 0).any():
         order = np.argsort(code, kind="stable")
-        code, bmt, bmn = code[order], bmt[order], bmn[order]
+        code = code[order]
         payload = payload.take(pa.array(order))
-    names = terms.dictionary.to_pylist()
-    bounds = np.searchsorted(code, np.arange(len(names) + 1))
-    meta = {
-        names[c]: {"bmt": bmt[lo:hi], "bmn": bmn[lo:hi]}
-        for c, (lo, hi) in enumerate(zip(bounds[:-1], bounds[1:]))
-        if hi > lo
-    }
-    if not meta:
-        return {}
-    if any(floor > 0 for floor, _ in queries):
-        keep = {t: np.zeros(len(m["bmt"]), dtype=bool) for t, m in meta.items()}
-        for floor, w in queries:
-            if floor > 0:
-                for t, m in keep_blocks(meta, w, floor, k1, b, avgdl).items():
-                    keep[t] |= m
-            else:
-                for t in w:
-                    if t in keep:
-                        keep[t][:] = True
-        mask = np.concatenate(list(keep.values()))
-        if not mask.all():
-            payload = payload.filter(pa.array(mask))
-            meta = {
-                t: {c: v[keep[t]] for c, v in m.items()}
-                for t, m in meta.items() if keep[t].any()
-            }
     ids, tfs, fns, counts = decompress_blocks(payload)
-    out: dict = {}
-    bi = pi = 0
-    for term, m in meta.items():
-        bj = bi + len(m["bmt"])
-        dc = counts[bi:bj]
-        pj = pi + int(dc.sum())
-        out[term] = {
-            "ids": ids[pi:pj], "tfs": tfs[pi:pj], "fns": fns[pi:pj],
-            "dc": dc, **m,
-        }
-        bi, pi = bj, pj
-    return out
+    names = terms.dictionary.to_pylist()
+    # block bounds per code, then posting bounds at those blocks
+    bb = np.searchsorted(code, np.arange(len(names) + 1))
+    pb = np.concatenate(([0], np.cumsum(counts)))[bb]
+    return {
+        names[c]: {"ids": ids[lo:hi], "tfs": tfs[lo:hi], "fns": fns[lo:hi]}
+        for c, (lo, hi) in enumerate(zip(pb[:-1], pb[1:]))
+        if bb[c + 1] > bb[c]
+    }
 
 
 def score_topk(postings, k: int, k1, b, avgdl, dead=None):
@@ -191,8 +92,7 @@ def score_topk(postings, k: int, k1, b, avgdl, dead=None):
     ordered (score DESC, doc_id ASC), at most ``k`` long.
 
     ``postings``: [(idf, qf, entry), ...], one per query term, entry as
-    ``decode_rows`` or the serving cache builds it (blocks a floor
-    skipped are already left out). ``dead``: sorted int64 array of
+    ``decode_rows`` or the serving cache builds it. ``dead``: sorted int64 array of
     deleted doc ids, or None.
 
     1. Score every posting with ``_term_score64``.
@@ -248,21 +148,3 @@ def score_topk(postings, k: int, k1, b, avgdl, dead=None):
     cand = np.flatnonzero(totals >= kth) if kth > 0 else np.flatnonzero(totals)
     sel = cand[np.lexsort((cand, -totals[cand]))[:kk]]
     return (sel + lo if uids is None else uids[sel]), totals[sel]
-
-
-def kth_partial_floor(ids: np.ndarray, partials: np.ndarray, k: int) -> float:
-    """Floor from bootstrap partial scores: group the f32 per-(term,
-    doc) partials by doc, take the k-th best per-doc sum, shave it by
-    ``FLOOR_GUARD``. Each per-doc partial sum is a lower bound on that
-    doc's true total (absent terms contribute >= 0), so the k-th best
-    over >= k distinct docs is a safe floor; grouping by doc matters —
-    the raw multiset counts a multi-term doc once per term. -1.0 when
-    fewer than k distinct docs are proven."""
-    if not len(ids):
-        return -1.0
-    uids, inv = np.unique(ids, return_inverse=True)
-    if len(uids) < k:
-        return -1.0
-    sums = np.bincount(inv, weights=partials)
-    kth = float(np.partition(sums, len(sums) - k)[len(sums) - k])
-    return float(np.float32(kth) * (1.0 - FLOOR_GUARD)) if kth > 0 else -1.0

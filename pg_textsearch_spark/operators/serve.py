@@ -13,13 +13,13 @@ shared_buffers-resident-segment analog) that serves repeated query
 terms without touching parquet. Results are identical to ``topk_bmw``
 (same kernel, same tie-break; oracle-gated).
 
-Scale boundary (stated honestly, like SMALL_QUERY_POSTINGS): the
-serving process reads the QUERY TERMS' posting rows only — work is
-O(sum of the query terms' pruned postings), independent of corpus
-size, but a stopword-grade term on a 10^11-doc corpus is GBs of
-postings and belongs on the cluster. ``topk_auto`` dispatches: serve
-locally when the (dictionary-known) pruned volume is under
-``max_postings``, else run the distributed BMW plan. This mirrors the
+Scale boundary: the serving process reads the QUERY TERMS' posting
+rows only — work is O(sum of the query terms' pruned postings),
+independent of corpus size, but a stopword-grade term on a
+10^11-doc corpus is GBs of postings and belongs on the cluster.
+``topk_auto`` is the one place that chooses: serve locally when the
+(dictionary-known) posting volume is at most ``SERVE_MAX_POSTINGS``,
+else run the distributed plan (``bmw.topk_bmw``). This mirrors the
 reference's own architecture — its queries ARE single-process scans
 over local segment files (src/segment/scan.c); here that role is
 played by the driver against shared storage, while Spark remains the
@@ -135,9 +135,10 @@ class ServingIndex:
         self._post_cache: dict[str, dict] = {}
         self._post_cache_size = 0
         #: guards the mutable caches — a ServingIndex is shared across
-        #: serving threads (``bmw._serve_overflow``); cache entries
-        #: themselves are immutable once inserted, so readers only
-        #: need the lock for the dict lookups, never for array access
+        #: serving threads (``topk_auto`` keeps one per handle); cache
+        #: entries themselves are immutable once inserted, so readers
+        #: only need the lock for the dict lookups, never for array
+        #: access
         self._lock = threading.Lock()
 
     def _check_stamp(self) -> None:
@@ -372,10 +373,17 @@ def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = N
 #: volume no longer belongs in one process — dispatch to the cluster.
 #: Scale note: a serving query's memory is its decoded postings plus
 #: the kernel's accumulator, at most 64 B per posting (about 8 MB on a
-#: 1M-doc index; see kernel.score_topk). The bootstrap floor gate
-#: (kernel.BOOTSTRAP_MIN_POSTINGS) sits far above this cap, so serving
-#: never takes a floor
+#: 1M-doc index; see kernel.score_topk). Read by ``topk_auto`` at call
+#: time
 SERVE_MAX_POSTINGS = 2_000_000
+
+#: guards building the ServingIndex ``topk_auto`` keeps on each
+#: BM25Index handle (``index._serving``). On the handle, not in a dict
+#: keyed by id(index): two fresh single-segment indexes share stamp
+#: (0, (0,)), so CPython id reuse could answer from the wrong corpus,
+#: and such a dict would pin every handle (and its decode LRU) in
+#: memory. The ServingIndex invalidates its own caches on a new stamp
+_SERVING_LOCK = threading.Lock()
 
 
 def _pool_worker(index_dir: str, req_q, res_q) -> None:
@@ -653,19 +661,23 @@ def local_topk_df(spark, rows):
     return spark.sql(f"SELECT * FROM VALUES {vals} AS t(rank, doc_id, score)")
 
 
-def topk_auto(index, query: str, k: int = 10,
-              max_postings: int = SERVE_MAX_POSTINGS,
-              _serving: ServingIndex | None = None):
-    """Dispatch: serve driver-side when the dictionary-known pruned
-    volume is bounded, else run the distributed BMW plan. Returns a
-    Spark DataFrame either way (serving rows are lifted via
-    local_topk_df — k rows, JVM-local, near-free to act on)."""
+def topk_auto(index, query: str, k: int = 10):
+    """The one local-or-cluster rule: serve in this process
+    (``topk_serve`` over the handle's ServingIndex, reused across
+    calls) when the query terms' dfs sum to at most
+    ``SERVE_MAX_POSTINGS``, else run the distributed plan
+    (``bmw.topk_bmw``). Returns a Spark DataFrame either way (served
+    rows are lifted via local_topk_df — k rows, JVM-local, near-free
+    to act on)."""
     from pg_textsearch_spark.operators.bmw import topk_bmw
 
-    sv = _serving or ServingIndex(index)
+    with _SERVING_LOCK:
+        if index._serving is None:
+            index._serving = ServingIndex(index)
+        sv = index._serving
     qtf = tokenize_query(query, index.config)
     dfs = sv.term_dfs(list(qtf)) if qtf else {}
-    if sum(dfs.values()) <= max_postings:
+    if sum(dfs.values()) <= SERVE_MAX_POSTINGS:
         rows = topk_serve(index, query, k, _serving=sv)
         return local_topk_df(index.spark, rows)
     return topk_bmw(index, query, k)

@@ -8,10 +8,9 @@ reference: test/sql/validation.sql:186-205):
   with float64 JVM column expressions, groupBy(doc_id).sum, global
   top-k. This is operator Q10 — the semantic ground truth, and the
   path the DuckDB oracle gate runs against.
-- ``topk_bmw`` (operators/bmw.py) and ``topk_batch``: the block-max
-  scoring kernel (operators/kernel.py) per run inside an Arrow UDF —
-  skips posting blocks whose f32 upper bound cannot reach a
-  bootstrapped floor, emits exact f64 totals (reference: bmw.c).
+- ``topk_bmw`` (operators/bmw.py) and ``topk_batch``: the scoring
+  kernel (operators/kernel.py) per run inside an Arrow UDF — decodes
+  each posting block once, emits exact f64 totals (reference: bmw.c).
 
 Query lifecycle (SURVEY.md §3.1 Spark equivalent): tokenize the query
 driver-side -> look up df per term in the driver, a pyarrow point read
@@ -42,7 +41,6 @@ from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import term_bucket
 from pg_textsearch_spark.index.codec import decompress_blocks
 from pg_textsearch_spark.index.storage import ParquetDirStore
-from pg_textsearch_spark.operators.kernel import wants_floor
 from pg_textsearch_spark.shipping import ensure_shipped
 
 
@@ -104,17 +102,13 @@ class BM25Index:
         # cache, query.c:52-158, made per-handle): term -> df results.
         # Invalidated whenever the segment set or delete stats change.
         self._df_cache: dict[str, int] = {}
-        # bootstrap floors (floor_memo): a floor is a pure function of
-        # the segment set, the query weights and k, so a repeated warm
-        # query skips the two bootstrap jobs exactly like a repeated
-        # term skips the dictionary read above (same fn_extra-cache
-        # analogy, same stamp invalidation)
-        self._floor_cache: dict = {}
         self._pruned_cache: dict = {}
         # the sorted dead ids the kernel zeroes (deleted_id_array)
         self._dead_ids: np.ndarray | None = None
         self._cache_stamp = None
         self._postings_df: DataFrame | None = None
+        # serve.topk_auto's in-process reader, built on first use
+        self._serving = None
 
     def _stamp(self):
         return (
@@ -126,7 +120,6 @@ class BM25Index:
         s = self._stamp()
         if s != self._cache_stamp:
             self._df_cache = {}
-            self._floor_cache = {}
             self._pruned_cache = {}
             self._dead_ids = None
             self._postings_df = None
@@ -227,22 +220,6 @@ class BM25Index:
             self._pruned_cache.clear()
         self._pruned_cache[key] = df
         return df
-
-    def floor_memo(self, key, compute, stats: dict | None = None):
-        """Bootstrap floor(s) for ``key`` from the per-handle memo, or
-        ``compute()`` them and remember. Bounded like the plan memo. On
-        a hit ``stats["floor_cache_hit"]`` is set, so a stats dict is
-        never left silently empty by a skipped bootstrap."""
-        self._check_stamp()
-        if key in self._floor_cache:
-            if stats is not None:
-                stats["floor_cache_hit"] = True
-            return self._floor_cache[key]
-        value = compute()
-        if len(self._floor_cache) >= 4096:
-            self._floor_cache.clear()
-        self._floor_cache[key] = value
-        return value
 
     def keymap(self) -> DataFrame | None:
         """(doc_id, doc_key) for key_col-built indexes (the ctid-map
@@ -535,8 +512,6 @@ def topk_batch(
     index: BM25Index,
     queries: dict[str, str] | dict[int, str],
     k: int = 10,
-    prune: bool = True,
-    _floor_stats: dict | None = None,
 ) -> DataFrame:
     """Evaluate MANY queries in one pass: (query_id, rank, doc_id, score).
 
@@ -557,23 +532,13 @@ def topk_batch(
     term-list predicate is an ``in_list``, so plan building costs the
     same for 10 terms or 1,000.
 
-    ``prune`` applies the one floor rule (``kernel.wants_floor``) per
-    query: a query bootstraps a pruning floor only when its terms' dfs
-    sum to ``BOOTSTRAP_MIN_POSTINGS`` or more; ``prune=False`` skips
-    floors. The floors of a batch cost two driver round-trips in total
-    (``bmw._batch_floors``).
-
     Semantics per query are identical to ``topk_exhaustive`` (same
     float64 per-posting math and op order, same (score DESC, doc_id
-    ASC) tie-break); pruning uses float32 metadata bounds only. The
-    result is a driver-local DataFrame: the scoring job has already run
-    when this returns.
+    ASC) tie-break). The result is a driver-local DataFrame: the
+    scoring job has already run when this returns.
     """
     spark = index.spark
-    from pg_textsearch_spark.operators.bmw import (
-        _batch_floors,
-        _score_batch_run,
-    )
+    from pg_textsearch_spark.operators.bmw import _score_batch_run
 
     per_query = {
         str(qid): tokenize_query(qtext, index.config)
@@ -610,40 +575,10 @@ def topk_batch(
     if index.has_deletes():
         dead_bc = spark.sparkContext.broadcast(index.deleted_id_array())
 
-    floors = {qid: -1.0 for qid in qweights}
-    floored = {
-        qid: w for qid, w in qweights.items()
-        if prune and wants_floor(sum(dfs[t] for t in w))
-    }
-    if floored and dead_bc is None:
-        # deletes make partial-sum bounds unsafe (a dead doc could hold
-        # the k-th slot) — skip floors under deletes, like topk_bmw. A
-        # resubmitted query mix reads its floors from the handle's memo
-        # and goes straight to the one scan+score job
-        fkey = (
-            tuple(
-                (qid, tuple(sorted(w.items())))
-                for qid, w in sorted(floored.items())
-            ),
-            int(k),
-        )
-        floors.update(index.floor_memo(
-            fkey,
-            lambda: _batch_floors(
-                pruned, floored, int(k), index.k1, index.b, index.avgdl,
-                stats=_floor_stats,
-            ),
-            _floor_stats,
-        ))
-
     kk = int(k)
     k1, b, avgdl = index.k1, index.b, index.avgdl
     qw_items = [
-        (
-            qid,
-            [(t, float(idf), int(qf)) for t, (idf, qf) in w.items()],
-            floors[qid],
-        )
+        (qid, [(t, float(idf), int(qf)) for t, (idf, qf) in w.items()])
         for qid, w in qweights.items()
     ]
 

@@ -14,18 +14,34 @@ need not.
 
 from __future__ import annotations
 
+import atexit
 import os
+import tempfile
 import zipfile
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _shipped_ctx_ids: set[int] = set()
 
 
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
 def build_pyfiles_zip(out_path: str | None = None) -> str:
-    """Zip the package for --py-files / addPyFile. Returns the path."""
-    out_path = out_path or os.path.join(
-        "/tmp", f"pg_textsearch_spark-{os.getpid()}.zip"
-    )
+    """Zip the package for --py-files / addPyFile. Returns the path.
+
+    Without ``out_path`` the zip goes to the temp dir
+    (``tempfile.gettempdir()``, so ``TMPDIR`` applies) and is removed
+    when the process exits: executors fetch an added file lazily, so it
+    must outlive any SparkContext the process stops."""
+    if out_path is None:
+        out_path = os.path.join(
+            tempfile.gettempdir(), f"pg_textsearch_spark-{os.getpid()}.zip"
+        )
+        atexit.register(_remove, out_path)
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
             if "__pycache__" in root:

@@ -19,24 +19,19 @@ def _build(spark, docs_rows, path, **kw):
 
 
 def _assert_parity(idx, query, k=10):
+    # the distributed plan (a scan-batch plan for one term, the
+    # run-sharded shuffle plan for several) must agree with exhaustive
     exh = topk_exhaustive(idx, query, k).collect()
-    # both physical plans must agree with exhaustive: the default
-    # (small queries take the one-task no-exchange path on these
-    # corpora) AND the run-sharded shuffle plan (forced with
-    # small_query_postings=0 — the cluster-scale head-term plan)
-    for sqp in (None, 0):
-        bmw = topk_bmw(idx, query, k, small_query_postings=sqp).collect()
-        assert len(exh) == len(bmw), (sqp, len(exh), len(bmw))
-        for e, w in zip(exh, bmw):
-            # BMW emits the exact f64 score (f32 only prunes); the two
-            # paths differ only in per-doc summation order -> last-ulp
-            assert abs(e["score"] - w["score"]) <= 1e-9, (sqp, e, w)
-        # doc order must agree where scores are not tied at the boundary
-        e_scores = [round(r["score"], 6) for r in exh]
-        if len(set(e_scores)) == len(e_scores):
-            assert [r["doc_id"] for r in exh] == [
-                r["doc_id"] for r in bmw
-            ], sqp
+    bmw = topk_bmw(idx, query, k).collect()
+    assert len(exh) == len(bmw), (len(exh), len(bmw))
+    for e, w in zip(exh, bmw):
+        # BMW emits the exact f64 score; the two paths differ only in
+        # per-doc summation order -> last-ulp
+        assert abs(e["score"] - w["score"]) <= 1e-9, (e, w)
+    # doc order must agree where scores are not tied at the boundary
+    e_scores = [round(r["score"], 6) for r in exh]
+    if len(set(e_scores)) == len(e_scores):
+        assert [r["doc_id"] for r in exh] == [r["doc_id"] for r in bmw]
 
 
 @pytest.fixture(scope="module")
@@ -111,63 +106,30 @@ def test_testdata_documents_parity(spark, tmp_path_factory):
         _assert_parity(idx, q, k=10)
 
 
-@pytest.mark.parametrize("query,k", [
-    ("w0", 10), ("w0 w3", 10), ("w1 w7 w20", 5), ("w0 w1 w2 w3", 25),
-])
-def test_bootstrap_parity(zipf_index, query, k):
-    # force the two-phase global-threshold bootstrap on a small corpus
-    # and require identical results to exhaustive
-    exh = topk_exhaustive(zipf_index, query, k).collect()
-    bst = topk_bmw(zipf_index, query, k, bootstrap=True).collect()
-    assert len(exh) == len(bst)
-    for e, w in zip(exh, bst):
-        assert abs(e["score"] - w["score"]) <= 1e-3, (e, w)
-
-
-def test_bootstrap_floor_groups_by_doc(spark, tmp_path_factory):
-    # regression (round-1 advice): doc 0 matches BOTH query terms and
-    # spans runs vs doc 8192. A floor taken over ungrouped per-(term,
-    # doc) partials counts doc 0 once per term, exceeds the true 2nd
-    # best document total, and WAND then prunes doc 8192 — k=2 must
-    # return BOTH docs.
-    path = str(tmp_path_factory.mktemp("bstrap") / "idx")
+def test_run_merge_keeps_multi_term_doc(spark, tmp_path_factory):
+    # doc 0 matches BOTH query terms and sits in another run than doc
+    # 8192: the run-sharded plan must merge the two runs' top-ks, and
+    # k=2 must return BOTH docs.
+    path = str(tmp_path_factory.mktemp("runmerge") / "idx")
     idx = _build(
         spark,
         [(0, "alpha beta beta beta"), (8192, "beta")],
         path,
     )
     exh = topk_exhaustive(idx, "alpha beta", k=2).collect()
-    bst = topk_bmw(idx, "alpha beta", k=2, bootstrap=True).collect()
+    got = topk_bmw(idx, "alpha beta", k=2).collect()
     assert len(exh) == 2
-    assert len(bst) == 2, bst
-    assert {r["doc_id"] for r in bst} == {0, 8192}
-    for e, w in zip(exh, bst):
+    assert len(got) == 2, got
+    assert {r["doc_id"] for r in got} == {0, 8192}
+    for e, w in zip(exh, got):
         assert abs(e["score"] - w["score"]) <= 1e-3, (e, w)
-
-
-def test_bootstrap_collect_is_bounded_by_k(spark, tmp_path_factory):
-    # phase 1 must collect O(k * |terms|) scalar rows, not one row per
-    # (term, run): 60 docs spaced one per run -> 60 (term, run) rows in
-    # the index, but k=3 single-term bootstrap may only pull k*1 = 3.
-    path = str(tmp_path_factory.mktemp("manyrun") / "idx")
-    rows = [(i * 8192, f"common word{i}") for i in range(60)]
-    idx = _build(spark, rows, path)
-    stats = {}
-    k = 3
-    bst = topk_bmw(
-        idx, "common", k=k, bootstrap=True, _bootstrap_stats=stats
-    ).collect()
-    exh = topk_exhaustive(idx, "common", k=k).collect()
-    assert stats["phase1_rows"] <= k, stats
-    assert stats["phase2_rows"] <= k, stats
-    assert [r["doc_id"] for r in bst] == [r["doc_id"] for r in exh]
 
 
 @pytest.mark.parametrize("seed", [7, 19])
 def test_randomized_multisegment_delete_parity(spark, tmp_path_factory, seed):
     # randomized end-to-end fuzz: incremental multi-segment index,
     # random zipf-ish docs spanning runs, deletes applied, then every
-    # scoring path (exhaustive / BMW / BMW+bootstrap) must agree
+    # scoring path (exhaustive / BMW) must agree
     from pg_textsearch_spark.index.deletes import delete_docs
     from pg_textsearch_spark.streaming.incremental import insert_batch
 
@@ -193,13 +155,10 @@ def test_randomized_multisegment_delete_parity(spark, tmp_path_factory, seed):
     idx = BM25Index(spark, path)
     for q in ["v0", "v0 v1", "v1 v2 v5", "v0 v0 v3", "v2 v7 v11 v19"]:
         exh = topk_exhaustive(idx, q, 10).collect()
-        for bootstrap in (False, True):
-            bmw = topk_bmw(idx, q, 10, bootstrap=bootstrap).collect()
-            assert [r["doc_id"] for r in exh] == [
-                r["doc_id"] for r in bmw
-            ], (q, bootstrap)
-            for e, w in zip(exh, bmw):
-                assert abs(e["score"] - w["score"]) <= 1e-9, (q, e, w)
+        bmw = topk_bmw(idx, q, 10).collect()
+        assert [r["doc_id"] for r in exh] == [r["doc_id"] for r in bmw], q
+        for e, w in zip(exh, bmw):
+            assert abs(e["score"] - w["score"]) <= 1e-9, (q, e, w)
         assert not ({r["doc_id"] for r in exh} & set(victims))
 
 
@@ -233,8 +192,8 @@ def test_f32_tied_scores_straddling_k_boundary(spark, tmp_path):
 
 
 def test_accumulate_and_wand_kernels_agree(spark, tmp_path):
-    """The block-max scoring kernel, with and without a bootstrap
-    floor, must produce the same ranking as exhaustive scoring:
+    """The scoring kernel must produce the same ranking as exhaustive
+    scoring:
     identical (rank, doc_id) sequences and scores equal to within f64
     summation-order noise (the paths sum identical per-posting f64
     term scores, but in different per-doc term orders — f64 addition
@@ -272,22 +231,18 @@ def test_accumulate_and_wand_kernels_agree(spark, tmp_path):
         acc = [(r["rank"], r["doc_id"], r["score"])
                for r in topk_bmw(idx, q, k=10).collect()]
         same(acc, exh, q)
-        # bootstrap floor composes with the kernel too
-        boot = [(r["rank"], r["doc_id"], r["score"])
-                for r in topk_bmw(idx, q, k=10, bootstrap=True).collect()]
-        same(boot, exh, q)
 
 
 # ---------------- batched multi-query kernel ----------------
 
-def _assert_batch_parity(idx, queries, k=10, **kw):
+def _assert_batch_parity(idx, queries, k=10):
     """topk_batch must equal per-query topk_exhaustive: same docs and
     ranks, scores equal to last-ulp (summation order differs)."""
     import math
 
     from pg_textsearch_spark.operators.topk import topk_batch
 
-    got = topk_batch(idx, queries, k=k, **kw).collect()
+    got = topk_batch(idx, queries, k=k).collect()
     by_q: dict = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -303,39 +258,23 @@ def _assert_batch_parity(idx, queries, k=10, **kw):
             ), (qid, r, e)
 
 
-def test_batch_pruned_parity(zipf_index, monkeypatch):
+def test_batch_pruned_parity(zipf_index):
     # mixed head/tail query set sharing terms across queries — the
-    # shared-decode + per-query-floor kernel must reproduce per-query
-    # exhaustive results exactly, with and without floors
-    from pg_textsearch_spark.operators import kernel
-
+    # shared-decode kernel must reproduce per-query exhaustive results
+    # exactly
     queries = {
         "q0": "w0", "q1": "w0 w3", "q2": "w1 w7 w20",
         "q3": "w0 w0 w5", "q4": "w2 w40 w79", "q5": "w0 w1 w2 w3",
         "q6": "w3 w7", "q7": "w79", "q8": "w5 w20 w40 w7",
     }
-    # the default floor rule: no query here reaches the volume gate
     _assert_batch_parity(zipf_index, queries, k=3)
-    # with the gate at 0 every query bootstraps a floor
-    monkeypatch.setattr(kernel, "BOOTSTRAP_MIN_POSTINGS", 0)
-    stats: dict = {}
-    _assert_batch_parity(zipf_index, queries, k=10, _floor_stats=stats)
-    # the bootstrap actually ran and its collects stayed O(k*|terms|)
-    assert 0 < stats["phase1_rows"]
-    assert 0 < stats["phase2_rows"] <= stats["phase1_rows"]
-    # a resubmitted batch reads its floors from the memo and says so
-    hit: dict = {}
-    _assert_batch_parity(zipf_index, queries, k=10, _floor_stats=hit)
-    assert hit == {"floor_cache_hit": True}
-    # the tightest floor: k=3 skips the most blocks
-    _assert_batch_parity(zipf_index, queries, k=3)
-    _assert_batch_parity(zipf_index, queries, k=10, prune=False)
+    _assert_batch_parity(zipf_index, queries, k=10)
 
 
 def test_batch_multirun_and_deletes(spark, tmp_path_factory):
     # docs spread across runs (8192-doc ranges) so the groupBy(run)
     # shard path really merges per-run candidate sets; then deletes
-    # (floors auto-disabled) must still match exhaustive
+    # must still match exhaustive
     import random
 
     from pg_textsearch_spark.index.deletes import delete_docs
@@ -390,45 +329,17 @@ def test_topk_filtered_doc_key_requires_keymap(zipf_index):
         topk_filtered(zipf_index, "w0", allowed, k=5, on="doc_key")
 
 
-def test_small_query_fallback_when_driver_slots_busy(zipf_index, monkeypatch):
-    """With every driver-side scoring slot held, a small query must
-    return identical results via BOTH overflow paths: the in-process
-    serving kernel and the distributed plan, which a store the serving
-    path cannot read falls back to (``_serve_overflow`` returns None)
-    — see bmw._DRIVER_SCORE_SLOTS / bmw._serve_overflow."""
-    from pg_textsearch_spark.operators import bmw as bmw_mod
-
-    query = topk_exhaustive(zipf_index, "t3 t7", 5).collect()
-    fast = topk_bmw(zipf_index, "t3 t7", 5).collect()
-    # exhaust the slots, then query again under each overflow mode
-    held = 0
-    while bmw_mod._DRIVER_SCORE_SLOTS.acquire(blocking=False):
-        held += 1
-    try:
-        served = topk_bmw(zipf_index, "t3 t7", 5).collect()
-        monkeypatch.setattr(bmw_mod, "_serve_overflow", lambda *a: None)
-        spilled = topk_bmw(zipf_index, "t3 t7", 5).collect()
-        monkeypatch.undo()
-    finally:
-        for _ in range(held):
-            bmw_mod._DRIVER_SCORE_SLOTS.release()
-    assert held >= 1
-    for got in (served, spilled):
-        assert [(r["doc_id"],) for r in got] == [(r["doc_id"],) for r in fast]
-        for a, b in zip(got, query):
-            assert abs(a["score"] - b["score"]) <= 1e-9
-
 def test_serve_overflow_same_stamp_indexes_do_not_alias(
     spark, tmp_path_factory,
 ):
-    """Round-6 verdict bug: the serve-overflow ServingIndex cache was
-    keyed by id(index) with a stamp (deleted_docs, seg_ids) that does
-    NOT identify the index directory — two fresh single-segment
-    indexes share stamp (0, (0,)), so CPython id reuse could serve
-    top-k from the WRONG corpus. The handle now lives on the index
-    object itself; this pins that two same-stamp indexes over
-    different corpora answer from their own postings."""
-    from pg_textsearch_spark.operators import bmw as bmw_mod
+    """Two fresh single-segment indexes share stamp (0, (0,)), which
+    does NOT identify the index directory: a ServingIndex cache keyed
+    by id(index) and stamp could, after CPython id reuse, serve top-k
+    from the WRONG corpus. ``topk_auto`` keeps its ServingIndex on the
+    handle itself; this pins that two same-stamp indexes over
+    different corpora answer from their own postings, each through
+    its own cached ServingIndex."""
+    from pg_textsearch_spark.operators.serve import ServingIndex, topk_auto
 
     base = tmp_path_factory.mktemp("alias")
     idx_a = _build(
@@ -440,21 +351,16 @@ def test_serve_overflow_same_stamp_indexes_do_not_alias(
         str(base / "b"),
     )
     assert idx_a._stamp() == idx_b._stamp()  # the aliasing precondition
-    held = 0
-    while bmw_mod._DRIVER_SCORE_SLOTS.acquire(blocking=False):
-        held += 1
-    try:
-        got_a = topk_bmw(idx_a, "apple", 3).collect()
-        got_b = topk_bmw(idx_b, "banana", 3).collect()
-        # and the cross queries: each corpus lacks the other's term
-        none_a = topk_bmw(idx_a, "banana", 3).collect()
-        none_b = topk_bmw(idx_b, "apple", 3).collect()
-    finally:
-        for _ in range(held):
-            bmw_mod._DRIVER_SCORE_SLOTS.release()
-    assert held >= 1
+    got_a = topk_auto(idx_a, "apple", 3).collect()
+    got_b = topk_auto(idx_b, "banana", 3).collect()
+    # and the cross queries: each corpus lacks the other's term
+    none_a = topk_auto(idx_a, "banana", 3).collect()
+    none_b = topk_auto(idx_b, "apple", 3).collect()
     assert sorted(r["doc_id"] for r in got_a) == [1, 2, 3]
     assert sorted(r["doc_id"] for r in got_b) == [101, 102, 103]
     assert none_a == [] and none_b == []
-    # each handle caches its own ServingIndex; neither sees the other's
-    assert idx_a._serve_overflow[1] is not idx_b._serve_overflow[1]
+    # each handle caches its own ServingIndex over its own handle
+    assert isinstance(idx_a._serving, ServingIndex)
+    assert isinstance(idx_b._serving, ServingIndex)
+    assert idx_a._serving is not idx_b._serving
+    assert idx_a._serving.index is idx_a and idx_b._serving.index is idx_b

@@ -71,8 +71,8 @@ def test_sweep_bmw_sample(idx):
 
 
 def test_sweep_serve_all(idx):
-    """The interactive serving path (vectorized accumulate kernel +
-    in-process bootstrap floor) over ALL 200 golden queries — cheap,
+    """The interactive serving path (the vectorized accumulate
+    kernel) over ALL 200 golden queries — cheap,
     since each answer is milliseconds with no Spark job."""
     from pg_textsearch_spark.operators.serve import ServingIndex, topk_serve
 

@@ -1,9 +1,8 @@
-"""The one block-max scoring kernel (operators/kernel.py) against
+"""The one scoring kernel (operators/kernel.py) against
 ``topk_exhaustive``: the kernel called directly on the serving cache's
-flat arrays and on collected posting rows with a bootstrap floor, on
-the edge cases of its accumulator and its top-k cut; then every read
-path with the floor rule forced on, and every path over sparse
-caller-chosen doc ids."""
+flat arrays and on collected posting rows, on the edge cases of its
+accumulator and its top-k cut; then every read path over ids spread
+across runs, and over sparse caller-chosen doc ids."""
 
 import math
 import shutil
@@ -16,7 +15,7 @@ from pg_textsearch_spark.index.builder import _postings_arrow_schema, build_inde
 from pg_textsearch_spark.index.codec import compress_block
 from pg_textsearch_spark.index.deletes import delete_docs
 from pg_textsearch_spark.operators import kernel
-from pg_textsearch_spark.operators.bmw import _bootstrap_floor, topk_bmw
+from pg_textsearch_spark.operators.bmw import topk_bmw
 from pg_textsearch_spark.operators.kernel import decode_rows, score_topk
 from pg_textsearch_spark.operators.serve import ServingIndex, topk_serve
 from pg_textsearch_spark.operators.topk import (
@@ -49,28 +48,20 @@ def _rows(ids, scores):
 
 
 def _kernel(idx, query, k):
-    """score_topk over the serving cache's arrays and, when the index
-    has no pending deletes, over the query's collected posting rows
-    with the bootstrap floor skipping blocks before they decode."""
+    """score_topk over the serving cache's arrays and over the query's
+    collected posting rows (``decode_rows``)."""
     weights = idx.query_weights(query)
     sv = ServingIndex(idx)
     flat = sv.posting_flat_decoded(list(weights))
     dead = sv.dead_ids()
     args = (k, idx.k1, idx.b, idx.avgdl)
-    runs = [_rows(*score_topk(
-        [(*weights[t], d) for t, d in flat.items()], *args, dead=dead
-    ))]
-    if dead is None and flat:
-        pruned = idx.pruned_postings(list(weights)).select("term", "run", "blocks")
-        wmap = {t: idf * qf for t, (idf, qf) in weights.items()}
-        floor = _bootstrap_floor(pruned, wmap, k, idx.k1, idx.b, idx.avgdl)
-        entries = decode_rows(
-            pruned.toArrow(), [(floor, weights)], idx.k1, idx.b, idx.avgdl
-        )
-        runs.append(_rows(*score_topk(
-            [(*weights[t], e) for t, e in entries.items()], *args
-        )))
-    return runs
+    rows = idx.pruned_postings(list(weights)).select("term", "blocks")
+    return [
+        _rows(*score_topk(
+            [(*weights[t], e) for t, e in entries.items()], *args, dead=dead
+        ))
+        for entries in (flat, decode_rows(rows.toArrow()))
+    ]
 
 
 def _same(got, want, ctx):
@@ -190,9 +181,9 @@ def test_dead_doc_that_would_rank_first(spark, tmp_path):
         _same(served, want, q)
 
 
-def test_every_path_with_floor_rule_forced(spark, tmp_path, monkeypatch):
-    # with the volume gate at 0 every read path bootstraps its floor
-    # by default: serve, bmw and batch must still equal exhaustive
+def test_every_read_path_equals_exhaustive(spark, tmp_path):
+    # docs spread over several runs: serve, bmw and batch must each
+    # equal exhaustive
     import random
 
     rng = random.Random(5)
@@ -201,18 +192,15 @@ def test_every_path_with_floor_rule_forced(spark, tmp_path, monkeypatch):
         (i * 37, " ".join(rng.choices(vocab[: 5 + i % 35], k=rng.randrange(3, 40))))
         for i in range(500)
     ]
-    idx = _build(spark, rows, str(tmp_path / "forced"))
-    monkeypatch.setattr(kernel, "BOOTSTRAP_MIN_POSTINGS", 0)
+    idx = _build(spark, rows, str(tmp_path / "every"))
     queries = {"a": "v0", "b": "v0 v1", "c": "v2 v9 v17", "d": "v1 v1 v4"}
     batch = topk_batch(idx, queries, k=10).collect()
     for qid, q in queries.items():
         want = _exhaustive(idx, q, 10)
         _same_up_to_ulp_ties(topk_serve(idx, q, 10), want, ("serve", q))
-        stats: dict = {}
         got = [(r["rank"], r["doc_id"], r["score"])
-               for r in topk_bmw(idx, q, 10, _bootstrap_stats=stats).collect()]
+               for r in topk_bmw(idx, q, 10).collect()]
         _same_up_to_ulp_ties(got, want, ("bmw", q))
-        assert stats["phase1_rows"] > 0, stats
         got = sorted(
             (r["rank"], r["doc_id"], r["score"])
             for r in batch if r["query_id"] == qid
@@ -256,7 +244,7 @@ def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
     # unique + bincount(inverse), drop dead docs, rank (score DESC,
     # doc_id ASC). bincount adds in input order in both, so totals
     # must be EQUAL, not just close — over dense and sparse id spans
-    # (both accumulator keys), with and without a safe floor
+    # (both accumulator keys)
     rng = np.random.default_rng(seed)
     k1, b, avgdl = 1.2, 0.75, 17.0
     for _ in range(40):
@@ -289,40 +277,12 @@ def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
         totals = np.bincount(inv, weights=s64)
         order = np.lexsort((uids, -totals))[:k]
         want_ids, want_s = uids[order], totals[order]
-        floors = [-1.0]
-        if len(order) == k:  # a safe floor: just under the true k-th
-            floors.append(float(np.float32(want_s[-1]) * (1 - kernel.FLOOR_GUARD)))
-        for floor in floors:
-            entries = decode_rows(rows, [(floor, weights)], k1, b, avgdl)
-            got_ids, got_s = score_topk(
-                [(*weights[t], e) for t, e in entries.items()],
-                k, k1, b, avgdl, dead=dead,
-            )
-            assert np.array_equal(got_ids, want_ids), floor
-            assert np.array_equal(got_s, want_s), floor
-
-
-def test_floor_skips_blocks_before_decode(monkeypatch):
-    # a block whose upper bound (plus the other terms' best) is under
-    # the floor never reaches the decoder; a query without a floor
-    # sharing the term keeps it
-    rng = np.random.default_rng(3)
-    blocks = _random_blocks(rng, 1024, 5000)
-    rows = _table([("t0", blocks)])
-    weights = {"t0": (1.0, 1)}
-    uppers = kernel.block_uppers(decode_rows(rows)["t0"], 1.0, 1, 1.2, 0.75, 9.0)
-    floor = float(np.sort(uppers)[-2])
-    decoded = []
-    real = kernel.decompress_blocks
-    monkeypatch.setattr(
-        kernel, "decompress_blocks",
-        lambda pays: decoded.append(len(pays)) or real(pays),
-    )
-    e = decode_rows(rows, [(floor, weights)], 1.2, 0.75, 9.0)["t0"]
-    assert decoded[-1] == len(e["dc"]) == int((uppers >= np.float32(floor)).sum())
-    assert decoded[-1] < len(blocks)
-    decode_rows(rows, [(floor, weights), (-1.0, weights)], 1.2, 0.75, 9.0)
-    assert decoded[-1] == len(blocks)
+        got_ids, got_s = score_topk(
+            [(*weights[t], e) for t, e in full.items()],
+            k, k1, b, avgdl, dead=dead,
+        )
+        assert np.array_equal(got_ids, want_ids)
+        assert np.array_equal(got_s, want_s)
 
 
 def test_sparse_doc_ids_every_path(spark, tmp_path):
@@ -354,20 +314,11 @@ def test_sparse_doc_ids_every_path(spark, tmp_path):
             got = [tuple(r) for r in topk_auto(idx, q, 5).collect()]
             _same(got, want, ("auto", q))
             _same(got_pool, want, ("pool", q))
-            for cut in (None, 0):  # driver-side plan, distributed plans
-                got = [(r["rank"], r["doc_id"], r["score"]) for r in
-                       topk_bmw(idx, q, 5, small_query_postings=cut).collect()]
-                _same(got, want, ("bmw", cut, q))
+            got = [(r["rank"], r["doc_id"], r["score"])
+                   for r in topk_bmw(idx, q, 5).collect()]
+            _same(got, want, ("bmw", q))
             got = sorted(
                 (r["rank"], r["doc_id"], r["score"])
                 for r in batch if r["query_id"] == qid
             )
             _same(got, want, ("batch", q))
-
-
-@pytest.mark.parametrize("postings,expected", [
-    (kernel.BOOTSTRAP_MIN_POSTINGS - 1, False),
-    (kernel.BOOTSTRAP_MIN_POSTINGS, True),
-])
-def test_wants_floor_gate(postings, expected):
-    assert kernel.wants_floor(postings) is expected

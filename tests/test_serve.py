@@ -2,6 +2,7 @@
 the distributed BMW/exhaustive paths, df/delete correctness, and the
 latency contract (no Spark job in the hot path)."""
 
+import os
 import time
 
 import pytest
@@ -290,15 +291,93 @@ def test_serve_multi_segment(idx, spark, tmp_path):
         _same_ranking(topk_serve(di, q, k=10, _serving=sv), want, q)
 
 
-def test_topk_auto_dispatch(idx):
-    small = topk_auto(idx, "window", k=5)
-    rows = small.collect()
-    assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
-    # forcing the threshold to 0 routes through the distributed path
-    big = topk_auto(idx, "window", k=5, max_postings=0)
-    assert [
-        (r["rank"], r["doc_id"], round(r["score"], 9)) for r in big.collect()
-    ] == [(r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows]
+def test_topk_auto_dispatch(idx, spark, monkeypatch):
+    """Below the cut ``topk_auto`` serves in process: no Spark job, and
+    a second call on the same handle reads no postings file (the
+    handle keeps its ServingIndex). Above it (the cut monkeypatched to
+    -1) it runs the distributed plan, with the same answer."""
+    import pyarrow.parquet as pq
+
+    from pg_textsearch_spark.operators import serve
+
+    sc = spark.sparkContext
+    handle = BM25Index(spark, idx.index_dir)
+    group = "topk-auto-serve-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        small = topk_auto(handle, "window join", k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    rows = [(r["rank"], r["doc_id"], r["score"]) for r in small.collect()]
+    assert [r[0] for r in rows] == [1, 2, 3, 4, 5]
+
+    read = pq.read_table
+    postings_reads = []
+
+    def counting_read(source, *args, **kwargs):
+        if f"{os.sep}postings{os.sep}" in str(source):
+            postings_reads.append(source)
+        return read(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting_read)
+    again = [tuple(r) for r in topk_auto(handle, "window join", k=5).collect()]
+    assert postings_reads == []
+    assert again == rows
+
+    monkeypatch.setattr(serve, "SERVE_MAX_POSTINGS", -1)
+    big = [tuple(r) for r in topk_auto(handle, "window join", k=5).collect()]
+    want = [tuple(r) for r in topk_bmw(handle, "window join", k=5).collect()]
+    assert big == want
+    _same_ranking(big, rows, "auto above the cut")
+
+
+def test_topk_auto_builds_one_serving_index_under_threads(idx, spark, monkeypatch):
+    """Threads racing ``topk_auto`` on a fresh handle share ONE
+    ServingIndex (built under the lock, never twice) and all get the
+    same answer."""
+    import sys
+    import threading
+
+    from pg_textsearch_spark.operators import serve
+
+    built = []
+
+    class Counted(serve.ServingIndex):
+        def __init__(self, *a, **kw):
+            built.append(1)
+            super().__init__(*a, **kw)
+
+    monkeypatch.setattr(serve, "ServingIndex", Counted)
+    handle = BM25Index(spark, idx.index_dir)
+    n = 8
+    barrier = threading.Barrier(n)
+    results: list = [None] * n
+    errs: list = []
+
+    def run(i):
+        try:
+            barrier.wait(timeout=30)
+            results[i] = [tuple(r) for r in
+                          topk_auto(handle, "window join", k=5).collect()]
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errs.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs[0]
+    assert len(built) == 1
+    assert isinstance(handle._serving, Counted)
+    assert all(r == results[0] for r in results) and len(results[0]) == 5
 
 
 def test_serve_pool_matches_topk_serve_and_routes_sticky(idx):

@@ -137,3 +137,47 @@ def test_library_ships_itself_to_workers(tmp_path):
     assert line, proc.stdout[-2000:]
     # doc 1 matches both terms, doc 0 only "spark"
     assert json.loads(line[0][len("RESULT:"):]) == [1, 0]
+
+
+_ZIP_SCRIPT = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from pg_textsearch_spark import shipping
+
+
+class Context:  # records what ensure_shipped hands to addPyFile
+    def addPyFile(self, path):
+        print("ZIP:" + json.dumps([path, os.path.isfile(path)]))
+
+
+class Session:
+    sparkContext = Context()
+
+
+shipping.ensure_shipped(Session())
+"""
+
+
+def test_shipping_zip_under_tmpdir_removed_at_exit(tmp_path):
+    """``ensure_shipped`` writes its zip under the process's temp dir
+    (``TMPDIR``), and the zip is gone once the process exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "ship.py"
+    script.write_text(_ZIP_SCRIPT)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TMPDIR"] = str(tmp)
+    proc = subprocess.run(
+        [sys.executable, str(script), repo],
+        capture_output=True, text=True, timeout=120, cwd=str(tmp_path),
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("ZIP:")]
+    assert line, proc.stdout[-2000:]
+    path, existed = json.loads(line[0][len("ZIP:"):])
+    assert os.path.dirname(path) == str(tmp), path
+    assert existed
+    assert not os.path.exists(path)
+    assert os.listdir(tmp) == []
