@@ -17,12 +17,14 @@ Reference semantics:
 
 The same formula in three forms: Spark Column expressions and an SQL
 string (below; the DuckDB oracle computes in float64 too), and the
-scoring kernel's numpy float64 (``operators.kernel._term_score64``),
-operation-ordered like the Column expression.
+scoring kernel's numpy float64 (``operators.kernel.impacts``, a term's
+per-posting score before the query-frequency factor), operation-ordered
+like the Column expression. Every Python-side IDF is ``idf`` below.
 """
 
 from __future__ import annotations
 
+import math
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover — annotations only
@@ -30,6 +32,11 @@ if TYPE_CHECKING:  # pragma: no cover — annotations only
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
+
+
+def idf(n_docs: int, df: int) -> float:
+    """float64 IDF, operation-ordered like ``idf_expr``."""
+    return math.log1p((n_docs - df + 0.5) / (df + 0.5))
 
 
 # ---------------------------------------------------------------------------

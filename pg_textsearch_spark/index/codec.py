@@ -250,27 +250,16 @@ def decompress_blocks(payloads):
             np.zeros(0, np.int64), np.zeros(0, np.uint32),
             np.zeros(0, np.uint8), np.zeros(0, np.int64),
         )
-    starts, lens = offs[:-1], offs[1:] - offs[:-1]
-    padded = np.concatenate((data, np.zeros(4, dtype=np.uint8)))
-    first = padded[starts].astype(np.int64)
-    flagged = (first == FLAG_BITPACK).astype(np.int64)
-    hdr = starts + flagged
-    idb = padded[hdr].astype(np.int64)
-    tfb = padded[hdr + 1].astype(np.int64)
-    cnt = padded[hdr + 2].astype(np.int64) + 1
-    need = flagged + 3 + (cnt * idb + 7) // 8 + (cnt * tfb + 7) // 8 + cnt
-    fast = (
-        ((first < 0x80) | (flagged == 1))
-        & (idb >= 1) & (idb <= 57) & (tfb >= 1) & (tfb <= 57)
-        & (lens >= need)
-        & (native.get_lib() is not None)
-    )
-    slow_idx = np.flatnonzero(~fast)
+    scan = native.scan_blocks_native(data, offs)
+    if scan is None:  # no native library: every payload decodes below
+        hdr, counts, fast, n_slow = None, np.zeros(n, np.int64), None, n
+    else:
+        hdr, counts, fast, n_slow = scan
+    slow_idx = np.flatnonzero(~fast) if 0 < n_slow < n else range(n_slow)
     slow = [
-        decompress_block(data[starts[i]: starts[i] + lens[i]].tobytes())
+        decompress_block(data[offs[i]: offs[i + 1]].tobytes())
         for i in slow_idx
     ]
-    counts = cnt.copy()
     for i, part in zip(slow_idx, slow):
         counts[i] = len(part[0])
     out_pos = np.concatenate(([0], np.cumsum(counts)))
@@ -279,8 +268,8 @@ def decompress_blocks(payloads):
     ids = np.empty(total, dtype=np.int64)
     tfs = np.empty(total, dtype=np.uint32)
     fns = np.empty(total, dtype=np.uint8)
-    fi = np.flatnonzero(fast)
-    if len(fi):
+    if n_slow < n:
+        fi = fast if n_slow else slice(None)
         native.decode_blocks_native(data, hdr[fi], out_pos[fi], ids, tfs, fns)
     for i, (pi, pt, pf) in zip(slow_idx, slow):
         o = out_pos[i]

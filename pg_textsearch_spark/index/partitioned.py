@@ -33,7 +33,6 @@ Spark translation (this module):
 from __future__ import annotations
 
 import json
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -175,8 +174,7 @@ def topk_partitioned(
         df = dfs.get(term, 0)
         if df == 0:
             continue
-        idf = math.log1p((n_docs - df + 0.5) / (df + 0.5))
-        rows.append((term, idf, int(qf)))
+        rows.append((term, bm25.idf(n_docs, df), int(qf)))
     if not rows:
         return empty
     wdf = spark.createDataFrame(rows, "term string, idf double, query_freq int")

@@ -194,6 +194,39 @@ static void unpack_stream(const uint8_t *src, int64_t m, int w,
     }
 }
 
+/* Header scan for pgts_decode_blocks over payloads b = 0..n_blocks-1
+   (bytes offs[b]..offs[b+1] of data): hdr[b] is the offset of the
+   3-byte header (after the 0x80 flags byte, if any), cnt[b] its
+   posting count and fast[b] whether pgts_decode_blocks takes it —
+   legacy or flagged bitpack, both bit widths in 1..57, and long enough
+   for its streams. Varint, unknown-flag, wider and truncated payloads
+   get fast 0 (and cnt 0): the caller decodes them in Python. Returns
+   how many payloads got fast 0. */
+int64_t pgts_scan_blocks(const uint8_t *data, const int64_t *offs,
+                         int64_t n_blocks, int64_t *hdr, int64_t *cnt,
+                         uint8_t *fast) {
+    int64_t n_slow = n_blocks;
+    for (int64_t b = 0; b < n_blocks; b++) {
+        const int64_t s = offs[b], len = offs[b + 1] - s;
+        const int flagged = len > 0 && data[s] == 0x80;
+        const int64_t h = s + flagged;
+        hdr[b] = h;
+        cnt[b] = 0;
+        fast[b] = 0;
+        if (len < flagged + 3 || (data[s] >= 0x80 && !flagged))
+            continue;
+        const int64_t idb = data[h], tfb = data[h + 1];
+        const int64_t m = (int64_t)data[h + 2] + 1;
+        if (idb < 1 || idb > 57 || tfb < 1 || tfb > 57
+            || len < flagged + 3 + (m * idb + 7) / 8 + (m * tfb + 7) / 8 + m)
+            continue;
+        cnt[b] = m;
+        fast[b] = 1;
+        n_slow--;
+    }
+    return n_slow;
+}
+
 /* Batch-decode bitpack posting payloads — the inverse of
    pgts_pack_groups + pgts_assemble_payloads. hdr[b] is the offset of
    block b's 3-byte header (id_bits, tf_bits, doc_count-1) in data;
@@ -244,6 +277,14 @@ def _u8p(a: np.ndarray):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8))
 
 
+def _addr(a: np.ndarray, dtype) -> int:
+    """Address of a C-contiguous ``dtype`` array, for ``c_void_p``
+    arguments: no Python frame per call, unlike ``ndarray.ctypes``
+    (the per-query decode path makes several such calls)."""
+    assert a.dtype == dtype and a.flags.c_contiguous
+    return a.__array_interface__["data"][0]
+
+
 def _build_lib():
     """Compile (once per host) and load the helper .so.
 
@@ -290,11 +331,13 @@ def _build_lib():
     lib.pgts_assemble_payloads.restype = None
     lib.pgts_radix_sort.restype = None
     lib.pgts_decode_blocks.restype = None
+    lib.pgts_scan_blocks.restype = ctypes.c_int64
     i64p = ctypes.POINTER(ctypes.c_int64)
     u8p = ctypes.POINTER(ctypes.c_uint8)
+    vp = ctypes.c_void_p
+    lib.pgts_scan_blocks.argtypes = [vp, vp, ctypes.c_int64, vp, vp, vp]
     lib.pgts_decode_blocks.argtypes = [
-        u8p, i64p, i64p, ctypes.c_int64, i64p,
-        ctypes.POINTER(ctypes.c_uint32), u8p,
+        vp, vp, vp, ctypes.c_int64, vp, vp, vp,
     ]
     return lib
 
@@ -408,6 +451,28 @@ def assemble_payloads_native(
     return buf
 
 
+def scan_blocks_native(data: np.ndarray, offs: np.ndarray):
+    """Native header scan of the payloads at ``offs`` (len n+1) in
+    ``data`` -> (hdr int64, cnt int64, fast bool, n_slow), as
+    ``codec.decompress_blocks`` needs them for
+    ``decode_blocks_native``, ``n_slow`` the payloads it must decode in
+    Python; None when the native path is off."""
+    lib = get_lib()
+    if lib is None:
+        return None
+    n = len(offs) - 1
+    hdr = np.empty(n, dtype=np.int64)
+    cnt = np.empty(n, dtype=np.int64)
+    fast = np.empty(n, dtype=np.uint8)
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    offs = np.ascontiguousarray(offs, dtype=np.int64)
+    n_slow = lib.pgts_scan_blocks(
+        _addr(data, np.uint8), _addr(offs, np.int64), n,
+        _addr(hdr, np.int64), _addr(cnt, np.int64), _addr(fast, np.uint8),
+    )
+    return hdr, cnt, fast.view(bool), n_slow
+
+
 def decode_blocks_native(
     data: np.ndarray, hdr: np.ndarray, out_pos: np.ndarray,
     ids: np.ndarray, tfs: np.ndarray, fns: np.ndarray,
@@ -424,13 +489,12 @@ def decode_blocks_native(
         and len(ids) == len(tfs) == len(fns) and len(hdr) == len(out_pos)
     ):
         raise ValueError("decode_blocks_native: mismatched output arrays")
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    hdr = np.ascontiguousarray(hdr, dtype=np.int64)
+    out_pos = np.ascontiguousarray(out_pos, dtype=np.int64)
     lib.pgts_decode_blocks(
-        _u8p(np.ascontiguousarray(data, dtype=np.uint8)),
-        _i64p(np.ascontiguousarray(hdr, dtype=np.int64)),
-        _i64p(np.ascontiguousarray(out_pos, dtype=np.int64)),
-        ctypes.c_int64(len(hdr)),
-        _i64p(ids),
-        tfs.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        _u8p(fns),
+        _addr(data, np.uint8), _addr(hdr, np.int64),
+        _addr(out_pos, np.int64), len(hdr), _addr(ids, np.int64),
+        _addr(tfs, np.uint32), _addr(fns, np.uint8),
     )
     return True

@@ -4,7 +4,9 @@ the per-run scorer behind ``topk_batch``.
 Reference semantics (src/scoring/bmw.c): emit exactly the exhaustive
 top-k. Every plan here scores through the one kernel,
 ``kernel.score_topk``: exact f64 totals accumulated per doc without a
-sort, tie-break (score DESC, doc_id ASC). The reference also skips
+sort, tie-break (score DESC, doc_id ASC). A term's impacts
+(``kernel.impacts``) are computed once per run and shared by every
+query of a batch that names the term. The reference also skips
 posting blocks whose upper bound cannot reach the k-th best score
 (bmw.c:1526-1571), inside its one scoring pass; no plan here prunes,
 since that skip belongs inside the kernel too, not in a Spark job of
@@ -30,12 +32,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pg_textsearch_spark.operators.kernel import decode_rows, score_topk
+from pg_textsearch_spark.operators.kernel import decode_rows, impacts, score_topk
 
 
 def _score_batch_run(
     table: pa.Table,
-    qw_items: list,
+    idfs: dict,
+    qtfs: list,
     k: int,
     k1: float,
     b: float,
@@ -43,23 +46,27 @@ def _score_batch_run(
     dead=None,
 ) -> pa.Table:
     """Multi-QUERY top-k over one run's posting rows (Arrow ``term``,
-    ``blocks``): decode the run's blocks once (``kernel.decode_rows``),
-    then call the scoring kernel (``kernel.score_topk``) once per query
-    over those shared arrays -> Arrow (query_id, doc_id, score).
+    ``blocks``): decode the run's blocks once (``kernel.decode_rows``)
+    and score each term's postings once (``kernel.impacts``), then call
+    the scoring kernel (``kernel.score_topk``) once per query over
+    those shared arrays -> Arrow (query_id, doc_id, score).
 
-    ``qw_items``: [(query_id, [(term, idf, qf), ...]), ...]. Queries
-    share terms (the point of batching), so each block decodes once per
-    run however many queries reference its term. A run spans at most
-    8192 doc ids, so the kernel's accumulator is at most 64 KB per
-    call.
+    ``idfs``: {term: idf}; ``qtfs``: [(query_id, [(term, qf), ...]),
+    ...]. Queries share terms (the point of batching), so each block
+    decodes and each posting is scored once per run however many
+    queries reference its term. A run spans at most 8192 doc ids, so
+    the kernel's accumulator is at most 64 KB per call.
     """
-    entries = decode_rows(table)
+    entries = {
+        t: (e["ids"], impacts(e["tfs"], e["fns"], idfs[t], avgdl, k1, b))
+        for t, e in decode_rows(table).items()
+    }
     out_q, out_d, out_s = [], [], []
-    for qid, wlist in qw_items:
-        present = [(idf, qf, entries[t]) for t, idf, qf in wlist if t in entries]
+    for qid, tqf in qtfs:
+        present = [(qf, *entries[t]) for t, qf in tqf if t in entries]
         if not present:
             continue
-        ids, scores = score_topk(present, k, k1, b, avgdl, dead=dead)
+        ids, scores = score_topk(present, k, dead=dead)
         out_q.extend([qid] * len(ids))
         out_d.append(ids)
         out_s.append(scores)
@@ -112,8 +119,12 @@ def topk_bmw(index, query: str, k: int = 10) -> DataFrame:
     def score_rows(rows):
         dead = dead_bc.value if dead_bc is not None else None
         ids, scores = score_topk(
-            [(*iqmap[t], e) for t, e in decode_rows(rows).items()],
-            kk, k1, b, avgdl, dead=dead,
+            [
+                (iqmap[t][1], e["ids"],
+                 impacts(e["tfs"], e["fns"], iqmap[t][0], avgdl, k1, b))
+                for t, e in decode_rows(rows).items()
+            ],
+            kk, dead=dead,
         )
         return pa.table({
             "doc_id": pa.array(ids, pa.int64()),

@@ -2,26 +2,34 @@
 
 ``topk_bmw`` (per doc-range run or per scan batch), ``topk_batch``
 (once per query over a run's shared decoded postings) and
-``topk_serve`` / ``ServePool`` (over the serving cache's flat arrays)
-all score through ``score_topk``. Each hands it, per query term, the
-term's decoded postings (``ids``, ``tfs``, ``fns``); the Spark paths
-decode them with ``decode_rows``, which takes the posting rows as
-Arrow (``term``, ``blocks``) and hands every block payload to one
-native decode call. No block or posting becomes a Python object.
+``topk_serve`` / ``ServePool`` (over the serving cache) all score
+through ``score_topk``. Each hands it, per query term, the term's
+doc ids and its impacts: the per-posting BM25 score before the
+query-frequency factor (``impacts``). An impact depends only on the
+term and the index state (N, avgdl, df), so each term is scored once
+per state, not once per query: the serving cache keeps impacts per
+index stamp, and the Spark paths compute them once per term per run.
+The Spark paths decode postings with ``decode_rows``, which takes the
+posting rows as Arrow (``term``, ``blocks``) and hands every block
+payload to one native decode call; the serving reader decodes its
+rows with it too. No block or posting becomes a Python object.
 
 Contract (reference: bmw.c; results equal exhaustive scoring,
 test/sql/validation.sql:186-205): emitted scores are exact float64
 totals with the same per-posting operation order as
 ``topk_exhaustive``'s Column expression, and ties break (score DESC,
-doc_id ASC). No path skips blocks yet: the reference's block-max skip
-(bmw.c:1526-1571) belongs inside this kernel's one pass.
+doc_id ASC). No path skips posting blocks yet: the reference's
+block-max skip (bmw.c:1526-1571) belongs inside this kernel's one
+pass. The top-k cut bounds the accumulator by its own block maxima
+and partitions only the slots above that bound.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.index.codec import decompress_blocks
@@ -33,18 +41,38 @@ from pg_textsearch_spark.index.codec import decompress_blocks
 #: than ``np.unique`` up to a span of ~8 ids per posting
 DENSE_SPAN = 8
 
+#: width of the accumulator blocks whose maxima bound the top-k cut
+#: (``score_topk`` step 4); fixed, not a knob
+CUT_BLOCK = 64
+
 _EMPTY = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
+_DL = FIELDNORM_DECODE_TABLE.astype(np.float64)
 
 
-def _term_score64(tf, dl, idf: float, qf: float, avgdl: float, k1, b):
-    """Exact float64 per-posting score, operation-ordered identically
-    to the exhaustive path's Column expression (functions/bm25.py
-    bm25_score_expr) so emitted scores hash-match the oracle:
-    idf * tf * (k1+1) / (tf + k1*((1-b) + b*dl/avgdl)) * query_freq."""
-    tfv = np.asarray(tf, dtype=np.float64)
-    dlv = np.asarray(dl, dtype=np.float64)
-    norm = k1 * ((1.0 - b) + b * dlv / avgdl)
-    return idf * tfv * (k1 + 1.0) / (tfv + norm) * qf
+@functools.lru_cache(maxsize=64)
+def _length_norms(avgdl: float, k1, b) -> np.ndarray:
+    """BM25's length norm ``k1*((1-b) + b*dl/avgdl)`` per fieldnorm
+    code (``dl`` the code's quantized length): one 256-entry table per
+    index state, shared read-only by ``impacts``."""
+    return k1 * ((1.0 - b) + b * _DL / avgdl)
+
+
+def impacts(tfs, fns, idf: float, avgdl: float, k1, b):
+    """A term's exact float64 per-posting scores with query frequency
+    1, operation-ordered identically to the exhaustive path's Column
+    expression (functions/bm25.py bm25_score_expr) so emitted scores
+    hash-match the oracle:
+    idf * tf * (k1+1) / (tf + k1*((1-b) + b*dl/avgdl)).
+    The expression's last factor is the query frequency, so
+    ``impacts(...) * qf`` is the expression bit for bit. The norm is
+    computed once per fieldnorm code and index state, then gathered
+    per posting."""
+    s = idf * tfs  # float64: integer tfs convert exactly
+    s *= k1 + 1.0
+    den = _length_norms(avgdl, k1, b)[fns]
+    den += tfs
+    s /= den
+    return s
 
 
 def _one_array(col):
@@ -66,17 +94,25 @@ def decode_rows(rows) -> dict:
     if rows.num_rows == 0:
         return {}
     blocks = _one_array(rows.column("blocks"))
-    terms = pc.dictionary_encode(_one_array(rows.column("term")))
-    nblk = pc.list_value_length(blocks).fill_null(0).to_numpy()
-    # term code per block; codes number terms in first-appearance order
-    code = np.repeat(terms.indices.to_numpy(), nblk)
-    payload = pc.struct_field(pc.list_flatten(blocks), "payload")
-    if len(code) > 1 and (np.diff(code) < 0).any():
+    # codes number terms in first-appearance order (one per ROW: a
+    # term's rows are one per segment and run, never per block)
+    codes: dict[str, int] = {}
+    row_code = [
+        codes.setdefault(t, len(codes)) for t in rows.column("term").to_pylist()
+    ]
+    names = list(codes)
+    offs = blocks.offsets.to_numpy()
+    payload = blocks.values.field("payload")[int(offs[0]):int(offs[-1])]
+    if len(names) == 1:
+        ids, tfs, fns, _counts = decompress_blocks(payload)
+        return {names[0]: {"ids": ids, "tfs": tfs, "fns": fns}}
+    # term code per block
+    code = np.repeat(row_code, np.diff(offs))
+    if any(a > c for a, c in zip(row_code, row_code[1:])):
         order = np.argsort(code, kind="stable")
         code = code[order]
         payload = payload.take(pa.array(order))
     ids, tfs, fns, counts = decompress_blocks(payload)
-    names = terms.dictionary.to_pylist()
     # block bounds per code, then posting bounds at those blocks
     bb = np.searchsorted(code, np.arange(len(names) + 1))
     pb = np.concatenate(([0], np.cumsum(counts)))[bb]
@@ -87,15 +123,16 @@ def decode_rows(rows) -> dict:
     }
 
 
-def score_topk(postings, k: int, k1, b, avgdl, dead=None):
+def score_topk(postings, k: int, dead=None):
     """Top-k over one query's postings -> (doc_ids int64, scores f64),
     ordered (score DESC, doc_id ASC), at most ``k`` long.
 
-    ``postings``: [(idf, qf, entry), ...], one per query term, entry as
-    ``decode_rows`` or the serving cache builds it. ``dead``: sorted int64 array of
+    ``postings``: [(qf, ids, s), ...], one per query term: its query
+    frequency, doc ids and ``impacts``. ``dead``: sorted int64 array of
     deleted doc ids, or None.
 
-    1. Score every posting with ``_term_score64``.
+    1. Scale each term's impacts by its qf when qf != 1 (``x * 1.0 ==
+       x``, so qf = 1 needs no pass).
     2. Accumulate per doc with ``np.bincount`` over a compact key. When
        the doc-id span is at most ``DENSE_SPAN`` times the posting
        count the key is ``ids - lo`` (a dense array over the span, no
@@ -103,8 +140,13 @@ def score_topk(postings, k: int, k1, b, avgdl, dead=None):
        way bincount adds each doc's contributions in input order, so
        the f64 totals are the same bit for bit.
     3. Zero the dead docs.
-    4. Cut the top k with a partition, keep every doc scoring at least
-       the k-th value (boundary ties), and order those by
+    4. Cut the top k. The k-th largest of the accumulator's
+       ``CUT_BLOCK``-slot block maxima is a lower bound on the k-th
+       largest total (k distinct slots reach it), so only the slots at
+       or above it, found in the blocks whose max reaches it, are
+       partitioned (below ``CUT_BLOCK * k`` slots every nonzero slot
+       is). Every doc scoring at least the k-th value is kept
+       (boundary ties) and those are ordered by
        ``lexsort((ids, -totals))``.
 
     Memory and time grow with the posting count, never with the id
@@ -116,12 +158,10 @@ def score_topk(postings, k: int, k1, b, avgdl, dead=None):
     sparse caller-chosen doc ids takes the sorted key.
     """
     ids_parts, s_parts = [], []
-    for idf, qf, e in postings:
-        if len(e["ids"]):
-            ids_parts.append(e["ids"])
-            s_parts.append(_term_score64(
-                e["tfs"], FIELDNORM_DECODE_TABLE[e["fns"]], idf, qf, avgdl, k1, b
-            ))
+    for qf, ids, s in postings:
+        if len(ids):
+            ids_parts.append(ids)
+            s_parts.append(s if qf == 1 else s * qf)
     if not ids_parts:
         return _EMPTY
     ids = np.concatenate(ids_parts)
@@ -144,7 +184,22 @@ def score_topk(postings, k: int, k1, b, avgdl, dead=None):
     # an id with no posting or a dead doc. Slots are in doc-id order
     n = len(totals)
     kk = min(int(k), n)
-    kth = np.partition(totals, n - kk)[n - kk] if kk > 0 else 0.0
-    cand = np.flatnonzero(totals >= kth) if kth > 0 else np.flatnonzero(totals)
+    if kk <= 0:
+        return _EMPTY
+    bound = 0.0
+    if n >= CUT_BLOCK * kk:
+        bmax = np.maximum.reduceat(totals, np.arange(0, n, CUT_BLOCK))
+        bound = np.partition(bmax, len(bmax) - kk)[len(bmax) - kk]
+    if bound > 0:
+        # only the blocks whose max reaches the bound hold candidates
+        blk = np.flatnonzero(bmax >= bound)
+        slots = (blk[:, None] * CUT_BLOCK + np.arange(CUT_BLOCK)).ravel()
+        slots = slots[slots < n]
+        cand = slots[totals[slots] >= bound]
+    else:
+        cand = np.flatnonzero(totals)
+    if len(cand) > kk:
+        tc = totals[cand]
+        cand = cand[tc >= np.partition(tc, len(tc) - kk)[len(tc) - kk]]
     sel = cand[np.lexsort((cand, -totals[cand]))[:kk]]
     return (sel + lo if uids is None else uids[sel]), totals[sel]

@@ -15,8 +15,6 @@ computed from the input corpus itself (self-contained oracle mode).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -84,7 +82,7 @@ def score_texts(
         df = dfs.get(term, 0)
         if df == 0:
             continue
-        rows.append((term, math.log1p((n_docs - df + 0.5) / (df + 0.5)), int(qf)))
+        rows.append((term, bm25.idf(n_docs, df), int(qf)))
     if not rows:
         return spark.createDataFrame([], f"{id_col} bigint, score double")
     wdf = spark.createDataFrame(rows, "term string, idf double, query_freq int")

@@ -6,12 +6,16 @@ parquet scan stages) on EVERY interactive query — fine for batch and
 concurrent serving, ~50x the reference's warm 5 ms single-query p50.
 This module is the interactive answer: the SAME on-disk index and the
 same scoring kernel (``kernel.score_topk``), executed in the serving
-process — pyarrow bucket-dir + row-group pruned reads, block metadata
-flattened to numpy (no per-(term,run)-row Python), and a
-stamp-invalidated decoded-postings LRU (the
-shared_buffers-resident-segment analog) that serves repeated query
-terms without touching parquet. Results are identical to ``topk_bmw``
-(same kernel, same tie-break; oracle-gated).
+process — pyarrow bucket-dir + row-group pruned reads decoded by the
+Spark paths' decoder (``kernel.decode_rows``), and a stamp-invalidated
+LRU of scored postings (the shared_buffers-resident-segment analog).
+Each entry holds a term's doc ids and its impacts (``kernel.impacts``:
+BM25 per posting with query frequency 1), computed once per index
+stamp from the same stamp's N, avgdl and df, so a repeated query term
+skips the parquet read, the decode and the per-posting formula; a
+query only scales by its query frequencies and accumulates (the
+reference caches IDF per query, query.c:52-158). Results are identical
+to ``topk_bmw`` (same kernel, same tie-break; oracle-gated).
 
 Scale boundary: the serving process reads the QUERY TERMS' posting
 rows only — work is O(sum of the query terms' pruned postings),
@@ -31,7 +35,6 @@ storage, serve from a host that mounts it or stay on the cluster path.
 
 from __future__ import annotations
 
-import math
 import os
 import queue
 import threading
@@ -39,10 +42,11 @@ import time
 
 import numpy as np
 
+from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
-from pg_textsearch_spark.operators.kernel import score_topk
+from pg_textsearch_spark.index.codec import term_bucket
+from pg_textsearch_spark.operators.kernel import decode_rows, impacts, score_topk
 
 
 class LocalIndex:
@@ -125,12 +129,13 @@ class ServingIndex:
         self._df_cache: dict[str, int] = {}
         self._dead: np.ndarray | None = None
         self._stamp = None
-        #: decoded-postings LRU: term -> flat decoded arrays. The
-        #: serving analog of the reference's shared_buffers-resident
-        #: segment pages — repeated/overlapping query terms skip both
-        #: the parquet read and the block decode. Budgeted by TOTAL
-        #: POSTINGS (~20 B each across ids/tfs/fns), stamp-invalidated
-        #: like every other cache here. 0 disables.
+        #: scored-postings LRU: term -> ``{"ids", "s"}``, the term's doc
+        #: ids and impacts under the current stamp. The serving analog
+        #: of the reference's shared_buffers-resident segment pages —
+        #: repeated/overlapping query terms skip the parquet read, the
+        #: block decode and the per-posting score. Budgeted by TOTAL
+        #: POSTINGS (16 B each: int64 id + float64 impact),
+        #: stamp-invalidated like every other cache here. 0 disables.
         self._post_cache_cap = int(cache_postings)
         self._post_cache: dict[str, dict] = {}
         self._post_cache_size = 0
@@ -141,7 +146,8 @@ class ServingIndex:
         #: access
         self._lock = threading.Lock()
 
-    def _check_stamp(self) -> None:
+    def _check_stamp(self):
+        """Drop every cache when the index stamp moved; -> the stamp."""
         s = self.index._stamp()
         if s != self._stamp:
             with self._lock:
@@ -151,6 +157,7 @@ class ServingIndex:
                 self._post_cache = {}
                 self._post_cache_size = 0
                 self._stamp = s
+        return s
 
     def _bucket_files(self, table: str, bucket: int) -> list[str]:
         self._check_stamp()
@@ -178,6 +185,10 @@ class ServingIndex:
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Unified df per term (``local_commit.read_term_dfs``, the
         lookup ``BM25Index`` makes), memoized per stamp."""
+        return {t: v for t, v in self._dfs(terms).items() if v > 0}
+
+    def _dfs(self, terms: list[str]) -> dict[str, int]:
+        """``term_dfs`` with zero-df terms kept."""
         self._check_stamp()
         with self._lock:
             missing = [t for t in terms if t not in self._df_cache]
@@ -188,21 +199,17 @@ class ServingIndex:
             with self._lock:
                 self._df_cache.update({t: got.get(t, 0) for t in missing})
         with self._lock:
-            got_all = {t: self._df_cache.get(t, 0) for t in terms}
-        return {t: v for t, v in got_all.items() if v > 0}
+            return {t: self._df_cache.get(t, 0) for t in terms}
 
-    def posting_blocks_flat(self, terms: list[str]) -> dict:
-        """term -> flat numpy block arrays across ALL posting rows and
-        segments: ``{"bmt", "bmn", "dc": int64 arrays, "pay":
-        list[bytes]}`` — one per posting BLOCK, not per (term, run)
-        row. The per-row path costs ~0.1 ms of Python per row and a
-        1M-doc index splits a head term into ~120 run rows; flattening
-        at the Arrow level makes block-metadata scoring one numpy pass.
-        File reads run in a small thread pool (pyarrow releases the
-        GIL), overlapping row-group IO across buckets/segments."""
+    def posting_blocks_flat(self, terms: list[str]):
+        """The terms' posting rows across every segment as one
+        single-chunk Arrow table (``term``, ``blocks``) in bucket-file
+        order, or None when no file holds a bucket of theirs. File
+        reads run in a small thread pool (pyarrow releases the GIL),
+        overlapping row-group IO across buckets/segments."""
         from concurrent.futures import ThreadPoolExecutor
 
-        import pyarrow.compute as pc
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         by_bucket: dict[int, list[str]] = {}
@@ -216,7 +223,7 @@ class ServingIndex:
             for f in self._bucket_files("postings", b)
         ]
         if not jobs:
-            return {}
+            return None
 
         def read(job):
             f, ts = job
@@ -224,81 +231,54 @@ class ServingIndex:
                 f, columns=["term", "blocks"], filters=[("term", "in", ts)]
             )
 
-        out: dict[str, dict] = {}
         with ThreadPoolExecutor(min(8, len(jobs))) as pool:
             tabs = list(pool.map(read, jobs))
-        for tab in tabs:
-            if tab.num_rows == 0:
-                continue
-            tab = tab.combine_chunks()
-            la = tab.column("blocks").chunk(0)
-            row_terms = tab.column("term").chunk(0).to_pylist()
-            lens = pc.list_value_length(la).to_numpy().astype(np.int64)
-            sa = la.flatten()
-            bmt = sa.field("block_max_tf").to_numpy().astype(np.int64)
-            bmn = sa.field("block_max_norm").to_numpy().astype(np.int64)
-            dc = sa.field("doc_count").to_numpy().astype(np.int64)
-            pay = sa.field("payload").to_pylist()
-            block_row = np.repeat(np.arange(len(row_terms)), lens)
-            # rows of one term are contiguous within a file (written
-            # sorted by term), but be general: mask per distinct term
-            # (vectorized — a Python comparison per row costs ~0.1 ms
-            # per Arrow table once head terms span 100s of rows)
-            row_terms_arr = np.asarray(row_terms, dtype=object)
-            for t in set(row_terms):
-                rmask = row_terms_arr == t
-                bmask = rmask[block_row]
-                if not bmask.any():
-                    continue
-                d = out.setdefault(
-                    t, {"bmt": [], "bmn": [], "dc": [], "pay": []}
-                )
-                d["bmt"].append(bmt[bmask])
-                d["bmn"].append(bmn[bmask])
-                d["dc"].append(dc[bmask])
-                idxs = np.flatnonzero(bmask)
-                d["pay"].extend(pay[i] for i in idxs)
-        for t, d in out.items():
-            d["bmt"] = np.concatenate(d["bmt"])
-            d["bmn"] = np.concatenate(d["bmn"])
-            d["dc"] = np.concatenate(d["dc"])
-        return out
+        return pa.concat_tables(tabs, promote_options="default").combine_chunks()
 
     def posting_flat_decoded(self, terms: list[str]) -> dict:
-        """term -> fully-decoded flat postings + block metadata:
-        ``{"bmt","bmn","dc": per-block int64 arrays, "ids","tfs",
-        "fns": per-posting arrays, "off": block start offsets}`` —
-        decode happens once per term and lives in the LRU (see
-        __init__); scoring is then pure numpy with optional block
-        masks."""
-        self._check_stamp()
+        """term -> ``{"ids": int64 doc ids, "s": float64 impacts}`` for
+        the terms that have postings. A miss reads the rows
+        (``posting_blocks_flat``), decodes them in one call
+        (``kernel.decode_rows``) and scores each term once
+        (``kernel.impacts``) from this stamp's df, N and avgdl; the
+        entry lives in the LRU (see __init__) until the stamp moves."""
+        stamp = self._check_stamp()
         _MISS = object()
         with self._lock:
             got = {t: self._post_cache.get(t, _MISS) for t in terms}
         missing = [t for t, v in got.items() if v is _MISS]
         if missing:
-            # decode OUTSIDE the lock (parquet IO + block decode are
-            # the expensive part; concurrent misses on the same term
-            # duplicate work but stay correct — entries are immutable)
-            flat = self.posting_blocks_flat(missing)
-            fresh: dict[str, dict | None] = {}
-            for t, d in flat.items():
-                ids, tfs, fns, _cnt = decompress_blocks(d["pay"])
-                tfs = tfs.astype(np.int64)
-                fns = fns.astype(np.int64)
-                fresh[t] = {
-                    "bmt": d["bmt"], "bmn": d["bmn"], "dc": d["dc"],
-                    "ids": ids, "tfs": tfs, "fns": fns,
-                    "off": np.concatenate(([0], np.cumsum(d["dc"]))),
+            # read, decode and score OUTSIDE the lock (the expensive
+            # part; concurrent misses on the same term duplicate work
+            # but stay correct — entries are immutable)
+            ix = self.index
+            dfs = self._dfs(missing)
+            n, avgdl = ix.num_docs, ix.avgdl
+            rows = self.posting_blocks_flat(missing)
+            decoded = decode_rows(rows) if rows is not None else {}
+            fresh: dict[str, dict | None] = {
+                t: {
+                    # several terms' ids are views of one decode: copy,
+                    # so an evicted term's share is freed
+                    "ids": e["ids"].copy() if len(decoded) > 1 else e["ids"],
+                    "s": impacts(
+                        e["tfs"], e["fns"], bm25.idf(n, dfs[t]), avgdl,
+                        ix.k1, ix.b,
+                    ),
                 }
+                for t, e in decoded.items()
+            }
             for t in missing:
                 fresh.setdefault(t, None)  # negative entry
             with self._lock:
-                for t, entry in fresh.items():
-                    if t not in self._post_cache:
-                        self._post_cache[t] = entry
-                        if entry is not None:
-                            self._post_cache_size += len(entry["ids"])
+                # impacts carry N, avgdl and df: an entry scored while
+                # the stamp moved must not outlive this call
+                if self._stamp == stamp and ix._stamp() == stamp:
+                    for t, entry in fresh.items():
+                        if t not in self._post_cache:
+                            self._post_cache[t] = entry
+                            if entry is not None:
+                                self._post_cache_size += len(entry["ids"])
                 # simple budget: drop entries not used by this query
                 # when over cap (terms are Zipf — the working set
                 # re-warms in a handful of queries)
@@ -334,32 +314,28 @@ def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = N
 
     Identical results to ``topk_bmw`` — same query tokenization, same
     IDF arithmetic, the same scoring kernel (``kernel.score_topk``)
-    over the serving cache's flat arrays, same (score DESC, doc_id ASC)
+    over the serving cache's impacts, same (score DESC, doc_id ASC)
     tie-break. Returns plain rows (the serving shape); wrap with
     ``spark.createDataFrame(rows, "rank int, doc_id bigint, score
     double")`` when a DataFrame is needed.
     """
     sv = _serving or ServingIndex(index)
     qtf = tokenize_query(query, index.config)
-    if not qtf:
+    return _serve_rows(sv, qtf, sv.term_dfs(list(qtf)) if qtf else {}, k)
+
+
+def _serve_rows(sv: ServingIndex, qtf: dict, dfs: dict, k: int):
+    """``topk_serve`` past its df lookup: ``qtf`` the query's term
+    frequencies, ``dfs`` its terms' nonzero dfs."""
+    terms = [t for t in qtf if t in dfs]
+    if not terms:
         return []
-    dfs = sv.term_dfs(list(qtf))
-    n = index.num_docs
-    weights: dict[str, tuple[float, int]] = {}
-    for term, qf in qtf.items():
-        df = dfs.get(term, 0)
-        if df:
-            weights[term] = (math.log1p((n - df + 0.5) / (df + 0.5)), qf)
-    if not weights:
-        return []
-    k1, b, avgdl = index.k1, index.b, index.avgdl
     dead = sv.dead_ids()
-    flat = sv.posting_flat_decoded(list(weights))
+    flat = sv.posting_flat_decoded(terms)
     if not flat:
         return []
     ids, scores = score_topk(
-        [(*weights[t], d) for t, d in flat.items()],
-        int(k), k1, b, avgdl, dead=dead,
+        [(qtf[t], e["ids"], e["s"]) for t, e in flat.items()], int(k), dead=dead
     )
     return [
         (rank, doc_id, s)
@@ -678,6 +654,5 @@ def topk_auto(index, query: str, k: int = 10):
     qtf = tokenize_query(query, index.config)
     dfs = sv.term_dfs(list(qtf)) if qtf else {}
     if sum(dfs.values()) <= SERVE_MAX_POSTINGS:
-        rows = topk_serve(index, query, k, _serving=sv)
-        return local_topk_df(index.spark, rows)
+        return local_topk_df(index.spark, _serve_rows(sv, qtf, dfs, k))
     return topk_bmw(index, query, k)

@@ -25,7 +25,6 @@ search's role) -> score -> ORDER BY score DESC, doc_id ASC LIMIT k
 from __future__ import annotations
 
 import json
-import math
 import os
 
 import numpy as np
@@ -296,8 +295,7 @@ class BM25Index:
             df = dfs.get(term, 0)
             if df == 0:
                 continue  # absent terms contribute nothing
-            idf = math.log1p((n - df + 0.5) / (df + 0.5))
-            out[term] = (idf, qf)
+            out[term] = (bm25.idf(n, df), qf)
         return out
 
 
@@ -519,10 +517,11 @@ def topk_batch(
     postings scan over the union of all query terms, sharded by run
     (disjoint 8192-doc ranges, every query term co-located). Per run
     (``bmw._score_batch_run``, an ``applyInArrow`` over the run's Arrow
-    rows) each posting block decodes AT MOST ONCE no matter how many
-    queries share its term, then the one scoring kernel
-    (``kernel.score_topk``) runs once per query over those shared
-    arrays and emits <= k rows per (query, run). Those k*runs
+    rows) each posting block decodes and each posting is scored
+    (``kernel.impacts``) AT MOST ONCE no matter how many queries share
+    its term, then the one scoring kernel (``kernel.score_topk``) runs
+    once per query over those shared arrays and emits <= k rows per
+    (query, run). Those k*runs
     candidates per query come back as Arrow and the driver merges them
     into each query's top k (``_merge_runs``).
 
@@ -555,20 +554,17 @@ def topk_batch(
     if not all_terms:
         return spark.createDataFrame([], empty)
     dfs = index.term_dfs(all_terms)
-    n = index.num_docs
-    qweights: dict[str, dict[str, tuple[float, int]]] = {}
-    for qid, qtf in per_query.items():
-        w = {}
-        for term, qf in qtf.items():
-            df = dfs.get(term, 0)
-            if df == 0:
-                continue
-            w[term] = (math.log1p((n - df + 0.5) / (df + 0.5)), int(qf))
-        if w:
-            qweights[qid] = w
-    if not qweights:
+    if not dfs:
         return spark.createDataFrame([], empty)
-    live_terms = sorted({t for w in qweights.values() for t in w})
+    n = index.num_docs
+    idfs = {t: bm25.idf(n, df) for t, df in dfs.items()}
+    # per query, its live terms with their query frequencies
+    qtfs = [
+        (qid, live)
+        for qid, qtf in per_query.items()
+        if (live := [(t, int(qf)) for t, qf in qtf.items() if t in idfs])
+    ]
+    live_terms = sorted(idfs)
     pruned = index.pruned_postings(live_terms).select("term", "run", "blocks")
 
     dead_bc = None
@@ -577,14 +573,10 @@ def topk_batch(
 
     kk = int(k)
     k1, b, avgdl = index.k1, index.b, index.avgdl
-    qw_items = [
-        (qid, [(t, float(idf), int(qf)) for t, (idf, qf) in w.items()])
-        for qid, w in qweights.items()
-    ]
 
     def score_run(table):
         dead = dead_bc.value if dead_bc is not None else None
-        return _score_batch_run(table, qw_items, kk, k1, b, avgdl, dead=dead)
+        return _score_batch_run(table, idfs, qtfs, kk, k1, b, avgdl, dead=dead)
 
     per_run = pruned.groupBy("run").applyInArrow(
         score_run, "query_id string, doc_id bigint, score double"

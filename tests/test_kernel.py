@@ -48,19 +48,25 @@ def _rows(ids, scores):
 
 
 def _kernel(idx, query, k):
-    """score_topk over the serving cache's arrays and over the query's
-    collected posting rows (``decode_rows``)."""
+    """score_topk over the serving cache's impacts and over the query's
+    collected posting rows (``decode_rows`` + ``impacts``)."""
     weights = idx.query_weights(query)
     sv = ServingIndex(idx)
     flat = sv.posting_flat_decoded(list(weights))
     dead = sv.dead_ids()
-    args = (k, idx.k1, idx.b, idx.avgdl)
     rows = idx.pruned_postings(list(weights)).select("term", "blocks")
+    decoded = {
+        t: {"ids": e["ids"], "s": kernel.impacts(
+            e["tfs"], e["fns"], weights[t][0], idx.avgdl, idx.k1, idx.b
+        )}
+        for t, e in decode_rows(rows.toArrow()).items()
+    }
     return [
         _rows(*score_topk(
-            [(*weights[t], e) for t, e in entries.items()], *args, dead=dead
+            [(weights[t][1], e["ids"], e["s"]) for t, e in entries.items()],
+            k, dead=dead,
         ))
-        for entries in (flat, decode_rows(rows.toArrow()))
+        for entries in (flat, decoded)
     ]
 
 
@@ -238,6 +244,14 @@ def _table(rows):
     })
 
 
+def _bm25_expr(tfs, fns, idf, qf, avgdl, k1, b):
+    """The exhaustive path's per-posting expression, written out in its
+    operation order (functions/bm25.py bm25_score_expr)."""
+    tf = tfs.astype(np.float64)
+    dl = kernel.FIELDNORM_DECODE_TABLE[fns].astype(np.float64)
+    return idf * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)) * qf
+
+
 @pytest.mark.parametrize("seed", range(5))
 def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
     # the reference: group the same per-posting f64 scores by a sorted
@@ -264,10 +278,7 @@ def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
         dead = dead.astype(np.int64) if len(dead) else None
         k = int(rng.integers(1, 40))
         s64 = np.concatenate([
-            kernel._term_score64(
-                e["tfs"], kernel.FIELDNORM_DECODE_TABLE[e["fns"]],
-                *weights[t], avgdl, k1, b,
-            )
+            _bm25_expr(e["tfs"], e["fns"], *weights[t], avgdl, k1, b)
             for t, e in full.items()
         ])
         if dead is not None:
@@ -278,8 +289,13 @@ def test_accumulate_is_bit_identical_to_sorted_group_by(seed):
         order = np.lexsort((uids, -totals))[:k]
         want_ids, want_s = uids[order], totals[order]
         got_ids, got_s = score_topk(
-            [(*weights[t], e) for t, e in full.items()],
-            k, k1, b, avgdl, dead=dead,
+            [
+                (weights[t][1], e["ids"], kernel.impacts(
+                    e["tfs"], e["fns"], weights[t][0], avgdl, k1, b
+                ))
+                for t, e in full.items()
+            ],
+            k, dead=dead,
         )
         assert np.array_equal(got_ids, want_ids)
         assert np.array_equal(got_s, want_s)
@@ -322,3 +338,54 @@ def test_sparse_doc_ids_every_path(spark, tmp_path):
                 for r in batch if r["query_id"] == qid
             )
             _same(got, want, ("batch", q))
+
+
+def _lexsort_topk(postings, k, dead):
+    """Reference top k: sorted-unique group-by, zero and dead totals
+    dropped, then (score DESC, doc_id ASC) by a full lexsort."""
+    ids = np.concatenate([i for _, i, _ in postings])
+    s64 = np.concatenate([s * qf for qf, _, s in postings])
+    uids, inv = np.unique(ids, return_inverse=True)
+    totals = np.bincount(inv, weights=s64)
+    keep = totals != 0
+    if dead is not None:
+        keep &= ~np.isin(uids, dead)
+    uids, totals = uids[keep], totals[keep]
+    order = np.lexsort((uids, -totals))[:k]
+    return uids[order], totals[order]
+
+
+@pytest.mark.parametrize("k", [1, 3, 10])
+def test_topk_cut_matches_lexsort(k):
+    # the cut's block-max bound at and around its fallback size
+    # (n = CUT_BLOCK * k), over dense accumulators of n slots
+    rng = np.random.default_rng(k)
+    width = kernel.CUT_BLOCK * k
+    for n in (width - 1, width, width + 1, 3 * width + 5):
+        ids = np.arange(n, dtype=np.int64)
+        tied = np.ones(n)
+        # k-1 clear winners, then the k-th value tied on both sides of
+        # block edges (so the cut lands inside the tie)
+        tied[rng.choice(n, k - 1, replace=False)] = 9.0
+        edges = [e for e in (63, 64, 127, 128, n - 1) if e < n]
+        tied[[e for e in edges if tied[e] != 9.0]] = 4.0
+        few = np.zeros(n)
+        few[rng.choice(n, max(k - 1, 1), replace=False)] = 2.0
+        cases = [
+            ([(1, ids, tied)], None),
+            ([(1, ids, np.full(n, 2.5))], None),  # all equal
+            ([(1, ids, rng.integers(1, 4, n).astype(float))], None),
+            ([(1, ids[few > 0], few[few > 0]),  # fewer nonzero than k,
+              (1, ids[[0, n - 1]], np.ones(2))], None),  # gaps between
+            ([(2, ids, rng.uniform(0.5, 3.0, n)),
+              (1, ids[::3], rng.uniform(0.5, 3.0, len(ids[::3])))],
+             np.sort(rng.choice(n, n // 4, replace=False))),  # dead docs
+            ([(1, ids, tied)], np.flatnonzero(tied == 9.0)),  # dead winners
+            ([(1, ids, tied)], ids[: n - max(k - 1, 1)]),  # < k live docs
+        ]
+        for postings, dead in cases:
+            dead = None if dead is None else dead.astype(np.int64)
+            got = score_topk(postings, k, dead=dead)
+            want = _lexsort_topk(postings, k, dead)
+            assert np.array_equal(got[0], want[0]), (n, got, want)
+            assert np.array_equal(got[1], want[1]), (n, got, want)

@@ -204,6 +204,80 @@ def test_decoded_cache_invalidates_on_delete(idx, spark, tmp_path):
     assert victim not in {r[1] for r in after}
 
 
+def test_impacts_rescored_after_delete(idx, spark, tmp_path):
+    """The serving cache holds impacts, which carry N, avgdl and df: one
+    ServingIndex and one ``topk_auto`` handle reused across a delete
+    must answer with the new stamp's scores, ids AND scores equal to
+    ``topk_exhaustive`` (not only without the victim)."""
+    import shutil
+
+    from pg_textsearch_spark.index.deletes import delete_docs
+
+    d = str(tmp_path / "restamp")
+    shutil.copytree(idx.index_dir, d)
+    di = BM25Index(spark, d)
+    sv = ServingIndex(di)
+    queries = ["window", "window window join", "spark query table"]
+    for q in queries:
+        topk_serve(di, q, k=10, _serving=sv)
+        topk_auto(di, q, k=10).collect()
+    victim = topk_serve(di, "window", k=1, _serving=sv)[0][1]
+    delete_docs(di, [victim])
+    for q in queries:
+        want = [
+            (r["rank"], r["doc_id"], r["score"])
+            for r in topk_exhaustive(di, q, k=10).collect()
+        ]
+        assert victim not in {r[1] for r in want}
+        _same_ranking(topk_serve(di, q, k=10, _serving=sv), want, ("serve", q))
+        got = [tuple(r) for r in topk_auto(di, q, k=10).collect()]
+        _same_ranking(got, want, ("auto", q))
+
+
+def test_impacts_scored_once_per_stamp(idx, monkeypatch):
+    """A query over terms already in the serving cache scores no
+    posting: the impact function runs 0 times."""
+    from pg_textsearch_spark.operators import serve
+
+    calls = []
+    real = serve.impacts
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(serve, "impacts", counted)
+    sv = ServingIndex(idx)
+    first = topk_serve(idx, "window join", k=10, _serving=sv)
+    assert first and len(calls) == 2
+    calls.clear()
+    assert topk_serve(idx, "join window", k=10, _serving=sv) == first
+    topk_serve(idx, "window window join", k=10, _serving=sv)
+    assert calls == []
+
+
+def test_serve_query_frequency_parity(idx):
+    """A repeated query term (qf = 2) scales the cached qf = 1 impacts:
+    serve, bmw and batch all equal exhaustive."""
+    sv = ServingIndex(idx)
+    q = "window window join"
+    want = [
+        (r["rank"], r["doc_id"], r["score"])
+        for r in topk_exhaustive(idx, q, k=10).collect()
+    ]
+    assert want
+    _same_ranking(topk_serve(idx, q, k=10, _serving=sv), want, "serve")
+    bmw = [tuple(r) for r in topk_bmw(idx, q, k=10).collect()]
+    _same_ranking(bmw, want, "bmw")
+    batch = [
+        (r["rank"], r["doc_id"], r["score"])
+        for r in topk_batch(idx, {"q": q}, k=10).collect()
+    ]
+    _same_ranking(sorted(batch), want, "batch")
+    single = topk_serve(idx, "window join", k=10, _serving=sv)
+    assert single != topk_serve(idx, q, k=10, _serving=sv)
+
+
 def test_serve_is_interactive_fast(idx):
     sv = ServingIndex(idx)
     topk_serve(idx, "spark query table", k=10, _serving=sv)  # warm caches
