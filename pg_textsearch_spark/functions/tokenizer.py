@@ -35,14 +35,12 @@ are tokenizer specs pinned by conformance fixtures):
                    shape) — the highest-parity config for web text.
 - language configs (french/german/spanish...) via functions/languages.
 
-Where each form runs: the index build and every commit tokenize with
-the pure-Python ``tokenize`` in their segment writers (one build writer
-task per core, a field->lexeme memo per task), and queries tokenize
-with it in the driver. ``spark_token_table`` is the Spark-plan form
-(scoring expressions, harness queries): word segmentation is a
-JVM-side ``split``/``explode`` (whole-stage codegen), and only the
-``english`` config additionally runs an Arrow-batched pandas UDF over
-the *term column* with an lru-cached stemmer.
+Where each form runs: one Python tokenizer, ``tokenize``, everywhere.
+The index build and every commit run it through ``tokenize_batch`` in
+their segment writers (one build writer task per core, one field memo
+per batch), queries run it in the driver, and ``spark_token_table``
+(scoring expressions, harness queries) runs ``tokenize_batch`` over
+each Arrow batch of a ``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -72,10 +70,9 @@ CHUNK_BYTES = 256 * 1024  # TP_TSVECTOR_CHUNK_BYTES (reference: build.c:806)
 class TokenizerConfig:
     name: str
     py_pattern: str  # Python re pattern matching one token
-    sql_split_pattern: str  # Java/DuckDB regex splitting on non-token runs
     stopwords: frozenset[str] = field(default_factory=frozenset)
     do_stem: bool = False
-    #: "words" = split-regex word tokenizer (JVM-side in the build);
+    #: "words" = ``py_pattern`` word tokenizer;
     #: "pg" = PG-default-parser token classes (functions/pg_parser.py:
     #: urls/emails/hosts/files/versions/hyphenated compounds+parts);
     #: stop+stem then apply only to PG_STEM_CLASSES lexemes
@@ -93,20 +90,11 @@ class TokenizerConfig:
 
 
 CONFIGS: dict[str, TokenizerConfig] = {
-    "ascii": TokenizerConfig(
-        name="ascii",
-        py_pattern=r"[a-z0-9]+",
-        sql_split_pattern=r"[^a-z0-9]+",
-    ),
-    "simple": TokenizerConfig(
-        name="simple",
-        py_pattern=r"[^\W_]+",
-        sql_split_pattern=r"[^\p{L}\p{N}]+",
-    ),
+    "ascii": TokenizerConfig(name="ascii", py_pattern=r"[a-z0-9]+"),
+    "simple": TokenizerConfig(name="simple", py_pattern=r"[^\W_]+"),
     "english": TokenizerConfig(
         name="english",
         py_pattern=r"[^\W_]+",
-        sql_split_pattern=r"[^\p{L}\p{N}]+",
         stopwords=ENGLISH_STOPWORDS,
         do_stem=True,
     ),
@@ -116,13 +104,11 @@ CONFIGS: dict[str, TokenizerConfig] = {
     "pg_simple": TokenizerConfig(
         name="pg_simple",
         py_pattern="",
-        sql_split_pattern="",
         parser="pg",
     ),
     "pg_english": TokenizerConfig(
         name="pg_english",
         py_pattern="",
-        sql_split_pattern="",
         stopwords=ENGLISH_STOPWORDS,
         do_stem=True,
         parser="pg",
@@ -149,7 +135,6 @@ def _register_language_configs() -> None:
         CONFIGS[lang] = TokenizerConfig(
             name=lang,
             py_pattern=r"[^\W_]+",
-            sql_split_pattern=r"[^\p{L}\p{N}]+",
             stopwords=stops,
             do_stem=True,
             stem_lang=lang,
@@ -157,7 +142,6 @@ def _register_language_configs() -> None:
         CONFIGS[f"pg_{lang}"] = TokenizerConfig(
             name=f"pg_{lang}",
             py_pattern="",
-            sql_split_pattern="",
             stopwords=stops,
             do_stem=True,
             parser="pg",
@@ -190,7 +174,6 @@ def register_config(
     cfg = TokenizerConfig(
         name=name,
         py_pattern=b.py_pattern,
-        sql_split_pattern=b.sql_split_pattern,
         stopwords=frozenset(b.stopwords) | frozenset(extra_stopwords),
         do_stem=b.do_stem if do_stem is None else do_stem,
         parser=b.parser,
@@ -383,36 +366,35 @@ def tokenize_query(query: str, config: TokenizerConfig | str = "english") -> dic
 
 
 # ---------------------------------------------------------------------------
-# Spark path (distributed build) — JVM split/explode + optional stem UDF
+# Batch and Spark forms (segment writers, scoring expressions)
 # ---------------------------------------------------------------------------
 
 
-def _stem_udf(cfg: TokenizerConfig):
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def tokenize_batch(texts: list, config):
+    """texts (None allowed) -> (doc index, term, tf) postings + doc_len
+    per doc, with the query path's own ``tokenize`` and one field memo
+    for the whole batch."""
+    import numpy as np
+    import pyarrow as pa
 
-    # deferred: pandas_udf needs an active SparkSession to parse DDL types
-    stem_lang = cfg.stem_lang
-
-    def _stem(terms):
-        # resolve the stemmer on the executor (closure carries only the
-        # name); stem each unique term once, then a C-loop dict map —
-        # the hot build path pushes tens of millions of tokens through
-        # here and per-token Python calls are ~3x slower than unique+map
-        if stem_lang == "english":
-            fn = stem
-        else:
-            from pg_textsearch_spark.functions.languages import get_stemmer
-
-            fn = get_stemmer(stem_lang)
-        uniq = terms.unique()
-        table = {t: fn(t) for t in uniq if t is not None}
-        return terms.map(table)
-
-    # real (not PEP 563 string) hints: pandas_udf infers the Series ->
-    # Series UDF kind from them without resolving names in this module
-    _stem.__annotations__ = {"terms": pd.Series, "return": pd.Series}
-    return pandas_udf(_stem, "string")
+    memo: dict = {}
+    terms: list[str] = []
+    tfs: list[int] = []
+    n_terms = np.zeros(len(texts), dtype=np.int64)
+    doc_len = np.zeros(len(texts), dtype=np.int64)
+    for i, text in enumerate(texts):
+        if not text:
+            continue
+        counts = tokenize(text, config, _memo=memo)
+        terms.extend(counts)
+        tfs.extend(counts.values())
+        n_terms[i] = len(counts)
+        doc_len[i] = sum(counts.values())
+    doc_idx = np.repeat(np.arange(len(texts)), n_terms)
+    return (
+        doc_idx, pa.array(terms, pa.string()),
+        np.asarray(tfs, dtype=np.int64), doc_len,
+    )
 
 
 def flatten_text_array(col: Column | str) -> Column:
@@ -423,20 +405,10 @@ def flatten_text_array(col: Column | str) -> Column:
     the same invariant, test/sql/text_array.sql:27-55) — apply before
     ``build_index`` to index an array column."""
     from pyspark.sql import functions as F
-    
+
     c = F.col(col) if isinstance(col, str) else col
     return F.array_join(
         F.filter(c, lambda x: x.isNotNull() & (x != F.lit(""))), " "
-    )
-
-
-def raw_tokens_column(text_col: Column, config: TokenizerConfig) -> Column:
-    """array<string> of lowercased raw word tokens — pure JVM expression."""
-    from pyspark.sql import functions as F
-    
-    toks = F.split(F.lower(text_col), config.sql_split_pattern)
-    return F.filter(
-        toks, lambda t: (t != F.lit("")) & (F.length(t) <= TOKEN_MAX_CHARS)
     )
 
 
@@ -446,80 +418,31 @@ def spark_token_table(
     text_col: str,
     config: TokenizerConfig | str = "english",
 ) -> DataFrame:
-    """docs(id, text) -> tokens(id, term, tf) — the distributed tokenizer.
-
-    Entirely JVM-side (split/explode/filter/groupBy, whole-stage
-    codegen) except the Porter2 stem, which is an Arrow-batched pandas
-    UDF over the exploded term column. groupBy(id, term) does the tf
-    aggregation map-side (partial aggregation) before any shuffle.
-
-    ``pg``-parser configs run the typed-token scanner inside a
-    columnar mapInPandas (the scanner is a state machine, not a split
-    — same tradeoff as the reference's C parser); the per-doc tf
-    Counter happens in the kernel, so the groupBy only merges across
-    Arrow batches.
-    """
-    from pyspark.sql import functions as F
+    """docs(id, text) -> tokens(id, term, tf), one row per distinct
+    term of a doc and none for a doc without tokens: ``tokenize_batch``
+    over each Arrow batch of the docs in one ``mapInArrow`` — per-batch
+    Python, not a per-row UDF ("Accelerating Python UDFs in Vectorized
+    Query Execution", CIDR 2022). Every config, so the rows are the
+    writers' and the query path's tokens by construction."""
+    import pyarrow as pa
 
     cfg = get_config(config) if isinstance(config, str) else config
-    if cfg.parser == "pg":
-        return _pg_spark_token_table(df, id_col, text_col, cfg)
-    toks = df.select(
-        F.col(id_col),
-        F.explode(raw_tokens_column(F.col(text_col), cfg)).alias("term"),
-    )
-    if cfg.stopwords:
-        stop_df = toks.sparkSession.createDataFrame(
-            [(w,) for w in sorted(cfg.stopwords)], "term string"
-        )
-        toks = toks.join(F.broadcast(stop_df), "term", "left_anti")
-    if cfg.do_stem:
-        toks = toks.withColumn("term", _stem_udf(cfg)("term"))
-    return toks.groupBy(id_col, "term").agg(F.count("*").cast("int").alias("tf"))
-
-
-def _pg_spark_token_table(
-    df: DataFrame, id_col: str, text_col: str, cfg: TokenizerConfig
-) -> DataFrame:
-    """Typed-token distributed tokenizer: mapInPandas over (id, text),
-    emitting columnar (id, term, tf) — one Counter per doc, flat numpy
-    output arrays, no per-posting Python objects downstream. The
-    kernel IS the conformance oracle (``tokenize``), so the Spark path
-    cannot diverge from the fixture-pinned semantics."""
-    import pandas as pd
-    
-    import numpy as np
-
     id_type = df.schema[id_col].dataType.simpleString()
 
     def run(batches):
-        # raw-word -> lexeme memo shared across every doc this task
-        # tokenizes (Zipf => hit rate near 1 after the first few docs)
-        memo: dict = {}
-        for pdf in batches:
-            ids_out, terms_out, tfs_out = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                counts = tokenize(t, cfg, _memo=memo)
-                if not counts:
-                    continue
-                ids_out.extend([i] * len(counts))
-                terms_out.extend(counts.keys())
-                tfs_out.extend(counts.values())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids_out),
-                    "term": pd.Series(terms_out, dtype=object),
-                    "tf": np.asarray(tfs_out, dtype=np.int32),
-                }
+        for batch in batches:
+            doc_idx, terms, tfs, _ = tokenize_batch(
+                batch.column(1).to_pylist(), cfg
             )
+            if len(terms):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0).take(pa.array(doc_idx)), terms,
+                     pa.array(tfs, pa.int32())],
+                    names=[id_col, "term", "tf"],
+                )
 
-    # no groupBy needed: each doc is tokenized exactly once and the
-    # per-doc Counter already made (id, term) unique — zero shuffles
-    # added by the tokenizer itself
-    return df.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_type}, term string, tf int"
+    return df.select(id_col, text_col).mapInArrow(
+        run, f"`{id_col}` {id_type}, term string, tf int"
     )
 
 

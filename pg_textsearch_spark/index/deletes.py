@@ -25,6 +25,7 @@ driver-local merge.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,14 +33,6 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import IndexWriter
 from pg_textsearch_spark.operators.topk import BM25Index
-
-
-def _deletes_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "deletes")
-
-
-def _dead_dfs_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "dead_dfs")
 
 
 def delete_docs(index: BM25Index, doc_ids: DataFrame | list[int]) -> dict:
@@ -64,42 +57,46 @@ def delete_docs(index: BM25Index, doc_ids: DataFrame | list[int]) -> dict:
             r[0] for r in doc_ids.select(F.col("doc_id")).collect()
             if r[0] is not None
         ]
-    n_dead, dead_tokens = local_commit.delete_local(
-        index.index_dir, index.manifest, doc_ids
-    )
     writer = IndexWriter(index.index_dir)
     manifest = writer.read_manifest()
+    n_dead, dead_tokens = local_commit.delete_local(
+        index.index_dir, manifest, doc_ids
+    )
     manifest["deleted_docs"] = manifest.get("deleted_docs", 0) + n_dead
     manifest["deleted_tokens_quantized"] = manifest.get(
         "deleted_tokens_quantized", 0
     ) + dead_tokens
     writer._commit_manifest(manifest)
-    index.manifest = manifest
-    return manifest
+    index.refresh()
+    return index.manifest
 
 
 def vacuum(index: BM25Index) -> dict:
     """Physically drop dead docs: rewrite every segment's postings and
-    doclen without them, reset delete stats (bulkdelete + compaction
-    collapsed; reference: vacuum.c:832-1290)."""
-    seg_ids = [s["seg_id"] for s in index.manifest["segments"]]
-    dead = local_commit.read_deleted_ids(index.index_dir)
+    doclen without them and reset the delete stats in ONE manifest swap
+    (bulkdelete + compaction collapsed; reference: vacuum.c:832-1290),
+    then remove ``deletes``, ``dead_dfs`` and the source segments. A
+    stop at any step leaves the index as it was before or after; files
+    left behind by a stop after the swap are uncommitted (the next
+    delete removes the two tables, see ``local_commit.delete_local``).
+    Ends with ``index`` on the new snapshot."""
+    from pg_textsearch_spark.index.merge import _merged_manifest, _reclaim
+
+    # the dead set and the counters zeroed below must be one commit's
+    index.refresh()
+    snap = index.snapshot
+    dead = snap.dead_ids()
     if not len(dead):
         return index.manifest
-    from pg_textsearch_spark.index.merge import merge_segments
-
-    new_id = max(seg_ids) + 1
-    # merge_segments decodes + regroups, dropping the dead docs
-    manifest = merge_segments(index, seg_ids, new_id, drop_doc_ids=dead)
-    # clear the deletes table, per-term dead counts, and counters
-    import shutil
-
-    shutil.rmtree(_deletes_path(index.index_dir), ignore_errors=True)
-    shutil.rmtree(_dead_dfs_path(index.index_dir), ignore_errors=True)
-    writer = IndexWriter(index.index_dir)
-    manifest = writer.read_manifest()
+    seg_ids = [s["seg_id"] for s in snap.manifest["segments"]]
+    # _merged_manifest decodes + regroups, dropping the dead docs
+    manifest = _merged_manifest(index, seg_ids, max(seg_ids) + 1, dead)
     manifest["deleted_docs"] = 0
     manifest["deleted_tokens_quantized"] = 0
+    writer = IndexWriter(index.index_dir)
     writer._commit_manifest(manifest)
-    index.manifest = manifest
-    return manifest
+    for table in ("deletes", "dead_dfs"):
+        shutil.rmtree(os.path.join(index.index_dir, table), ignore_errors=True)
+    _reclaim(writer, seg_ids)
+    index.refresh()
+    return index.manifest

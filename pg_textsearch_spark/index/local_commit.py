@@ -45,15 +45,23 @@ rename, then (merges) reclaiming the source segments.
 from __future__ import annotations
 
 import functools
+import json
 import os
 import shutil
+import threading
 import uuid
 
 import numpy as np
 
+from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.fieldnorm import (
     FIELDNORM_DECODE_TABLE,
     encode_fieldnorm,
+)
+from pg_textsearch_spark.functions.tokenizer import (
+    get_config,
+    tokenize_batch,
+    tokenize_query,
 )
 from pg_textsearch_spark.index.codec import decompress_blocks, term_bucket
 
@@ -303,33 +311,6 @@ def collect_batch(docs, text_col: str, doc_id_col, key_col):
     return batch_rows(docs, text_col, doc_id_col, key_col).toArrow()
 
 
-def tokenize_batch(texts: list, config):
-    """texts (None allowed) -> (doc index, term, tf) postings + doc_len
-    per doc, with the query path's own ``tokenize``."""
-    import pyarrow as pa
-
-    from pg_textsearch_spark.functions.tokenizer import tokenize
-
-    memo: dict = {}
-    terms: list[str] = []
-    tfs: list[int] = []
-    n_terms = np.zeros(len(texts), dtype=np.int64)
-    doc_len = np.zeros(len(texts), dtype=np.int64)
-    for i, text in enumerate(texts):
-        if not text:
-            continue
-        counts = tokenize(text, config, _memo=memo)
-        terms.extend(counts)
-        tfs.extend(counts.values())
-        n_terms[i] = len(counts)
-        doc_len[i] = sum(counts.values())
-    doc_idx = np.repeat(np.arange(len(texts)), n_terms)
-    return (
-        doc_idx, pa.array(terms, pa.string()),
-        np.asarray(tfs, dtype=np.int64), doc_len,
-    )
-
-
 def write_docs(
     out_dir: str, seg_id: int, doc_ids: np.ndarray, texts: list, cfg,
     n_buckets: int, keys=None, codec: str = "bitpack",
@@ -397,8 +378,6 @@ def insert_local(
     k1: float, b: float, lineage: dict,
 ) -> dict:
     """Commit a collected batch (``collect_batch``) as one L0 segment."""
-    from pg_textsearch_spark.functions.tokenizer import get_config
-
     stats = write_rows(
         writer.index_dir, seg_id, rows, next_doc, get_config(config),
         n_buckets,
@@ -410,6 +389,103 @@ def insert_local(
 
 
 # -- reads ----------------------------------------------------------------
+#
+# Every reader (BM25Index, LocalIndex, ServingIndex, ServePool workers)
+# turns a manifest into reader state in one place, ``Snapshot``: the
+# metapage read (reference: metapage.h:30-106, bm25.c:155-191). A query
+# takes its handle's snapshot once and keeps it to the end; a commit
+# ends with the committing handle on a new one (``LocalIndex.refresh``).
+
+
+def _parquet_files(root: str) -> list[str]:
+    """Sorted parquet files under ``root`` (none if it does not exist)."""
+    out = []
+    for dirpath, _dirs, files in os.walk(root):
+        out.extend(os.path.join(dirpath, f) for f in files
+                   if f.endswith(".parquet"))
+    return sorted(out)
+
+
+class Snapshot:
+    """One committed manifest and the reader state derived from it:
+    config, k1, b, n_buckets; corpus stats; and three memos that fill on
+    first use and never change, so queries holding the same snapshot
+    share them: live dfs (``read_term_dfs``, zero-df terms included),
+    the dead-id array (``read_deleted_ids``, read once) and each
+    (table, bucket)'s file listing. Pending deletes reduce N at once and
+    total_tokens by the quantized dead lengths (reference:
+    merge.c:842-866)."""
+
+    def __init__(self, index_dir: str, manifest: dict):
+        self.index_dir = index_dir
+        self.manifest = manifest
+        self.config: str = manifest["config"]
+        self.k1: float = manifest["k1"]
+        self.b: float = manifest["b"]
+        self.n_buckets: int = manifest["n_buckets"]
+        segs = manifest["segments"]
+        deleted = int(manifest.get("deleted_docs", 0))
+        self.has_deletes = deleted > 0
+        self.num_docs = sum(s["num_docs"] for s in segs) - deleted
+        self.total_tokens = sum(s["total_tokens"] for s in segs) - int(
+            manifest.get("deleted_tokens_quantized", 0)
+        )
+        self.avgdl = self.total_tokens / self.num_docs if self.num_docs else 0.0
+        self._lock = threading.Lock()
+        self._dfs: dict[str, int] = {}
+        self._dead = None if self.has_deletes else np.zeros(0, dtype=np.int64)
+        self._files: dict[tuple, list[str]] = {}
+
+    @classmethod
+    def read(cls, index_dir: str) -> "Snapshot":
+        """The snapshot of ``index_dir``'s committed ``manifest.json``."""
+        with open(os.path.join(index_dir, "manifest.json")) as f:
+            return cls(index_dir, json.load(f))
+
+    def term_dfs(self, terms) -> dict[str, int]:
+        """term -> live df of ``terms`` with df > 0. Misses are one
+        ``read_term_dfs`` point read; hits (absent terms too) read
+        nothing (the reference's fn_extra IDF cache, query.c:52-158)."""
+        with self._lock:
+            missing = [t for t in terms if t not in self._dfs]
+        if missing:
+            got = read_term_dfs(self.index_dir, self.manifest, missing)
+            with self._lock:
+                self._dfs.update({t: got.get(t, 0) for t in missing})
+        with self._lock:
+            return {t: v for t in terms if (v := self._dfs[t]) > 0}
+
+    def query_weights(self, query: str) -> dict[str, tuple[float, int]]:
+        """query text -> {term: (idf, query_freq)} for its terms with
+        df > 0 — float64 IDF."""
+        qtf = tokenize_query(query, self.config)
+        dfs = self.term_dfs(list(qtf)) if qtf else {}
+        return {
+            t: (bm25.idf(self.num_docs, dfs[t]), qf)
+            for t, qf in qtf.items() if t in dfs
+        }
+
+    def dead_ids(self) -> np.ndarray:
+        """Sorted int64 doc ids of the pending deletes (empty if none)."""
+        with self._lock:
+            if self._dead is None:
+                self._dead = read_deleted_ids(self.index_dir)
+            return self._dead
+
+    def bucket_files(self, table: str, bucket: int) -> list[str]:
+        """Parquet files of ``table``'s term ``bucket`` in every segment."""
+        key = (table, bucket)
+        files = self._files.get(key)
+        if files is None:
+            files = [
+                f for s in self.manifest["segments"]
+                for f in _parquet_files(os.path.join(
+                    self.index_dir, table, f"seg={s['seg_id']}",
+                    f"bucket={bucket}",
+                ))
+            ]
+            self._files[key] = files
+        return files
 
 
 def read_table(
@@ -420,8 +496,6 @@ def read_table(
     writer's files; only term buckets ``buckets`` when given), projected
     to ``columns`` under the canonical schema."""
     import pyarrow.dataset as ds
-
-    from pg_textsearch_spark.operators.serve import _parquet_files
 
     schema = _schemas()[table]
     subs = [()] if buckets is None else [(f"bucket={b}",) for b in buckets]
@@ -602,12 +676,17 @@ def delete_local(
     """Mark ``ids`` deleted: append the effective ones (existing, not
     yet deleted) to ``deletes`` and their per-term counts to
     ``dead_dfs``. Returns (n_dead, quantized dead tokens); the caller
-    commits the manifest counters."""
+    commits the manifest counters. Under a ``manifest`` with no deleted
+    docs nothing in either table is committed (a vacuum that stopped
+    after its manifest swap leaves both behind), so they go first."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
     from pg_textsearch_spark.index.builder import RUN_SHIFT
 
+    if not int(manifest.get("deleted_docs", 0)):
+        for table in ("deletes", "dead_dfs"):
+            shutil.rmtree(os.path.join(index_dir, table), ignore_errors=True)
     ids = np.unique(np.asarray(ids, dtype=np.int64))
     if not len(ids):
         return 0, 0

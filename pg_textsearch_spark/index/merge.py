@@ -47,10 +47,8 @@ def merge_segments(
     restores the 128-doc block invariant across former segment
     boundaries within a run. ``drop_doc_ids`` (a DataFrame with a
     ``doc_id`` column, or a sequence of ids) are physically dropped.
+    Ends with ``index`` on the new snapshot.
     """
-    seg_set = set(seg_ids)
-    segs = [s for s in index.manifest["segments"] if s["seg_id"] in seg_set]
-    assert len(segs) == len(seg_set), (seg_ids, index.manifest["segments"])
     drop = None
     if isinstance(drop_doc_ids, DataFrame):
         drop = np.asarray(
@@ -59,14 +57,27 @@ def merge_segments(
         )
     elif drop_doc_ids is not None:
         drop = np.asarray(drop_doc_ids, dtype=np.int64)
+    writer = IndexWriter(index.index_dir)
+    writer._commit_manifest(_merged_manifest(index, seg_ids, new_seg_id, drop))
+    _reclaim(writer, seg_ids)
+    index.refresh()
+    return index.manifest
+
+
+def _merged_manifest(
+    index: BM25Index, seg_ids: list[int], new_seg_id: int, drop
+) -> dict:
+    """Write the merge of ``seg_ids`` as segment ``new_seg_id``,
+    dropping the ids ``drop`` (an int64 array or None); -> the manifest
+    that swaps it in, for the caller to commit."""
+    seg_set = set(seg_ids)
+    segs = [s for s in index.manifest["segments"] if s["seg_id"] in seg_set]
+    assert len(segs) == len(seg_set), (seg_ids, index.manifest["segments"])
     stats, dead_tokens_quantized, has_keymap = local_commit.merge_local(
         index.index_dir, segs, new_seg_id, index.n_buckets, drop
     )
     num_docs = stats["num_docs"]
-
-    # new segment written; drop sources from the manifest atomically
-    writer = IndexWriter(index.index_dir)
-    manifest = writer.read_manifest()
+    manifest = IndexWriter(index.index_dir).read_manifest()
     src_docs = sum(s["num_docs"] for s in segs)
     src_tokens = sum(s["total_tokens"] for s in segs)
     if drop is None:
@@ -98,14 +109,16 @@ def merge_segments(
         }
     )
     manifest["segments"].sort(key=lambda s: s["seg_id"])
-    writer._commit_manifest(manifest)
+    return manifest
 
-    # reclaim source segment files (the tombstone/vacuum analog —
-    # safe after the manifest commit; readers resolve via manifest)
-    for sid in seg_set:
+
+def _reclaim(writer: IndexWriter, seg_ids) -> None:
+    """Drop the files of segments a committed manifest no longer names
+    (the tombstone/vacuum analog — safe after the manifest commit;
+    readers resolve via manifest)."""
+    for sid in seg_ids:
         for table in ("postings", "doclen", "dictionary", "keymap"):
             writer.store.drop_segment(table, sid)
-    return manifest
 
 
 def force_merge(index: BM25Index) -> dict:
@@ -135,7 +148,6 @@ def maybe_compact(index: BM25Index, fan_in: int = SEGMENTS_PER_LEVEL) -> dict:
                 batch = [s["seg_id"] for s in segs[:fan_in]]
                 new_id = max(x["seg_id"] for x in manifest["segments"]) + 1
                 manifest = merge_segments(index, batch, new_id)
-                index.manifest = manifest
                 changed = True
                 break
     return manifest

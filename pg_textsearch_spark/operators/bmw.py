@@ -77,7 +77,7 @@ def _score_batch_run(
     })
 
 
-def topk_bmw(index, query: str, k: int = 10) -> DataFrame:
+def topk_bmw(index, query: str, k: int = 10, _snap=None) -> DataFrame:
     """Distributed top-k, the Spark plan for a query whose postings
     belong on the cluster (``serve.topk_auto`` picks between it and the
     in-process ``topk_serve``). Same result contract as
@@ -93,16 +93,19 @@ def topk_bmw(index, query: str, k: int = 10) -> DataFrame:
     list, so each scan batch is scored in place (``mapInArrow``, no
     shuffle: one stage from parquet to TakeOrdered). Several terms are
     co-located per run first (``groupBy("run").applyInArrow``). Either
-    way the global ``orderBy().limit()`` merges the partial top-ks."""
+    way the global ``orderBy().limit()`` merges the partial top-ks.
+    The query reads one snapshot: ``_snap`` (``topk_auto``'s), else the
+    handle's."""
     from pyspark.sql import Window
 
     spark = index.spark
-    weights = index.query_weights(query)
+    snap = _snap or index.snapshot
+    weights = snap.query_weights(query)
     if not weights:
         from pg_textsearch_spark.operators.serve import local_topk_df
 
         return local_topk_df(spark, [])
-    k1, b, avgdl = index.k1, index.b, index.avgdl
+    k1, b, avgdl = snap.k1, snap.b, snap.avgdl
     iqmap = {t: (float(idf), int(qf)) for t, (idf, qf) in weights.items()}
     kk = int(k)
     # alive filtering: ship the sorted dead ids to the kernel as a
@@ -111,10 +114,12 @@ def topk_bmw(index, query: str, k: int = 10) -> DataFrame:
     # into every task. Deletes are a small fraction of the corpus
     # between vacuums; at larger volumes vacuum first.
     dead_bc = None
-    if index.has_deletes():
-        dead_bc = spark.sparkContext.broadcast(index.deleted_id_array())
+    if snap.has_deletes:
+        dead_bc = spark.sparkContext.broadcast(snap.dead_ids())
 
-    pruned = index.pruned_postings(list(iqmap)).select("term", "run", "blocks")
+    pruned = index.pruned_postings(list(iqmap), snap).select(
+        "term", "run", "blocks"
+    )
 
     def score_rows(rows):
         dead = dead_bc.value if dead_bc is not None else None

@@ -8,7 +8,7 @@ doc ids and its impacts: the per-posting BM25 score before the
 query-frequency factor (``impacts``). An impact depends only on the
 term and the index state (N, avgdl, df), so each term is scored once
 per state, not once per query: the serving cache keeps impacts per
-index stamp, and the Spark paths compute them once per term per run.
+index snapshot, and the Spark paths compute them once per term per run.
 The Spark paths decode postings with ``decode_rows``, which takes the
 posting rows as Arrow (``term``, ``blocks``) and hands every block
 payload to one native decode call; the serving reader decodes its

@@ -7,7 +7,7 @@ index, with the *quantized* doc length. Useful for re-scoring,
 verification, and scoring documents that are not (yet) indexed.
 
 Spark form: a DataFrame transform rather than a scalar function —
-tokenize the doc column (JVM path), broadcast the query's (term, idf,
+tokenize the doc column (``spark_token_table``), broadcast the query's (term, idf,
 query_freq) weights, aggregate per doc. When ``index`` is given, stats
 and dfs come from it (the reference behavior); otherwise they are
 computed from the input corpus itself (self-contained oracle mode).

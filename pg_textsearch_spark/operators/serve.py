@@ -7,15 +7,23 @@ concurrent serving, ~50x the reference's warm 5 ms single-query p50.
 This module is the interactive answer: the SAME on-disk index and the
 same scoring kernel (``kernel.score_topk``), executed in the serving
 process — pyarrow bucket-dir + row-group pruned reads decoded by the
-Spark paths' decoder (``kernel.decode_rows``), and a stamp-invalidated
-LRU of scored postings (the shared_buffers-resident-segment analog).
-Each entry holds a term's doc ids and its impacts (``kernel.impacts``:
-BM25 per posting with query frequency 1), computed once per index
-stamp from the same stamp's N, avgdl and df, so a repeated query term
-skips the parquet read, the decode and the per-posting formula; a
-query only scales by its query frequencies and accumulates (the
-reference caches IDF per query, query.c:52-158). Results are identical
-to ``topk_bmw`` (same kernel, same tie-break; oracle-gated).
+Spark paths' decoder (``kernel.decode_rows``), and an LRU of scored
+postings (the shared_buffers-resident-segment analog). Each entry holds
+a term's doc ids and its impacts (``kernel.impacts``: BM25 per posting
+with query frequency 1), computed from one snapshot's N, avgdl and df,
+so a repeated query term skips the parquet read, the decode and the
+per-posting formula; a query only scales by its query frequencies and
+accumulates (the reference caches IDF per query, query.c:52-158).
+Results are identical to ``topk_bmw`` (same kernel, same tie-break;
+oracle-gated).
+
+Where each reader gets index state: a handle (``LocalIndex``, or its
+Spark subclass ``BM25Index``) holds one ``local_commit.Snapshot``, and
+everything a query reads — config, N, avgdl, dfs, dead ids, the
+segment files — comes from the snapshot it takes at its start. A
+commit through a handle swaps that handle's snapshot; any other handle
+sees the commit after its ``refresh()``. The LRU belongs to one
+snapshot and empties when a query brings another.
 
 Scale boundary: the serving process reads the QUERY TERMS' posting
 rows only — work is O(sum of the query terms' pruned postings),
@@ -35,12 +43,9 @@ storage, serve from a host that mounts it or stay on the cluster path.
 
 from __future__ import annotations
 
-import os
 import queue
 import threading
 import time
-
-import numpy as np
 
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
@@ -49,178 +54,100 @@ from pg_textsearch_spark.index.codec import term_bucket
 from pg_textsearch_spark.operators.kernel import decode_rows, impacts, score_topk
 
 
-class LocalIndex:
-    """Spark-free index handle for serving processes.
+def _snap_attr(name: str):
+    return property(lambda self: getattr(self.snapshot, name),
+                    doc=f"``snapshot.{name}``")
 
-    Exposes the same stats surface a ``BM25Index`` does (manifest,
-    corpus stats, stamp/delete discipline) from the on-disk manifest
-    alone — a serving tier (one process per core, shared storage) can
-    ``fork``/spawn workers holding one of these without a JVM or a
-    SparkSession anywhere in the process. The reference's serving
-    architecture is exactly this shape: each backend scans local
-    segment files (src/segment/scan.c:59-178); Spark stays the
+
+class LocalIndex:
+    """Spark-free index handle for serving processes: everything it
+    reads (manifest, config, corpus stats, dfs, dead ids, segment files)
+    comes from ``snapshot``, one committed manifest
+    (``local_commit.Snapshot``), until ``refresh()`` swaps it — a serving
+    tier (one process per core, shared storage) can ``fork``/spawn
+    workers holding one of these without a JVM or a SparkSession
+    anywhere in the process. The reference's serving architecture is
+    exactly this shape: each backend scans local segment files
+    (src/segment/scan.c:59-178); Spark stays the
     build/maintenance/batch engine.
     """
 
     def __init__(self, index_dir: str):
-        import json
-
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "manifest.json")) as f:
-            self.manifest = json.load(f)
-        self.config: str = self.manifest["config"]
-        self.k1: float = self.manifest["k1"]
-        self.b: float = self.manifest["b"]
-        self.n_buckets: int = self.manifest["n_buckets"]
+        self.snapshot = local_commit.Snapshot.read(index_dir)
 
-    def _stamp(self):
-        return (
-            int(self.manifest.get("deleted_docs", 0)),
-            tuple(s["seg_id"] for s in self.manifest["segments"]),
-        )
+    def refresh(self) -> None:
+        """Re-read ``manifest.json`` and swap ``snapshot`` onto it. A
+        query that has already taken the old snapshot keeps it to the
+        end; the next one reads the new commit."""
+        self.snapshot = local_commit.Snapshot.read(self.index_dir)
 
-    @property
-    def num_docs(self) -> int:
-        return sum(s["num_docs"] for s in self.manifest["segments"]) - int(
-            self.manifest.get("deleted_docs", 0)
-        )
-
-    @property
-    def total_tokens(self) -> int:
-        return sum(
-            s["total_tokens"] for s in self.manifest["segments"]
-        ) - int(self.manifest.get("deleted_tokens_quantized", 0))
-
-    @property
-    def avgdl(self) -> float:
-        n = self.num_docs
-        return (self.total_tokens / n) if n else 0.0
+    manifest = _snap_attr("manifest")
+    config = _snap_attr("config")
+    k1 = _snap_attr("k1")
+    b = _snap_attr("b")
+    n_buckets = _snap_attr("n_buckets")
+    num_docs = _snap_attr("num_docs")
+    total_tokens = _snap_attr("total_tokens")
+    avgdl = _snap_attr("avgdl")
 
     def has_deletes(self) -> bool:
-        return int(self.manifest.get("deleted_docs", 0)) > 0
-
-
-def _parquet_files(root: str) -> list[str]:
-    out = []
-    for dirpath, _dirs, files in os.walk(root):
-        out.extend(
-            os.path.join(dirpath, f)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return sorted(out)
+        return self.snapshot.has_deletes
 
 
 class ServingIndex:
-    """Driver-side reader over a BM25Index's files: memoized file
-    listings + dictionary lookups, pyarrow row-group pruning by term.
-
-    Wraps (and stays consistent with) a ``BM25Index`` handle — reuses
-    its manifest for stats and its stamp discipline for invalidation.
-    """
+    """Driver-side reader over a handle's files (a ``LocalIndex`` or a
+    ``BM25Index``): pyarrow row-group pruning by term, and an LRU of
+    scored postings that belongs to one snapshot of the handle."""
 
     def __init__(
         self,
-        index: "BM25Index",  # noqa: F821 (doc type)
+        index: LocalIndex,
         cache_postings: int = 20_000_000,
     ):
         self.index = index
-        self._files: dict[tuple, list[str]] | None = None
-        self._df_cache: dict[str, int] = {}
-        self._dead: np.ndarray | None = None
-        self._stamp = None
         #: scored-postings LRU: term -> ``{"ids", "s"}``, the term's doc
-        #: ids and impacts under the current stamp. The serving analog
-        #: of the reference's shared_buffers-resident segment pages —
-        #: repeated/overlapping query terms skip the parquet read, the
-        #: block decode and the per-posting score. Budgeted by TOTAL
-        #: POSTINGS (16 B each: int64 id + float64 impact),
-        #: stamp-invalidated like every other cache here. 0 disables.
+        #: ids and impacts under snapshot ``_post_snap``. The serving
+        #: analog of the reference's shared_buffers-resident segment
+        #: pages — repeated/overlapping query terms skip the parquet
+        #: read, the block decode and the per-posting score. Budgeted by
+        #: TOTAL POSTINGS (16 B each: int64 id + float64 impact), emptied
+        #: when a query brings another snapshot. 0 disables.
         self._post_cache_cap = int(cache_postings)
         self._post_cache: dict[str, dict] = {}
         self._post_cache_size = 0
-        #: guards the mutable caches — a ServingIndex is shared across
-        #: serving threads (``topk_auto`` keeps one per handle); cache
-        #: entries themselves are immutable once inserted, so readers
-        #: only need the lock for the dict lookups, never for array
-        #: access
+        self._post_snap = None
+        #: guards the LRU — a ServingIndex is shared across serving
+        #: threads (``topk_auto`` keeps one per handle); cache entries
+        #: themselves are immutable once inserted, so readers only need
+        #: the lock for the dict lookups, never for array access
         self._lock = threading.Lock()
 
-    def _check_stamp(self):
-        """Drop every cache when the index stamp moved; -> the stamp."""
-        s = self.index._stamp()
-        if s != self._stamp:
-            with self._lock:
-                self._files = None
-                self._df_cache = {}
-                self._dead = None
-                self._post_cache = {}
-                self._post_cache_size = 0
-                self._stamp = s
-        return s
+    def term_dfs(self, terms: list[str], snap=None) -> dict[str, int]:
+        """Unified df per term from ``snap``'s df memo (default: the
+        handle's current snapshot)."""
+        return (snap or self.index.snapshot).term_dfs(terms)
 
-    def _bucket_files(self, table: str, bucket: int) -> list[str]:
-        self._check_stamp()
-        key = (table, bucket)
-        with self._lock:
-            if self._files is None:
-                self._files = {}
-            cached = self._files.get(key)
-        if cached is not None:
-            return cached
-        files: list[str] = []
-        base = self.index.index_dir
-        for seg in self.index.manifest["segments"]:
-            d = os.path.join(
-                base, table, f"seg={seg['seg_id']}", f"bucket={bucket}"
-            )
-            if os.path.isdir(d):
-                files.extend(_parquet_files(d))
-        with self._lock:
-            if self._files is None:
-                self._files = {}
-            self._files.setdefault(key, files)
-        return files
-
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Unified df per term (``local_commit.read_term_dfs``, the
-        lookup ``BM25Index`` makes), memoized per stamp."""
-        return {t: v for t, v in self._dfs(terms).items() if v > 0}
-
-    def _dfs(self, terms: list[str]) -> dict[str, int]:
-        """``term_dfs`` with zero-df terms kept."""
-        self._check_stamp()
-        with self._lock:
-            missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            got = local_commit.read_term_dfs(
-                self.index.index_dir, self.index.manifest, missing
-            )
-            with self._lock:
-                self._df_cache.update({t: got.get(t, 0) for t in missing})
-        with self._lock:
-            return {t: self._df_cache.get(t, 0) for t in terms}
-
-    def posting_blocks_flat(self, terms: list[str]):
-        """The terms' posting rows across every segment as one
-        single-chunk Arrow table (``term``, ``blocks``) in bucket-file
-        order, or None when no file holds a bucket of theirs. File
-        reads run in a small thread pool (pyarrow releases the GIL),
-        overlapping row-group IO across buckets/segments."""
+    def posting_blocks_flat(self, terms: list[str], snap=None):
+        """The terms' posting rows across every segment of ``snap``
+        (default: the handle's current snapshot) as one single-chunk
+        Arrow table (``term``, ``blocks``) in bucket-file order, or None
+        when no file holds a bucket of theirs. File reads run in a small
+        thread pool (pyarrow releases the GIL), overlapping row-group IO
+        across buckets/segments."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        snap = snap or self.index.snapshot
         by_bucket: dict[int, list[str]] = {}
         for t in terms:
-            by_bucket.setdefault(
-                term_bucket(t, self.index.n_buckets), []
-            ).append(t)
+            by_bucket.setdefault(term_bucket(t, snap.n_buckets), []).append(t)
         jobs = [
             (f, ts)
             for b, ts in by_bucket.items()
-            for f in self._bucket_files("postings", b)
+            for f in snap.bucket_files("postings", b)
         ]
         if not jobs:
             return None
@@ -235,26 +162,28 @@ class ServingIndex:
             tabs = list(pool.map(read, jobs))
         return pa.concat_tables(tabs, promote_options="default").combine_chunks()
 
-    def posting_flat_decoded(self, terms: list[str]) -> dict:
+    def posting_flat_decoded(self, terms: list[str], snap=None) -> dict:
         """term -> ``{"ids": int64 doc ids, "s": float64 impacts}`` for
-        the terms that have postings. A miss reads the rows
+        the terms of ``snap`` (default: the handle's current snapshot)
+        that have live postings. A miss reads the rows
         (``posting_blocks_flat``), decodes them in one call
         (``kernel.decode_rows``) and scores each term once
-        (``kernel.impacts``) from this stamp's df, N and avgdl; the
-        entry lives in the LRU (see __init__) until the stamp moves."""
-        stamp = self._check_stamp()
+        (``kernel.impacts``) from ``snap``'s df, N and avgdl; the entry
+        lives in the LRU (see __init__) while queries bring ``snap``."""
+        snap = snap or self.index.snapshot
         _MISS = object()
         with self._lock:
+            if self._post_snap is not snap:
+                self._post_snap, self._post_cache = snap, {}
+                self._post_cache_size = 0
             got = {t: self._post_cache.get(t, _MISS) for t in terms}
         missing = [t for t, v in got.items() if v is _MISS]
         if missing:
             # read, decode and score OUTSIDE the lock (the expensive
             # part; concurrent misses on the same term duplicate work
             # but stay correct — entries are immutable)
-            ix = self.index
-            dfs = self._dfs(missing)
-            n, avgdl = ix.num_docs, ix.avgdl
-            rows = self.posting_blocks_flat(missing)
+            dfs = snap.term_dfs(missing)
+            rows = self.posting_blocks_flat(missing, snap)
             decoded = decode_rows(rows) if rows is not None else {}
             fresh: dict[str, dict | None] = {
                 t: {
@@ -262,51 +191,38 @@ class ServingIndex:
                     # so an evicted term's share is freed
                     "ids": e["ids"].copy() if len(decoded) > 1 else e["ids"],
                     "s": impacts(
-                        e["tfs"], e["fns"], bm25.idf(n, dfs[t]), avgdl,
-                        ix.k1, ix.b,
+                        e["tfs"], e["fns"], bm25.idf(snap.num_docs, dfs[t]),
+                        snap.avgdl, snap.k1, snap.b,
                     ),
                 }
-                for t, e in decoded.items()
+                for t, e in decoded.items() if t in dfs
             }
             for t in missing:
                 fresh.setdefault(t, None)  # negative entry
             with self._lock:
-                # impacts carry N, avgdl and df: an entry scored while
-                # the stamp moved must not outlive this call
-                if self._stamp == stamp and ix._stamp() == stamp:
+                # impacts carry snap's N, avgdl and df: they go in only
+                # while the LRU still belongs to snap
+                if self._post_snap is snap:
                     for t, entry in fresh.items():
                         if t not in self._post_cache:
                             self._post_cache[t] = entry
                             if entry is not None:
                                 self._post_cache_size += len(entry["ids"])
-                # simple budget: drop entries not used by this query
-                # when over cap (terms are Zipf — the working set
-                # re-warms in a handful of queries)
-                if self._post_cache_size > self._post_cache_cap:
-                    keep = {t: self._post_cache[t] for t in terms
-                            if self._post_cache.get(t) is not None}
-                    self._post_cache = dict(keep)
-                    self._post_cache_size = sum(
-                        len(v["ids"]) for v in keep.values()
-                    )
+                    # simple budget: drop entries not used by this query
+                    # when over cap (terms are Zipf — the working set
+                    # re-warms in a handful of queries)
+                    if self._post_cache_size > self._post_cache_cap:
+                        keep = {t: self._post_cache[t] for t in terms
+                                if self._post_cache.get(t) is not None}
+                        self._post_cache = dict(keep)
+                        self._post_cache_size = sum(
+                            len(v["ids"]) for v in keep.values()
+                        )
             got.update(fresh)
         return {
             t: v for t, v in got.items()
             if v is not None and v is not _MISS
         }
-
-    def dead_ids(self) -> np.ndarray | None:
-        """Sorted int64 array of the pending-delete doc ids, read once
-        per stamp; None when the index has no pending deletes."""
-        self._check_stamp()
-        dead = self._dead
-        if dead is None:
-            if not self.index.has_deletes():
-                dead = np.zeros(0, dtype=np.int64)
-            else:
-                dead = local_commit.read_deleted_ids(self.index.index_dir)
-            self._dead = dead
-        return dead if len(dead) else None
 
 
 def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = None):
@@ -315,23 +231,26 @@ def topk_serve(index, query: str, k: int = 10, _serving: ServingIndex | None = N
     Identical results to ``topk_bmw`` — same query tokenization, same
     IDF arithmetic, the same scoring kernel (``kernel.score_topk``)
     over the serving cache's impacts, same (score DESC, doc_id ASC)
-    tie-break. Returns plain rows (the serving shape); wrap with
-    ``spark.createDataFrame(rows, "rank int, doc_id bigint, score
-    double")`` when a DataFrame is needed.
+    tie-break. The query takes ``index.snapshot`` once and answers from
+    it alone, whatever commits land meanwhile. Returns plain rows (the
+    serving shape); wrap with ``spark.createDataFrame(rows, "rank int,
+    doc_id bigint, score double")`` when a DataFrame is needed.
     """
     sv = _serving or ServingIndex(index)
-    qtf = tokenize_query(query, index.config)
-    return _serve_rows(sv, qtf, sv.term_dfs(list(qtf)) if qtf else {}, k)
+    snap = index.snapshot
+    qtf = tokenize_query(query, snap.config)
+    dfs = sv.term_dfs(list(qtf), snap) if qtf else {}
+    return _serve_rows(sv, snap, qtf, dfs, k)
 
 
-def _serve_rows(sv: ServingIndex, qtf: dict, dfs: dict, k: int):
+def _serve_rows(sv: ServingIndex, snap, qtf: dict, dfs: dict, k: int):
     """``topk_serve`` past its df lookup: ``qtf`` the query's term
-    frequencies, ``dfs`` its terms' nonzero dfs."""
+    frequencies, ``dfs`` its terms' nonzero dfs under ``snap``."""
     terms = [t for t in qtf if t in dfs]
     if not terms:
         return []
-    dead = sv.dead_ids()
-    flat = sv.posting_flat_decoded(terms)
+    dead = snap.dead_ids()
+    flat = sv.posting_flat_decoded(terms, snap)
     if not flat:
         return []
     ids, scores = score_topk(
@@ -355,10 +274,9 @@ SERVE_MAX_POSTINGS = 2_000_000
 
 #: guards building the ServingIndex ``topk_auto`` keeps on each
 #: BM25Index handle (``index._serving``). On the handle, not in a dict
-#: keyed by id(index): two fresh single-segment indexes share stamp
-#: (0, (0,)), so CPython id reuse could answer from the wrong corpus,
-#: and such a dict would pin every handle (and its decode LRU) in
-#: memory. The ServingIndex invalidates its own caches on a new stamp
+#: keyed by id(index): CPython id reuse could answer from the wrong
+#: corpus, and such a dict would pin every handle (and its decode LRU)
+#: in memory. The ServingIndex empties its LRU on a new snapshot
 _SERVING_LOCK = threading.Lock()
 
 
@@ -642,17 +560,18 @@ def topk_auto(index, query: str, k: int = 10):
     (``topk_serve`` over the handle's ServingIndex, reused across
     calls) when the query terms' dfs sum to at most
     ``SERVE_MAX_POSTINGS``, else run the distributed plan
-    (``bmw.topk_bmw``). Returns a Spark DataFrame either way (served
-    rows are lifted via local_topk_df — k rows, JVM-local, near-free
-    to act on)."""
+    (``bmw.topk_bmw``), both over the one snapshot the query takes.
+    Returns a Spark DataFrame either way (served rows are lifted via
+    local_topk_df — k rows, JVM-local, near-free to act on)."""
     from pg_textsearch_spark.operators.bmw import topk_bmw
 
     with _SERVING_LOCK:
         if index._serving is None:
             index._serving = ServingIndex(index)
         sv = index._serving
-    qtf = tokenize_query(query, index.config)
-    dfs = sv.term_dfs(list(qtf)) if qtf else {}
+    snap = index.snapshot
+    qtf = tokenize_query(query, snap.config)
+    dfs = sv.term_dfs(list(qtf), snap) if qtf else {}
     if sum(dfs.values()) <= SERVE_MAX_POSTINGS:
-        return local_topk_df(index.spark, _serve_rows(sv, qtf, dfs, k))
-    return topk_bmw(index, query, k)
+        return local_topk_df(index.spark, _serve_rows(sv, snap, qtf, dfs, k))
+    return topk_bmw(index, query, k, _snap=snap)

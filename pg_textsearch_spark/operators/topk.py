@@ -12,19 +12,20 @@ reference: test/sql/validation.sql:186-205):
   kernel (operators/kernel.py) per run inside an Arrow UDF — decodes
   each posting block once, emits exact f64 totals (reference: bmw.c).
 
-Query lifecycle (SURVEY.md §3.1 Spark equivalent): tokenize the query
-driver-side -> look up df per term in the driver, a pyarrow point read
-of the terms' dictionary buckets with no Spark job
-(``local_commit.read_term_dfs``, memoized per handle) -> compute IDF
-driver-side -> broadcast (term, idf, query_freq) -> scan postings with
-bucket+term pushdown (partition pruning plays the dictionary binary
-search's role) -> score -> ORDER BY score DESC, doc_id ASC LIMIT k
-(TakeOrderedAndProject).
+Query lifecycle (SURVEY.md §3.1 Spark equivalent): take the handle's
+snapshot (``local_commit.Snapshot``: one committed manifest, its N,
+avgdl, dfs, dead ids and files; every step below reads it and no
+other) -> tokenize the query driver-side -> look up df per term in the
+driver, a pyarrow point read of the terms' dictionary buckets with no
+Spark job (``local_commit.read_term_dfs``, memoized per snapshot) ->
+compute IDF driver-side -> broadcast (term, idf, query_freq) -> scan
+postings with bucket+term pushdown (partition pruning plays the
+dictionary binary search's role) -> score -> ORDER BY score DESC,
+doc_id ASC LIMIT k (TakeOrderedAndProject).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -36,10 +37,9 @@ from pyspark.sql import functions as F
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.fieldnorm import FIELDNORM_DECODE_TABLE
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
-from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import term_bucket
 from pg_textsearch_spark.index.codec import decompress_blocks
-from pg_textsearch_spark.index.storage import ParquetDirStore
+from pg_textsearch_spark.operators.serve import LocalIndex, local_topk_df
 from pg_textsearch_spark.shipping import ensure_shipped
 
 
@@ -76,114 +76,63 @@ def in_list(expr: str, values) -> Column:
     return F.expr(f"{expr} IN ({', '.join(lits)})")
 
 
-class BM25Index:
-    """Handle over an on-disk index (manifest + postings + doclen)."""
+class BM25Index(LocalIndex):
+    """Spark handle over an on-disk index (manifest + postings +
+    doclen): ``LocalIndex``'s snapshot reads plus the Spark scans of
+    each snapshot."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         # every read path runs Python UDFs on the workers
         ensure_shipped(spark)
+        super().__init__(index_dir)
         self.spark = spark
-        self.index_dir = index_dir
-        # existence probes route through the store abstraction (not
-        # os.path on joined paths) so a non-local SegmentStore can't
-        # silently answer "absent" for data that exists — see
-        # SegmentStore.exists. Reads themselves still use path-based
-        # parquet scans (this handle is the ParquetDirStore reader);
-        # an Iceberg-backed handle is a separate reader by design.
-        self.store = ParquetDirStore(index_dir)
-        with open(os.path.join(index_dir, "manifest.json")) as f:
-            self.manifest = json.load(f)
-        self.config: str = self.manifest["config"]
-        self.k1: float = self.manifest["k1"]
-        self.b: float = self.manifest["b"]
-        self.n_buckets: int = self.manifest["n_buckets"]
-        # per-handle caches (the reference's per-query fn_extra IDF
-        # cache, query.c:52-158, made per-handle): term -> df results.
-        # Invalidated whenever the segment set or delete stats change.
-        self._df_cache: dict[str, int] = {}
-        self._pruned_cache: dict = {}
-        # the sorted dead ids the kernel zeroes (deleted_id_array)
-        self._dead_ids: np.ndarray | None = None
-        self._cache_stamp = None
-        self._postings_df: DataFrame | None = None
+        #: (snapshot, its memoized scans: "postings" -> the DataFrame
+        #: over its segments, term tuple -> ``pruned_postings``); the
+        #: scans carry their file listing (InMemoryFileIndex), which a
+        #: rebuild per query would re-list
+        self._scans: tuple = (None, {})
         # serve.topk_auto's in-process reader, built on first use
         self._serving = None
 
-    def _stamp(self):
-        return (
-            int(self.manifest.get("deleted_docs", 0)),
-            tuple(s["seg_id"] for s in self.manifest["segments"]),
-        )
+    def _scan_memo(self, snap) -> dict:
+        if self._scans[0] is not snap:
+            self._scans = (snap, {})
+        return self._scans[1]
 
-    def _check_stamp(self) -> None:
-        s = self._stamp()
-        if s != self._cache_stamp:
-            self._df_cache = {}
-            self._pruned_cache = {}
-            self._dead_ids = None
-            self._postings_df = None
-            self._cache_stamp = s
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """Unified doc_freq per term across segments (reference:
+        bm25.c:46-111), from the snapshot's df memo."""
+        return self.snapshot.term_dfs(terms)
 
-    # -- corpus stats (the metapage read; reference: bm25.c:155-191) ----
-    # pending deletes reduce N immediately and total_tokens by the
-    # quantized dead lengths (reference merge.c:842-866 semantics)
-    @property
-    def num_docs(self) -> int:
-        return sum(s["num_docs"] for s in self.manifest["segments"]) - int(
-            self.manifest.get("deleted_docs", 0)
-        )
-
-    @property
-    def total_tokens(self) -> int:
-        return sum(s["total_tokens"] for s in self.manifest["segments"]) - int(
-            self.manifest.get("deleted_tokens_quantized", 0)
-        )
+    def query_weights(self, query: str) -> dict[str, tuple[float, int]]:
+        """query text -> {term: (idf, query_freq)} — float64 IDF."""
+        return self.snapshot.query_weights(query)
 
     def deleted_ids(self):
-        """doc_ids marked deleted (the alive-bitset analog); empty DF
-        when no deletes are pending. Only a genuinely ABSENT deletes
-        table maps to "no deletes" — a failing read (corrupt footer,
-        permission error) must raise, or deleted docs would silently
-        resurrect in results."""
-        if not self.store.exists("deletes"):
+        """doc_ids marked deleted (the alive-bitset analog) as a
+        DataFrame; empty when the snapshot has no pending deletes. Under
+        committed deletes a missing or unreadable table raises, so a
+        deleted doc never resurrects."""
+        if not self.snapshot.has_deletes:
             return self.spark.createDataFrame([], "doc_id bigint")
         path = os.path.join(self.index_dir, "deletes")
         return self.spark.read.parquet(path).select("doc_id").distinct()
 
-    def deleted_id_array(self) -> np.ndarray:
-        """The ``deletes`` table as a sorted unique int64 array, read
-        in-process (``local_commit.read_deleted_ids``): the dead set
-        the scoring kernel zeroes. Memoized per handle like the df
-        cache (the stamp counts deleted docs), so repeated queries under
-        pending deletes read the deletes table once."""
-        self._check_stamp()
-        if self._dead_ids is None:
-            self._dead_ids = local_commit.read_deleted_ids(self.index_dir)
-        return self._dead_ids
-
-    def has_deletes(self) -> bool:
-        return int(self.manifest.get("deleted_docs", 0)) > 0
-
-    @property
-    def avgdl(self) -> float:
-        n = self.num_docs
-        return (self.total_tokens / n) if n else 0.0
-
-    def postings(self) -> DataFrame:
-        # memoized per handle: the DataFrame carries the file listing
-        # (InMemoryFileIndex) — rebuilding it per query re-lists every
-        # bucket directory, a measurable slice of warm-query latency
-        self._check_stamp()
-        if self._postings_df is not None:
-            return self._postings_df
-        # basePath keeps seg/bucket partition columns visible
-        root = os.path.join(self.index_dir, "postings")
-        self._postings_df = self.spark.read.schema(POSTINGS_READ_SCHEMA).option(
-            "basePath", root
-        ).parquet(
-            *[os.path.join(root, f"seg={s['seg_id']}") for s in self.manifest["segments"]]
-        )
-        return self._postings_df
+    def postings(self, snap=None) -> DataFrame:
+        """Postings scan over the segments of ``snap`` (default: the
+        handle's snapshot)."""
+        snap = snap or self.snapshot
+        memo = self._scan_memo(snap)
+        if "postings" not in memo:
+            # basePath keeps seg/bucket partition columns visible
+            root = os.path.join(self.index_dir, "postings")
+            memo["postings"] = self.spark.read.schema(
+                POSTINGS_READ_SCHEMA
+            ).option("basePath", root).parquet(*[
+                os.path.join(root, f"seg={s['seg_id']}")
+                for s in snap.manifest["segments"]
+            ])
+        return memo["postings"]
 
     def doclen(self) -> DataFrame:
         root = os.path.join(self.index_dir, "doclen")
@@ -193,31 +142,32 @@ class BM25Index:
             *[os.path.join(root, f"seg={s['seg_id']}") for s in self.manifest["segments"]]
         )
 
-    def pruned_postings(self, terms: list[str]) -> DataFrame:
-        """Postings scan restricted to the query terms.
+    def pruned_postings(self, terms: list[str], snap=None) -> DataFrame:
+        """Postings scan of ``snap`` (default: the handle's snapshot)
+        restricted to the query terms.
 
         The bucket IN (...) predicate prunes partition directories
         (file-level skip, the dictionary-lookup analog); term IN (...)
         is pushed to the Parquet row-group scan. Both are ``in_list``
         predicates, so building the plan costs a constant few JVM calls
         however many terms a batch has. The plan is memoized per term
-        set (stamp-invalidated like the df cache), so a repeated query
-        also skips re-analysis.
+        set and snapshot, so a repeated query also skips re-analysis.
         """
-        self._check_stamp()
+        snap = snap or self.snapshot
+        memo = self._scan_memo(snap)
         key = tuple(sorted(set(terms)))
-        cached = self._pruned_cache.get(key)
+        cached = memo.get(key)
         if cached is not None:
             return cached
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        buckets = sorted({term_bucket(t, snap.n_buckets) for t in terms})
         df = (
-            self.postings()
+            self.postings(snap)
             .filter(in_list("bucket", buckets))
             .filter(in_list("term", key))
         )
-        if len(self._pruned_cache) >= 4096:  # plans are small; bound anyway
-            self._pruned_cache.clear()
-        self._pruned_cache[key] = df
+        if len(memo) >= 4096:  # plans are small; bound anyway
+            memo.clear()
+        memo[key] = df
         return df
 
     def keymap(self) -> DataFrame | None:
@@ -263,40 +213,6 @@ class BM25Index:
         return local.join(F.broadcast(pruned_km), "doc_id", "left").select(
             *out_cols
         )
-
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Unified doc_freq per term across segments (reference:
-        bm25.c:46-111), memoized per handle — a repeated or overlapping
-        query skips the dictionary read entirely (the reference's
-        fn_extra IDF cache, query.c:52-158). Misses are one in-process
-        point read of the dictionary files
-        (``local_commit.read_term_dfs``); no Spark job."""
-        self._check_stamp()
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            fetched = local_commit.read_term_dfs(
-                self.index_dir, self.manifest, missing
-            )
-            for t in missing:
-                # cache zero-df results too: absent terms are the
-                # common case for web queries and must not refetch
-                self._df_cache[t] = fetched.get(t, 0)
-        return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
-
-    def query_weights(self, query: str) -> dict[str, tuple[float, int]]:
-        """query text -> {term: (idf, query_freq)} — float64 IDF."""
-        qtf = tokenize_query(query, self.config)
-        if not qtf:
-            return {}
-        dfs = self.term_dfs(list(qtf))
-        n = self.num_docs
-        out = {}
-        for term, qf in qtf.items():
-            df = dfs.get(term, 0)
-            if df == 0:
-                continue  # absent terms contribute nothing
-            out[term] = (bm25.idf(n, df), qf)
-        return out
 
 
 _FLAT_SCHEMA = (
@@ -365,7 +281,8 @@ def topk_exhaustive(
     reproduces it bit-for-bit modulo summation order.
     """
     spark = index.spark
-    weights = index.query_weights(query)
+    snap = index.snapshot
+    weights = snap.query_weights(query)
     if not weights:
         empty = spark.createDataFrame(
             [], "rank int, doc_id bigint, score double"
@@ -379,25 +296,22 @@ def topk_exhaustive(
         [(t, float(idf), int(qf)) for t, (idf, qf) in weights.items()],
         "term string, idf double, query_freq int",
     )
-    pruned = index.pruned_postings(list(weights))
-    flat = decode_postings_flat(pruned)
-    if index.has_deletes():
+    flat = decode_postings_flat(index.pruned_postings(list(weights), snap))
+    if snap.has_deletes:
         # alive filtering (reference: bmw.c:542-548 via alive bitset)
         flat = flat.join(
             F.broadcast(index.deleted_ids()), "doc_id", "left_anti"
         )
-
-    avgdl = F.lit(float(index.avgdl))
     scored = flat.join(F.broadcast(wdf), "term").select(
         "doc_id",
         bm25.bm25_score_expr(
             tf=F.col("tf").cast("double"),
             dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
             idf=F.col("idf"),
-            avgdl=avgdl,
+            avgdl=F.lit(float(snap.avgdl)),
             query_freq=F.col("query_freq").cast("double"),
-            k1=index.k1,
-            b=index.b,
+            k1=snap.k1,
+            b=snap.b,
         ).alias("term_score"),
     )
     doc_scores = scored.groupBy("doc_id").agg(F.sum("term_score").alias("score"))
@@ -418,8 +332,6 @@ def topk_exhaustive(
         # k-row broadcast; ranked is rebuilt as a local relation so the
         # top-k job is not re-run by the join.
         rows = ranked.collect()
-        from pg_textsearch_spark.operators.serve import local_topk_df
-
         ranked = local_topk_df(
             spark, [(r["rank"], r["doc_id"], r["score"]) for r in rows]
         )
@@ -465,7 +377,8 @@ def topk_filtered(
         ).select("doc_id")
     else:
         allowed = allowed.select("doc_id").distinct()
-    weights = index.query_weights(query)
+    snap = index.snapshot
+    weights = snap.query_weights(query)
     if not weights:
         return spark.createDataFrame(
             [], "rank int, doc_id bigint, score double"
@@ -474,23 +387,22 @@ def topk_filtered(
         [(t, float(idf), int(qf)) for t, (idf, qf) in weights.items()],
         "term string, idf double, query_freq int",
     )
-    flat = decode_postings_flat(index.pruned_postings(list(weights)))
-    if index.has_deletes():
+    flat = decode_postings_flat(index.pruned_postings(list(weights), snap))
+    if snap.has_deletes:
         flat = flat.join(
             F.broadcast(index.deleted_ids()), "doc_id", "left_anti"
         )
     flat = flat.join(allowed, "doc_id", "semi")
-    avgdl = F.lit(float(index.avgdl))
     scored = flat.join(F.broadcast(wdf), "term").select(
         "doc_id",
         bm25.bm25_score_expr(
             tf=F.col("tf").cast("double"),
             dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
             idf=F.col("idf"),
-            avgdl=avgdl,
+            avgdl=F.lit(float(snap.avgdl)),
             query_freq=F.col("query_freq").cast("double"),
-            k1=index.k1,
-            b=index.b,
+            k1=snap.k1,
+            b=snap.b,
         ).alias("term_score"),
     )
     doc_scores = scored.groupBy("doc_id").agg(
@@ -527,7 +439,8 @@ def topk_batch(
 
     A sweep of uncached terms runs two Spark jobs: the scan-and-score
     job's shuffle stage and its result stage. The df lookup reads the
-    dictionary files in the driver (``BM25Index.term_dfs``). Every
+    dictionary files in the driver (the snapshot's ``term_dfs``), and
+    the whole sweep reads the one snapshot it takes at its start. Every
     term-list predicate is an ``in_list``, so plan building costs the
     same for 10 terms or 1,000.
 
@@ -539,8 +452,9 @@ def topk_batch(
     spark = index.spark
     from pg_textsearch_spark.operators.bmw import _score_batch_run
 
+    snap = index.snapshot
     per_query = {
-        str(qid): tokenize_query(qtext, index.config)
+        str(qid): tokenize_query(qtext, snap.config)
         for qid, qtext in queries.items()
     }
     if len(per_query) != len(queries):
@@ -553,11 +467,10 @@ def topk_batch(
     empty = "query_id string, rank int, doc_id bigint, score double"
     if not all_terms:
         return spark.createDataFrame([], empty)
-    dfs = index.term_dfs(all_terms)
+    dfs = snap.term_dfs(all_terms)
     if not dfs:
         return spark.createDataFrame([], empty)
-    n = index.num_docs
-    idfs = {t: bm25.idf(n, df) for t, df in dfs.items()}
+    idfs = {t: bm25.idf(snap.num_docs, df) for t, df in dfs.items()}
     # per query, its live terms with their query frequencies
     qtfs = [
         (qid, live)
@@ -565,14 +478,16 @@ def topk_batch(
         if (live := [(t, int(qf)) for t, qf in qtf.items() if t in idfs])
     ]
     live_terms = sorted(idfs)
-    pruned = index.pruned_postings(live_terms).select("term", "run", "blocks")
+    pruned = index.pruned_postings(live_terms, snap).select(
+        "term", "run", "blocks"
+    )
 
     dead_bc = None
-    if index.has_deletes():
-        dead_bc = spark.sparkContext.broadcast(index.deleted_id_array())
+    if snap.has_deletes:
+        dead_bc = spark.sparkContext.broadcast(snap.dead_ids())
 
     kk = int(k)
-    k1, b, avgdl = index.k1, index.b, index.avgdl
+    k1, b, avgdl = snap.k1, snap.b, snap.avgdl
 
     def score_run(table):
         dead = dead_bc.value if dead_bc is not None else None

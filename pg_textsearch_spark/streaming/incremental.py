@@ -134,6 +134,5 @@ def update_docs(
         key_col=key_col,
         compact=compact,
     )
-    index.manifest = IndexWriter(index.index_dir).read_manifest()
-    index._check_stamp()
+    index.refresh()
     return out

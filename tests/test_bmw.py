@@ -332,13 +332,13 @@ def test_topk_filtered_doc_key_requires_keymap(zipf_index):
 def test_serve_overflow_same_stamp_indexes_do_not_alias(
     spark, tmp_path_factory,
 ):
-    """Two fresh single-segment indexes share stamp (0, (0,)), which
-    does NOT identify the index directory: a ServingIndex cache keyed
-    by id(index) and stamp could, after CPython id reuse, serve top-k
-    from the WRONG corpus. ``topk_auto`` keeps its ServingIndex on the
-    handle itself; this pins that two same-stamp indexes over
-    different corpora answer from their own postings, each through
-    its own cached ServingIndex."""
+    """Two fresh single-segment indexes share their segment ids and
+    delete count, which do NOT identify the index directory: a
+    ServingIndex cache keyed by id(index) and those could, after
+    CPython id reuse, serve top-k from the WRONG corpus. ``topk_auto``
+    keeps its ServingIndex on the handle itself; this pins that two
+    such indexes over different corpora answer from their own
+    postings, each through its own cached ServingIndex."""
     from pg_textsearch_spark.operators.serve import ServingIndex, topk_auto
 
     base = tmp_path_factory.mktemp("alias")
@@ -350,7 +350,11 @@ def test_serve_overflow_same_stamp_indexes_do_not_alias(
         spark, [(i + 100, f"banana grove doc{i}") for i in range(1, 9)],
         str(base / "b"),
     )
-    assert idx_a._stamp() == idx_b._stamp()  # the aliasing precondition
+    def shape(idx):
+        m = idx.manifest
+        return m.get("deleted_docs", 0), [s["seg_id"] for s in m["segments"]]
+
+    assert shape(idx_a) == shape(idx_b)  # the aliasing precondition
     got_a = topk_auto(idx_a, "apple", 3).collect()
     got_b = topk_auto(idx_b, "banana", 3).collect()
     # and the cross queries: each corpus lacks the other's term

@@ -53,7 +53,7 @@ def _kernel(idx, query, k):
     weights = idx.query_weights(query)
     sv = ServingIndex(idx)
     flat = sv.posting_flat_decoded(list(weights))
-    dead = sv.dead_ids()
+    dead = idx.snapshot.dead_ids()
     rows = idx.pruned_postings(list(weights)).select("term", "blocks")
     decoded = {
         t: {"ids": e["ids"], "s": kernel.impacts(
