@@ -164,12 +164,15 @@ def score_topk(postings, k: int, dead=None):
             s_parts.append(s if qf == 1 else s * qf)
     if not ids_parts:
         return _EMPTY
+    # concatenate always copies: the key below may reuse ``ids`` in
+    # place, never a caller's (the serving cache's entries are shared)
     ids = np.concatenate(ids_parts)
     s64 = np.concatenate(s_parts)
     lo, hi = int(ids.min()), int(ids.max())
     if hi - lo < DENSE_SPAN * len(ids):
         uids = None
-        totals = np.bincount(ids - lo, weights=s64)
+        ids -= lo
+        totals = np.bincount(ids, weights=s64)
     else:
         uids, inv = np.unique(ids, return_inverse=True)
         totals = np.bincount(inv, weights=s64)

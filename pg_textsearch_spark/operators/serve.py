@@ -43,7 +43,6 @@ storage, serve from a host that mounts it or stay on the cluster path.
 
 from __future__ import annotations
 
-import queue
 import threading
 import time
 
@@ -132,7 +131,8 @@ class ServingIndex:
         """The terms' posting rows across every segment of ``snap``
         (default: the handle's current snapshot) as one single-chunk
         Arrow table (``term``, ``blocks``) in bucket-file order, or None
-        when no file holds a bucket of theirs. File reads run in a small
+        when no file holds a bucket of theirs. One file (the usual miss:
+        one term, one segment) is read inline; several run in a small
         thread pool (pyarrow releases the GIL), overlapping row-group IO
         across buckets/segments."""
         from concurrent.futures import ThreadPoolExecutor
@@ -158,6 +158,8 @@ class ServingIndex:
                 f, columns=["term", "blocks"], filters=[("term", "in", ts)]
             )
 
+        if len(jobs) == 1:
+            return read(jobs[0]).combine_chunks()
         with ThreadPoolExecutor(min(8, len(jobs))) as pool:
             tabs = list(pool.map(read, jobs))
         return pa.concat_tables(tabs, promote_options="default").combine_chunks()
@@ -280,22 +282,29 @@ SERVE_MAX_POSTINGS = 2_000_000
 _SERVING_LOCK = threading.Lock()
 
 
-def _pool_worker(index_dir: str, req_q, res_q) -> None:
-    """ServePool worker loop: Spark-free handle, sticky shard. One
-    ``None`` request shuts the worker down."""
+def _pool_worker(index_dir: str, conn) -> None:
+    """ServePool worker loop: Spark-free handle, sticky shard. A request,
+    its share of a batch ``[(i, query, k), ...]``, gets one reply
+    ``[(i, rows, err, seconds), ...]``; a failing query is an error
+    entry. ``None`` or a closed pipe shuts the worker down."""
     li = LocalIndex(index_dir)
     sv = ServingIndex(li)
     while True:
-        item = req_q.get()
-        if item is None:
-            return
-        qid, query, k = item
-        t0 = time.perf_counter()
         try:
-            rows = topk_serve(li, query, k, _serving=sv)
-            res_q.put((qid, rows, None, time.perf_counter() - t0))
-        except Exception as exc:  # surface, never wedge the pool
-            res_q.put((qid, None, repr(exc), time.perf_counter() - t0))
+            share = conn.recv()
+        except EOFError:
+            return
+        if share is None:
+            return
+        out = []
+        for i, query, k in share:
+            t0 = time.perf_counter()
+            try:
+                rows, err = topk_serve(li, query, k, _serving=sv), None
+            except Exception as exc:  # surface, never wedge the pool
+                rows, err = None, repr(exc)
+            out.append((i, rows, err, time.perf_counter() - t0))
+        conn.send(out)
 
 
 class ServePool:
@@ -310,17 +319,15 @@ class ServePool:
     adding hosts. The router process holds only a dictionary-df cache
     (ServingIndex term_dfs) — routing never touches postings.
 
-    Results are identical to ``topk_serve`` (same handle type, same
-    kernel). Use as a context manager::
+    Each worker has its own pipe: ``search_many`` sends it its share of
+    the batch as one message and reads back one reply. Results are
+    identical to ``topk_serve`` (same handle type, same kernel). Use as
+    a context manager::
 
         with ServePool(index_dir, n_workers=8) as pool:
             rows = pool.search("hello world", k=10)
             results = pool.search_many(["q1 text", "q2 text"])
     """
-
-    #: result-queue poll interval: how often a waiting dispatcher checks
-    #: that the workers owning its pending queries are still alive
-    POLL_S = 0.5
 
     def __init__(self, index_dir: str, n_workers: int = 8):
         import multiprocessing as mp
@@ -330,34 +337,31 @@ class ServePool:
         self._local = LocalIndex(index_dir)
         self._router = ServingIndex(self._local)
         ctx = mp.get_context("spawn")
-        self._res_q = ctx.Queue()
-        self._req_qs = [ctx.Queue() for _ in range(self.n_workers)]
-        self._procs = [
-            ctx.Process(
-                target=_pool_worker,
-                args=(index_dir, self._req_qs[w], self._res_q),
-                daemon=True,
+        self._conns, self._procs = [], []
+        for _ in range(self.n_workers):
+            mine, theirs = ctx.Pipe()
+            p = ctx.Process(
+                target=_pool_worker, args=(index_dir, theirs), daemon=True
             )
-            for w in range(self.n_workers)
-        ]
-        for p in self._procs:
             p.start()
-        self._next_qid = 0
-        #: in-flight requests per worker — the load signal for
-        #: two-choice routing (dispatch increments, drain decrements)
+            # only the worker holds its end: its death reads as EOF here
+            theirs.close()
+            self._conns.append(mine)
+            self._procs.append(p)
+        #: queries routed to each worker and not yet answered — the load
+        #: signal for two-choice routing (a reply zeroes it)
         self._outstanding = [0] * self.n_workers
-        self._qid_worker: dict[int, int] = {}
-        #: one dispatcher at a time: all workers answer into the ONE
-        #: shared _res_q, so two concurrent search_many calls would
-        #: drain each other's qids (A discards B's results as "stale"
-        #: and B blocks forever). The lock turns that wedge into
-        #: serialization — concurrent callers queue, results stay
-        #: correct. High-QPS multi-client use should batch queries
-        #: into search_many (that IS the tier's throughput shape)
-        #: rather than fan out threads over one pool.
-        import threading as _threading
-
-        self._dispatch_lock = _threading.Lock()
+        #: workers owing a reply; after a batch abandoned mid-drain (e.g.
+        #: on KeyboardInterrupt) the next one discards those replies
+        #: before it sends, so a worker never has two requests out and
+        #: no send blocks behind an unread reply
+        self._owed: set[int] = set()
+        #: one dispatcher at a time: a second concurrent search_many
+        #: would read the first one's replies off the same pipes.
+        #: Concurrent callers serialize; high-QPS multi-client use
+        #: should batch queries into search_many (that IS the tier's
+        #: throughput shape) rather than fan out threads over one pool.
+        self._dispatch_lock = threading.Lock()
 
     def route(self, query: str) -> int:
         """Two-choice sticky routing: the less-loaded of the query's
@@ -376,68 +380,48 @@ class ServePool:
         return self.search_many([query], k)[0]
 
     def search_many(self, queries: list[str], k: int = 10) -> list:
-        """Dispatch a batch across the sticky shards, gather results
-        in input order. Per-worker execution is serial (one process,
-        one cache); across workers it is parallel.
-
-        Thread-safe via ``_dispatch_lock``: only one dispatcher drains
-        the shared result queue at a time (see the lock's comment);
-        concurrent callers serialize instead of stealing each other's
-        results."""
+        """Route a batch across the sticky shards, send each worker its
+        share as one message, gather the replies in input order.
+        Per-worker execution is serial (one process, one cache); across
+        workers it is parallel. Thread-safe via ``_dispatch_lock``."""
         with self._dispatch_lock:
             return self._search_many_locked(queries, k)
 
     def _search_many_locked(self, queries: list[str], k: int) -> list:
-        pending = {}
-        shard_counts = [0] * self.n_workers
+        from multiprocessing.connection import wait
+
+        while self._owed:
+            self._recv(self._owed.pop())  # an abandoned batch's reply
+        self._outstanding = [0] * self.n_workers
+        shares: list[list] = [[] for _ in range(self.n_workers)]
         for i, q in enumerate(queries):
-            qid = self._next_qid
-            self._next_qid += 1
             w = self.route(q)
-            shard_counts[w] += 1
-            pending[qid] = i
-            # pool-level qid->worker map so the load counter is
-            # decremented even when a result is drained as "stale"
-            # by a LATER batch (caller abandoned this one mid-drain)
-            self._qid_worker[qid] = w
             self._outstanding[w] += 1
-            self._req_qs[w].put((qid, q, int(k)))
-        #: per-worker dispatch counts of the batch just sent —
+            shares[w].append((i, q, int(k)))
+        #: per-worker query counts of the batch just sent —
         #: observability for the skew bound (bench records max_shard)
-        self.last_shard_counts = shard_counts
+        self.last_shard_counts = list(self._outstanding)
+        for w, share in enumerate(shares):
+            if share:
+                try:
+                    self._conns[w].send(share)
+                except OSError:
+                    raise self._dead(w) from None
+                self._owed.add(w)
         out: list = [None] * len(queries)
         lats: list[float] = [0.0] * len(queries)
-        # drain EVERY outstanding qid before raising: workers always
-        # answer (a failing query posts an error tuple), so stopping at
-        # the first error would leave this batch's remaining results
-        # queued in _res_q and wedge the NEXT search_many with stale
-        # qids. Foreign qids (from a batch a previous caller abandoned
-        # mid-drain, e.g. on KeyboardInterrupt) are discarded.
+        # receive EVERY reply before raising a query's error, so a
+        # failed batch leaves no worker owing one
         first_err = None
-        while pending:
-            try:
-                qid, rows, err, lat = self._res_q.get(
-                    timeout=self.POLL_S
-                )
-            except queue.Empty:
-                # a worker that died (OOM kill, segfault) never answers
-                # its qids: fail loudly instead of blocking forever
-                self._raise_if_dead(
-                    {self._qid_worker.get(q) for q in pending}
-                )
-                continue
-            w = self._qid_worker.pop(qid, None)
-            if w is not None:
-                self._outstanding[w] -= 1
-            idx = pending.pop(qid, None)
-            if idx is None:
-                continue  # stale result from an abandoned batch
-            lats[idx] = lat
-            if err is not None:
-                if first_err is None:
-                    first_err = err
-            else:
-                out[idx] = rows
+        by_conn = {self._conns[w]: w for w in self._owed}
+        while self._owed:
+            for c in wait([self._conns[w] for w in self._owed]):
+                w = by_conn[c]
+                self._owed.discard(w)
+                for i, rows, err, lat in self._recv(w):
+                    out[i], lats[i] = rows, lat
+                    if err is not None and first_err is None:
+                        first_err = err
         #: per-query worker-side service seconds of the batch just
         #: drained (queueing excluded) — tail-latency observability
         self.last_latencies = lats
@@ -445,22 +429,35 @@ class ServePool:
             raise RuntimeError(f"ServePool worker failed: {first_err}")
         return out
 
-    def _raise_if_dead(self, workers) -> None:
-        for w in sorted(x for x in workers if x is not None):
-            p = self._procs[w]
-            if not p.is_alive():
-                raise RuntimeError(
-                    f"ServePool worker {w} (pid {p.pid}) died with exit "
-                    f"code {p.exitcode}; its queries will never answer"
-                )
+    def _recv(self, w: int) -> list:
+        """Worker ``w``'s reply; a dead worker raises at once."""
+        try:
+            reply = self._conns[w].recv()
+        except (EOFError, OSError):
+            raise self._dead(w) from None
+        self._outstanding[w] = 0
+        return reply
+
+    def _dead(self, w: int) -> RuntimeError:
+        p = self._procs[w]
+        p.join(timeout=1)
+        return RuntimeError(
+            f"ServePool worker {w} (pid {p.pid}) died with exit "
+            f"code {p.exitcode}; its queries will never answer"
+        )
 
     def close(self) -> None:
-        for q in self._req_qs:
-            q.put(None)
+        for c in self._conns:
+            try:
+                c.send(None)
+            except OSError:
+                pass  # already dead
         for p in self._procs:
             p.join(timeout=10)
             if p.is_alive():
                 p.terminate()
+        for c in self._conns:
+            c.close()
 
     def __enter__(self) -> "ServePool":
         return self

@@ -389,3 +389,25 @@ def test_topk_cut_matches_lexsort(k):
             want = _lexsort_topk(postings, k, dead)
             assert np.array_equal(got[0], want[0]), (n, got, want)
             assert np.array_equal(got[1], want[1]), (n, got, want)
+
+
+@pytest.mark.parametrize("n_terms", [1, 3])
+@pytest.mark.parametrize("span", [2_000, 1 << 40])  # dense key, sorted key
+@pytest.mark.parametrize("qf", [1, 2])
+def test_score_topk_leaves_inputs_unchanged(n_terms, span, qf):
+    # the serving cache hands score_topk its shared entries: no key,
+    # scaling or dead-doc step may write into a caller's array
+    rng = np.random.default_rng(n_terms * 7 + qf)
+    postings = [
+        (qf, np.sort(rng.choice(span, 300, replace=False)).astype(np.int64) + 5,
+         rng.uniform(0.1, 3.0, 300))
+        for _ in range(n_terms)
+    ]
+    dead = np.sort(postings[0][1][:4])
+    before = [(i.copy(), s.copy()) for _, i, s in postings], dead.copy()
+    want = _lexsort_topk(postings, 10, dead)
+    got = score_topk(postings, 10, dead=dead)
+    assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+    for (_, i, s), (i0, s0) in zip(postings, before[0]):
+        assert np.array_equal(i, i0) and np.array_equal(s, s0)
+    assert np.array_equal(dead, before[1])

@@ -481,23 +481,116 @@ def test_serve_pool_matches_topk_serve_and_routes_sticky(idx):
     assert single == got[0]
 
 
-def test_serve_pool_survives_worker_error(idx):
-    """Advisor r4: an error mid-batch must drain the batch's remaining
-    results (and discard stale ones) so the pool stays usable."""
-    from pg_textsearch_spark.operators.serve import ServePool
+POOL_VOCAB = ["join", "merge", "table", "window", "batch", "stream",
+              "filter", "sort", "query", "vector", "spark", "hash"]
+
+
+def test_serve_pool_survives_worker_error(idx, tmp_path):
+    """Advisor r4: a query that fails in its worker must not cost the
+    batch's other replies: the batch raises that failure only after
+    every reply is in, and the pool stays usable."""
+    import shutil
+    from pathlib import Path
+
+    from pg_textsearch_spark.index.codec import term_bucket
+    from pg_textsearch_spark.operators.serve import LocalIndex, ServePool
+
+    d = str(tmp_path / "broken")
+    shutil.copytree(idx.index_dir, d)
+    snap = LocalIndex(d).snapshot
+    bucket = {t: term_bucket(t, snap.n_buckets) for t in POOL_VOCAB}
+    bad = POOL_VOCAB[0]
+    good = [t for t in POOL_VOCAB if bucket[t] != bucket[bad]][:4]
+    queries = [good[0], good[1], bad, f"{good[2]} {good[3]}", good[0]]
+    files = [Path(f) for f in snap.bucket_files("postings", bucket[bad])]
+    saved = {f: f.read_bytes() for f in files}
+    with ServePool(d, n_workers=2) as pool:
+        # the router reads only dictionaries: the garbage postings file
+        # fails the bad query in its worker, on the cold read
+        for f in files:
+            f.write_bytes(b"not a parquet file")
+        try:
+            with pytest.raises(RuntimeError, match="worker failed: .*Parquet"):
+                pool.search_many(queries, k=5)
+            assert all(s > 0 for s in pool.last_latencies), "raised early"
+            assert not pool._owed
+        finally:
+            for f, data in saved.items():
+                f.write_bytes(data)
+        # the pool is NOT wedged: a fresh batch still answers correctly
+        again = pool.search_many(queries, k=5)
+    li = LocalIndex(d)
+    assert again == [topk_serve(li, q, 5) for q in queries]
+
+
+def test_serve_pool_replies_past_pipe_buffer(idx):
+    """Replies far larger than an OS pipe buffer (2,000 queries of up
+    to 100 rows on 2 workers, several MB each way) finish, and equal
+    topk_serve: a worker blocked writing its reply never wedges the
+    router."""
+    import threading
+
+    from pg_textsearch_spark.operators.serve import (
+        LocalIndex,
+        ServingIndex,
+        ServePool,
+    )
+
+    n = len(POOL_VOCAB)
+    queries = [
+        f"{POOL_VOCAB[i % n]} {POOL_VOCAB[(i // n) % n]} {POOL_VOCAB[i * 7 % n]}"
+        for i in range(2000)
+    ]
+    got: list = []
+    with ServePool(idx.index_dir, n_workers=2) as pool:
+        th = threading.Thread(
+            target=lambda: got.append(pool.search_many(queries, k=100)),
+            daemon=True,
+        )
+        th.start()
+        th.join(timeout=120)
+        assert not th.is_alive(), "search_many wedged on a full pipe"
+    li = LocalIndex(idx.index_dir)
+    sv = ServingIndex(li)
+    assert sum(len(r) for r in got[0]) > 100_000
+    assert got[0] == [topk_serve(li, q, 100, _serving=sv) for q in queries]
+
+
+def test_serve_pool_abandoned_batch(idx, monkeypatch):
+    """A caller that abandons a batch after its sends (here a
+    KeyboardInterrupt in the wait for replies) leaves workers owing
+    replies: the next batch discards them before it sends, and
+    returns its own answers."""
+    import multiprocessing.connection as mpc
+
+    from pg_textsearch_spark.operators.serve import (
+        LocalIndex,
+        ServingIndex,
+        ServePool,
+    )
+
+    first = [f"{t} {u}" for t, u in zip(POOL_VOCAB, POOL_VOCAB[1:])]
+    second = [f"{t} {u}" for t, u in zip(POOL_VOCAB[::-1], POOL_VOCAB[-2::-1])]
+    real_wait = mpc.wait
+    calls: list = []
+
+    def interrupted_wait(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise KeyboardInterrupt
+        return real_wait(*args, **kwargs)
 
     with ServePool(idx.index_dir, n_workers=2) as pool:
-        good = pool.search_many(["alpha beta", "beta"], k=5)
-        # forge a worker failure for the NEXT batch's first qid: the
-        # real result for that qid then arrives as a stale duplicate
-        # and must be discarded, while the other two queries' results
-        # are drained before the raise
-        pool._res_q.put((pool._next_qid, None, "forged failure", 0.0))
-        with pytest.raises(RuntimeError, match="forged failure"):
-            pool.search_many(["alpha beta", "beta", "alpha"], k=5)
-        # the pool is NOT wedged: a fresh batch still answers correctly
-        again = pool.search_many(["alpha beta", "beta"], k=5)
-    assert again == good
+        monkeypatch.setattr(mpc, "wait", interrupted_wait)
+        with pytest.raises(KeyboardInterrupt):
+            pool.search_many(first, k=5)
+        assert pool._owed
+        got = pool.search_many(second, k=5)
+        again = pool.search_many(first, k=5)
+    li = LocalIndex(idx.index_dir)
+    sv = ServingIndex(li)
+    assert got == [topk_serve(li, q, 5, _serving=sv) for q in second]
+    assert again == [topk_serve(li, q, 5, _serving=sv) for q in first]
 
 
 def test_serve_pool_two_choice_bounds_skew(idx):
@@ -514,11 +607,9 @@ def test_serve_pool_two_choice_bounds_skew(idx):
 
     li = LocalIndex(idx.index_dir)
     sv = ServingIndex(li)
-    vocab = ["join", "merge", "table", "window", "batch", "stream",
-             "filter", "sort", "query", "vector", "spark", "hash"]
-    dfs = sv.term_dfs(vocab)
+    dfs = sv.term_dfs(POOL_VOCAB)
     head = max(dfs, key=lambda t: (dfs[t], t))
-    tails = [t for t in vocab if t != head]
+    tails = [t for t in POOL_VOCAB if t != head]
     queries = [f"{head} {tails[i % len(tails)]}" for i in range(40)]
     n_workers = 4
     with ServePool(idx.index_dir, n_workers=n_workers) as pool:
