@@ -902,10 +902,9 @@ ORDER BY tf.doc_id
 
 
 def q_bmw_topk(query: str, k: int = 10):
-    """BMW path, oracle-gated: pruning runs in float32 (the
-    reference's index-scan arithmetic) but the emitted score is the
-    exact float64 value with the same per-term operation order as the
-    exhaustive path, so the result hash-matches the same oracle SQL."""
+    """Kernel path (``topk_bmw``, a one-query ``topk_batch``),
+    oracle-gated: the emitted score is the exact float64 total, so the
+    result matches the same oracle SQL as the exhaustive path."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pg_textsearch_spark.operators.bmw import topk_bmw

@@ -35,15 +35,17 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.functions import bm25
+from pg_textsearch_spark.functions.tokenizer import tokenize_query
 from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.operators.topk import (
     BM25Index,
-    _fieldnorm_decode_expr,
-    decode_postings_flat,
+    column_topk,
+    live_postings,
+    ranked_topk,
     topk_exhaustive,
 )
 
@@ -135,85 +137,51 @@ def topk_partitioned(
     )
     if not kids:
         return empty
+    keys = ("part", "doc_id")
 
     if stats == "child":
-        per = []
-        for v, idx in kids:
-            r = topk_exhaustive(idx, query, k=k)
-            per.append(r.select(F.lit(v).alias("part"), "doc_id", "score"))
+        per = [
+            topk_exhaustive(idx, query, k=k).select(
+                F.lit(v).alias("part"), "doc_id", "score"
+            )
+            for v, idx in kids
+        ]
         alldf = per[0]
         for d in per[1:]:
             alldf = alldf.unionByName(d)
-        topk = alldf.orderBy(
-            F.desc("score"), F.asc("part"), F.asc("doc_id")
-        ).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("part"), F.asc("doc_id"))
-        return topk.select(
-            F.row_number().over(w).alias("rank"), "part", "doc_id", "score"
-        )
+        return ranked_topk(alldf, k, keys)
 
     assert stats == "global", stats
-    # exact global statistics: sums over child manifests + dictionaries
-    n_docs = sum(idx.num_docs for _, idx in kids)
-    total_tokens = sum(idx.total_tokens for _, idx in kids)
+    # exact global statistics: sums over each child's one snapshot
+    snaps = [(v, idx, idx.snapshot) for v, idx in kids]
+    n_docs = sum(snap.num_docs for _, _, snap in snaps)
     if n_docs == 0:
         return empty
-    avgdl = total_tokens / n_docs
-    first = kids[0][1]
-    from pg_textsearch_spark.functions.tokenizer import tokenize_query
-
+    avgdl = sum(snap.total_tokens for _, _, snap in snaps) / n_docs
+    first = snaps[0][2]
     qtf = tokenize_query(query, first.config)
     if not qtf:
         return empty
     dfs: dict[str, int] = {}
-    for _, idx in kids:
-        for t, d in idx.term_dfs(list(qtf)).items():
+    for _, _, snap in snaps:
+        for t, d in snap.term_dfs(list(qtf)).items():
             dfs[t] = dfs.get(t, 0) + d
-    rows = []
-    for term, qf in qtf.items():
-        df = dfs.get(term, 0)
-        if df == 0:
-            continue
-        rows.append((term, bm25.idf(n_docs, df), int(qf)))
-    if not rows:
+    weights = {
+        t: (bm25.idf(n_docs, dfs[t]), int(qf))
+        for t, qf in qtf.items() if dfs.get(t, 0) > 0
+    }
+    if not weights:
         return empty
-    wdf = spark.createDataFrame(rows, "term string, idf double, query_freq int")
-    live_terms = [r[0] for r in rows]
 
     # ONE plan: union of the children's pruned scans, one aggregation,
     # one global top-k — partition pruning is the union membership
-    flats = []
-    for v, idx in kids:
-        flat = decode_postings_flat(idx.pruned_postings(live_terms))
-        if idx.has_deletes():
-            flat = flat.join(
-                F.broadcast(idx.deleted_ids()), "doc_id", "left_anti"
-            )
-        flats.append(flat.select(F.lit(v).alias("part"), "term", "doc_id", "tf", "fieldnorm"))
+    flats = [
+        live_postings(idx, snap, weights).select(
+            F.lit(v).alias("part"), "term", "doc_id", "tf", "fieldnorm"
+        )
+        for v, idx, snap in snaps
+    ]
     allflat = flats[0]
     for d in flats[1:]:
         allflat = allflat.unionByName(d)
-    k1, b = first.k1, first.b
-    scored = allflat.join(F.broadcast(wdf), "term").select(
-        "part",
-        "doc_id",
-        bm25.bm25_score_expr(
-            tf=F.col("tf").cast("double"),
-            dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
-            idf=F.col("idf"),
-            avgdl=F.lit(float(avgdl)),
-            query_freq=F.col("query_freq").cast("double"),
-            k1=k1,
-            b=b,
-        ).alias("term_score"),
-    )
-    doc_scores = scored.groupBy("part", "doc_id").agg(
-        F.sum("term_score").alias("score")
-    )
-    topk = doc_scores.orderBy(
-        F.desc("score"), F.asc("part"), F.asc("doc_id")
-    ).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("part"), F.asc("doc_id"))
-    return topk.select(
-        F.row_number().over(w).alias("rank"), "part", "doc_id", "score"
-    )
+    return column_topk(allflat, weights, avgdl, first.k1, first.b, k, keys)

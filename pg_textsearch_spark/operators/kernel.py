@@ -1,7 +1,7 @@
 """The one scoring kernel behind every top-k read path.
 
-``topk_bmw`` (per doc-range run or per scan batch), ``topk_batch``
-(once per query over a run's shared decoded postings) and
+``topk_batch`` and ``topk_bmw``, its one-query form (once per query
+over a doc-range run's shared decoded postings), and
 ``topk_serve`` / ``ServePool`` (over the serving cache) all score
 through ``score_topk``. Each hands it, per query term, the term's
 doc ids and its impacts: the per-posting BM25 score before the

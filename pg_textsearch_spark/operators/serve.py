@@ -309,15 +309,16 @@ def _pool_worker(index_dir: str, conn) -> None:
 
 class ServePool:
     """Sticky-sharded serving pool: N Spark-free worker processes over
-    one on-disk index, queries routed by head term (``route_query``)
-    so each worker's decoded-postings cache owns a disjoint slice of
-    the head-term working set.
+    one on-disk index, queries routed by head term (``route``) so each
+    worker's scored-postings cache owns its own slice of the head-term
+    working set (unsticky workers all re-decode every head term:
+    BASELINE.md measured ~100 ms per query under 16 of them).
 
     This is the serving-tier shape the reference's concurrent TPS
     table implies — its backends scan local segment files; here the
     workers scan shared storage, so the pool scales horizontally by
     adding hosts. The router process holds only a dictionary-df cache
-    (ServingIndex term_dfs) — routing never touches postings.
+    (its LocalIndex's snapshot) — routing never touches postings.
 
     Each worker has its own pipe: ``search_many`` sends it its share of
     the batch as one message and reads back one reply. Results are
@@ -335,7 +336,6 @@ class ServePool:
         self.index_dir = index_dir
         self.n_workers = int(n_workers)
         self._local = LocalIndex(index_dir)
-        self._router = ServingIndex(self._local)
         ctx = mp.get_context("spawn")
         self._conns, self._procs = [], []
         for _ in range(self.n_workers):
@@ -364,13 +364,27 @@ class ServePool:
         self._dispatch_lock = threading.Lock()
 
     def route(self, query: str) -> int:
-        """Two-choice sticky routing: the less-loaded of the query's
-        top-2 head-term buckets (primary on ties — cache affinity).
-        Skew under a head-heavy mix is bounded without losing
-        stickiness: both candidates are deterministic per term."""
-        p, s = route_query_choices(
-            self._local, query, self.n_workers, _serving=self._router
-        )
+        """Sticky two-choice routing: the buckets (``term_bucket``, the
+        hash every process agrees on) of the query's top-2 distinct
+        terms by df are its candidate workers, and the less-loaded one
+        wins (the primary on ties — cache affinity). So a term's
+        postings land in at most two workers' caches, each worker's LRU
+        holds its own slice of the head-term working set, and a
+        head-heavy mix spreads over two candidates instead of piling on
+        one (power of two choices). The router reads only dictionary
+        dfs (``self._local``'s snapshot memo), never postings; a query
+        with no indexed term goes to worker 0 (it returns empty at once
+        anyway)."""
+        snap = self._local.snapshot
+        qtf = tokenize_query(query, snap.config)
+        dfs = snap.term_dfs(list(qtf)) if qtf else {}
+        if not dfs:
+            return 0
+        ranked = sorted(dfs.items(), key=lambda kv: (-kv[1], kv[0]))
+        p = term_bucket(ranked[0][0], self.n_workers)
+        if len(ranked) == 1:
+            return p
+        s = term_bucket(ranked[1][0], self.n_workers)
         if s != p and self._outstanding[s] < self._outstanding[p]:
             return s
         return p
@@ -466,57 +480,6 @@ class ServePool:
         self.close()
 
 
-def route_query(index, query: str, n_workers: int,
-                _serving: ServingIndex | None = None) -> int:
-    """Sticky shard routing for a serving pool: queries whose most
-    expensive (highest-df) term matches land on the same worker, so
-    each worker's decoded-postings LRU holds a disjoint slice of the
-    head-term working set instead of every worker re-decoding every
-    head term (the contention mode BASELINE.md measured at ~100 ms per
-    query under 16 unsticky workers). Routing hashes the head TERM
-    (``term_bucket`` — the same deterministic hash every process
-    agrees on), so a router needs only a dictionary df lookup (cached
-    in its ServingIndex), never postings. Tail terms ride along with
-    whatever head term their query carries; a query with no indexed
-    term goes to worker 0 (it returns empty immediately anyway)."""
-    sv = _serving or ServingIndex(index)
-    qtf = tokenize_query(query, index.config)
-    if not qtf:
-        return 0
-    dfs = sv.term_dfs(list(qtf))
-    if not dfs:
-        return 0
-    head = max(dfs.items(), key=lambda kv: (kv[1], kv[0]))[0]
-    return term_bucket(head, n_workers)
-
-
-def route_query_choices(index, query: str, n_workers: int,
-                        _serving: ServingIndex | None = None
-                        ) -> tuple[int, int]:
-    """Two-choice variant of ``route_query``: the buckets of the top-2
-    distinct head terms by df (primary first; both equal for
-    single-term queries). Both candidates are term-deterministic, so a
-    term's postings land in at most TWO workers' caches — a pool that
-    picks the less-loaded candidate bounds routing skew (classic
-    power-of-two-choices) while keeping cache affinity. A head-heavy
-    query mix (everyone querying the same Zipf-head term) routed by
-    ``route_query`` alone sends ~every query to one worker; with two
-    choices the load spreads across that term's two candidate buckets
-    and the OTHER query terms' buckets."""
-    sv = _serving or ServingIndex(index)
-    qtf = tokenize_query(query, index.config)
-    if not qtf:
-        return 0, 0
-    dfs = sv.term_dfs(list(qtf))
-    if not dfs:
-        return 0, 0
-    ranked = sorted(dfs.items(), key=lambda kv: (-kv[1], kv[0]))
-    primary = term_bucket(ranked[0][0], n_workers)
-    if len(ranked) == 1:
-        return primary, primary
-    return primary, term_bucket(ranked[1][0], n_workers)
-
-
 def local_topk_df(spark, rows):
     """Lift driver-side (rank, doc_id, score) rows into a DataFrame as
     a pure-JVM VALUES local relation. ``createDataFrame`` from driver
@@ -557,7 +520,9 @@ def topk_auto(index, query: str, k: int = 10):
     (``topk_serve`` over the handle's ServingIndex, reused across
     calls) when the query terms' dfs sum to at most
     ``SERVE_MAX_POSTINGS``, else run the distributed plan
-    (``bmw.topk_bmw``), both over the one snapshot the query takes.
+    (``bmw.topk_bmw``). Each answers from one snapshot; the cluster
+    plan takes its own, so a commit landing between the choice and the
+    plan changes only which path ran, never the answer's consistency.
     Returns a Spark DataFrame either way (served rows are lifted via
     local_topk_df — k rows, JVM-local, near-free to act on)."""
     from pg_textsearch_spark.operators.bmw import topk_bmw
@@ -571,4 +536,4 @@ def topk_auto(index, query: str, k: int = 10):
     dfs = sv.term_dfs(list(qtf), snap) if qtf else {}
     if sum(dfs.values()) <= SERVE_MAX_POSTINGS:
         return local_topk_df(index.spark, _serve_rows(sv, snap, qtf, dfs, k))
-    return topk_bmw(index, query, k, _snap=snap)
+    return topk_bmw(index, query, k)

@@ -1,16 +1,20 @@
 """Top-k BM25 retrieval over the materialized index.
 
-Two scoring paths with identical semantics (the reference's own
+Two scoring plans with identical semantics (the reference's own
 invariant — BMW is a pure optimization over exhaustive scoring,
 reference: test/sql/validation.sql:186-205):
 
-- ``topk_exhaustive``: decode pruned postings, score every posting
-  with float64 JVM column expressions, groupBy(doc_id).sum, global
-  top-k. This is operator Q10 — the semantic ground truth, and the
-  path the DuckDB oracle gate runs against.
-- ``topk_bmw`` (operators/bmw.py) and ``topk_batch``: the scoring
-  kernel (operators/kernel.py) per run inside an Arrow UDF — decodes
-  each posting block once, emits exact f64 totals (reference: bmw.c).
+- The Column plan, ``live_postings`` + ``column_topk``: decode the
+  pruned postings, drop pending deletes, score every posting with
+  float64 JVM column expressions, sum per doc, global top-k.
+  ``topk_exhaustive`` (operator Q10, the semantic ground truth the
+  DuckDB oracle gate runs against), ``topk_filtered`` (a semi-join
+  before the sum) and ``partitioned.topk_partitioned`` (a union of
+  child scans, ranked per (part, doc_id)) are this one plan.
+- The kernel plan, ``topk_batch`` (and ``bmw.topk_bmw``, a batch of
+  one): the scoring kernel (operators/kernel.py) per run inside an
+  Arrow UDF — decodes each posting block once, emits exact f64 totals
+  (reference: bmw.c) — merged per query in the driver.
 
 Query lifecycle (SURVEY.md §3.1 Spark equivalent): take the handle's
 snapshot (``local_commit.Snapshot``: one committed manifest, its N,
@@ -21,7 +25,7 @@ Spark job (``local_commit.read_term_dfs``, memoized per snapshot) ->
 compute IDF driver-side -> broadcast (term, idf, query_freq) -> scan
 postings with bucket+term pushdown (partition pruning plays the
 dictionary binary search's role) -> score -> ORDER BY score DESC,
-doc_id ASC LIMIT k (TakeOrderedAndProject).
+doc_id ASC LIMIT k.
 """
 
 from __future__ import annotations
@@ -270,10 +274,74 @@ def _fieldnorm_decode_expr(col):
     return F.element_at(table, col + 1).cast("double")
 
 
+def live_postings(index: BM25Index, snap, terms) -> DataFrame:
+    """``terms``' postings under ``snap`` as flat (term, run, doc_id,
+    tf, fieldnorm) rows (``decode_postings_flat`` of the pruned scan),
+    pending deletes anti-joined out (alive filtering; reference:
+    bmw.c:542-548 via alive bitset)."""
+    flat = decode_postings_flat(index.pruned_postings(list(terms), snap))
+    if snap.has_deletes:
+        flat = flat.join(
+            F.broadcast(index.deleted_ids()), "doc_id", "left_anti"
+        )
+    return flat
+
+
+def column_topk(
+    flat: DataFrame,
+    weights: dict,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    keys=("doc_id",),
+) -> DataFrame:
+    """The Column plan's scoring: flat postings (``live_postings``) ->
+    (rank, *keys, score), the top ``k`` by (score DESC, keys ASC).
+
+    ``weights`` is {term: (idf, query_freq)}, broadcast as a small
+    table. Every posting is scored with ``bm25_score_expr`` in float64
+    JVM column math, so the DuckDB oracle reproduces it bit-for-bit
+    modulo summation order; the sum runs per ``keys``."""
+    wdf = flat.sparkSession.createDataFrame(
+        [(t, float(idf), int(qf)) for t, (idf, qf) in weights.items()],
+        "term string, idf double, query_freq int",
+    )
+    scored = flat.join(F.broadcast(wdf), "term").select(
+        *keys,
+        bm25.bm25_score_expr(
+            tf=F.col("tf").cast("double"),
+            dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
+            idf=F.col("idf"),
+            avgdl=F.lit(float(avgdl)),
+            query_freq=F.col("query_freq").cast("double"),
+            k1=k1,
+            b=b,
+        ).alias("term_score"),
+    )
+    doc_scores = scored.groupBy(*keys).agg(F.sum("term_score").alias("score"))
+    return ranked_topk(doc_scores, k, keys)
+
+
+def ranked_topk(scores: DataFrame, k: int, keys) -> DataFrame:
+    """(*keys, score) -> (rank, *keys, score): ORDER BY score DESC,
+    keys ASC LIMIT k, then ``rank`` (the reference's deterministic
+    tie-break, bmw.c:301-319)."""
+    order = [F.desc("score"), *[F.asc(c) for c in keys]]
+    topk = scores.orderBy(*order).limit(int(k))
+    # k rows at most here — the unpartitioned window is a k-row sort
+    return topk.select(
+        F.row_number().over(Window.orderBy(*order)).alias("rank"),
+        *keys,
+        "score",
+    )
+
+
 def topk_exhaustive(
     index: BM25Index, query: str, k: int = 10, with_text: DataFrame | None = None
 ) -> DataFrame:
-    """Exhaustive score-all-matching-docs top-k (operator Q10).
+    """Exhaustive score-all-matching-docs top-k (operator Q10): the
+    Column plan over the handle's snapshot.
 
     Emits (rank, doc_id, score) ordered by (score DESC, doc_id ASC) —
     the reference's deterministic tie-break (reference: bmw.c:301-319).
@@ -292,37 +360,9 @@ def topk_exhaustive(
             # must return the same columns the joined path does
             empty = empty.join(with_text, "doc_id", "left")
         return empty
-    wdf = spark.createDataFrame(
-        [(t, float(idf), int(qf)) for t, (idf, qf) in weights.items()],
-        "term string, idf double, query_freq int",
-    )
-    flat = decode_postings_flat(index.pruned_postings(list(weights), snap))
-    if snap.has_deletes:
-        # alive filtering (reference: bmw.c:542-548 via alive bitset)
-        flat = flat.join(
-            F.broadcast(index.deleted_ids()), "doc_id", "left_anti"
-        )
-    scored = flat.join(F.broadcast(wdf), "term").select(
-        "doc_id",
-        bm25.bm25_score_expr(
-            tf=F.col("tf").cast("double"),
-            dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
-            idf=F.col("idf"),
-            avgdl=F.lit(float(snap.avgdl)),
-            query_freq=F.col("query_freq").cast("double"),
-            k1=snap.k1,
-            b=snap.b,
-        ).alias("term_score"),
-    )
-    doc_scores = scored.groupBy("doc_id").agg(F.sum("term_score").alias("score"))
-    topk = doc_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    # k rows at most here — the unpartitioned window is a k-row sort
-    ranked = topk.select(
-        F.row_number()
-        .over(Window.orderBy(F.desc("score"), F.asc("doc_id")))
-        .alias("rank"),
-        "doc_id",
-        "score",
+    ranked = column_topk(
+        live_postings(index, snap, weights), weights,
+        snap.avgdl, snap.k1, snap.b, k,
     )
     if with_text is not None:
         # prune the text table to the k result ids BEFORE broadcasting
@@ -358,8 +398,8 @@ def topk_filtered(
     the predicate joins INTO the scoring plan — ``allowed`` is any
     DataFrame carrying the surviving keys (``doc_id``, or ``doc_key``
     for key-built indexes via ``on="doc_key"``), e.g.
-    ``docs.filter(...).select("doc_id")``. Scoring semi-joins the
-    decoded postings against it BEFORE aggregation, so selective
+    ``docs.filter(...).select("doc_id")``. The Column plan semi-joins
+    the live postings against it BEFORE aggregation, so selective
     predicates shrink the aggregate instead of inflating the fetch
     depth; Catalyst broadcasts the filter side when it is small and
     falls back to a shuffle join when it is not. One pass, exact k,
@@ -383,39 +423,8 @@ def topk_filtered(
         return spark.createDataFrame(
             [], "rank int, doc_id bigint, score double"
         )
-    wdf = spark.createDataFrame(
-        [(t, float(idf), int(qf)) for t, (idf, qf) in weights.items()],
-        "term string, idf double, query_freq int",
-    )
-    flat = decode_postings_flat(index.pruned_postings(list(weights), snap))
-    if snap.has_deletes:
-        flat = flat.join(
-            F.broadcast(index.deleted_ids()), "doc_id", "left_anti"
-        )
-    flat = flat.join(allowed, "doc_id", "semi")
-    scored = flat.join(F.broadcast(wdf), "term").select(
-        "doc_id",
-        bm25.bm25_score_expr(
-            tf=F.col("tf").cast("double"),
-            dl=_fieldnorm_decode_expr(F.col("fieldnorm")),
-            idf=F.col("idf"),
-            avgdl=F.lit(float(snap.avgdl)),
-            query_freq=F.col("query_freq").cast("double"),
-            k1=snap.k1,
-            b=snap.b,
-        ).alias("term_score"),
-    )
-    doc_scores = scored.groupBy("doc_id").agg(
-        F.sum("term_score").alias("score")
-    )
-    topk = doc_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-    return topk.select(
-        F.row_number()
-        .over(Window.orderBy(F.desc("score"), F.asc("doc_id")))
-        .alias("rank"),
-        "doc_id",
-        "score",
-    )
+    flat = live_postings(index, snap, weights).join(allowed, "doc_id", "semi")
+    return column_topk(flat, weights, snap.avgdl, snap.k1, snap.b, k)
 
 
 def topk_batch(

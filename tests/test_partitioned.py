@@ -93,3 +93,32 @@ def test_handle_reload(setup, spark):
     again = PartitionedIndex(spark, pidx.root)
     assert again.partitions == pidx.partitions
     assert again.partition_col == "lang"
+
+
+def test_column_plans_drop_pending_deletes(setup, spark, tmp_path):
+    """Under pending deletes the global-stats union and the filtered
+    scan still equal the flat index's exhaustive top-k, and return no
+    deleted doc. Copies of the indexes keep the shared fixture intact."""
+    import shutil
+
+    from pg_textsearch_spark.index.deletes import delete_docs
+    from pg_textsearch_spark.operators.topk import topk_filtered
+
+    pidx, flat, docs = setup
+    shutil.copytree(pidx.root, str(tmp_path / "parted"))
+    shutil.copytree(flat.index_dir, str(tmp_path / "flat"))
+    pidx = PartitionedIndex(spark, str(tmp_path / "parted"))
+    flat = BM25Index(spark, str(tmp_path / "flat"))
+    victims = [r["doc_id"] for r in topk_exhaustive(flat, QUERY, k=3).collect()]
+    delete_docs(flat, victims)
+    for v in pidx.partitions:
+        delete_docs(pidx.child(v), victims)
+
+    def rows(df):
+        return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+
+    want = rows(topk_exhaustive(flat, QUERY, k=10))
+    assert len(want) == 10 and not set(victims) & {d for d, _ in want}
+    assert rows(topk_partitioned(pidx, QUERY, k=10, stats="global")) == want
+    allowed = docs.select("doc_id")
+    assert rows(topk_filtered(flat, QUERY, allowed, k=10)) == want
