@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.storage import ParquetDirStore
 from pg_textsearch_spark.operators.knn import (
     _assign_udf,
@@ -169,7 +170,7 @@ def build_ann_index(
         "num_vectors": int(num_vectors),
         "segments": [0],
     }
-    _write_manifest(index_dir, manifest)
+    local_commit.write_json(os.path.join(index_dir, "manifest.json"), manifest)
     return ANNIndex(spark, index_dir)
 
 
@@ -219,13 +220,6 @@ def _write_band_table(
         shuffle_by=["band", "bits"],
     )
     return vecs
-
-
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(index_dir, "manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(index_dir, "manifest.json"))
 
 
 def ann_append(
@@ -309,7 +303,9 @@ def ann_append(
     manifest = dict(index.manifest)
     manifest["num_vectors"] = int(manifest["num_vectors"]) + int(vecs.count())
     manifest["segments"] = index.segments + [seg]
-    _write_manifest(index.index_dir, manifest)
+    local_commit.write_json(
+        os.path.join(index.index_dir, "manifest.json"), manifest
+    )
     return ANNIndex(spark, index.index_dir)
 
 

@@ -43,7 +43,6 @@ independently.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -439,69 +438,6 @@ def _postings_arrow(batches, codec: str = "bitpack"):
     yield emit(pa.RecordBatch.from_arrays(arrays, names=names))
 
 
-class IndexWriter:
-    """Maintains the manifest (the 'metapage'); ``store`` (a
-    ``SegmentStore``, index/storage.py) drops segment files."""
-
-    def __init__(self, index_dir: str):
-        from pg_textsearch_spark.index.storage import ParquetDirStore
-
-        self.index_dir = index_dir
-        self.store = ParquetDirStore(index_dir)
-        self.manifest_path = os.path.join(index_dir, "manifest.json")
-
-    def read_manifest(self) -> dict:
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as f:
-                return json.load(f)
-        return {}
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        # atomic rename == the reference's WAL'd metapage update
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, self.manifest_path)
-
-    def commit_segment(
-        self, seg_id: int, config: str, n_buckets: int, k1: float,
-        b: float, num_docs: int, total_tokens: int, max_doc_id: int,
-        has_keymap: bool, lineage: dict | None = None,
-    ) -> dict:
-        """Add one freshly written L0 segment to the manifest (atomic
-        rename) — the last step of a build and of an insert, after
-        every segment file exists."""
-        manifest = self.read_manifest()
-        if not manifest:
-            manifest = {
-                "format_version": 1,
-                "config": config,
-                "k1": k1,
-                "b": b,
-                "n_buckets": n_buckets,
-                "segments": [],
-            }
-        assert manifest["config"] == config and manifest["n_buckets"] == n_buckets
-        manifest["segments"] = [
-            s for s in manifest["segments"] if s["seg_id"] != seg_id
-        ]
-        manifest["segments"].append(
-            {
-                "seg_id": seg_id,
-                "level": 0,
-                "num_docs": num_docs,
-                "total_tokens": total_tokens,
-                "max_doc_id": max_doc_id,
-                "created_at_unix": int(time.time()),
-                "has_keymap": has_keymap,
-                "lineage": lineage or {},
-            }
-        )
-        manifest["segments"].sort(key=lambda s: s["seg_id"])
-        self._commit_manifest(manifest)
-        return manifest
-
-
 def writer_count(n_docs: int, slots: int) -> int:
     """Writer tasks of an ``n_docs`` build on ``slots`` task slots: the
     fewest whole waves (multiples of ``slots``) whose tasks hold at most
@@ -535,10 +471,10 @@ def build_segment(
     partition order. A retried task rewrites only its own segment.
     Leader: ``local_commit.merge_local`` merges the staging segments
     into ``seg_id`` in the driver, adding each one's offset to its doc
-    ids, then the manifest is committed once. The staging dir is
-    removed on return or failure. A crash before the commit leaves the
-    manifest as it was; the next build reclaims a staging dir a crash
-    left behind. Returns the new manifest.
+    ids, then ``local_commit.commit_segment`` commits it. The staging
+    dir is removed on return or failure. A crash before the commit
+    leaves the manifest as it was; the next build reclaims a staging
+    dir a crash left behind. Returns the new manifest.
     """
     ensure_shipped(spark)  # the writers import the package
     cfg = get_config(config)
@@ -591,9 +527,9 @@ def build_segment(
             staging, segs, seg_id, n_buckets, None, out_dir=index_dir,
             codec=codec,
         )
-        return IndexWriter(index_dir).commit_segment(
-            seg_id, config, n_buckets, k1, b, has_keymap=has_keymap,
-            lineage=lineage, **stats,
+        return local_commit.commit_segment(
+            index_dir, seg_id, stats, has_keymap, lineage, config,
+            n_buckets, k1, b,
         )
     finally:
         shutil.rmtree(staging, ignore_errors=True)

@@ -47,10 +47,7 @@ class CheckpointedBuild:
 
     def _write(self, state: dict) -> None:
         os.makedirs(self.index_dir, exist_ok=True)
-        tmp = self.ckpt_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=2, sort_keys=True)
-        os.replace(tmp, self.ckpt_path)
+        local_commit.write_json(self.ckpt_path, state)
 
     def run(
         self,

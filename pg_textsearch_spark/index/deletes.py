@@ -24,21 +24,19 @@ driver-local merge.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.builder import IndexWriter
 from pg_textsearch_spark.operators.topk import BM25Index
 
 
 def delete_docs(index: BM25Index, doc_ids: DataFrame | list[int]) -> dict:
     """Mark doc_ids deleted (tp_bulkdelete analog). Appends to the
     deletes table, records per-term dead doc counts, and updates
-    manifest-level dead stats.
+    manifest-level dead stats in one ``local_commit.commit``. A delete
+    that marks no live id commits nothing and leaves ``index`` on its
+    snapshot.
 
     The per-term counts (``dead_dfs`` table) are the delete-time
     amortization of IDF correction: one run-pruned postings decode per
@@ -57,17 +55,19 @@ def delete_docs(index: BM25Index, doc_ids: DataFrame | list[int]) -> dict:
             r[0] for r in doc_ids.select(F.col("doc_id")).collect()
             if r[0] is not None
         ]
-    writer = IndexWriter(index.index_dir)
-    manifest = writer.read_manifest()
+    manifest = local_commit.read_manifest(index.index_dir)
     n_dead, dead_tokens = local_commit.delete_local(
         index.index_dir, manifest, doc_ids
     )
-    manifest["deleted_docs"] = manifest.get("deleted_docs", 0) + n_dead
-    manifest["deleted_tokens_quantized"] = manifest.get(
-        "deleted_tokens_quantized", 0
-    ) + dead_tokens
-    writer._commit_manifest(manifest)
-    index.refresh()
+    if n_dead:
+        local_commit.commit(index.index_dir, {
+            **manifest,
+            "deleted_docs": manifest.get("deleted_docs", 0) + n_dead,
+            "deleted_tokens_quantized": manifest.get(
+                "deleted_tokens_quantized", 0
+            ) + dead_tokens,
+        })
+        index.refresh()
     return index.manifest
 
 
@@ -80,9 +80,10 @@ def vacuum(index: BM25Index) -> dict:
     left behind by a stop after the swap are uncommitted (the next
     delete removes the two tables, see ``local_commit.delete_local``).
     Ends with ``index`` on the new snapshot."""
-    from pg_textsearch_spark.index.merge import _merged_manifest, _reclaim
+    from pg_textsearch_spark.index.merge import _merged_manifest
 
-    # the dead set and the counters zeroed below must be one commit's
+    # the dead set and the counters zeroed below must be one commit's:
+    # both come from the snapshot refreshed to here
     index.refresh()
     snap = index.snapshot
     dead = snap.dead_ids()
@@ -90,13 +91,13 @@ def vacuum(index: BM25Index) -> dict:
         return index.manifest
     seg_ids = [s["seg_id"] for s in snap.manifest["segments"]]
     # _merged_manifest decodes + regroups, dropping the dead docs
-    manifest = _merged_manifest(index, seg_ids, max(seg_ids) + 1, dead)
-    manifest["deleted_docs"] = 0
-    manifest["deleted_tokens_quantized"] = 0
-    writer = IndexWriter(index.index_dir)
-    writer._commit_manifest(manifest)
-    for table in ("deletes", "dead_dfs"):
-        shutil.rmtree(os.path.join(index.index_dir, table), ignore_errors=True)
-    _reclaim(writer, seg_ids)
+    manifest = _merged_manifest(
+        index.index_dir, snap.manifest, seg_ids, max(seg_ids) + 1, dead
+    )
+    manifest.update(deleted_docs=0, deleted_tokens_quantized=0)
+    local_commit.commit(
+        index.index_dir, manifest, drop_segs=seg_ids,
+        drop_tables=("deletes", "dead_dfs"),
+    )
     index.refresh()
     return index.manifest

@@ -38,8 +38,11 @@ and postings) in memory — +0.4 GB peak RSS at 300k docs, +1.2 GB at
 1M — so bulk loads belong in ``build_index``, which bounds each
 writer task at ``builder.WRITER_DOCS`` docs.
 
-Commit protocol: segment files first, then the atomic manifest
-rename, then (merges) reclaiming the source segments.
+Commit protocol: every build, insert, delete, merge and vacuum ends
+in one ``commit``: segment files first, then one atomic manifest swap
+(``write_json``), then removal of the tables and segments the new
+manifest no longer names. Nothing else writes ``manifest.json`` or
+removes committed files.
 """
 
 from __future__ import annotations
@@ -49,6 +52,7 @@ import json
 import os
 import shutil
 import threading
+import time
 import uuid
 
 import numpy as np
@@ -59,7 +63,6 @@ from pg_textsearch_spark.functions.fieldnorm import (
     encode_fieldnorm,
 )
 from pg_textsearch_spark.functions.tokenizer import (
-    get_config,
     tokenize_batch,
     tokenize_query,
 )
@@ -99,7 +102,8 @@ _POSTINGS_STATS_COLS = [
     _BLK + "block_max_tf", _BLK + "block_max_norm",
 ]
 
-_TABLES = ("postings", "doclen", "keymap", "dictionary")
+#: a segment's tables, in the order ``commit`` removes them
+_TABLES = ("postings", "doclen", "dictionary", "keymap")
 
 
 @functools.cache
@@ -373,19 +377,93 @@ def write_rows(
     )
 
 
-def insert_local(
-    writer, rows, seg_id: int, next_doc: int, config: str, n_buckets: int,
-    k1: float, b: float, lineage: dict,
+# -- commits --------------------------------------------------------------
+#
+# The metapage write (reference: metapage.h:30-106, a WAL'd single-page
+# update): a commit names its new segment set in one atomic manifest
+# swap, then frees what the swap dropped (the tombstone chain,
+# metapage.h:97-105).
+
+
+def read_manifest(index_dir: str) -> dict:
+    """The committed manifest of ``index_dir``, or {} before the first
+    commit."""
+    path = os.path.join(index_dir, "manifest.json")
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, obj: dict) -> None:
+    """Replace ``path`` with ``obj`` atomically: readers see the old or
+    the new file, never a partial one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def with_segment(
+    manifest: dict, seg_id: int, stats: dict, has_keymap: bool,
+    lineage: dict | None, level: int = 0, replaces=(),
 ) -> dict:
-    """Commit a collected batch (``collect_batch``) as one L0 segment."""
-    stats = write_rows(
-        writer.index_dir, seg_id, rows, next_doc, get_config(config),
-        n_buckets,
+    """A copy of ``manifest`` with segment ``seg_id`` (``stats``:
+    num_docs, total_tokens, max_doc_id) in place of segments
+    ``replaces`` and of any earlier ``seg_id``."""
+    gone = {seg_id, *replaces}
+    segs = [s for s in manifest["segments"] if s["seg_id"] not in gone]
+    segs.append({
+        "seg_id": seg_id,
+        "level": level,
+        **stats,
+        "created_at_unix": int(time.time()),
+        "has_keymap": has_keymap,
+        "lineage": lineage or {},
+    })
+    segs.sort(key=lambda s: s["seg_id"])
+    return {**manifest, "segments": segs}
+
+
+def commit_segment(
+    index_dir: str, seg_id: int, stats: dict, has_keymap: bool,
+    lineage: dict | None, config: str, n_buckets: int, k1: float, b: float,
+) -> dict:
+    """Commit the written L0 segment ``seg_id`` — the last step of a
+    build and of an insert. The first commit creates the manifest."""
+    manifest = read_manifest(index_dir) or {
+        "format_version": 1,
+        "config": config,
+        "k1": k1,
+        "b": b,
+        "n_buckets": n_buckets,
+        "segments": [],
+    }
+    assert manifest["config"] == config and manifest["n_buckets"] == n_buckets
+    return commit(
+        index_dir, with_segment(manifest, seg_id, stats, has_keymap, lineage)
     )
-    return writer.commit_segment(
-        seg_id, config, n_buckets, k1, b,
-        has_keymap="_key" in rows.column_names, lineage=lineage, **stats,
-    )
+
+
+def commit(
+    index_dir: str, manifest: dict, drop_segs=(), drop_tables=()
+) -> dict:
+    """Swap ``manifest`` in as the committed one, then remove the
+    tables ``drop_tables`` and the files of segments ``drop_segs``
+    (which ``manifest`` no longer names). A stop before the swap leaves
+    the old commit; a stop after it leaves only files no manifest
+    names. Returns ``manifest``."""
+    assert not {s["seg_id"] for s in manifest["segments"]} & set(drop_segs)
+    write_json(os.path.join(index_dir, "manifest.json"), manifest)
+    for table in drop_tables:
+        shutil.rmtree(os.path.join(index_dir, table), ignore_errors=True)
+    for seg_id in drop_segs:
+        for table in _TABLES:
+            shutil.rmtree(
+                os.path.join(index_dir, table, f"seg={seg_id}"),
+                ignore_errors=True,
+            )
+    return manifest
 
 
 # -- reads ----------------------------------------------------------------
@@ -597,7 +675,7 @@ def merge_local(
     ``drop_ids``. A source's optional ``id_offset`` is added to its doc
     ids (a build's staging segments number their docs from 0). Returns
     (stats, quantized tokens of the dropped docs, has_keymap); the
-    caller commits the manifest and reclaims the sources. Postings
+    caller ``commit``s, which removes the sources. Postings
     merge one term bucket at a time (a term's rows all live in its
     bucket), so the driver never holds more than one bucket's decoded
     postings."""
@@ -678,7 +756,7 @@ def delete_local(
     """Mark ``ids`` deleted: append the effective ones (existing, not
     yet deleted) to ``deletes`` and their per-term counts to
     ``dead_dfs``. Returns (n_dead, quantized dead tokens); the caller
-    commits the manifest counters. Under a ``manifest`` with no deleted
+    ``commit``s the manifest counters. Under a ``manifest`` with no deleted
     docs nothing in either table is committed (a vacuum that stopped
     after its manifest swap leaves both behind), so they go first."""
     import pyarrow as pa

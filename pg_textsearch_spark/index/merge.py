@@ -24,11 +24,7 @@ is a driver-side loop over the manifest.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame
-
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.builder import IndexWriter
 from pg_textsearch_spark.operators.topk import BM25Index
 
 MAX_LEVELS = 8  # TP_MAX_LEVELS (reference: constants.h:74)
@@ -39,45 +35,38 @@ def merge_segments(
     index: BM25Index,
     seg_ids: list[int],
     new_seg_id: int,
-    drop_doc_ids=None,
 ) -> dict:
     """N-way merge of segments into one (reference: merge.c:1409-1891).
 
     Decode -> union -> regroup (term, run) -> re-block; re-blocking
     restores the 128-doc block invariant across former segment
-    boundaries within a run. ``drop_doc_ids`` (a DataFrame with a
-    ``doc_id`` column, or a sequence of ids) are physically dropped.
-    Ends with ``index`` on the new snapshot.
+    boundaries within a run. One ``local_commit.commit`` swaps the
+    merged segment in for the sources on the committed manifest, so a
+    commit made through another handle is kept, then removes the
+    sources. Ends with ``index`` on the new snapshot.
     """
-    drop = None
-    if isinstance(drop_doc_ids, DataFrame):
-        drop = np.asarray(
-            [r[0] for r in drop_doc_ids.select("doc_id").collect()],
-            dtype=np.int64,
-        )
-    elif drop_doc_ids is not None:
-        drop = np.asarray(drop_doc_ids, dtype=np.int64)
-    writer = IndexWriter(index.index_dir)
-    writer._commit_manifest(_merged_manifest(index, seg_ids, new_seg_id, drop))
-    _reclaim(writer, seg_ids)
+    manifest = _merged_manifest(
+        index.index_dir, local_commit.read_manifest(index.index_dir),
+        seg_ids, new_seg_id, None,
+    )
+    local_commit.commit(index.index_dir, manifest, drop_segs=seg_ids)
     index.refresh()
     return index.manifest
 
 
 def _merged_manifest(
-    index: BM25Index, seg_ids: list[int], new_seg_id: int, drop
+    index_dir: str, base: dict, seg_ids: list[int], new_seg_id: int, drop
 ) -> dict:
-    """Write the merge of ``seg_ids`` as segment ``new_seg_id``,
-    dropping the ids ``drop`` (an int64 array or None); -> the manifest
-    that swaps it in, for the caller to commit."""
+    """Write the merge of ``base``'s segments ``seg_ids`` as segment
+    ``new_seg_id``, dropping the ids ``drop`` (an int64 array or None);
+    -> a copy of ``base`` that swaps it in, for the caller to commit."""
     seg_set = set(seg_ids)
-    segs = [s for s in index.manifest["segments"] if s["seg_id"] in seg_set]
-    assert len(segs) == len(seg_set), (seg_ids, index.manifest["segments"])
+    segs = [s for s in base["segments"] if s["seg_id"] in seg_set]
+    assert len(segs) == len(seg_set), (seg_ids, base["segments"])
     stats, dead_tokens_quantized, has_keymap = local_commit.merge_local(
-        index.index_dir, segs, new_seg_id, index.n_buckets, drop
+        index_dir, segs, new_seg_id, base["n_buckets"], drop
     )
     num_docs = stats["num_docs"]
-    manifest = IndexWriter(index.index_dir).read_manifest()
     src_docs = sum(s["num_docs"] for s in segs)
     src_tokens = sum(s["total_tokens"] for s in segs)
     if drop is None:
@@ -93,32 +82,16 @@ def _merged_manifest(
         src_tokens = src_tokens - dead_tokens_quantized
 
     level = max((s.get("level", 0) for s in segs), default=0) + 1
-    manifest["segments"] = [
-        s for s in manifest["segments"] if s["seg_id"] not in seg_set
-    ]
-    manifest["segments"].append(
+    return local_commit.with_segment(
+        base, new_seg_id,
         {
-            "seg_id": new_seg_id,
-            "level": min(level, MAX_LEVELS - 1),
             "num_docs": num_docs,
             "total_tokens": src_tokens,
             "max_doc_id": max(s.get("max_doc_id", -1) for s in segs),
-            "created_at_unix": 0,
-            "has_keymap": has_keymap,
-            "lineage": {"merged_from": sorted(seg_set)},
-        }
+        },
+        has_keymap, {"merged_from": sorted(seg_set)},
+        level=min(level, MAX_LEVELS - 1), replaces=seg_set,
     )
-    manifest["segments"].sort(key=lambda s: s["seg_id"])
-    return manifest
-
-
-def _reclaim(writer: IndexWriter, seg_ids) -> None:
-    """Drop the files of segments a committed manifest no longer names
-    (the tombstone/vacuum analog — safe after the manifest commit;
-    readers resolve via manifest)."""
-    for sid in seg_ids:
-        for table in ("postings", "doclen", "dictionary", "keymap"):
-            writer.store.drop_segment(table, sid)
 
 
 def force_merge(index: BM25Index) -> dict:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from pg_textsearch_spark.functions import bm25
 from pg_textsearch_spark.functions.tokenizer import tokenize_query
+from pg_textsearch_spark.index import local_commit
 from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.operators.topk import (
     BM25Index,
@@ -109,10 +110,7 @@ def build_partitioned_index(
         "partition_col": partition_col,
         "partitions": values,
     }
-    tmp = os.path.join(root, "manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(root, "manifest.json"))
+    local_commit.write_json(os.path.join(root, "manifest.json"), manifest)
     return PartitionedIndex(spark, root)
 
 

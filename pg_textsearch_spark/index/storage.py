@@ -1,9 +1,14 @@
 """Segment storage layer: Parquet-dir today, Iceberg when available.
 
 The north rule names Iceberg as the table substrate. This module is
-the seam: everything the index writes goes through a ``SegmentStore``,
-whose contract mirrors what the reference gets from its paged segment
-storage + WAL'd metapage (src/segment/segment.c, src/index/metapage.h):
+the seam for Spark-written tables: the ANN index (index/ann.py)
+writes through a ``SegmentStore``. The BM25 index does not: it writes
+its segments with pyarrow in index/local_commit.py on the same
+identity-partition layout, and commits and removes files only in
+``local_commit.commit``, which is where the mapping's "manifest
+commit" and "drop/vacuum" rows land. The contract mirrors what the
+reference gets from its paged segment storage + WAL'd metapage
+(src/segment/segment.c, src/index/metapage.h):
 
 - segments are immutable once written (write-once per seg_id);
 - readers resolve the live segment set through a manifest, never by
@@ -144,13 +149,17 @@ ICEBERG_MAPPING = {
                      "partitioned by seg, bucket) — one append per segment",
     "manifest commit": "the Iceberg snapshot commit itself (atomic swap "
                        "of the manifest list); manifest.json's segment "
-                       "array becomes a snapshot summary property",
+                       "array becomes a snapshot summary property; for "
+                       "the BM25 index this is local_commit.commit's "
+                       "manifest swap",
     "read resolution": "time-travel-stable scan of the committed "
                        "snapshot; seg IN (...) is partition pruning",
     "term pruning": "Iceberg file-level column stats (min/max on term) "
                     "replace parquet row-group pushdown one level up",
     "drop/vacuum": "DELETE FROM ... WHERE seg = k, then "
-                   "CALL expire_snapshots(...) — the tombstone chain",
+                   "CALL expire_snapshots(...) — the tombstone chain; "
+                   "for the BM25 index, local_commit.commit's removal "
+                   "step after the swap",
     "resumable build": "per-batch appends + snapshot lineage; "
                        "checkpoint.py's batch manifest becomes snapshot "
                        "metadata",

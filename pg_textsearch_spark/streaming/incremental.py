@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pg_textsearch_spark.functions.tokenizer import get_config
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.builder import IndexWriter
 from pg_textsearch_spark.index.merge import SEGMENTS_PER_LEVEL, maybe_compact
 from pg_textsearch_spark.operators.topk import BM25Index
 
@@ -57,8 +57,7 @@ def insert_batch(
     """
     if doc_id_col is None and key_col is None:
         raise ValueError("insert_batch needs doc_id_col or key_col")
-    writer = IndexWriter(index_dir)
-    manifest = writer.read_manifest()
+    manifest = local_commit.read_manifest(index_dir)
     segments = manifest.get("segments", [])
     next_seg = (max(s["seg_id"] for s in segments) + 1) if segments else 0
     next_doc = (
@@ -72,9 +71,12 @@ def insert_batch(
     rows = local_commit.collect_batch(
         docs, text_col, doc_id_col, key_col if doc_id_col is None else None
     )
-    out = local_commit.insert_local(
-        writer, rows, next_seg, next_doc, config, n_buckets,
-        manifest.get("k1", 1.2), manifest.get("b", 0.75), lineage,
+    stats = local_commit.write_rows(
+        index_dir, next_seg, rows, next_doc, get_config(config), n_buckets
+    )
+    out = local_commit.commit_segment(
+        index_dir, next_seg, stats, "_key" in rows.column_names, lineage,
+        config, n_buckets, manifest.get("k1", 1.2), manifest.get("b", 0.75),
     )
     if compact:
         out = maybe_compact(BM25Index(spark, index_dir), fan_in=fan_in)

@@ -2,6 +2,8 @@
 marked docs vanish from results immediately; vacuum physically drops
 them; stats follow the quantized-correction rule."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,6 +114,18 @@ def test_vacuum_drops_and_matches_filtered_rebuild(spark, idx, tmp_path):
     ]
     for x, y in zip(a, b):
         assert abs(x["score"] - y["score"]) <= 1e-3, (x, y)
+
+
+def test_delete_of_no_live_id_commits_nothing(idx):
+    """A delete whose ids are all missing or already deleted leaves
+    manifest.json unreplaced and the handle on its snapshot."""
+    delete_docs(idx, [0])
+    path = os.path.join(idx.index_dir, "manifest.json")
+    ino, snap = os.stat(path).st_ino, idx.snapshot
+    delete_docs(idx, [10**9, 0])
+    assert os.stat(path).st_ino == ino
+    assert idx.snapshot is snap
+    assert idx.num_docs == 499
 
 
 def test_delete_idempotent_and_stats(idx):

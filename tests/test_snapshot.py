@@ -9,10 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg_textsearch_spark.index import local_commit
-from pg_textsearch_spark.index.builder import IndexWriter, build_index
+from pg_textsearch_spark.index.builder import build_index
 from pg_textsearch_spark.index.deletes import delete_docs, vacuum
 from pg_textsearch_spark.index.merge import force_merge
-from pg_textsearch_spark.index.storage import ParquetDirStore
 from pg_textsearch_spark.operators.serve import (
     LocalIndex,
     ServingIndex,
@@ -96,6 +95,35 @@ class Crash(Exception):
     pass
 
 
+def _stop_at_commit_steps(monkeypatch):
+    """Hook every step of a merge commit — each ``rmtree`` of a segment
+    dir or of ``deletes``/``dead_dfs``, writing the merged segment, the
+    manifest swap — to raise Crash after step ``calls["stop_at"]``;
+    -> ``calls``."""
+    calls = {"n": 0, "stop_at": 0}
+
+    def stop_after(fn, counts=lambda *a: True):
+        def step(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            if counts(*args):
+                calls["n"] += 1
+                if calls["n"] == calls["stop_at"]:
+                    raise Crash(calls["n"])
+            return out
+        return step
+
+    monkeypatch.setattr(local_commit, "merge_local",
+                        stop_after(local_commit.merge_local))
+    monkeypatch.setattr(local_commit, "write_json",
+                        stop_after(local_commit.write_json))
+    monkeypatch.setattr(shutil, "rmtree", stop_after(
+        shutil.rmtree,
+        lambda path, *a: "/seg=" in str(path)
+        or str(path).endswith(("/deletes", "/dead_dfs")),
+    ))
+    return calls
+
+
 def _state(spark, d):
     h = BM25Index(spark, d)
     return (
@@ -120,28 +148,7 @@ def test_vacuum_stopped_after_any_step(spark, built, tmp_path, monkeypatch):
     assert _state(spark, done) == before
     assert not BM25Index(spark, done).has_deletes()
 
-    calls = {"n": 0, "stop_at": 0}
-
-    def stop_after(fn, counts=lambda *a: True):
-        def step(*args, **kwargs):
-            out = fn(*args, **kwargs)
-            if counts(*args):
-                calls["n"] += 1
-                if calls["n"] == calls["stop_at"]:
-                    raise Crash(calls["n"])
-            return out
-        return step
-
-    monkeypatch.setattr(local_commit, "merge_local",
-                        stop_after(local_commit.merge_local))
-    monkeypatch.setattr(IndexWriter, "_commit_manifest",
-                        stop_after(IndexWriter._commit_manifest))
-    monkeypatch.setattr(ParquetDirStore, "drop_segment",
-                        stop_after(ParquetDirStore.drop_segment))
-    monkeypatch.setattr(shutil, "rmtree", stop_after(
-        shutil.rmtree,
-        lambda path, *a: str(path).endswith(("/deletes", "/dead_dfs")),
-    ))
+    calls = _stop_at_commit_steps(monkeypatch)
     stops = 0
     while True:
         d = _copy(src, tmp_path, f"stop{stops + 1}")
@@ -161,6 +168,36 @@ def test_vacuum_stopped_after_any_step(spark, built, tmp_path, monkeypatch):
         h = BM25Index(spark, d)
         assert h.term_dfs(TERMS) == _live_dfs(h, TERMS), stops
     assert stops >= 5  # merge, swap, two tables, source files
+
+
+def test_force_merge_stopped_after_any_step(spark, segmented, tmp_path,
+                                           monkeypatch):
+    """Stop force_merge of 4 segments after each of its steps (clear
+    leftovers of the merged segment, write it, swap the manifest,
+    remove each source segment's files): the reopened index equals the
+    index before (and after) the merge, and where the stop came before
+    the swap a force_merge after it finishes the job over the leftover
+    files."""
+    before = _state(spark, segmented)
+    calls = _stop_at_commit_steps(monkeypatch)
+    stops = 0
+    while True:
+        d = _copy(segmented, tmp_path, f"stop{stops + 1}")
+        calls.update(n=0, stop_at=stops + 1)
+        try:
+            force_merge(BM25Index(spark, d))
+        except Crash:
+            stops += 1
+        else:
+            break
+        calls["stop_at"] = 0
+        assert _state(spark, d) == before, stops
+        h = BM25Index(spark, d)
+        if len(h.manifest["segments"]) > 1:
+            assert len(force_merge(h)["segments"]) == 1, stops
+            assert _state(spark, d) == before, stops
+    # merge, swap, and 4 tables of each of the 4 sources
+    assert stops >= 2 + 4 * 4
 
 
 def test_query_keeps_its_snapshot_across_a_commit(spark, built, tmp_path):

@@ -2,8 +2,9 @@
 
 north_rule names Iceberg as the substrate; this sandbox has no Iceberg
 runtime jars (documented blocker in index/storage.py), so the tests
-pin (a) the ParquetDirStore round-trip every writer already goes
-through and (b) the exact failure contract of the Iceberg probe, so a
+pin (a) the ParquetDirStore round-trip the ANN index writes through,
+with the BM25 segment layout on the same identity-partition dirs, and
+(b) the exact failure contract of the Iceberg probe, so a
 cluster with the jars activates it without code changes.
 """
 
@@ -45,17 +46,15 @@ def test_parquet_store_roundtrip(spark, tmp_path):
 
 
 def test_index_writes_go_through_store(spark, tmp_path):
-    # the abstraction is live: IndexWriter's segment layout IS the
-    # store's layout (identity partition dirs, Iceberg-shaped)
-    from pg_textsearch_spark.index.builder import IndexWriter, build_index
+    # the BM25 writer's segment layout IS the store's layout (identity
+    # partition dirs, Iceberg-shaped)
+    from pg_textsearch_spark.index.builder import build_index
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta w{i}") for i in range(20)], "doc_id long, text string"
     )
     d = str(tmp_path / "idx")
     build_index(spark, docs, d, config="ascii", n_buckets=4)
-    w = IndexWriter(d)
-    assert isinstance(w.store, ParquetDirStore)
     assert os.path.isdir(os.path.join(d, "postings", "seg=0", "bucket=0"))
     assert os.path.isdir(os.path.join(d, "doclen", "seg=0"))
 
